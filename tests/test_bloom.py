@@ -208,12 +208,6 @@ def test_prune_keeps_only_matching_files(bloom_store):
     assert holders and set(holders) <= {p for _sz, p in kept}
 
 
-def test_prune_disabled_by_env(bloom_store, monkeypatch):
-    files = wand._segment_files(bloom_store)
-    monkeypatch.setenv("VSS_QUERY_NO_BLOOM", "1")
-    assert wand._bloom_prune(files, ["zzzznotaword"]) == files
-
-
 def test_missing_sidecar_file_is_kept(bloom_store, tmp_path):
     files = wand._segment_files(bloom_store)
     victim = files[0][1]
@@ -236,7 +230,7 @@ def test_results_identical_with_and_without_prune(spark, bloom_store,
                (2, "the stream", 10)]
     got = [tuple(r) for r in wand.batch_topk(
         spark, bloom_store, queries).collect()]
-    monkeypatch.setenv("VSS_QUERY_NO_BLOOM", "1")
+    monkeypatch.setattr(wand, "_bloom_prune", lambda files, terms: files)
     exp = [tuple(r) for r in wand.batch_topk(
         spark, bloom_store, queries).collect()]
     assert sorted(got) == sorted(exp)
@@ -247,7 +241,7 @@ def test_membership_identical_with_and_without_prune(spark, bloom_store,
     term = _rare_term(bloom_store)
     got = sorted(r.docid for r in matching_docids(
         spark, bloom_store, any_of=[term, "join"]).collect())
-    monkeypatch.setenv("VSS_QUERY_NO_BLOOM", "1")
+    monkeypatch.setattr(wand, "_bloom_prune", lambda files, terms: files)
     exp = sorted(r.docid for r in matching_docids(
         spark, bloom_store, any_of=[term, "join"]).collect())
     assert got == exp and got

@@ -227,9 +227,10 @@ def test_proximity_topk_rank_identity(spark, bool_store, doc_tokens,
 
 def test_membership_plan_no_segment_scan(spark, bool_store):
     """Plan guard (PLANS.md §23): the membership kernel reads segment
-    files in-task — no Spark FileScan of any segment dir, no
-    shard-keyed exchange; the only exchange is the ~100-byte
-    route_key path shuffle."""
+    files in-task on the one-stage launcher — no Spark FileScan of any
+    segment dir and no Exchange at all (the store has no tombstones,
+    so no anti-join either)."""
+    assert not bool_store.read_meta().get("tombstone_dirs")
     df = matching_docids(spark, bool_store, all_of=["join", "filter"],
                          none_of=["dup"])
     df.count()
@@ -237,4 +238,4 @@ def test_membership_plan_no_segment_scan(spark, bool_store):
     seg_dirs = bool_store.segment_paths()
     assert not any(d in plan for d in seg_dirs)
     assert "hashpartitioning(shard" not in plan
-    assert "hashpartitioning(route_key" in plan
+    assert "Exchange" not in plan

@@ -5,8 +5,7 @@ Contract under test:
   NEXT k rows of the frozen total order (score desc, conv_id, turn_idx);
   concatenating pages reproduces one big-k query exactly, for multi-term
   AND single-term queries (the cursor disables the block-max path), on
-  the file-aligned fast path, the driver-merge path, and the legacy
-  shuffle plan.
+  the file-aligned fast path and the driver-merge path.
 - ties AT the cursor score are split by the conv tie-break, never
   dropped or duplicated (the kernel keeps the whole tie run; the merge
   resolves it).
@@ -16,8 +15,6 @@ Contract under test:
 """
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -95,17 +92,6 @@ def test_pages_match_on_driver_merge_path(spark, store):
         driver_merge=True))
     pages = _paged(spark, store, QUERIES, N_PAGES, driver_merge=True)
     _assert_pages_match(pages, full)
-
-
-def test_pages_match_on_legacy_shuffle_plan(spark, store):
-    os.environ["VSS_QUERY_FORCE_SHUFFLE"] = "1"
-    try:
-        full = _rows(batch_topk(
-            spark, store, [(q, t, N_PAGES * PAGE_K) for q, t, _ in QUERIES]))
-        pages = _paged(spark, store, QUERIES, N_PAGES)
-        _assert_pages_match(pages, full)
-    finally:
-        del os.environ["VSS_QUERY_FORCE_SHUFFLE"]
 
 
 def test_tie_runs_split_exactly(spark, tmp_path):

@@ -5,8 +5,6 @@ compaction), plan shape, and fsck coverage."""
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pytest
 
@@ -19,6 +17,7 @@ from visionsearch_spark.index.codec import (
 from visionsearch_spark.index.spimi import build_index, compact_store
 from visionsearch_spark.index.store import IndexStore
 from visionsearch_spark.query.boolean import (
+    matching_docids,
     phrase_docids,
     positional_docids,
     proximity_docids,
@@ -33,25 +32,31 @@ def pos_store(spark, transcripts, tmp_path_factory):
 
 
 @pytest.fixture(scope="module")
-def doc_tokens(pos_store):
+def nopos_store(spark, transcripts, tmp_path_factory):
+    """Flagless twin of pos_store (same rows, same docids): its phrase
+    and proximity verify takes the staged-text fallback."""
+    root = str(tmp_path_factory.mktemp("nopos"))
+    return build_index(transcripts, root, n_partitions=8, n_shards=16)
+
+
+def _live_tokens(store, dead_convs=()):
+    """docid -> analyzed tokens of every live row of `store`."""
     import pyarrow.parquet as pq
 
-    st = pq.read_table(pos_store.staged_path,
-                       columns=["docid", "text"]).to_pandas()
+    st = pq.read_table(store.staged_path,
+                       columns=["docid", "conv_id", "text"]).to_pandas()
     return {int(r.docid): tokenize(r.text)
-            for r in st.itertuples(index=False)}
+            for r in st.itertuples(index=False)
+            if r.conv_id not in dead_convs}
+
+
+@pytest.fixture(scope="module")
+def doc_tokens(pos_store):
+    return _live_tokens(pos_store)
 
 
 def _ids(df):
     return sorted(r.docid for r in df.collect())
-
-
-def _staged_ids(spark, store, fn, *args, **kw):
-    os.environ["VSS_PHRASE_FORCE_STAGED"] = "1"
-    try:
-        return _ids(fn(spark, store, *args, **kw))
-    finally:
-        del os.environ["VSS_PHRASE_FORCE_STAGED"]
 
 
 # ---------------------------------------------------------------------------
@@ -127,9 +132,6 @@ def test_phrase_positional_exact(spark, pos_store, doc_tokens):
         toks = tokenize(phrase)
         got = _ids(phrase_docids(spark, pos_store, phrase))
         assert got == _phrase_match(doc_tokens, toks), phrase
-        # and identical to the staged-text fallback on the same store
-        assert got == _staged_ids(spark, pos_store, phrase_docids,
-                                  phrase), phrase
 
 
 def test_phrase_repeated_token(spark, pos_store, doc_tokens):
@@ -154,21 +156,25 @@ def test_proximity_positional_exact(spark, pos_store, doc_tokens):
         got = _ids(proximity_docids(spark, pos_store, terms, window))
         assert got == _prox_match(doc_tokens, terms, window), (terms,
                                                                window)
-        assert got == _staged_ids(spark, pos_store, proximity_docids,
-                                  terms, window), (terms, window)
 
 
-def test_positional_store_flag_gates_path(spark, transcripts,
-                                          tmp_path_factory):
+def test_positional_store_flag_gates_path(spark, pos_store, nopos_store,
+                                          doc_tokens):
     """A store built WITHOUT positions falls back to the staged-text
-    verify (same answers), and positional_docids refuses it loudly."""
-    root = str(tmp_path_factory.mktemp("nopos"))
-    store = build_index(transcripts, root, n_partitions=8, n_shards=16)
-    assert not store.has_positions()
-    assert _ids(phrase_docids(spark, store, "join filter")) \
-        == _staged_ids(spark, store, phrase_docids, "join filter")
+    verify — same answers as the positional twin and the brute force —
+    and positional_docids refuses it loudly."""
+    assert not nopos_store.has_positions()
+    for phrase in ["join filter", "the fast", "join filter stream"]:
+        got = _ids(phrase_docids(spark, nopos_store, phrase))
+        assert got == _phrase_match(doc_tokens, tokenize(phrase)), phrase
+        assert got == _ids(phrase_docids(spark, pos_store, phrase)), phrase
+    for terms, window in [(["join", "filter"], 3), (["scan", "merge"], 5)]:
+        got = _ids(proximity_docids(spark, nopos_store, terms, window))
+        assert got == _prox_match(doc_tokens, terms, window), terms
+        assert got == _ids(proximity_docids(spark, pos_store, terms,
+                                            window)), terms
     with pytest.raises(Exception, match="pos_bin"):
-        positional_docids(spark, store, ["join", "filter"]).collect()
+        positional_docids(spark, nopos_store, ["join", "filter"]).collect()
 
 
 # ---------------------------------------------------------------------------
@@ -192,14 +198,14 @@ def test_positions_survive_lifecycle(spark, transcripts,
     assert store.has_positions()  # appends inherit the flag
     assert len(store.read_meta()["segment_dirs"]) > 1  # really multi-dir
 
-    def parity(tag):
+    def parity(tag, dead_convs=()):
+        live = _live_tokens(store, dead_convs)
         for phrase in ["join filter", "select join"]:
             assert _ids(phrase_docids(spark, store, phrase)) \
-                == _staged_ids(spark, store, phrase_docids, phrase), \
-                (tag, phrase)
+                == _phrase_match(live, tokenize(phrase)), (tag, phrase)
         terms, w = ["join", "filter"], 6
         assert _ids(proximity_docids(spark, store, terms, w)) \
-            == _staged_ids(spark, store, proximity_docids, terms, w), tag
+            == _prox_match(live, terms, w), tag
 
     parity("appended")
     victims = sorted(
@@ -215,11 +221,20 @@ def test_positions_survive_lifecycle(spark, transcripts,
           spark.read.parquet(store.docmap_path)
           .select("docid", "conv_id").collect()}
     assert not any(dm[d] in victims for d in hit_ids)  # tombstones mask
-    parity("deleted-pending")
+    parity("deleted-pending", victims)
+    # the tombstone anti-join sits on top of the one-stage launcher: no
+    # Exchange anywhere beneath the kernel
+    for df in (positional_docids(spark, store, ["join", "filter"]),
+               matching_docids(spark, store, all_of=["join", "filter"])):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "LeftAnti" in plan
+        sub = _kernel_subtree(plan)
+        assert any("Range (" in ln for ln in sub), plan
+        assert not any("Exchange" in ln for ln in sub), plan
     compact_store(spark, root, n_partitions=8)
     store = IndexStore(root)
     assert len(store.read_meta()["segment_dirs"]) == 1
-    parity("compacted")
+    parity("compacted", victims)
     rep = fsck(root)
     assert rep["positions"]["ok"], rep["positions"]
 
@@ -228,14 +243,32 @@ def test_positions_survive_lifecycle(spark, transcripts,
 # plan shape + fsck
 # ---------------------------------------------------------------------------
 
+def _kernel_subtree(plan: str) -> list[str]:
+    """Lines of the first MapInArrow node of a plan string and of every
+    node beneath it (deeper indentation)."""
+    import re
+
+    lines = plan.splitlines()
+    i = next(j for j, ln in enumerate(lines) if "MapInArrow" in ln)
+    col = lines[i].index("MapInArrow")
+    sub = [lines[i]]
+    for ln in lines[i + 1:]:
+        m = re.search(r"[A-Za-z]", ln)
+        if m is None or m.start() <= col:
+            break
+        sub.append(ln)
+    return sub
+
+
 def test_positional_plan_zero_shuffle(spark, pos_store):
-    """Positional verify rides the same file-aligned plan as membership:
-    no Spark FileScan of segment dirs, only the route_key path shuffle."""
+    """Positional verify rides the same one-stage file-aligned plan as
+    membership: no Spark FileScan of segment dirs and no Exchange at all
+    (the store has no tombstones, so no anti-join either)."""
     df = positional_docids(spark, pos_store, ["join", "filter"])
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert not any(d in plan for d in pos_store.segment_paths())
-    assert "hashpartitioning(route_key" in plan
+    assert "Exchange" not in plan
     assert "hashpartitioning(shard" not in plan
 
 

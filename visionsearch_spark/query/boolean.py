@@ -21,12 +21,11 @@
   payloads are intersected as shifted (docid, position) key sets on the
   same zero-shuffle file-aligned plan — O(postings of the query's
   terms), the Lucene positional-postings answer to the r5 verdict's
-  common-term-phrase concern. Stores without positions (or with
-  VSS_PHRASE_FORCE_STAGED=1, the A/B pin) take the legacy fallback:
-  conjunctive candidates from the index, adjacency verified on the
-  staged text via JVM n-gram containment (candidate-pruned with docid
-  pushdown when the set is small, a semi-join otherwise — never an
-  unconditional full-text scan). Both paths then BM25-rank over the
+  common-term-phrase concern. Stores without positions take the
+  staged-text fallback: conjunctive candidates from the index,
+  adjacency verified on the staged text via JVM n-gram containment
+  (candidate-pruned with docid pushdown when the set is small, a
+  semi-join otherwise — never an unconditional full-text scan). Both paths then BM25-rank over the
   phrase's terms. The reference has no phrase operator; this is the
   standard fulltext surface built from this engine's own parts.
 """
@@ -53,11 +52,6 @@ from visionsearch_spark.query import wand
 # strings/serialization (VERDICT r5 What's-wrong #3)
 PHRASE_PUSHDOWN_MAX = 16384
 
-# pin the legacy staged-text verify on positional stores (A/B only)
-import os as _os  # noqa: E402
-
-_FORCE_STAGED_ENV = "VSS_PHRASE_FORCE_STAGED"
-
 
 def _norm_terms(terms: list[str] | None) -> list[str]:
     out: list[str] = []
@@ -68,21 +62,14 @@ def _norm_terms(terms: list[str] | None) -> list[str]:
 
 def _make_match_fn(all_of: list[str], any_of: list[str],
                    none_of: list[str]):
-    """mapInArrow kernel: path rows in, matching docids out. Per-file
-    exactness per the module docstring."""
+    """`wand._launch_bins` kernel: a task's segment file paths in,
+    matching docids out. Per-file exactness per the module docstring."""
     read_terms = sorted(set(all_of) | set(any_of) | set(none_of))
 
-    def match(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def match(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        paths: list[str] = []
-        for b in batches:
-            for row in b.to_pandas().itertuples(index=False):
-                if row.paths is not None:
-                    paths.extend(row.paths)
-        if not paths:
-            return
         scanner = pads.dataset(paths, format="parquet").scanner(
             columns=["term", "n", "docids_bin"],
             filter=pc.field("term").isin(read_terms),
@@ -179,41 +166,34 @@ def matching_docids(
     # live wholly in one file, so an exclusion can only bite where some
     # inclusion term matched in the SAME file — files holding none of
     # all_of/any_of contribute an empty base regardless of none_of
-    files = wand._bloom_prune(
-        wand._segment_files(store), sorted(set(all_of) | set(any_of))
-    )
-    if not files:
-        return empty
-    n_tasks = n_tasks or spark.sparkContext.defaultParallelism
-    bins = wand._lpt_bins(files, min(n_tasks, len(files)))
-    rkeys = wand._route_keys(len(bins))
-    paths_df = wand._local_df(
-        spark, [(rkeys[i], b) for i, b in enumerate(bins)],
-        "route_key long, paths array<string>", ["route_key", "paths"],
-    )
-    matched = (
-        paths_df.repartition(len(bins), "route_key")
-        .mapInArrow(_make_match_fn(all_of, any_of, none_of), "docid long")
-    )
-    # tombstoned docs are not members (index/deletes.py): counts/facets
-    # built on this set must not see them. The deny set is O(deleted)
-    # and AQE broadcasts it when small; ranking paths downstream mask
-    # again in-kernel, which is idempotent.
-    tomb = meta.get("tombstone_dirs") or []
-    if tomb:
-        import os as _os
+    return _launch_members(
+        spark, store, meta, sorted(set(all_of) | set(any_of)), n_tasks,
+        _make_match_fn(all_of, any_of, none_of), empty)
 
-        dead = spark.read.schema("docid long, dl long").parquet(
-            *[_os.path.join(store.root, d) for d in tomb]
-        ).select("docid")
+
+def _launch_members(spark: SparkSession, store: IndexStore, meta: dict,
+                    terms: list[str], n_tasks: int | None, kernel,
+                    empty: DataFrame) -> DataFrame:
+    """Run a docid-membership kernel on the one-stage file-aligned plan
+    (`wand._launch_bins`), then drop tombstoned docs: they are not
+    members (index/deletes.py), so counts/facets built on the set must
+    not see them. The deny set is O(deleted) and AQE broadcasts it when
+    small; ranking paths downstream mask again in-kernel, which is
+    idempotent."""
+    bins = wand._file_bins(spark, store, terms, n_tasks, 1)
+    if not bins:
+        return empty
+    matched = wand._launch_bins(spark, bins, kernel, "docid long")
+    dead = wand._tombstone_docids(spark, store, meta)
+    if dead is not None:
         matched = matched.join(dead, "docid", "left_anti")
     return matched
 
 
 def _make_positional_fn(toks: list[str], window: int | None,
                         slop: int | None = None):
-    """mapInArrow kernel: path-pack rows in, positionally-matching docids
-    out. Three modes:
+    """`wand._launch_bins` kernel: a task's segment file paths in,
+    positionally-matching docids out. Three modes:
       window=None, slop=None → exact ORDERED phrase (token i at p+i);
       window=w               → every DISTINCT term within some w
                                consecutive tokens (unordered SpanNear);
@@ -237,17 +217,10 @@ def _make_positional_fn(toks: list[str], window: int | None,
 
     read_terms = sorted(set(toks))
 
-    def match(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def match(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        paths: list[str] = []
-        for b in batches:
-            for row in b.to_pandas().itertuples(index=False):
-                if row.paths is not None:
-                    paths.extend(row.paths)
-        if not paths:
-            return
         scanner = pads.dataset(paths, format="parquet").scanner(
             columns=["term", "n", "docids_bin", "tfs_bin", "pos_bin"],
             filter=pc.field("term").isin(read_terms),
@@ -361,8 +334,8 @@ def positional_docids(
     phrase by default; unordered window when `window` is set; ordered
     sloppy phrase when `slop` is set — see _make_positional_fn) — the
     index-only verify path for stores built with positions=True. Same
-    file-aligned zero-shuffle plumbing as matching_docids: bloom-pruned
-    whole files to route-keyed tasks, tombstones anti-joined after."""
+    one-stage file-aligned plumbing as matching_docids (`_launch_members`):
+    bloom-pruned whole files per task, tombstones anti-joined after."""
     empty = wand._local_df(spark, [], "docid long", ["docid"])
     meta = store.read_meta()
     if int(meta.get("n_docs", 0)) == 0:
@@ -370,29 +343,9 @@ def positional_docids(
     dfs = wand._lookup_term_dfs(spark, store, sorted(set(toks)))
     if any(t not in dfs for t in toks):
         return empty  # a phrase/window term with zero postings
-    files = wand._bloom_prune(wand._segment_files(store),
-                              sorted(set(toks)))
-    if not files:
-        return empty
-    n_tasks = n_tasks or spark.sparkContext.defaultParallelism
-    bins = wand._lpt_bins(files, min(n_tasks, len(files)))
-    rkeys = wand._route_keys(len(bins))
-    paths_df = wand._local_df(
-        spark, [(rkeys[i], b) for i, b in enumerate(bins)],
-        "route_key long, paths array<string>", ["route_key", "paths"],
-    )
-    matched = (
-        paths_df.repartition(len(bins), "route_key")
-        .mapInArrow(_make_positional_fn(toks, window, slop=slop),
-                    "docid long")
-    )
-    tomb = meta.get("tombstone_dirs") or []
-    if tomb:
-        dead = spark.read.schema("docid long, dl long").parquet(
-            *[_os.path.join(store.root, d) for d in tomb]
-        ).select("docid")
-        matched = matched.join(dead, "docid", "left_anti")
-    return matched
+    return _launch_members(
+        spark, store, meta, sorted(set(toks)), n_tasks,
+        _make_positional_fn(toks, window, slop=slop), empty)
 
 
 def boolean_topk(
@@ -457,16 +410,14 @@ def phrase_docids(
     sequence — exact adjacency at slop=0, Lucene SpanNear(inOrder=true,
     slop) otherwise (terms in order, total span ≤ len+slop−1 tokens).
     slop>0 REQUIRES a positional store: the staged-text fallback only
-    implements exact m-gram containment. On flagless stores (or
-    VSS_PHRASE_FORCE_STAGED=1) the exact form verifies candidates on
-    staged text, candidate-only."""
+    implements exact m-gram containment. On flagless stores the exact
+    form verifies candidates on staged text, candidate-only."""
     if slop < 0:
         raise ValueError("slop must be >= 0")
     toks = tokenize(phrase)
     if not toks:
         return wand._local_df(spark, [], "docid long", ["docid"])
-    positional_ok = store.has_positions() \
-        and not _os.environ.get(_FORCE_STAGED_ENV)
+    positional_ok = store.has_positions()
     if slop > 0 and len(toks) > 1:
         if not positional_ok:
             raise ValueError(
@@ -552,8 +503,7 @@ def proximity_docids(
         raise ValueError(
             f"window {window} can never hold {len(toks)} distinct terms"
         )
-    if len(toks) > 1 and store.has_positions() \
-            and not _os.environ.get(_FORCE_STAGED_ENV):
+    if len(toks) > 1 and store.has_positions():
         return positional_docids(spark, store, toks, window=window,
                                  n_tasks=n_tasks)
     cands = matching_docids(spark, store, all_of=toks, n_tasks=n_tasks)

@@ -3,11 +3,13 @@
 Design (SURVEY.md §3.1 "our lifecycle"):
   driver:   tokenize queries (tiny), look up df per term from term_stats,
             compute idf — broadcast a {query -> [(term, idf)]} plan.
-  executor: segments scan with `term IN (...)` pushed into parquet
-            (file/row-group pruning via sorted term column), explicit
-            repartition by `shard` = docid-range — every block touching a
-            docid lives in exactly one task, so per-partition score sums
-            are FINAL scores (no partial-agg shuffle).
+  executor: whole segment FILES per task (bloom-pruned, LPT-packed
+            bins); each task reads its files in-task with `term IN (...)`
+            pushed into the parquet scan (row-group pruning via the sorted
+            term column). Files are shard-complete and LSM dirs own
+            disjoint docid ranges, so every block touching a docid lives
+            in exactly one task and per-partition score sums are FINAL
+            scores — postings never shuffle (`_partial_scores`).
   mapInArrow: decode blocks (numpy varint), score vectorized in float64,
             canonical accumulation order (docid, then query-term rank) via
             lexsort + reduceat — bit-identical to the oracle's summation
@@ -48,6 +50,7 @@ from visionsearch_spark.index.store import IndexStore
 
 RESULT_DDL = "query_id long, rank int, docid long, conv_id string, turn_idx int, score double"
 RESULT_COLUMNS = ["query_id", "rank", "docid", "conv_id", "turn_idx", "score"]
+PARTIAL_DDL = "query_id long, docid long, score double"
 
 
 def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
@@ -61,9 +64,9 @@ def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
     return spark.createDataFrame(pdf, ddl)
 
 # Sideband row tags: "\x00" never appears in analyzer output ([0-9a-z]+),
-# so these rows ride the SAME shard shuffle as the postings — each task
-# receives exactly its shard's allow-list / doc-boundary docids, with no
-# broadcast of unbounded sets.
+# so these rows share the segment schema with the postings — each task
+# receives exactly its files' shards' allow-list / doc-boundary docids
+# (routed by route_key), with no broadcast of unbounded sets.
 ALLOW_TERM = "\x00allow"
 BOUNDS_TERM = "\x00bounds"
 # tombstoned docids (index/deletes.py): masked before every k-cut.
@@ -75,7 +78,7 @@ DENY_TERM = "\x00deny"
 def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFrame:
     """Pack a docid set into segment-schema rows (one per shard): the
     docids are delta+varint encoded with the posting codec and delivered
-    co-partitioned with the blocks they gate."""
+    to the task that reads the blocks they gate."""
     from visionsearch_spark.index.codec import encode_docids
 
     @F.pandas_udf("binary")
@@ -126,7 +129,6 @@ def _topk_keep_ties(docids: np.ndarray, scores: np.ndarray, k: int
 def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
                    avgdl: float, threshold: float,
                    has_filter: bool = False, has_bounds: bool = False,
-                   has_deny: bool = False,
                    cursors: dict[int, float] | None = None):
     """qplans: [(query_id, [(term, idf, term_rank)], k)]; term_rank is the
     query-term's position in sorted unique-term order (summation order).
@@ -205,9 +207,9 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
             bounds = np.unique(np.concatenate(bounds_parts))
         # deny differs from allow: a task whose shards hold no dead docs
         # legitimately receives zero rows (nothing to mask) — per-task
-        # presence IS the constraint, so no plan-flag trap here. The
-        # plan-level has_deny still gates the single-term block-max path
-        # (masking must precede the k-cut).
+        # presence IS the constraint, so no plan-flag trap here. A task
+        # that does hold deny rows skips the single-term block-max path
+        # below (masking must precede the k-cut).
         deny = (np.unique(np.concatenate(deny_parts))
                 if deny_parts else None)
         has_sideband = has_filter or has_bounds or deny is not None
@@ -365,35 +367,6 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
         return _topk_keep_ties(d, s, k)
 
     return score
-
-
-# resolved segment-scan DataFrames, keyed (app, root, meta mtime): file
-# listing + footer reads cost ~0.1 s per spark.read.parquet — pure fixed
-# overhead per interactive query. Segment dirs are immutable (LSM), and
-# the meta mtime key ages entries out after an append/compaction flips
-# the live-dir list. LRU-capped: a long-lived driver touching many
-# DIFFERENT stores must not pin plans without bound — misses just re-run
-# spark.read.parquet.
-_SEG_DF_CACHE: dict[tuple, DataFrame] = {}
-_SEG_DF_CACHE_MAX = 16
-
-
-def _segments_df(spark: SparkSession, store: IndexStore) -> DataFrame:
-    import os
-
-    key = (spark.sparkContext.applicationId, store.root,
-           os.path.getmtime(store.meta_path))
-    df = _SEG_DF_CACHE.pop(key, None)  # pop+reinsert = move to LRU tail
-    if df is None:
-        # drop superseded snapshots of the same root (bounded cache)
-        for k in [k for k in _SEG_DF_CACHE
-                  if k[0] == key[0] and k[1] == key[1]]:
-            _SEG_DF_CACHE.pop(k, None)
-        df = spark.read.parquet(*store.segment_paths())
-    _SEG_DF_CACHE[key] = df
-    while len(_SEG_DF_CACHE) > _SEG_DF_CACHE_MAX:
-        _SEG_DF_CACHE.pop(next(iter(_SEG_DF_CACHE)))
-    return df
 
 
 # per-process memo of term->df lookups, keyed by store root (the executor-
@@ -658,12 +631,12 @@ def _bloom_prune(files: list[tuple[int, str]],
     the query terms (index/bloom.py — no false negatives, so pruning
     never changes results; a file without a sidecar is kept). This is
     what keeps tail-term queries at O(matching files) tasks on stores
-    with thousands of LSM files. VSS_QUERY_NO_BLOOM=1 disables (A/B)."""
+    with thousands of LSM files."""
     import os
 
     from visionsearch_spark.index import bloom
 
-    if os.environ.get("VSS_QUERY_NO_BLOOM") or not terms:
+    if not terms:
         return files
     kept = []
     for sz, p in files:
@@ -703,12 +676,7 @@ def _lpt_bins(files: list[tuple[int, str]], n_bins: int) -> list[list[str]]:
     """Greedy LPT: files in size-descending order, each into the
     currently-lightest bin — balanced BYTES per bin even when Zipf-heavy
     terms concentrate a store's bytes in a few shards. The bins (not the
-    files) are the unit Spark distributes: round-robin repartition of
-    exactly n_bins rows puts ONE bin on each task by count — which bin
-    lands on which task is arbitrary, and doesn't matter. (Sorting the
-    file ROWS instead would be a no-op: Spark's round-robin exchange
-    re-sorts and stripes rows from a random offset, discarding input
-    order — verified against PySpark 4.1.2.)"""
+    files) are the unit Spark distributes: ONE bin per task."""
     import heapq
 
     heap = [(0, i) for i in range(n_bins)]  # (bytes, bin)
@@ -721,54 +689,91 @@ def _lpt_bins(files: list[tuple[int, str]], n_bins: int) -> list[list[str]]:
     return [b for b in bins if b]
 
 
+def _file_bins(spark: SparkSession, store: IndexStore, terms: list[str],
+               n_tasks: int | None, n_queries: int) -> list[list[str]]:
+    """The live segment files that may hold `terms` (bloom-pruned),
+    LPT-packed into `_n_bins` byte-balanced bins — ONE BIN PER TASK.
+    Parallelism caps at the file count (= build n_partitions per live
+    dir — size n_partitions for the query fleet, not just the build).
+    [] when no file can hold any term."""
+    files = _bloom_prune(_segment_files(store), terms)
+    if not files:
+        return []
+    n_tasks = n_tasks or spark.sparkContext.defaultParallelism
+    return _lpt_bins(files, _n_bins(files, n_tasks, n_queries))
+
+
+def _launch_bins(spark: SparkSession, bins: list[list[str]],
+                 kernel, ddl: str) -> DataFrame:
+    """ONE-STAGE job running `kernel(paths) -> Iterator[RecordBatch]`
+    once per bin: spark.range(n, numPartitions=n) puts id i in partition
+    i deterministically, so the bins ride the task closure and NO
+    exchange (or driver-side pandas frame) exists at all — the older
+    shape paid a LocalTableScan + repartition exchange (~0.1 s/job at
+    local[32]) purely to place one row per task (r7)."""
+    def by_bin_id(batches: Iterator[pa.RecordBatch]
+                  ) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            for i in b.column("id").to_pylist():
+                yield from kernel(bins[i])
+
+    return spark.range(0, len(bins), 1, len(bins)).mapInArrow(by_bin_id, ddl)
+
+
+def _tombstone_docids(spark: SparkSession, store: IndexStore,
+                      meta: dict) -> DataFrame | None:
+    """PENDING tombstones (index/deletes.py) as DataFrame('docid long'),
+    or None when there are none. Read from the caller's OWN meta
+    snapshot — the one its stats came from — so a concurrent
+    delete/compact flip can't mix masked segments with an un-matching
+    deny list. Stores that never delete pay nothing."""
+    import os
+
+    from visionsearch_spark.index.deletes import TOMBSTONE_SCHEMA_DDL
+
+    dirs = meta.get("tombstone_dirs") or []
+    if not dirs:
+        return None
+    return spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(
+        *[os.path.join(store.root, d) for d in dirs]
+    ).select("docid")
+
+
 def _make_file_score_fn(qplans, avgdl: float, threshold: float,
                         hit_terms: list[str],
                         has_filter: bool = False,
                         has_bounds: bool = False,
-                        has_deny: bool = False,
                         cursors: dict[int, float] | None = None):
-    """File-aligned kernel: each task receives segment FILE PATHS, reads
-    them directly (pyarrow dataset; term-IN filter prunes row groups off
-    the same min/max stats the Spark scan would use; single-threaded —
-    Spark owns the core), and delegates to the ordinary score kernel.
-    use_threads=False because parallelism belongs to the task scheduler,
-    not a nested Arrow pool fighting 32 sibling tasks.
+    """File-aligned kernel `score(paths, side=())`: reads the task's
+    segment FILES directly (pyarrow dataset; term-IN filter prunes row
+    groups off the footer min/max stats; use_threads=False because
+    parallelism belongs to the task scheduler, not a nested Arrow pool
+    fighting 32 sibling tasks) and delegates to the score kernel.
 
-    Sideband rows (allow-lists / collapse bounds) arrive in the SAME
-    input as the path rows — per-shard packed rows routed by route_key
-    to the task owning the files whose shard ranges cover them
-    (`_partial_scores`). They are re-emitted to the inner kernel as a
-    prologue batch in the segment schema, so the masking/collapse logic
-    is byte-identical to the shuffle path's."""
+    `side` holds the task's sideband rows (allow-lists / collapse bounds
+    / tombstones) as (term, shard, n, docids_bin) — per-shard packs
+    routed by route_key to the task owning the files whose shard ranges
+    cover them (`_partial_scores`). They are re-emitted to the inner
+    kernel as a prologue batch in the segment schema."""
     inner = _make_score_fn(qplans, avgdl, threshold,
                            has_filter=has_filter, has_bounds=has_bounds,
-                           has_deny=has_deny, cursors=cursors)
+                           cursors=cursors)
     cols = ["term", "shard", "n", "docids_bin", "tfs_bin", "dls_bin",
             "max_tf", "min_dl"]
 
-    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def score(paths: list[str], side: list[tuple] = ()
+              ) -> Iterator[pa.RecordBatch]:
         import itertools
 
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        paths: list[str] = []
-        side: list[tuple] = []
-        for b in batches:
-            pdf = b.to_pandas()
-            has_side_cols = "term" in pdf.columns
-            for row in pdf.itertuples(index=False):
-                if row.paths is not None:
-                    paths.extend(row.paths)
-                elif has_side_cols and row.term is not None:
-                    side.append((row.term, int(row.shard), int(row.n),
-                                 row.docids_bin, b"", b"", 0, 0))
-        if not paths:
-            return
         prologue = []
         if side:
             prologue.append(pa.RecordBatch.from_pandas(
-                pd.DataFrame(side, columns=cols), preserve_index=False,
+                pd.DataFrame([(*s, b"", b"", 0, 0) for s in side],
+                             columns=cols),
+                preserve_index=False,
             ))
         scanner = pads.dataset(paths, format="parquet").scanner(
             columns=cols,
@@ -805,25 +810,23 @@ def _partial_scores(
     all terms' blocks for a shard co-located — and LSM increments own
     disjoint docid ranges; therefore ANY whole-file task assignment
     computes complete per-docid sums, and the per-partition k-cut stays
-    exact. Tasks receive file PATHS (a ~100-byte round-robin exchange),
-    read their files in-task, score, and emit ≤ k+ties rows per query.
+    exact. Tasks receive their bin of file PATHS in the task closure
+    (`_launch_bins`, one stage), read their files in-task, score, and
+    emit ≤ k+ties rows per query.
     The r3 scaling decomposition blamed the residual efficiency gap on
     shuffle serialization of the filtered posting KBs through one host
     memory bus — this path removes that exchange entirely instead of
     tuning it.
 
-    SIDEBAND QUERIES (docid_filter / collapse_bounds) ride the SAME
-    file-aligned plan since r5: the gating rows stay per-shard packs and
-    are routed to their blocks' task by joining each file's footer shard
-    range (broadcast, n_files rows) and shuffling ONLY the packs on
+    SIDEBAND QUERIES (docid_filter / collapse_bounds / pending
+    tombstones) ride the SAME file-aligned plan since r5: the gating
+    rows stay per-shard packs and are routed to their blocks' task by
+    each file's footer shard range, shuffling ONLY the packs on
     route_key — postings never move. Collapse stays exact per task: a
     parent's best unit lives in exactly one (docid-disjoint) file, that
     task emits the parent's global max, and other tasks' lower partials
     lose in the final conv-level max merge (batch_topk). The filter
-    masks before the k-cut exactly as before.
-
-    SHUFFLE PATH (VSS_QUERY_FORCE_SHUFFLE=1 only): the r3-era explicit
-    shard repartition, kept verbatim for same-session A/B honesty."""
+    masks before the k-cut."""
     meta = store.read_meta()
     avgdl, n_docs = float(meta["avgdl"]), int(meta["n_docs"])
     shard_range = int(meta["shard_range"])
@@ -850,191 +853,108 @@ def _partial_scores(
     if not qplans:
         return None, []
     hit_terms = sorted({t for _q, ts, _k in qplans for t, _w, _r in ts})
-
-    # PENDING tombstones (index/deletes.py) are a plan-level deny set —
-    # loaded from the SAME meta snapshot as the stats above, so a
-    # concurrent delete/compact flip can't mix masked segments with an
-    # un-matching deny list. Stores that never delete pay nothing.
-    docid_deny = None
-    tomb_dirs = meta.get("tombstone_dirs") or []
-    if tomb_dirs:
-        import os as _os2
-        docid_deny = spark.read.schema("docid long, dl long").parquet(
-            *[_os2.path.join(store.root, d) for d in tomb_dirs]
-        ).select("docid")
-
-    n_tasks = n_tasks or spark.sparkContext.defaultParallelism
-    import os as _os
-
-    # VSS_QUERY_FORCE_SHUFFLE=1 pins the legacy shuffle plan — only for
-    # same-session A/B measurement (jobs/scaling_bench.py honesty), never
-    # a production switch
-    if not _os.environ.get("VSS_QUERY_FORCE_SHUFFLE"):
-        files = _bloom_prune(_segment_files(store), hit_terms)
-        if not files:  # store with no committed segments: nothing to hit
-            return None, []
-        # LPT-pack files into byte-balanced bins, ONE BIN PER TASK; the
-        # bin count is work-proportional (_n_bins): capped at
-        # min(n_tasks, n_files) as before, floored so each task owns
-        # ~VSS_QUERY_BIN_BYTES of segment bytes per query. Parallelism
-        # caps at the file count (= build n_partitions per live dir —
-        # size n_partitions for the query fleet, not just the build).
-        bins = _lpt_bins(files, _n_bins(files, n_tasks, len(qplans)))
-        rkeys = _route_keys(len(bins))
-        has_filter = docid_filter is not None
-        has_bounds = collapse_bounds is not None
-        has_deny = docid_deny is not None
-        if not has_filter and not has_bounds and not has_deny:
-            # ONE-STAGE job: spark.range(n, numPartitions=n) puts id i
-            # in partition i deterministically, so the bins ride the
-            # task closure and NO exchange (or driver-side pandas frame)
-            # exists at all — the old shape paid a LocalTableScan +
-            # repartition exchange (~0.1 s/job at local[32]) purely to
-            # place one row per task (r7).
-            inner_fn = _make_file_score_fn(qplans, avgdl, threshold,
-                                           hit_terms, cursors=cursors)
-            bin_paths = [list(b) for b in bins]
-
-            def by_bin_id(batches: Iterator[pa.RecordBatch]
-                          ) -> Iterator[pa.RecordBatch]:
-                rows = [{"route_key": 0, "paths": bin_paths[int(v)]}
-                        for b in batches
-                        for v in b.column("id").to_pylist()]
-                if not rows:
-                    return
-                synth = pa.RecordBatch.from_pylist(rows, schema=pa.schema(
-                    [("route_key", pa.int64()),
-                     ("paths", pa.list_(pa.string()))]))
-                yield from inner_fn(iter([synth]))
-
-            partials = spark.range(0, len(bins), 1, len(bins)) \
-                .mapInArrow(
-                    by_bin_id, "query_id long, docid long, score double",
-                )
-            return partials, qplans
-        # SIDEBAND FAST PATH (r5): allow/bounds rows stay DISTRIBUTED
-        # per-shard packs (never an unbounded driver materialization or
-        # broadcast) and ride ONE small shuffle keyed by route_key to
-        # the task owning the files whose shard range covers them. The
-        # shard→task map is a STAB QUERY against per-file
-        # (shard_lo, shard_hi) intervals read from parquet footers:
-        # the sorted interval arrays (n_files entries — driver
-        # metadata) ship in a pandas_udf closure, each shard binary-
-        # searches them (prefix-max-hi early exit), and the matching
-        # route keys explode into rows. O(shards · log files), unlike
-        # the broadcast range join it replaced, whose nested-loop
-        # predicate was O(shards · files) — a real cost once a fleet-
-        # sized store holds 10^4+ files. Equal route keys co-locate
-        # under ANY hash, so correctness (every gating row reaches its
-        # blocks' task) never depends on the engineered-key balance.
-        # A dir-boundary shard straddling several files (tiny appends
-        # can slice one shard across many dirs) routes to ALL their
-        # tasks (np.unique in the kernel absorbs duplicates).
-        # Postings themselves still never shuffle.
-        route_of_file = {
-            p: rkeys[i] for i, b in enumerate(bins) for p in b
-        }
-        intervals = sorted(
-            (*_file_shard_range(p), route_of_file[p]) for _sz, p in files
-        )
-        _los = np.array([t[0] for t in intervals], dtype=np.int64)
-        _his = np.array([t[1] for t in intervals], dtype=np.int64)
-        _rks = np.array([t[2] for t in intervals], dtype=np.int64)
-        _pmax = np.maximum.accumulate(_his)
-
-        @F.pandas_udf("array<long>")
-        def _routes_of(shard: pd.Series) -> pd.Series:
-            s = shard.to_numpy(dtype=np.int64)
-            start = np.searchsorted(_los, s, side="right") - 1
-            out = []
-            for v, j in zip(s, start):
-                acc = set()
-                k = int(j)
-                # every interval at index <= j has lo <= v; stop once
-                # even the largest hi to the left cannot reach v
-                while k >= 0 and _pmax[k] >= v:
-                    if _his[k] >= v:
-                        acc.add(int(_rks[k]))
-                    k -= 1
-                out.append(sorted(acc))
-            return pd.Series(out)
-
-        union_ddl = ("route_key long, paths array<string>, term string, "
-                     "shard long, n int, docids_bin binary")
-        union_cols = ["route_key", "paths", "term", "shard", "n",
-                      "docids_bin"]
-        parts = [_local_df(
-            spark,
-            [(rkeys[i], b, None, None, None, None)
-             for i, b in enumerate(bins)],
-            union_ddl, union_cols,
-        )]
-
-        def routed(side: DataFrame) -> DataFrame:
-            return side.select(
-                F.explode(_routes_of(F.col("shard"))).alias("route_key"),
-                F.lit(None).cast("array<string>").alias("paths"),
-                "term", "shard", "n", "docids_bin",
-            )
-
-        if has_filter:
-            parts.append(routed(
-                _sideband_rows(docid_filter, shard_range, ALLOW_TERM)
-            ))
-        if has_deny:
-            parts.append(routed(
-                _sideband_rows(docid_deny, shard_range, DENY_TERM)
-            ))
-        if has_bounds:
-            parts.append(routed(
-                _sideband_rows(collapse_bounds, shard_range, BOUNDS_TERM)
-            ))
-            parts.append(routed(
-                _carry_bounds_rows(spark, collapse_bounds, shard_range,
-                                   n_docs)
-            ))
-        seg = parts[0]
-        for p_ in parts[1:]:
-            seg = seg.unionByName(p_)
-        partials = seg.repartition(len(bins), "route_key").mapInArrow(
-            _make_file_score_fn(qplans, avgdl, threshold, hit_terms,
-                                has_filter=has_filter,
-                                has_bounds=has_bounds,
-                                has_deny=has_deny, cursors=cursors),
-            "query_id long, docid long, score double",
-        )
-        return partials, qplans
-    seg = (
-        _segments_df(spark, store)
-        .filter(F.col("term").isin(hit_terms))  # pushed to parquet scan
-        .select("term", "shard", "n", "docids_bin", "tfs_bin",
-                "dls_bin", "max_tf", "min_dl")
+    docid_deny = _tombstone_docids(spark, store, meta)
+    bins = _file_bins(spark, store, hit_terms, n_tasks, len(qplans))
+    if not bins:  # store with no committed segments: nothing to hit
+        return None, []
+    has_filter = docid_filter is not None
+    has_bounds = collapse_bounds is not None
+    has_deny = docid_deny is not None
+    score_files = _make_file_score_fn(
+        qplans, avgdl, threshold, hit_terms, has_filter=has_filter,
+        has_bounds=has_bounds, cursors=cursors)
+    if not has_filter and not has_bounds and not has_deny:
+        return _launch_bins(spark, bins, score_files, PARTIAL_DDL), qplans
+    # SIDEBAND PATH (r5): allow/bounds/deny rows stay DISTRIBUTED
+    # per-shard packs (never an unbounded driver materialization or
+    # broadcast) and ride ONE small shuffle keyed by route_key to the
+    # task owning the files whose shard range covers them. The
+    # shard→task map is a STAB QUERY against per-file (shard_lo,
+    # shard_hi) intervals read from parquet footers: the sorted interval
+    # arrays (n_files entries — driver metadata) ship in a pandas_udf
+    # closure, each shard binary-searches them (prefix-max-hi early
+    # exit), and the matching route keys explode into rows.
+    # O(shards · log files), unlike the broadcast range join it
+    # replaced, whose nested-loop predicate was O(shards · files) — a
+    # real cost once a fleet-sized store holds 10^4+ files. Equal route
+    # keys co-locate under ANY hash, so correctness (every gating row
+    # reaches its blocks' task) never depends on the engineered-key
+    # balance. A dir-boundary shard straddling several files (tiny
+    # appends can slice one shard across many dirs) routes to ALL their
+    # tasks (np.unique in the kernel absorbs duplicates).
+    rkeys = _route_keys(len(bins))
+    intervals = sorted(
+        (*_file_shard_range(p), rkeys[i])
+        for i, b in enumerate(bins) for p in b
     )
-    if docid_filter is not None:
-        seg = seg.unionByName(
-            _sideband_rows(docid_filter, shard_range, ALLOW_TERM)
+    _los = np.array([t[0] for t in intervals], dtype=np.int64)
+    _his = np.array([t[1] for t in intervals], dtype=np.int64)
+    _rks = np.array([t[2] for t in intervals], dtype=np.int64)
+    _pmax = np.maximum.accumulate(_his)
+
+    @F.pandas_udf("array<long>")
+    def _routes_of(shard: pd.Series) -> pd.Series:
+        s = shard.to_numpy(dtype=np.int64)
+        start = np.searchsorted(_los, s, side="right") - 1
+        out = []
+        for v, j in zip(s, start):
+            acc = set()
+            k = int(j)
+            # every interval at index <= j has lo <= v; stop once
+            # even the largest hi to the left cannot reach v
+            while k >= 0 and _pmax[k] >= v:
+                if _his[k] >= v:
+                    acc.add(int(_rks[k]))
+                k -= 1
+            out.append(sorted(acc))
+        return pd.Series(out)
+
+    union_ddl = ("route_key long, paths array<string>, term string, "
+                 "shard long, n int, docids_bin binary")
+    union_cols = ["route_key", "paths", "term", "shard", "n",
+                  "docids_bin"]
+    parts = [_local_df(
+        spark,
+        [(rkeys[i], b, None, None, None, None)
+         for i, b in enumerate(bins)],
+        union_ddl, union_cols,
+    )]
+
+    def routed(side: DataFrame) -> DataFrame:
+        return side.select(
+            F.explode(_routes_of(F.col("shard"))).alias("route_key"),
+            F.lit(None).cast("array<string>").alias("paths"),
+            "term", "shard", "n", "docids_bin",
         )
-    if docid_deny is not None:
-        seg = seg.unionByName(
-            _sideband_rows(docid_deny, shard_range, DENY_TERM)
-        )
-    if collapse_bounds is not None:
-        seg = seg.unionByName(
-            _sideband_rows(collapse_bounds, shard_range, BOUNDS_TERM)
-        ).unionByName(
+
+    for side_df, tag in ((docid_filter, ALLOW_TERM), (docid_deny, DENY_TERM),
+                         (collapse_bounds, BOUNDS_TERM)):
+        if side_df is not None:
+            parts.append(routed(_sideband_rows(side_df, shard_range, tag)))
+    if has_bounds:
+        parts.append(routed(
             _carry_bounds_rows(spark, collapse_bounds, shard_range, n_docs)
-        )
-    seg = seg.repartition(n_tasks, "shard")  # docid-range co-location
-    partials = seg.mapInArrow(
-        _make_score_fn(
-            qplans, avgdl, threshold,
-            has_filter=docid_filter is not None,
-            has_bounds=collapse_bounds is not None,
-            has_deny=docid_deny is not None,
-            cursors=cursors,
-        ),
-        "query_id long, docid long, score double",
-    )
+        ))
+    seg = parts[0]
+    for p_ in parts[1:]:
+        seg = seg.unionByName(p_)
+
+    def score_routed(batches: Iterator[pa.RecordBatch]
+                     ) -> Iterator[pa.RecordBatch]:
+        paths: list[str] = []
+        side: list[tuple] = []
+        for b in batches:
+            for row in b.to_pandas().itertuples(index=False):
+                if row.paths is not None:
+                    paths.extend(row.paths)
+                else:
+                    side.append((row.term, int(row.shard), int(row.n),
+                                 row.docids_bin))
+        if paths:
+            yield from score_files(paths, side)
+
+    partials = seg.repartition(len(bins), "route_key").mapInArrow(
+        score_routed, PARTIAL_DDL)
     return partials, qplans
 
 
@@ -1102,8 +1022,8 @@ def batch_topk(
     search (predicate ∧ top-k): only these docids are ranked, with
     UNCHANGED global stats (df/N/avgdl), i.e. filter-the-results
     semantics, the reference's S2 prefix-filter composed with search.
-    The set is delivered per docid-range shard as sideband rows through
-    the same shuffle as the postings (no unbounded broadcast), and masks
+    The set is delivered per docid-range shard as sideband rows routed
+    to the task reading those shards' files (no unbounded broadcast), and masks
     candidates BEFORE the per-partition k-cut, so the cut stays exact.
 
     collapse_bounds: DataFrame with a `docid` column holding the FIRST

@@ -300,7 +300,7 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
         # deferral): the r6 decision priced a sidecar as a full
         # post-write re-read job of the fresh delta (honest cost now
         # measured: 1.20x on a 10%-delta append — the r6 "near-null"
-        # A/B had a broken ON arm, see jobs/append_bloom_ab.py). The
+        # A/B had a broken ON arm, OPTIMIZATION_r07.md). The
         # fused kernel path removed that job: the merge kernel writes
         # each partition's filter in the write stage for a few ms, so
         # delta dirs are now born PRUNABLE — on a long-lived LSM store
