@@ -310,3 +310,63 @@ def test_deny_rides_fast_path_plan(spark, store):
         os.environ.pop("VSS_QUERY_BIN_BYTES", None)
     assert not any(d in plan for d in seg_dirs)
     assert "hashpartitioning(route_key" in plan
+
+
+def test_mask_fragments_reencodes_hit_blocks(spark):
+    """The purge kernel on hand-built fragments: untouched blocks pass
+    through byte-identical, fully deleted blocks vanish, partly deleted
+    blocks equal the per-block encoders over their kept postings (with
+    min/max_docid, n, max_tf, min_dl recomputed), and a NULL pos_bin
+    stays NULL."""
+    import numpy as np
+
+    from visionsearch_spark.index.codec import (
+        encode_docids,
+        encode_positions,
+        encode_varint,
+    )
+    from visionsearch_spark.index.spimi import _mask_fragments
+    from visionsearch_spark.index.store import SEGMENT_SCHEMA_DDL
+
+    def block(term, docids, tfs, dls, pos_flat):
+        d = np.asarray(docids, dtype=np.int64)
+        t = np.asarray(tfs, dtype=np.int64)
+        L = np.asarray(dls, dtype=np.int64)
+        pb = (encode_positions(np.asarray(pos_flat, dtype=np.int64), t)
+              if pos_flat is not None else None)
+        return (term, int(d[0]), int(d[-1]), len(d),
+                bytes(encode_docids(d)),
+                bytes(encode_varint(t.astype(np.uint64))),
+                bytes(encode_varint(L.astype(np.uint64))),
+                int(t.max()), int(L.min()), pb)
+
+    rows = [
+        # untouched: no dead docid inside [min_docid, max_docid]
+        block("alpha", [1, 5, 9], [1, 2, 1], [4, 7, 3], [2, 0, 5, 1]),
+        # range holds dead 6 but the block does not: re-encoded as is
+        block("beta", [4, 8], [3, 1], [9, 8], [0, 2, 7, 3]),
+        # partly deleted (drops 6 and 7), positional
+        block("beta", [2, 6, 7, 30], [2, 1, 3, 1], [5, 2, 9, 6],
+              [1, 4, 0, 2, 5, 8, 3]),
+        # fully deleted
+        block("gamma", [40, 41], [1, 1], [3, 3], [0, 1]),
+        # partly deleted, NULL pos_bin
+        block("delta", [3, 50, 60], [2, 5, 1], [8, 7, 6], None),
+    ]
+    frags = spark.createDataFrame(rows, SEGMENT_SCHEMA_DDL)
+    dead = spark.createDataFrame([(6,), (7,), (40,), (41,), (50,)],
+                                 "docid long")
+    out = _mask_fragments(frags, dead, 1000, n_tasks=2).collect()
+
+    def norm(r):
+        return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                     for v in r)
+
+    got = sorted(norm(r) for r in out)
+    expect = sorted([
+        rows[0],
+        rows[1],
+        block("beta", [2, 30], [2, 1], [5, 6], [1, 4, 3]),
+        block("delta", [3, 60], [2, 1], [8, 6], None),
+    ])
+    assert got == expect

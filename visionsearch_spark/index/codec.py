@@ -8,12 +8,38 @@ analog of the reference's contiguous float32 matrix
 (`/root/reference/visionsearch/common_utils/aisearch/core.py:43`): a
 compact, scan-friendly physical layout for the index payload.
 
+Decode API. Every reader of more than one block goes through the column
+decoders, never a per-block or per-row loop:
+  decode_blocks(col, ns) -> int64 docids of every block of a binary
+                            column, in row order (block i holds ns[i]);
+  payload(col)           -> the column's value bytes as one uint8 array,
+                            fed to decode_varint (tfs_bin, dls_bin) or
+                            decode_positions (pos_bin);
+  term_runs(tbl)         -> a posting table sorted by term plus each
+                            term's row range, so a term's blocks are one
+                            zero-copy slice.
+The scalar decode_docids/decode_varint/decode_positions primitives stay
+for callers that decode exactly ONE block (fsck's spot check).
+
+Chunk rule: a column may be a ChunkedArray. Each chunk's value bytes are
+read zero-copy from its data buffer over the span its offsets give
+(honouring the array's slice offset) and decoded in one pass per chunk —
+never combine_chunks: one Arrow binary chunk's int32 offsets cap it at
+2 GiB (spimi._CHUNK_BYTE_LIMIT), so a large column stays chunked.
+
+Null rule: payload/decode_blocks raise on a column with NULL slots. A
+NULL slot's offsets may still span real bytes in memory (spimi._binary_col
+writes NULL pos_bin slots over the shared stream; only a parquet round
+trip empties them), so callers filter NULL slots out first.
+
 Round-trip property-tested in tests/test_codec.py (hypothesis).
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _MASK = np.uint64(0x7F)
 _CONT = np.uint8(0x80)
@@ -126,3 +152,77 @@ def encode_docids(docids: np.ndarray) -> bytes:
 def decode_docids(buf: bytes, n: int) -> np.ndarray:
     deltas = decode_varint(buf, n).astype(np.int64)
     return np.cumsum(deltas)
+
+
+def _value_bytes(chunk: pa.Array) -> np.ndarray:
+    """Zero-copy uint8 view of one binary chunk's values, concatenated."""
+    if chunk.null_count:
+        raise ValueError("posting column has NULL slots; filter them out "
+                         "before decoding (codec null rule)")
+    data = chunk.buffers()[2]
+    if len(chunk) == 0 or data is None:
+        return np.zeros(0, dtype=np.uint8)
+    odt = np.int64 if pa.types.is_large_binary(chunk.type) else np.int32
+    off = np.frombuffer(chunk.buffers()[1], dtype=odt, count=len(chunk) + 1,
+                        offset=chunk.offset * np.dtype(odt).itemsize)
+    lo = int(off[0])
+    return np.frombuffer(data, dtype=np.uint8, count=int(off[-1]) - lo,
+                         offset=lo)
+
+
+def _chunks(col: pa.Array | pa.ChunkedArray) -> list[pa.Array]:
+    return col.chunks if isinstance(col, pa.ChunkedArray) else [col]
+
+
+def payload(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """A binary column's value bytes as one uint8 array (zero-copy for a
+    single chunk). LEB128 streams concatenate, so this feeds
+    decode_varint/decode_positions for every block at once."""
+    parts = [_value_bytes(c) for c in _chunks(col)]
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=np.uint8)
+
+
+def decode_blocks(col: pa.Array | pa.ChunkedArray,
+                  ns: np.ndarray) -> np.ndarray:
+    """Docids of every block of a docids_bin column, concatenated in row
+    order: one decode_varint pass per chunk, then per-block absolutes
+    restored by a segmented cumsum (each block's first delta is
+    absolute). Equal to np.concatenate of decode_docids per block."""
+    ns = np.asarray(ns, dtype=np.int64)
+    if ns.size != len(col):
+        raise ValueError(f"{ns.size} block counts for {len(col)} blocks")
+    parts, i = [], 0
+    for c in _chunks(col):
+        m = int(ns[i:i + len(c)].sum())
+        parts.append(decode_varint(_value_bytes(c), m))
+        i += len(c)
+    deltas = (np.concatenate(parts) if parts
+              else np.zeros(0, dtype=np.uint64)).astype(np.int64)
+    if deltas.size == 0:
+        return deltas
+    starts = np.zeros(ns.size, dtype=np.int64)
+    np.cumsum(ns[:-1], out=starts[1:])
+    # empty blocks repeat their base zero times; clip keeps it in range
+    starts = np.minimum(starts, deltas.size - 1)
+    c = np.cumsum(deltas)
+    return c - np.repeat(c[starts] - deltas[starts], ns)
+
+
+def term_runs(tbl: pa.Table) -> tuple[pa.Table, dict[str, tuple[int, int]]]:
+    """`tbl` stably sorted by its `term` column, and each term's
+    [start, stop) row range in the sorted table — a term's blocks are
+    then one zero-copy slice. Binary columns are widened to large_binary
+    first: the sort gathers every chunk into one, and large_binary's
+    int64 offsets lift the 2 GiB per-chunk cap."""
+    tbl = tbl.cast(pa.schema([
+        f.with_type(pa.large_binary()) if pa.types.is_binary(f.type) else f
+        for f in tbl.schema
+    ])).sort_by("term")
+    # the sort's gather leaves `term` in one chunk: combining is a no-op
+    ree = pc.run_end_encode(tbl["term"].combine_chunks())
+    ends = ree.run_ends.to_numpy().astype(np.int64)
+    starts = np.concatenate(([0], ends[:-1]))
+    return tbl, dict(zip(ree.values.to_pylist(),
+                         zip(starts.tolist(), ends.tolist())))

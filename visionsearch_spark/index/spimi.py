@@ -50,14 +50,12 @@ import time
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import TOKEN_SEP_RE, token_count_col
-from visionsearch_spark.bm25 import B, K1
 from visionsearch_spark.docid import assign_docids_with_count
 from visionsearch_spark.index.store import (
     MANIFEST_SCHEMA_DDL,
@@ -94,12 +92,6 @@ _FRAGMENT_PA_SCHEMA = pa.schema(
         ("pos_bin", pa.binary()),
     ]
 )
-
-
-def _tf_weight_np(tf: np.ndarray, dl: np.ndarray, avgdl: float) -> np.ndarray:
-    tf = tf.astype(np.float64)
-    dl = dl.astype(np.float64)
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
 
 # one Arrow binary column's offsets are int32: chunk the output so every
@@ -669,6 +661,52 @@ def spimi_pending(spark: SparkSession, store: IndexStore, shard_range: int,
     return True
 
 
+def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
+                 shard_range: int) -> list[pa.RecordBatch]:
+    """Fragment blocks with their `deny` docids dropped: every block
+    decoded in one pass per payload column, masked, and re-encoded by
+    _build_block_batches with ONE run key per input block. A block holds
+    <= BLOCK_SIZE postings of one shard, so each survivor re-encodes
+    byte-identically to per-block encode_docids/encode_varint/
+    encode_positions of its kept postings, with min/max_docid, n, max_tf
+    and min_dl recomputed; an emptied block vanishes and a NULL pos_bin
+    stays NULL."""
+    from visionsearch_spark.index.codec import (
+        decode_blocks,
+        decode_positions,
+        decode_varint,
+        payload,
+    )
+
+    ns = hits["n"].to_numpy().astype(np.int64)
+    total = int(ns.sum())
+    docids = decode_blocks(hits["docids_bin"], ns)
+    tfs = decode_varint(payload(hits["tfs_bin"]), total).astype(np.int64)
+    dls = decode_varint(payload(hits["dls_bin"]), total).astype(np.int64)
+    keep = deny[np.minimum(np.searchsorted(deny, docids), deny.size - 1)] \
+        != docids
+    pos_flat = pos_valid = None
+    pos_col = hits["pos_bin"]
+    if pos_col.null_count < len(pos_col):
+        # NULL slots are filtered out before decoding (codec null rule)
+        # and re-emitted NULL through pos_valid. Positions are per-doc
+        # reset, so dropping whole docs keeps the rest exact.
+        valid = np.repeat(pos_col.is_valid().to_numpy(zero_copy_only=False),
+                          ns)
+        pos_flat = np.zeros(int(tfs.sum()), dtype=np.int64)
+        pos_flat[np.repeat(valid, tfs)] = decode_positions(
+            payload(pos_col.filter(pos_col.is_valid())), tfs[valid])
+        pos_flat = pos_flat[np.repeat(keep, tfs)]
+        pos_valid = valid[keep]
+    run = np.repeat(np.arange(ns.size), ns)
+    batches, _stats = _build_block_batches(
+        run[keep], docids[keep], tfs[keep], dls[keep], shard_range,
+        pos_flat=pos_flat, pos_valid=pos_valid,
+        term_values=hits["term"].to_numpy(zero_copy_only=False),
+    )
+    return batches
+
+
 def _mask_fragments(frags: DataFrame, dead: DataFrame,
                     shard_range: int,
                     n_tasks: int | None = None) -> DataFrame:
@@ -681,16 +719,11 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
     ("\\x00deny" < every analyzer term), so the kernel sees the complete
     deny set before any block. Blocks whose [min_docid, max_docid] range
     contains no dead docid — the overwhelming majority under realistic
-    delete rates — pass through with a vectorized binary-search check
-    and ZERO decode/encode work; only intersecting blocks re-encode.
-    Emptied blocks vanish (term df then falls out of the post-mask
-    groupBy naturally)."""
-    from visionsearch_spark.index.codec import (
-        decode_docids,
-        decode_varint,
-        encode_docids,
-        encode_varint,
-    )
+    delete rates — pass through as an Arrow filter with ZERO
+    decode/encode work; only intersecting blocks re-encode
+    (`_mask_blocks`). Emptied blocks vanish (term df then falls out of
+    the post-mask groupBy naturally)."""
+    from visionsearch_spark.index.codec import decode_blocks
     from visionsearch_spark.query.wand import DENY_TERM, _sideband_rows
 
     in_cols = ["term", "min_docid", "max_docid", "n", "docids_bin",
@@ -710,75 +743,36 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
     ).unionByName(side)
 
     def mask_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+
         deny_parts: list[np.ndarray] = []
         deny: np.ndarray | None = None
         for batch in batches:
-            pdf = batch.to_pandas()
-            is_deny = (pdf["term"] == DENY_TERM).to_numpy()
-            if is_deny.any():
-                for row in pdf[is_deny].itertuples(index=False):
-                    deny_parts.append(decode_docids(row.docids_bin, row.n))
-                pdf = pdf[~is_deny]
-            if not len(pdf):
+            is_deny = pc.equal(batch["term"], DENY_TERM)
+            rows = batch.filter(is_deny)
+            if rows.num_rows:
+                deny_parts.append(decode_blocks(rows["docids_bin"],
+                                                rows["n"].to_numpy()))
+            blocks = batch.filter(pc.invert(is_deny)).select(in_cols)
+            if not blocks.num_rows:
                 continue
             if deny is None:  # sort order: all deny rows precede blocks
                 deny = (np.unique(np.concatenate(deny_parts))
                         if deny_parts else np.empty(0, dtype=np.int64))
-            mins = pdf["min_docid"].to_numpy(dtype=np.int64)
-            maxs = pdf["max_docid"].to_numpy(dtype=np.int64)
+            mins = blocks["min_docid"].to_numpy()
+            maxs = blocks["max_docid"].to_numpy()
             if deny.size:
                 lo = np.searchsorted(deny, mins)
                 hit = (lo < deny.size) & (
                     deny[np.minimum(lo, deny.size - 1)] <= maxs
                 )
             else:
-                hit = np.zeros(len(pdf), dtype=bool)
-            clean = pdf[~hit][in_cols]
-            rows: list[tuple] = []
-            for row in pdf[hit].itertuples(index=False):
-                d = decode_docids(row.docids_bin, row.n)
-                pos = np.minimum(np.searchsorted(deny, d), deny.size - 1)
-                keep = deny[pos] != d
-                if not keep.any():
-                    continue  # block fully deleted
-                if keep.all():
-                    rows.append(tuple(getattr(row, c) for c in in_cols))
-                    continue
-                d2 = d[keep]
-                tf_all = decode_varint(row.tfs_bin, row.n).astype(np.int64)
-                tf = tf_all[keep]
-                dl = decode_varint(row.dls_bin, row.n)[keep]
-                pos_bytes = row.pos_bin
-                if pos_bytes is not None:
-                    # positions are per-doc-reset deltas: dropping whole
-                    # docs' spans keeps the remaining stream valid
-                    # (every kept doc still starts with its absolute)
-                    deltas = decode_varint(pos_bytes, int(tf_all.sum()))
-                    pos_bytes = encode_varint(
-                        deltas[np.repeat(keep, tf_all)]
-                    )
-                rows.append((
-                    row.term, int(d2[0]), int(d2[-1]), int(d2.size),
-                    encode_docids(d2),
-                    encode_varint(tf.astype(np.uint64)),
-                    encode_varint(dl.astype(np.uint64)),
-                    int(tf.max()), int(dl.min()),
-                    pos_bytes,
-                ))
-            tables = []
-            if len(clean):
-                tables.append(pa.Table.from_pandas(
-                    clean.reset_index(drop=True),
-                    schema=_FRAGMENT_PA_SCHEMA, preserve_index=False,
-                ))
-            if rows:
-                tables.append(pa.Table.from_arrays(
-                    [pa.array([r[i] for r in rows], type=f.type)
-                     for i, f in enumerate(_FRAGMENT_PA_SCHEMA)],
-                    schema=_FRAGMENT_PA_SCHEMA,
-                ))
-            for tbl in tables:
-                yield from tbl.to_batches(max_chunksize=65536)
+                hit = np.zeros(blocks.num_rows, dtype=bool)
+            if not hit.all():
+                yield blocks.filter(pa.array(~hit)).cast(_FRAGMENT_PA_SCHEMA)
+            if hit.any():
+                yield from _mask_blocks(blocks.filter(pa.array(hit)), deny,
+                                        shard_range)
 
     n_tasks = n_tasks or frags.sparkSession.sparkContext.defaultParallelism
     return (
@@ -1001,56 +995,53 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     file names after the write commits. Atomic per attempt
     (tmp+replace); retried/speculative attempts rewrite identical
     bytes, so last-wins is safe."""
-    from visionsearch_spark.index.codec import decode_positions, decode_varint
+    from visionsearch_spark.index.codec import (
+        decode_blocks,
+        decode_positions,
+        decode_varint,
+        payload,
+    )
 
     in_cols = ["term", "min_docid", "max_docid", "n", "docids_bin",
                "tfs_bin", "dls_bin", "max_tf", "min_dl", "pos_bin",
                "shard"]
 
     def compact_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        pdfs = [b.to_pandas() for b in batches]
-        if not pdfs:
+        import pyarrow.compute as pc
+
+        got = list(batches)
+        if not got:
             return
-        pdf = pd.concat(pdfs, ignore_index=True)[in_cols]
-        if not len(pdf):
+        tbl = pa.Table.from_batches(got).select(in_cols)
+        if not tbl.num_rows:
             return
-        terms_b = pdf["term"].to_numpy()
-        shards_b = pdf["shard"].to_numpy(dtype=np.int64)
-        ns = pdf["n"].to_numpy(dtype=np.int64)  # always >= 1
+        terms_b = tbl["term"]
+        shards_b = tbl["shard"].to_numpy()
+        ns = tbl["n"].to_numpy().astype(np.int64)  # always >= 1
         total = int(ns.sum())
-        vbnd = np.zeros(ns.size + 1, dtype=np.int64)
-        np.cumsum(ns, out=vbnd[1:])
-        vstarts = vbnd[:-1]
         # one decode per payload column for the WHOLE partition
-        d_deltas = decode_varint(
-            b"".join(pdf["docids_bin"]), total).astype(np.int64)
-        c = np.cumsum(d_deltas)
-        base = c[vstarts] - d_deltas[vstarts]
-        docids = c - np.repeat(base, ns)  # per-block absolute restored
-        tfs = decode_varint(b"".join(pdf["tfs_bin"]), total).astype(np.int64)
-        dls = decode_varint(b"".join(pdf["dls_bin"]), total).astype(np.int64)
+        docids = decode_blocks(tbl["docids_bin"], ns)
+        tfs = decode_varint(payload(tbl["tfs_bin"]), total).astype(np.int64)
+        dls = decode_varint(payload(tbl["dls_bin"]), total).astype(np.int64)
         # (term, shard) runs -> int keys; builder cuts on key+shard change
         runc = np.ones(ns.size, dtype=bool)
-        if ns.size > 1:
-            runc[1:] = (terms_b[1:] != terms_b[:-1]) \
-                | (shards_b[1:] != shards_b[:-1])
+        runc[1:] = pc.not_equal(terms_b[1:], terms_b[:-1]).to_numpy() \
+            | (shards_b[1:] != shards_b[:-1])
         run_id_b = np.cumsum(runc) - 1
-        run_terms = terms_b[np.flatnonzero(runc)]
+        run_terms = terms_b.filter(pa.array(runc)).to_numpy()
         term_keys = np.repeat(run_id_b, ns)
 
-        pbins = pdf["pos_bin"].to_numpy()
-        null_b = np.array([p is None for p in pbins], dtype=bool)
+        pos_col = tbl["pos_bin"]
+        null_b = pc.is_null(pos_col).to_numpy()
         pos_flat = pos_valid = None
         if not null_b.all():
-            occ_pb = np.add.reduceat(tfs, vstarts)  # occurrences per block
+            # NULL slots are filtered out before decoding (codec null
+            # rule); a run holding one degrades whole to NULL
             run_null = np.logical_or.reduceat(null_b, np.flatnonzero(runc))
-            pos_flat = np.zeros(total_occ := int(tfs.sum()), dtype=np.int64)
-            nn = ~null_b
-            if nn.any():
-                decoded = decode_positions(
-                    b"".join(pbins[nn]), tfs[np.repeat(nn, ns)]
-                )
-                pos_flat[np.repeat(nn, occ_pb)] = decoded
+            valid = np.repeat(~null_b, ns)
+            pos_flat = np.zeros(int(tfs.sum()), dtype=np.int64)
+            pos_flat[np.repeat(valid, tfs)] = decode_positions(
+                payload(pos_col.filter(pa.array(~null_b))), tfs[valid])
             pos_valid = np.repeat(~run_null[run_id_b], ns)
         out_batches, _stats = _build_block_batches(
             term_keys, docids, tfs, dls, shard_range,

@@ -41,6 +41,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import tokenize, tokens_col
+from visionsearch_spark.index.codec import (
+    decode_blocks,
+    decode_positions,
+    decode_varint,
+    payload,
+    term_runs,
+)
 from visionsearch_spark.index.store import IndexStore
 from visionsearch_spark.query import wand
 
@@ -70,37 +77,20 @@ def _make_match_fn(all_of: list[str], any_of: list[str],
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        scanner = pads.dataset(paths, format="parquet").scanner(
+        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
             columns=["term", "n", "docids_bin"],
             filter=pc.field("term").isin(read_terms),
             use_threads=False,
-        )
-        tbl = scanner.to_table()
-        terms_b = np.asarray(tbl["term"].to_pylist(), dtype=object)
+        ).to_table())
         ns = tbl["n"].to_numpy().astype(np.int64)
-        # one varint pass for ALL blocks (r7 — LEB128 streams
-        # concatenate; segmented cumsum restores per-block absolutes)
-        from visionsearch_spark.index.codec import decode_varint as _dv
-
-        total = int(ns.sum())
-        deltas = _dv(b"".join(tbl["docids_bin"].to_pylist()),
-                     total).astype(np.int64)
-        vbnd = np.zeros(ns.size + 1, dtype=np.int64)
-        np.cumsum(ns, out=vbnd[1:])
-        c = np.cumsum(deltas) if total else np.zeros(0, dtype=np.int64)
-        vs = vbnd[:-1]
-        all_docids = (c - np.repeat(c[vs] - deltas[vs], ns)
-                      if ns.size else np.zeros(0, dtype=np.int64))
-        rows_of: dict[str, list[int]] = {}
-        for i, t in enumerate(terms_b):
-            rows_of.setdefault(t, []).append(i)
+        poff = np.concatenate(([0], np.cumsum(ns)))
+        all_docids = decode_blocks(tbl["docids_bin"], ns)
 
         def docs(t: str) -> np.ndarray:
-            idxs = rows_of.get(t)
-            if not idxs:
+            run = runs.get(t)
+            if run is None:
                 return np.empty(0, dtype=np.int64)
-            return np.unique(np.concatenate(
-                [all_docids[vbnd[i]:vbnd[i + 1]] for i in idxs]))
+            return np.unique(all_docids[poff[run[0]]:poff[run[1]]])
 
         if all_of:
             base = docs(all_of[0])
@@ -213,56 +203,39 @@ def _make_positional_fn(toks: list[str], window: int | None,
     a vectorized sliding count — O(postings of the query's terms), never
     O(candidate tokens) like the staged-text fallback. Only
     docids_bin/tfs_bin/pos_bin of the query's terms are decoded."""
-    from visionsearch_spark.index.codec import decode_positions, decode_varint
-
     read_terms = sorted(set(toks))
 
     def match(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        scanner = pads.dataset(paths, format="parquet").scanner(
+        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
             columns=["term", "n", "docids_bin", "tfs_bin", "pos_bin"],
             filter=pc.field("term").isin(read_terms),
             use_threads=False,
-        )
-        tbl = scanner.to_table()
-        terms_b = np.asarray(tbl["term"].to_pylist(), dtype=object)
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        pbins = tbl["pos_bin"].to_pylist()
-        missing = [terms_b[i] for i, p in enumerate(pbins) if p is None]
-        if missing:
+        ).to_table())
+        if tbl["pos_bin"].null_count:
+            missing = tbl["term"].filter(pc.is_null(tbl["pos_bin"]))[0]
             raise ValueError(
-                f"segment block for {missing[0]!r} has no pos_bin — "
+                f"segment block for {missing.as_py()!r} has no pos_bin — "
                 "positional query on a store built without positions=True"
             )
-        # one varint pass per payload column for ALL blocks (r7)
-        total = int(ns.sum())
-        deltas = decode_varint(b"".join(tbl["docids_bin"].to_pylist()),
-                               total).astype(np.int64)
-        vbnd = np.zeros(ns.size + 1, dtype=np.int64)
-        np.cumsum(ns, out=vbnd[1:])
-        vs = vbnd[:-1]
-        c = np.cumsum(deltas) if total else np.zeros(0, dtype=np.int64)
-        all_d = (c - np.repeat(c[vs] - deltas[vs], ns)
-                 if ns.size else np.zeros(0, dtype=np.int64))
-        all_tf = decode_varint(b"".join(tbl["tfs_bin"].to_pylist()),
-                               total).astype(np.int64)
-        all_p = decode_positions(b"".join(pbins), all_tf)
+        ns = tbl["n"].to_numpy().astype(np.int64)
+        poff = np.concatenate(([0], np.cumsum(ns)))
+        all_d = decode_blocks(tbl["docids_bin"], ns)
+        all_tf = decode_varint(payload(tbl["tfs_bin"]),
+                               int(poff[-1])).astype(np.int64)
+        all_p = decode_positions(payload(tbl["pos_bin"]), all_tf)
         all_keys = (np.repeat(all_d, all_tf) << np.int64(32)) | all_p
-        obnd = np.zeros(ns.size + 1, dtype=np.int64)
-        if ns.size:
-            np.cumsum(np.add.reduceat(all_tf, vs), out=obnd[1:])
-        rows_of: dict[str, list[int]] = {}
-        for i, t in enumerate(terms_b):
-            rows_of.setdefault(t, []).append(i)
+        # occurrence offset of each posting: a term's keys are one run
+        ooff = np.concatenate(([0], np.cumsum(all_tf)))
 
         def keys(t: str) -> np.ndarray:
-            idxs = rows_of.get(t)
-            if not idxs:
+            run = runs.get(t)
+            if run is None:
                 return np.empty(0, dtype=np.int64)
-            return np.sort(np.concatenate(
-                [all_keys[obnd[i]:obnd[i + 1]] for i in idxs]))
+            return np.sort(
+                all_keys[ooff[poff[run[0]]]:ooff[poff[run[1]]]])
 
         if slop is not None:
             m = len(toks)

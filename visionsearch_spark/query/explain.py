@@ -25,8 +25,8 @@ from collections import Counter
 from pyspark.sql import DataFrame, SparkSession
 
 from visionsearch_spark.analyzer import tokenize
-from visionsearch_spark.bm25 import B, K1
 from visionsearch_spark.bm25 import idf as idf_fn
+from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.store import IndexStore
 
 EXPLAIN_DDL = ("term string, tf long, dl long, df long, "
@@ -88,8 +88,7 @@ def explain_rows(store: IndexStore, query_text: str, conv_id: str,
         if df == 0:
             continue
         idf = idf_fn(n_docs, df)
-        tfw = (tf[t] * (K1 + 1.0)
-               / (tf[t] + K1 * (1.0 - B + B * dl / avgdl)))
+        tfw = tf_weight(tf[t], dl, avgdl)
         out.append((t, int(tf[t]), dl, df, idf, tfw, idf * tfw))
     return out
 

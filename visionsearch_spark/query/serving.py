@@ -23,9 +23,14 @@ import numpy as np
 import pyarrow.dataset as pads
 
 from visionsearch_spark.analyzer import tokenize
-from visionsearch_spark.bm25 import B, K1
 from visionsearch_spark.bm25 import idf as idf_fn
-from visionsearch_spark.index.codec import decode_docids, decode_varint
+from visionsearch_spark.bm25 import tf_weight
+from visionsearch_spark.index.codec import (
+    decode_blocks,
+    decode_varint,
+    payload,
+    term_runs,
+)
 from visionsearch_spark.index.store import IndexStore
 
 
@@ -47,25 +52,15 @@ class LocalSearcher:
             columns=["term", "n", "docids_bin", "tfs_bin", "dls_bin"],
             filter=flt,
         )
-        # load builds only the term -> block-index map (one vectorized
-        # groupby over the term column); posting bytes decode LAZILY on a
-        # term's first query and are cached decoded — cold start is
+        # load builds only the term -> block-row-range map (one Arrow
+        # sort by term); posting bytes stay Arrow buffers and decode
+        # LAZILY on a term's first query, cached decoded — cold start is
         # column-scan cheap, the warm working set is as fast as eager
-        self._ns = seg.column("n").to_pylist()
-        self._dbins = seg.column("docids_bin").to_pylist()
-        self._tbins = seg.column("tfs_bin").to_pylist()
-        self._lbins = seg.column("dls_bin").to_pylist()
-        terms = np.asarray(seg.column("term").to_pylist(), dtype=object)
-        order = np.argsort(terms, kind="stable")
-        sorted_terms = terms[order]
-        starts = np.concatenate(
-            ([0], np.flatnonzero(sorted_terms[1:] != sorted_terms[:-1]) + 1)
-        ) if terms.size else np.array([], dtype=np.int64)
-        ends = np.concatenate((starts[1:], [terms.size])) if terms.size else starts
-        self._blocks: dict[str, list[int]] = {
-            str(sorted_terms[s]): [int(i) for i in order[s:e]]
-            for s, e in zip(starts, ends)
-        }
+        seg, self._blocks = term_runs(seg)
+        self._ns = seg["n"].to_numpy().astype(np.int64)
+        self._dbins = seg["docids_bin"]
+        self._tbins = seg["tfs_bin"]
+        self._lbins = seg["dls_bin"]
         self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         # docmap: docid is dense 0..n-1, so position == docid
         dm = pads.dataset(store.docmap_path).to_table(
@@ -103,27 +98,25 @@ class LocalSearcher:
         p = self._decoded.get(term)
         if p is not None:
             return p
-        idxs = self._blocks.get(term)
-        if idxs is None:
+        run = self._blocks.get(term)
+        if run is None:
             return None
-        d = np.concatenate(
-            [decode_docids(self._dbins[i], self._ns[i]) for i in idxs]
-        )
-        tf = np.concatenate(
-            [decode_varint(self._tbins[i], self._ns[i]) for i in idxs]
-        ).astype(np.float64)
-        dl = np.concatenate(
-            [decode_varint(self._lbins[i], self._ns[i]) for i in idxs]
-        ).astype(np.float64)
+        lo, hi = run
+        ns = self._ns[lo:hi]
+        total = int(ns.sum())
+        d = decode_blocks(self._dbins.slice(lo, hi - lo), ns)
+        tf = decode_varint(payload(self._tbins.slice(lo, hi - lo)), total)
+        dl = decode_varint(payload(self._lbins.slice(lo, hi - lo)), total)
         order = np.argsort(d, kind="stable")
-        tfw = tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / self.avgdl))
+        tfw = tf_weight(tf.astype(np.float64), dl.astype(np.float64),
+                        self.avgdl)
         p = (d[order], tfw[order])
         self._decoded[term] = p
         return p
 
     def df(self, term: str) -> int:
-        idxs = self._blocks.get(term)
-        return 0 if idxs is None else int(sum(self._ns[i] for i in idxs))
+        run = self._blocks.get(term)
+        return 0 if run is None else int(self._ns[slice(*run)].sum())
 
     def mask_convs(self, conv_ids: list[str]) -> int:
         """Fold freshly tombstoned conversations into the in-process

@@ -10,8 +10,9 @@ Design (SURVEY.md §3.1 "our lifecycle"):
             disjoint docid ranges, so every block touching a docid lives
             in exactly one task and per-partition score sums are FINAL
             scores — postings never shuffle (`_partial_scores`).
-  mapInArrow: decode blocks (numpy varint), score vectorized in float64,
-            canonical accumulation order (docid, then query-term rank) via
+  mapInArrow: decode each payload column once (codec.decode_blocks),
+            score vectorized in float64, canonical accumulation order
+            (docid, then query-term rank) via
             lexsort + reduceat — bit-identical to the oracle's summation
             order (SURVEY.md §7 R2), local top-k per query per partition.
   global:   row_number window per query over (score desc, conv_id,
@@ -46,6 +47,7 @@ from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
+from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.store import IndexStore
 
 RESULT_DDL = "query_id long, rank int, docid long, conv_id string, turn_idx int, score double"
@@ -127,11 +129,23 @@ def _topk_keep_ties(docids: np.ndarray, scores: np.ndarray, k: int
 
 
 def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
-                   avgdl: float, threshold: float,
+                   avgdl: float, threshold: float, hit_terms: list[str],
                    has_filter: bool = False, has_bounds: bool = False,
                    cursors: dict[int, float] | None = None):
-    """qplans: [(query_id, [(term, idf, term_rank)], k)]; term_rank is the
+    """File-aligned kernel `score(paths, side=None)`: reads the task's
+    segment FILES directly (pyarrow dataset; term-IN filter prunes row
+    groups off the footer min/max stats; use_threads=False because
+    parallelism belongs to the task scheduler, not a nested Arrow pool
+    fighting 32 sibling tasks), decodes each payload column ONCE for the
+    whole task (codec.decode_blocks), and scores.
+
+    qplans: [(query_id, [(term, idf, term_rank)], k)]; term_rank is the
     query-term's position in sorted unique-term order (summation order).
+
+    `side` holds the task's sideband rows (allow-lists / collapse bounds
+    / tombstones) as an Arrow table (term, n, docids_bin) — per-shard
+    packs routed by route_key to the task owning the files whose shard
+    ranges cover them (`_partial_scores`).
 
     has_filter/has_bounds are PLAN-level flags: a task whose shards hold
     no allowed docids receives zero allow sideband rows, which must mean
@@ -145,110 +159,110 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
     strictly below. Scores are deterministic float64 (canonical-order
     reduceat), so the equality test is exact against a cursor taken from
     a previous page's full-precision result."""
-    from visionsearch_spark.bm25 import B, K1
-    from visionsearch_spark.index.codec import decode_docids, decode_varint
+    from visionsearch_spark.index.codec import (
+        decode_blocks,
+        decode_varint,
+        payload,
+        term_runs,
+    )
 
     cursors = cursors or {}
-    by_term: dict[str, list[tuple[int, float, int]]] = {}
-    for qid, terms, _k in qplans:
-        for t, w, r in terms:
-            by_term.setdefault(t, []).append((qid, w, r))
     # cursored queries take the exact path: block-max pruning targets the
     # TOP of the score range, which a ceiling excludes
     single_term_q = {
         qid: terms[0][0] for qid, terms, _k in qplans
         if len(terms) == 1 and qid not in cursors
     }
+    cols = ["term", "n", "docids_bin", "tfs_bin", "dls_bin", "max_tf",
+            "min_dl"]
 
-    def _block_bound(max_tf: int, min_dl: int) -> float:
-        # tf_weight(max_tf, min_dl) under the CURRENT avgdl >= tf_weight
-        # of every posting in the block (monotonicity) — safe and never
-        # stale across appends
-        return (max_tf * (K1 + 1.0)
-                / (max_tf + K1 * (1.0 - B + B * min_dl / avgdl)))
+    def side_docids(side: pa.Table | None, tag: str) -> np.ndarray:
+        import pyarrow.compute as pc
 
-    def score(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        from visionsearch_spark.index.codec import decode_docids as _dec
+        if side is None:
+            return np.empty(0, dtype=np.int64)
+        rows = side.filter(pc.equal(side["term"], tag))
+        return np.unique(decode_blocks(rows["docids_bin"],
+                                       rows["n"].to_numpy()))
 
-        # gather this partition's blocks per term + sideband docid sets
-        blocks: dict[str, list[tuple]] = {}
-        allow_parts: list[np.ndarray] = []
-        bounds_parts: list[np.ndarray] = []
-        deny_parts: list[np.ndarray] = []
-        for batch in batches:
-            pdf = batch.to_pandas()
-            for row in pdf.itertuples(index=False):
-                if row.term == ALLOW_TERM:
-                    allow_parts.append(_dec(row.docids_bin, row.n))
-                elif row.term == BOUNDS_TERM:
-                    bounds_parts.append(_dec(row.docids_bin, row.n))
-                elif row.term == DENY_TERM:
-                    deny_parts.append(_dec(row.docids_bin, row.n))
-                elif row.term in by_term:
-                    blocks.setdefault(row.term, []).append(
-                        (row.n, row.docids_bin, row.tfs_bin, row.dls_bin,
-                         row.max_tf, row.min_dl)
-                    )
-        if not blocks:
+    def score(paths: list[str], side: pa.Table | None = None
+              ) -> Iterator[pa.RecordBatch]:
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pads
+
+        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
+            columns=cols,
+            filter=pc.field("term").isin(hit_terms),
+            use_threads=False,
+        ).to_table())
+        if not runs:
             return
-        allow = None
-        if has_filter:
-            allow = (
-                np.unique(np.concatenate(allow_parts))
-                if allow_parts else np.empty(0, dtype=np.int64)
-            )
-        bounds = None
-        if has_bounds:
-            if not bounds_parts:
-                # carry rows cover every shard from the first doc on, so a
-                # block-bearing task with no bounds is a wiring bug — fail
-                # loudly rather than emit un-collapsed units
-                raise RuntimeError("collapse requested but no bounds rows")
-            bounds = np.unique(np.concatenate(bounds_parts))
+        allow = side_docids(side, ALLOW_TERM) if has_filter else None
+        bounds = side_docids(side, BOUNDS_TERM) if has_bounds else None
+        if bounds is not None and not bounds.size:
+            # carry rows cover every shard from the first doc on, so a
+            # block-bearing task with no bounds is a wiring bug — fail
+            # loudly rather than emit un-collapsed units
+            raise RuntimeError("collapse requested but no bounds rows")
         # deny differs from allow: a task whose shards hold no dead docs
         # legitimately receives zero rows (nothing to mask) — per-task
         # presence IS the constraint, so no plan-flag trap here. A task
         # that does hold deny rows skips the single-term block-max path
         # below (masking must precede the k-cut).
-        deny = (np.unique(np.concatenate(deny_parts))
-                if deny_parts else None)
-        has_sideband = has_filter or has_bounds or deny is not None
+        deny = side_docids(side, DENY_TERM)
+        has_sideband = has_filter or has_bounds or deny.size > 0
+        # every block of the task in one pass per payload column; a
+        # term's blocks are the contiguous row run term_runs reports,
+        # its postings the matching run of poff
+        ns = tbl["n"].to_numpy().astype(np.int64)
+        poff = np.concatenate(([0], np.cumsum(ns)))
+        total = int(poff[-1])
+        docids = decode_blocks(tbl["docids_bin"], ns)
+        tfw = tf_weight(
+            decode_varint(payload(tbl["tfs_bin"]), total).astype(np.float64),
+            decode_varint(payload(tbl["dls_bin"]), total).astype(np.float64),
+            avgdl)
+        # tf_weight(max_tf, min_dl) under the CURRENT avgdl >= tf_weight
+        # of every posting in the block (monotonicity) — safe and never
+        # stale across appends
+        bmax = tf_weight(tbl["max_tf"].to_numpy(), tbl["min_dl"].to_numpy(),
+                         avgdl)
+
+        def single_term_topk(b0: int, b1: int, w: float, k: int):
+            """Exact top-k with block-max pruning: descending block-bound
+            order, stop only when the bound is STRICTLY below the kth
+            best — a block whose bound equals the kth score may still
+            hold a doc that wins the (score desc, docid asc) tie-break."""
+            best_d: list[np.ndarray] = []
+            best_s: list[np.ndarray] = []
+            kth = threshold
+            count = 0
+            for i in b0 + np.argsort(-bmax[b0:b1], kind="stable"):
+                if count >= k and w * bmax[i] < kth:
+                    break
+                s = w * tfw[poff[i]:poff[i + 1]]
+                keep = s > threshold
+                if keep.any():
+                    best_d.append(docids[poff[i]:poff[i + 1]][keep])
+                    best_s.append(s[keep])
+                    count += int(keep.sum())
+                    if count >= k:
+                        alls = np.concatenate(best_s)
+                        kth = max(kth, np.partition(alls, -k)[-k]
+                                  if alls.size >= k else threshold)
+            if not best_d:
+                return np.zeros(0, dtype=np.int64), np.zeros(0)
+            return _topk_keep_ties(np.concatenate(best_d),
+                                   np.concatenate(best_s), k)
+
         out_qid: list[np.ndarray] = []
         out_docid: list[np.ndarray] = []
         out_score: list[np.ndarray] = []
-
-        def decode_all(term):
-            # LEB128 streams are self-delimiting: concatenate every
-            # block's buffer and decode the term's postings in ONE
-            # vectorized pass per payload (the old per-block loop paid
-            # numpy fixed cost on <=128-element arrays); per-block
-            # absolute docids are restored by a segmented cumsum
-            blks = blocks[term]
-            ns = np.fromiter((b[0] for b in blks), dtype=np.int64,
-                             count=len(blks))
-            total = int(ns.sum())
-            deltas = decode_varint(
-                b"".join(b[1] for b in blks), total).astype(np.int64)
-            vstarts = np.zeros(ns.size, dtype=np.int64)
-            np.cumsum(ns[:-1], out=vstarts[1:])
-            c = np.cumsum(deltas)
-            base = c[vstarts] - deltas[vstarts]
-            d = c - np.repeat(base, ns)
-            tf = decode_varint(
-                b"".join(b[2] for b in blks), total).astype(np.float64)
-            dl = decode_varint(
-                b"".join(b[3] for b in blks), total).astype(np.float64)
-            return d, tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         for qid, terms, k in qplans:
-            present = [(t, w, r) for t, w, r in terms if t in blocks]
+            present = [(t, w, r) for t, w, r in terms if t in runs]
             if not present:
                 continue
-            ub = sum(
-                w * max(_block_bound(b[4], b[5]) for b in blocks[t])
-                for t, w, _r in present
-            )
+            ub = sum(w * bmax[slice(*runs[t])].max() for t, w, _r in present)
             if ub <= threshold:
                 continue  # safe partition skip: no doc here can pass
             if qid in single_term_q and not has_sideband:
@@ -256,7 +270,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
                 # candidate; with an allow-filter or unit-collapse active
                 # the exact path below applies the mask/collapse first
                 t, w, _r = present[0]
-                d, s = _single_term_topk(blocks[t], w, k, threshold, avgdl)
+                d, s = single_term_topk(*runs[t], w, k)
                 if d.size:
                     out_qid.append(np.full(d.size, qid, dtype=np.int64))
                     out_docid.append(d)
@@ -265,12 +279,10 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
             # multi-term: exact vectorized scoring, canonical order
             cat_d, cat_c, cat_r = [], [], []
             for t, w, r in present:
-                if t not in decoded:
-                    decoded[t] = decode_all(t)
-                d, tfw = decoded[t]
-                cat_d.append(d)
-                cat_c.append(w * tfw)
-                cat_r.append(np.full(d.size, r, dtype=np.int64))
+                lo, hi = poff[runs[t][0]], poff[runs[t][1]]
+                cat_d.append(docids[lo:hi])
+                cat_c.append(w * tfw[lo:hi])
+                cat_r.append(np.full(hi - lo, r, dtype=np.int64))
             d = np.concatenate(cat_d)
             c = np.concatenate(cat_c)
             r = np.concatenate(cat_r)
@@ -279,7 +291,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
             starts = np.concatenate(([0], np.flatnonzero(d[1:] != d[:-1]) + 1))
             uniq = d[starts]
             sums = np.add.reduceat(c, starts)
-            if deny is not None and uniq.size:  # tombstones: mask BEFORE cut
+            if deny.size and uniq.size:  # tombstones: mask BEFORE cut
                 pos = np.searchsorted(deny, uniq)
                 pos = np.minimum(pos, deny.size - 1)
                 m = deny[pos] != uniq
@@ -322,49 +334,12 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
                 out_docid.append(uniq)
                 out_score.append(sums)
         if out_qid:
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame(
-                    {
-                        "query_id": np.concatenate(out_qid),
-                        "docid": np.concatenate(out_docid),
-                        "score": np.concatenate(out_score),
-                    }
-                ),
-                preserve_index=False,
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(np.concatenate(out_qid)),
+                 pa.array(np.concatenate(out_docid)),
+                 pa.array(np.concatenate(out_score))],
+                names=["query_id", "docid", "score"],
             )
-
-    def _single_term_topk(blks, w, k, thr, avgdl_):
-        """Exact top-k with block-max pruning: descending block-bound
-        order, stop only when the bound is STRICTLY below the kth best —
-        a block whose bound equals the kth score may still hold a doc
-        that wins the (score desc, docid asc) tie-break."""
-        bounds_ = [_block_bound(b[4], b[5]) for b in blks]
-        order = sorted(range(len(blks)), key=lambda i: -bounds_[i])
-        best_d: list[np.ndarray] = []
-        best_s: list[np.ndarray] = []
-        kth = thr
-        count = 0
-        for i in order:
-            n, db, tb, lb, _mt, _md = blks[i]
-            if count >= k and w * bounds_[i] < kth:
-                break
-            d = decode_docids(db, n)
-            tf = decode_varint(tb, n).astype(np.float64)
-            dl = decode_varint(lb, n).astype(np.float64)
-            s = w * (tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl_)))
-            keep = s > thr
-            if keep.any():
-                best_d.append(d[keep])
-                best_s.append(s[keep])
-                count += int(keep.sum())
-                if count >= k:
-                    alls = np.concatenate(best_s)
-                    kth = max(kth, np.partition(alls, -k)[-k] if alls.size >= k else thr)
-        if not best_d:
-            return np.zeros(0, dtype=np.int64), np.zeros(0)
-        d = np.concatenate(best_d)
-        s = np.concatenate(best_s)
-        return _topk_keep_ties(d, s, k)
 
     return score
 
@@ -739,52 +714,6 @@ def _tombstone_docids(spark: SparkSession, store: IndexStore,
     ).select("docid")
 
 
-def _make_file_score_fn(qplans, avgdl: float, threshold: float,
-                        hit_terms: list[str],
-                        has_filter: bool = False,
-                        has_bounds: bool = False,
-                        cursors: dict[int, float] | None = None):
-    """File-aligned kernel `score(paths, side=())`: reads the task's
-    segment FILES directly (pyarrow dataset; term-IN filter prunes row
-    groups off the footer min/max stats; use_threads=False because
-    parallelism belongs to the task scheduler, not a nested Arrow pool
-    fighting 32 sibling tasks) and delegates to the score kernel.
-
-    `side` holds the task's sideband rows (allow-lists / collapse bounds
-    / tombstones) as (term, shard, n, docids_bin) — per-shard packs
-    routed by route_key to the task owning the files whose shard ranges
-    cover them (`_partial_scores`). They are re-emitted to the inner
-    kernel as a prologue batch in the segment schema."""
-    inner = _make_score_fn(qplans, avgdl, threshold,
-                           has_filter=has_filter, has_bounds=has_bounds,
-                           cursors=cursors)
-    cols = ["term", "shard", "n", "docids_bin", "tfs_bin", "dls_bin",
-            "max_tf", "min_dl"]
-
-    def score(paths: list[str], side: list[tuple] = ()
-              ) -> Iterator[pa.RecordBatch]:
-        import itertools
-
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        prologue = []
-        if side:
-            prologue.append(pa.RecordBatch.from_pandas(
-                pd.DataFrame([(*s, b"", b"", 0, 0) for s in side],
-                             columns=cols),
-                preserve_index=False,
-            ))
-        scanner = pads.dataset(paths, format="parquet").scanner(
-            columns=cols,
-            filter=pc.field("term").isin(hit_terms),
-            use_threads=False,
-        )
-        yield from inner(itertools.chain(prologue, scanner.to_batches()))
-
-    return score
-
-
 def _partial_scores(
     spark: SparkSession,
     store: IndexStore,
@@ -860,7 +789,7 @@ def _partial_scores(
     has_filter = docid_filter is not None
     has_bounds = collapse_bounds is not None
     has_deny = docid_deny is not None
-    score_files = _make_file_score_fn(
+    score_files = _make_score_fn(
         qplans, avgdl, threshold, hit_terms, has_filter=has_filter,
         has_bounds=has_bounds, cursors=cursors)
     if not has_filter and not has_bounds and not has_deny:
@@ -941,17 +870,16 @@ def _partial_scores(
 
     def score_routed(batches: Iterator[pa.RecordBatch]
                      ) -> Iterator[pa.RecordBatch]:
-        paths: list[str] = []
-        side: list[tuple] = []
-        for b in batches:
-            for row in b.to_pandas().itertuples(index=False):
-                if row.paths is not None:
-                    paths.extend(row.paths)
-                else:
-                    side.append((row.term, int(row.shard), int(row.n),
-                                 row.docids_bin))
+        import pyarrow.compute as pc
+
+        got = list(batches)
+        if not got:
+            return
+        tbl = pa.Table.from_batches(got)
+        is_bin = pc.is_valid(tbl["paths"])
+        paths = pc.list_flatten(tbl["paths"].filter(is_bin)).to_pylist()
         if paths:
-            yield from score_files(paths, side)
+            yield from score_files(paths, tbl.filter(pc.invert(is_bin)))
 
     partials = seg.repartition(len(bins), "route_key").mapInArrow(
         score_routed, PARTIAL_DDL)
