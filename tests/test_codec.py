@@ -17,6 +17,8 @@ from visionsearch_spark.index.codec import (
     encode_docids,
     encode_positions,
     encode_varint,
+    fixed_values,
+    mask_array,
     payload,
     term_runs,
 )
@@ -192,3 +194,54 @@ def test_term_runs_groups_stably():
     assert out["n"].to_pylist() == [2, 5, 1, 3, 4]
     assert out.schema.field("docids_bin").type == pa.large_binary()
     assert term_runs(tbl.slice(0, 0))[1] == {}
+
+
+_widths = st.sampled_from([(pa.int32(), np.int32), (pa.int64(), np.int64)])
+
+
+def _ints(np_type):
+    info = np.iinfo(np_type)
+    return st.lists(st.integers(min_value=int(info.min),
+                                max_value=int(info.max)), max_size=200)
+
+
+@given(_widths.flatmap(lambda w: st.tuples(
+    st.just(w), _ints(w[1]), st.integers(min_value=0, max_value=250),
+    st.lists(st.integers(min_value=0, max_value=200), max_size=4))))
+@settings(max_examples=200, deadline=None)
+def test_fixed_values_matches_to_numpy(case):
+    """fixed_values == to_numpy() over a plain array, an arr[k:] slice,
+    a multi-chunk ChunkedArray and the empty column."""
+    (atype, np_type), vals, k, cuts = case
+    arr = pa.array(vals, type=atype)
+    cols = [arr, arr[min(k, len(arr)):], pa.chunked_array([], type=atype)]
+    bounds = sorted({0, len(vals), *(min(c, len(vals)) for c in cuts)})
+    cols.append(pa.chunked_array(
+        [arr[a:b] for a, b in zip(bounds[:-1], bounds[1:])], type=atype))
+    for col in cols:
+        got = fixed_values(col)
+        assert got.dtype == np_type
+        assert np.array_equal(got, col.to_numpy()), col
+
+
+def test_fixed_values_rejects_nulls_and_non_numeric():
+    col = pa.chunked_array([pa.array([1, 2], pa.int64()),
+                            pa.array([3, None], pa.int64())])
+    with pytest.raises(ValueError, match="NULL"):
+        fixed_values(col)
+    with pytest.raises(ValueError, match="NULL"):
+        fixed_values(pa.array([None, 1], pa.int32()))
+    # sliced past the NULL slot: the view is null-free again
+    assert fixed_values(pa.array([None, 7, 8], pa.int32())[1:]).tolist() \
+        == [7, 8]
+    with pytest.raises(TypeError):
+        fixed_values(pa.array(["a"]))
+
+
+@given(st.lists(st.booleans(), max_size=100))
+@settings(max_examples=100, deadline=None)
+def test_mask_array_filters_like_the_numpy_mask(bits):
+    mask = np.array(bits, dtype=bool)
+    tbl = pa.table({"x": pa.array(np.arange(mask.size), pa.int64())})
+    got = tbl.filter(mask_array(mask))["x"].to_pylist()
+    assert got == np.flatnonzero(mask).tolist()

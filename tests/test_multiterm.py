@@ -15,7 +15,6 @@ from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.index.spimi import build_index
 from visionsearch_spark.oracle import oracle_search
 from visionsearch_spark.query.multiterm import (
-    _lev_within,
     expand_fuzzy,
     expand_prefix,
     expand_wildcard,
@@ -23,6 +22,7 @@ from visionsearch_spark.query.multiterm import (
     prefix_topk,
     wildcard_topk,
 )
+from visionsearch_spark.query.termdict import _lev_within
 
 
 @pytest.fixture(scope="module")

@@ -1,0 +1,153 @@
+"""The serving tier stands alone: LocalSearcher/ShardedSearcher and the
+/search, /suggest and /healthz handlers import neither pyspark/py4j nor
+pandas/pyarrow.dataset (query/serving.py's import rule), and their spell
+correction and completion answer from the searcher's in-memory block
+dictionary exactly as query/multiterm answers from term_stats."""
+
+from __future__ import annotations
+
+import json
+import os
+import shutil
+import subprocess
+import sys
+
+import pytest
+
+from visionsearch_spark.index.spimi import build_index, compact_store
+from visionsearch_spark.query import multiterm
+from visionsearch_spark.query.serving import LocalSearcher, ShardedSearcher
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+HEAVY = ("pandas", "pyspark", "py4j", "pyarrow.dataset")
+
+# runs in a fresh interpreter: argv = spool dir, store roots...
+_PROBE = r"""
+import json, sys, threading, urllib.request
+from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.query.serving import LocalSearcher, ShardedSearcher
+from visionsearch_spark.sources.http_api import ServingApp
+
+def get(url):
+    with urllib.request.urlopen(url, timeout=30) as r:
+        return json.loads(r.read())
+
+out = []
+for root in sys.argv[2:]:
+    store = IndexStore(root)
+    for s in (LocalSearcher(store), ShardedSearcher(store, n_groups=2)):
+        srv = ServingApp(s, spool_dir=sys.argv[1]).make_server(port=0)
+        threading.Thread(target=srv.serve_forever, daemon=True).start()
+        url = f"http://127.0.0.1:{srv.server_address[1]}"
+        out.append({
+            "hits": [list(h) for h in s.search("join filter", k=5)],
+            "dym": s.did_you_mean("joinx filterx"),
+            "suggest": [list(p) for p in s.suggest("fil", n=5)],
+            "n_docs": s.n_docs,
+            "http_hit": get(url + "/search?q=join+filter&k=5"),
+            "http_oov": get(url + "/search?q=joinx+filterx&k=5"),
+            "http_suggest": get(url + "/suggest?prefix=fil&n=5"),
+            "http_healthz": get(url + "/healthz"),
+        })
+        srv.shutdown()
+        srv.server_close()
+heavy = %r
+print(json.dumps({"loaded": [m for m in heavy if m in sys.modules],
+                  "runs": out}))
+""" % (HEAVY,)
+
+
+@pytest.fixture(scope="module")
+def plain_store(spark, transcripts, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("lean_plain"))
+    return build_index(transcripts, root, n_partitions=4)
+
+
+@pytest.fixture(scope="module")
+def lsm_store(spark, transcripts_pdf, tmp_path_factory):
+    """Appended (two live dirs) with pending tombstones, not compacted."""
+    from visionsearch_spark.fixtures import TRANSCRIPTS_SCHEMA
+    from visionsearch_spark.index.deletes import delete_convs
+    from visionsearch_spark.streaming.incremental import incremental_build
+
+    convs = sorted(transcripts_pdf["conv_id"].unique())
+    first = transcripts_pdf[transcripts_pdf["conv_id"].isin(convs[:60])]
+    root = str(tmp_path_factory.mktemp("lean_lsm"))
+    incremental_build(spark.createDataFrame(first, schema=TRANSCRIPTS_SCHEMA),
+                      root, n_partitions=4)
+    store = incremental_build(
+        spark.createDataFrame(transcripts_pdf, schema=TRANSCRIPTS_SCHEMA),
+        root, n_partitions=4)
+    delete_convs(spark, store, spark.createDataFrame(
+        [(c,) for c in convs[::9]], "conv_id string"))
+    assert len(store.segment_paths()) == 2 and store.tombstone_paths()
+    return store
+
+
+def test_serving_imports_no_spark_pandas_or_dataset(plain_store, lsm_store,
+                                                    tmp_path):
+    proc = subprocess.run(
+        [sys.executable, "-c", _PROBE, str(tmp_path / "spool"),
+         plain_store.root, lsm_store.root],
+        cwd=REPO, capture_output=True, text=True, timeout=300)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    res = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert res["loaded"] == [], res["loaded"]
+    assert len(res["runs"]) == 4
+    for run in res["runs"]:
+        assert run["hits"], "a known-term query must hit"
+        assert [[h["docid"], h["conv_id"], h["turn_idx"], h["score"]]
+                for h in run["http_hit"]["hits"]] == run["hits"]
+        assert run["dym"] is not None
+        assert run["http_oov"]["hits"] == []
+        assert run["http_oov"]["did_you_mean"] == run["dym"][0]
+        assert [[p["term"], p["df"]] for p in
+                run["http_suggest"]["suggestions"]] == run["suggest"]
+        assert run["http_healthz"]["n_docs"] == run["n_docs"]
+
+
+def _assert_dictionary_parity(store):
+    """Searcher dictionaries == the term_stats scan: every (term, df),
+    did_you_mean and suggest — term_stats df == Σ block n."""
+    vocab = sorted(multiterm._driver_vocab(store, None, None))
+    top = [t for t, _df in sorted(vocab, key=lambda p: (-p[1], p[0]))
+           if len(t) >= 4][:12]
+    known = {t for t, _df in vocab}
+    typos = [t[:-1] + ("q" if t[-1] != "q" else "x") for t in top]
+    typos = [t for t in typos if t not in known]
+    assert len(typos) >= 6
+    queries = typos + [
+        f"{top[0]} {typos[1]}", f"{typos[2]} {typos[3]} {top[1]}",
+        top[2], "qqqqqqqqqqqqqqqqqqqq", "", "...",
+    ]
+    want_dym = {q: multiterm.did_you_mean(store, q) for q in queries}
+    assert sum(w is not None for w in want_dym.values()) >= 6
+    prefixes = [("s", 5), ("s", 50), ("fil", 5), ("j", 10), (top[0][:2], 3),
+                ("zzzz", 5), ("S", 5)]
+    want_sug = {pn: multiterm.expand_prefix(None, store, *pn,
+                                            use_spark=False)
+                for pn in prefixes}
+    for s in (LocalSearcher(store), ShardedSearcher(store, n_groups=2)):
+        assert sorted(s._vocab(None, None)) == vocab
+        for q, w in want_dym.items():
+            assert s.did_you_mean(q) == w, q
+        for (p, n), w in want_sug.items():
+            assert s.suggest(p, n) == w, (p, n)
+        for bad in ("", "no*pe", "two words"):
+            with pytest.raises(ValueError):
+                s.suggest(bad)
+
+
+def test_dictionary_parity_appended_deleted_then_compacted(spark, lsm_store,
+                                                           tmp_path):
+    _assert_dictionary_parity(lsm_store)
+    root = str(tmp_path / "compacted")
+    shutil.copytree(lsm_store.root, root)
+    store = compact_store(spark, root)
+    assert len(store.segment_paths()) == 1 and not store.tombstone_paths()
+    _assert_dictionary_parity(store)
+    # the fold lowers n_docs but not the top docid: the router's shard
+    # groups must still cover the tail shard
+    single, router = LocalSearcher(store), ShardedSearcher(store, n_groups=2)
+    for q in ("join filter", "window", "customer stream"):
+        assert router.search(q, k=10) == single.search(q, k=10), q

@@ -17,4 +17,13 @@ service; this package is a distributed columnar engine designed for
 
 __version__ = "0.1.0"
 
-from visionsearch_spark.session import get_spark  # noqa: F401
+
+def __getattr__(name: str):
+    # PEP 562: `from visionsearch_spark import get_spark` resolves here, so
+    # importing the package (or a Spark-free module of it, e.g. the
+    # serving tier) does not import pyspark
+    if name == "get_spark":
+        from visionsearch_spark.session import get_spark
+
+        return get_spark
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -28,9 +28,10 @@ NFD/NFC paired cases):
 from __future__ import annotations
 
 import re
+from typing import TYPE_CHECKING
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+if TYPE_CHECKING:  # pyspark stays unimported for Spark-free callers
+    from pyspark.sql import Column
 
 TOKEN_SEP_RE = re.compile(r"[^0-9a-z]+")
 # Java regex (Spark) — identical semantics for this class.
@@ -55,6 +56,8 @@ def tokens_col(col: Column | str) -> Column:
     batch-size-1 Python loop at `aisearch/core.py:33-40` is the
     anti-pattern this kills).
     """
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(F.lower(c), TOKEN_SEP_JAVA), lambda t: t != "")
 
@@ -72,6 +75,8 @@ def token_count_col(col: Column | str) -> Column:
     Fuzz-pinned equal to both tokenize() and size(tokens_col()) in
     tests/test_analyzer.py; use it wherever only the LENGTH is needed
     (e.g. the staged dl column)."""
+    from pyspark.sql import functions as F
+
     c = F.col(col) if isinstance(col, str) else col
     return F.regexp_count(F.lower(c), F.lit(TOKEN_RUN_JAVA))
 

@@ -18,6 +18,13 @@ decoders, never a per-block or per-row loop:
   term_runs(tbl)         -> a posting table sorted by term plus each
                             term's row range, so a term's blocks are one
                             zero-copy slice.
+  fixed_values(col)      -> a fixed-width (integer/float) column as one
+                            numpy array (n, docid, shard, turn_idx, ...);
+  mask_array(mask)       -> a numpy bool mask as an Arrow filter mask.
+These cross the Arrow boundary through buffers, never through pyarrow's
+converters (to_numpy, np.asarray of an Arrow array, pa.array), which
+import pandas: the serving tier reads everything through them and stays
+pandas-free (query/serving.py).
 The scalar decode_docids/decode_varint/decode_positions primitives stay
 for callers that decode exactly ONE block (fsck's spot check).
 
@@ -27,10 +34,11 @@ read zero-copy from its data buffer over the span its offsets give
 never combine_chunks: one Arrow binary chunk's int32 offsets cap it at
 2 GiB (spimi._CHUNK_BYTE_LIMIT), so a large column stays chunked.
 
-Null rule: payload/decode_blocks raise on a column with NULL slots. A
-NULL slot's offsets may still span real bytes in memory (spimi._binary_col
-writes NULL pos_bin slots over the shared stream; only a parquet round
-trip empties them), so callers filter NULL slots out first.
+Null rule: payload/decode_blocks/fixed_values raise on a column with
+NULL slots. A NULL slot's offsets may still span real bytes in memory
+(spimi._binary_col writes NULL pos_bin slots over the shared stream;
+only a parquet round trip empties them), so callers filter NULL slots
+out first.
 
 Round-trip property-tested in tests/test_codec.py (hypothesis).
 """
@@ -174,6 +182,44 @@ def _chunks(col: pa.Array | pa.ChunkedArray) -> list[pa.Array]:
     return col.chunks if isinstance(col, pa.ChunkedArray) else [col]
 
 
+def _fixed_chunk(chunk: pa.Array, dt: np.dtype) -> np.ndarray:
+    """Zero-copy numpy view of one fixed-width chunk's values."""
+    if chunk.null_count:
+        raise ValueError("column has NULL slots; filter them out before "
+                         "viewing it (codec null rule)")
+    if len(chunk) == 0:
+        return np.zeros(0, dtype=dt)
+    return np.frombuffer(chunk.buffers()[1], dtype=dt, count=len(chunk),
+                         offset=chunk.offset * dt.itemsize)
+
+
+def mask_array(mask: np.ndarray) -> pa.BooleanArray:
+    """A numpy bool mask as an Arrow boolean array for Table.filter, built
+    from its bit-packed buffer (pa.array would import pandas)."""
+    m = np.ascontiguousarray(mask, dtype=bool)
+    return pa.Array.from_buffers(
+        pa.bool_(), m.size,
+        [None, pa.py_buffer(np.packbits(m, bitorder="little"))])
+
+
+def fixed_values(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
+    """A null-free integer or float column as one numpy array of its own
+    width (zero-copy for a single chunk; chunks concatenate otherwise).
+    Equal to col.to_numpy() without the pandas import behind it."""
+    t = col.type
+    if pa.types.is_integer(t):
+        kind = "i" if pa.types.is_signed_integer(t) else "u"
+    elif pa.types.is_floating(t):
+        kind = "f"
+    else:
+        raise TypeError(f"not a fixed-width numeric column: {t}")
+    dt = np.dtype(f"<{kind}{t.bit_width // 8}")
+    parts = [_fixed_chunk(c, dt) for c in _chunks(col)]
+    if len(parts) == 1:
+        return parts[0]
+    return np.concatenate(parts) if parts else np.zeros(0, dtype=dt)
+
+
 def payload(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
     """A binary column's value bytes as one uint8 array (zero-copy for a
     single chunk). LEB128 streams concatenate, so this feeds
@@ -222,7 +268,7 @@ def term_runs(tbl: pa.Table) -> tuple[pa.Table, dict[str, tuple[int, int]]]:
     ])).sort_by("term")
     # the sort's gather leaves `term` in one chunk: combining is a no-op
     ree = pc.run_end_encode(tbl["term"].combine_chunks())
-    ends = ree.run_ends.to_numpy().astype(np.int64)
+    ends = fixed_values(ree.run_ends).astype(np.int64)
     starts = np.concatenate(([0], ends[:-1]))
     return tbl, dict(zip(ree.values.to_pylist(),
                          zip(starts.tolist(), ends.tolist())))

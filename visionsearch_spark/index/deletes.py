@@ -46,20 +46,12 @@ def _dir_list(meta: dict, key: str) -> list[str]:
     return list(meta.get(key) or [])
 
 
-def tombstone_paths(store: IndexStore, applied: bool = False) -> list[str]:
-    """Absolute paths of the PENDING tombstone dirs (queries mask these);
-    applied=True returns the folded-into-segments dirs instead."""
-    meta = store.read_meta() if os.path.exists(store.meta_path) else {}
-    key = "applied_tombstone_dirs" if applied else "tombstone_dirs"
-    return [os.path.join(store.root, d) for d in _dir_list(meta, key)]
-
-
 def pending_tombstones(spark: SparkSession,
                        store: IndexStore) -> DataFrame | None:
     """DataFrame(docid) of docids deleted but not yet compacted away —
     the query-time deny set. None when there are none (the hot path
     must not pay a plan change for stores that never delete)."""
-    paths = tombstone_paths(store)
+    paths = store.tombstone_paths()
     if not paths:
         return None
     return spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(*paths) \
@@ -70,7 +62,7 @@ def all_tombstones(spark: SparkSession,
                    store: IndexStore) -> DataFrame | None:
     """Pending + applied (docid, dl) — what compaction must subtract from
     fragments and staged-derived stats."""
-    paths = tombstone_paths(store) + tombstone_paths(store, applied=True)
+    paths = store.tombstone_paths() + store.tombstone_paths(applied=True)
     if not paths:
         return None
     return spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(*paths)
@@ -86,9 +78,9 @@ def live_corpus_stats(spark: SparkSession, store: IndexStore,
     always subtracted: staged keeps their rows (append-only source of
     truth) but they left the stats at their fold."""
     staged = spark.read.parquet(store.staged_path).select("docid", "dl")
-    paths = tombstone_paths(store, applied=True)
+    paths = store.tombstone_paths(applied=True)
     if not include_pending:
-        paths = paths + tombstone_paths(store)
+        paths = paths + store.tombstone_paths()
     if paths:
         dead = spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(*paths) \
             .select("docid")
@@ -168,7 +160,7 @@ def delete_convs_local(store: IndexStore, conv_ids: list[str]) -> int:
     if docids.size:
         order = np.argsort(docids)
         docids, dls = docids[order], dls[order]
-        prior = tombstone_paths(store) + tombstone_paths(store, applied=True)
+        prior = store.tombstone_paths() + store.tombstone_paths(applied=True)
         if prior:
             pt = pads.dataset([pads.dataset(p) for p in prior]).to_table(
                 columns=["docid"]
@@ -211,5 +203,5 @@ def n_deleted(store: IndexStore) -> tuple[int, int]:
             pads.dataset(p, format="parquet").count_rows() for p in paths
         )
 
-    return (count(tombstone_paths(store)),
-            count(tombstone_paths(store, applied=True)))
+    return (count(store.tombstone_paths()),
+            count(store.tombstone_paths(applied=True)))

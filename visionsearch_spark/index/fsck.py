@@ -47,38 +47,28 @@ import os
 
 import numpy as np
 
+from visionsearch_spark.index.codec import fixed_values
+from visionsearch_spark.index.store import (
+    IndexStore,
+    count_rows,
+    parquet_files,
+    read_columns,
+)
+
 
 class StoreCorruption(RuntimeError):
     pass
 
 
-def _count_rows(path: str) -> int:
-    import pyarrow.dataset as pads
-
-    return pads.dataset(path, format="parquet").count_rows()
-
-
-def _parquet_files(d: str) -> list[str]:
-    return sorted(
-        os.path.join(d, f) for f in os.listdir(d)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-
-
 def _docid_set(paths: list[str]) -> np.ndarray:
-    import pyarrow.dataset as pads
-
     if not paths:
         return np.empty(0, dtype=np.int64)
-    ds = pads.dataset([pads.dataset(p) for p in paths])
-    return np.unique(np.asarray(ds.to_table(columns=["docid"])
-                                .column("docid"), dtype=np.int64))
+    return np.unique(fixed_values(
+        read_columns(paths, ["docid"])["docid"]).astype(np.int64))
 
 
 def fsck(root: str, strict: bool = False) -> dict:
     import pyarrow.parquet as pq
-
-    from visionsearch_spark.index.store import IndexStore
 
     store = IndexStore(root)
     report: dict[str, dict] = {}
@@ -106,25 +96,26 @@ def fsck(root: str, strict: bool = False) -> dict:
     for key in ("n_docs", "avgdl", "shard_range", "n_partitions"):
         if key not in meta:
             err(rec, f"meta missing required key {key!r}")
-    pend = set(meta.get("tombstone_dirs") or [])
-    appl = set(meta.get("applied_tombstone_dirs") or [])
+    pend = set(store.tombstone_paths())
+    appl = set(store.tombstone_paths(applied=True))
     if pend & appl:
-        err(rec, f"tombstone dirs both pending and applied: {pend & appl}")
-    for d in (list(meta.get("segment_dirs") or [])
-              + list(meta.get("term_stats_dirs") or [])
+        both = {os.path.relpath(p, root) for p in pend & appl}
+        err(rec, f"tombstone dirs both pending and applied: {both}")
+    for p in ([os.path.join(root, d) for d in
+               (meta.get("segment_dirs") or [])
+               + (meta.get("term_stats_dirs") or [])]
               + sorted(pend | appl)):
-        if not os.path.isdir(os.path.join(root, d)):
-            err(rec, f"meta references missing dir {d!r}")
+        if not os.path.isdir(p):
+            err(rec, f"meta references missing dir "
+                     f"{os.path.relpath(p, root)!r}")
     if not rec["ok"]:
         _finish(report, strict)
         return report
 
     # ---- stats ---------------------------------------------------------
     rec = check("stats")
-    staged_rows = _count_rows(store.staged_path)
-    applied_rows = sum(
-        _count_rows(os.path.join(root, d)) for d in sorted(appl)
-    )
+    staged_rows = count_rows(store.staged_path)
+    applied_rows = sum(count_rows(p) for p in sorted(appl))
     live_rows = staged_rows - applied_rows
     if int(meta["n_docs"]) != live_rows:
         err(rec, f"meta n_docs={meta['n_docs']} != staged − applied = "
@@ -137,7 +128,7 @@ def fsck(root: str, strict: bool = False) -> dict:
     # so (min == 0) ∧ (max − min + 1 == rows) ⇔ unique AND contiguous —
     # checked from row-group footer stats alone (O(files), no data read)
     lo, hi = None, None
-    for p in _parquet_files(store.staged_path):
+    for p in parquet_files(store.staged_path):
         md = pq.ParquetFile(p).metadata
         idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
         for g in range(md.num_row_groups):
@@ -165,7 +156,7 @@ def fsck(root: str, strict: bool = False) -> dict:
     rec = check("segments")
     for d in store.segment_paths():
         seen: dict[int, str] = {}
-        for p in _parquet_files(d):
+        for p in parquet_files(d):
             col = pq.read_table(p, columns=["shard"]).column("shard")
             for s in np.unique(np.asarray(col, dtype=np.int64)).tolist():
                 if s in seen:
@@ -185,7 +176,7 @@ def fsck(root: str, strict: bool = False) -> dict:
         )
 
         for d in store.segment_paths():
-            for p in _parquet_files(d):
+            for p in parquet_files(d):
                 pf = pq.ParquetFile(p)
                 md = pf.metadata
                 idx = {md.schema.column(i).name: i
@@ -242,14 +233,8 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     # ---- manifests -------------------------------------------------------
     rec = check("manifests")
-    import pyarrow.dataset as pads
-
-    staged_pids = set(
-        np.asarray(
-            pads.dataset(store.staged_path).to_table(columns=["pid"])
-            .column("pid")
-        ).tolist()
-    )
+    staged_pids = set(fixed_values(
+        read_columns([store.staged_path], ["pid"])["pid"]).tolist())
     missing = staged_pids - store.done_partitions()
     if missing:
         rec["warnings"].append(
@@ -259,10 +244,8 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     # ---- tombstones ------------------------------------------------------
     rec = check("tombstones")
-    from visionsearch_spark.index.deletes import tombstone_paths
-
-    dead_p = _docid_set(tombstone_paths(store))
-    dead_a = _docid_set(tombstone_paths(store, applied=True))
+    dead_p = _docid_set(sorted(pend))
+    dead_a = _docid_set(sorted(appl))
     both = np.intersect1d(dead_p, dead_a)
     if both.size:
         err(rec, f"{both.size} docid(s) tombstoned as BOTH pending and "
@@ -281,7 +264,7 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     n_files = n_missing = 0
     for d in store.segment_paths():
-        for p in _parquet_files(d):
+        for p in parquet_files(d):
             n_files += 1
             if bloom.load_bloom(p) is None:  # absent/invalid: prune skips
                 n_missing += 1
@@ -308,10 +291,9 @@ def store_report(root: str) -> dict:
     /healthz payload and the capacity-planning numbers an operator
     watches: live-dir count approaching the compaction threshold, bytes
     by component, pending tombstones awaiting a fold."""
-    from visionsearch_spark.index.store import IndexStore
-
     store = IndexStore(root)
     meta = store.read_meta() if os.path.exists(store.meta_path) else {}
+    pend, appl = store.tombstone_paths(), store.tombstone_paths(applied=True)
 
     def du(path: str) -> tuple[int, int]:
         files = bytes_ = 0
@@ -330,9 +312,7 @@ def store_report(root: str) -> dict:
         ("segments", store.segment_paths()),
         ("term_stats", store.term_stats_paths()),
         ("fragments", [store.fragments_dir]),
-        ("tombstones", [os.path.join(root, d) for d in
-                        (meta.get("tombstone_dirs") or [])
-                        + (meta.get("applied_tombstone_dirs") or [])]),
+        ("tombstones", pend + appl),
     ):
         f = b = 0
         for p in paths:
@@ -348,9 +328,8 @@ def store_report(root: str) -> dict:
         "avgdl": meta.get("avgdl"),
         "shard_range": meta.get("shard_range"),
         "live_segment_dirs": len(meta.get("segment_dirs") or []),
-        "pending_tombstone_dirs": len(meta.get("tombstone_dirs") or []),
-        "applied_tombstone_dirs": len(
-            meta.get("applied_tombstone_dirs") or []),
+        "pending_tombstone_dirs": len(pend),
+        "applied_tombstone_dirs": len(appl),
         "components": comp,
     }
 

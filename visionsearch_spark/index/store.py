@@ -56,6 +56,40 @@ MANIFEST_SCHEMA_DDL = (
 )
 
 
+def parquet_files(d: str) -> list[str]:
+    """A table dir's data files: its non-hidden *.parquet files, sorted
+    (Spark's _SUCCESS marker and .crc checksums are skipped)."""
+    return sorted(
+        os.path.join(d, f) for f in os.listdir(d)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
+
+
+def count_rows(d: str) -> int:
+    """Rows in a table dir, from the parquet footers alone."""
+    import pyarrow.parquet as pq
+
+    return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(d))
+
+
+def read_columns(dirs: list[str], columns: list[str]):
+    """`columns` of every data file in `dirs`, as one pyarrow Table. The
+    untargeted reader: no predicate pushdown, and deliberately not
+    pyarrow.dataset, whose import pulls in pandas (readers that need
+    pushdown use pyarrow.dataset)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = []
+    for d in dirs:
+        for f in parquet_files(d):
+            with pq.ParquetFile(f) as pf:
+                parts.append(pf.read(columns=columns))
+    # "default" promotion unifies field nullability: files of one table
+    # written by different jobs may disagree on it
+    return pa.concat_tables(parts, promote_options="default")
+
+
 @dataclass
 class IndexStore:
     root: str
@@ -136,6 +170,14 @@ class IndexStore:
                 f"*_paths() list API (appends make snapshots additive)"
             )
         return dirs[0]
+
+    def tombstone_paths(self, applied: bool = False) -> list[str]:
+        """Absolute paths of the PENDING tombstone dirs (queries mask
+        these); applied=True returns the folded-into-segments dirs
+        instead (index/deletes.py)."""
+        meta = self.read_meta() if os.path.exists(self.meta_path) else {}
+        key = "applied_tombstone_dirs" if applied else "tombstone_dirs"
+        return [os.path.join(self.root, d) for d in meta.get(key) or []]
 
     def epoch_path(self, prefix: str, epoch: int) -> str:
         return os.path.join(self.root, f"{prefix}-{epoch:06d}")

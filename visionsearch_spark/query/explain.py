@@ -47,7 +47,6 @@ def explain_rows(store: IndexStore, query_text: str, conv_id: str,
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    from visionsearch_spark.index.deletes import tombstone_paths
     from visionsearch_spark.query.wand import _lookup_term_dfs
 
     qterms = sorted(set(tokenize(query_text)))
@@ -65,7 +64,7 @@ def explain_rows(store: IndexStore, query_text: str, conv_id: str,
     # are tombstoned) — max docid is the live candidate
     docids = tbl.column("docid").to_pylist()
     live = int(max(docids))
-    dead_paths = tombstone_paths(store)
+    dead_paths = store.tombstone_paths()
     if dead_paths:
         dead = pads.dataset(
             [pads.dataset(p) for p in dead_paths]

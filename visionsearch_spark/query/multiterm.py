@@ -12,10 +12,12 @@ every expanded term scores at its own idf).
 
 Two expansion paths, same result (test-pinned parity):
 
-* **driver** (small dictionaries, serving): streaming pyarrow scan of
-  the term_stats files with a range pushdown on the pattern's literal
+* **driver** (small dictionaries): streaming pyarrow scan of the
+  term_stats files with a range pushdown on the pattern's literal
   prefix; regex / edit-distance refinement vectorized or banded-DP
-  driver-side. Used when the dictionary is under
+  driver-side (prefix, fuzzy and did-you-mean through
+  ``query/termdict``, the algorithm the serving tier runs over its
+  in-memory dictionary). Used when the dictionary is under
   ``DRIVER_SCAN_MAX_BYTES`` — the same budget call as the df point
   lookups in ``wand._lookup_term_dfs``.
 * **spark** (the scale path): one scan-only stage over term_stats with
@@ -35,13 +37,15 @@ the SPIMI store.
 from __future__ import annotations
 
 import re
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.index.store import IndexStore
-from visionsearch_spark.query import wand
+from visionsearch_spark.query import termdict, wand
+from visionsearch_spark.query.termdict import _prefix_bounds, _top_cap
 
 # Lucene's BooleanQuery.maxClauseCount-backed rewrite default
 DEFAULT_MAX_EXPANSIONS = 50
@@ -49,7 +53,6 @@ DEFAULT_MAX_EXPANSIONS = 50
 # pyarrow, no job scheduling); larger ones take the Spark path
 DRIVER_SCAN_MAX_BYTES = 64 << 20
 
-_TERM_RE = re.compile(r"^[0-9a-z]+$")
 _WILD_RE = re.compile(r"^[0-9a-z*?]+$")
 
 
@@ -74,12 +77,6 @@ def _use_spark(store: IndexStore, force: bool | None) -> bool:
     return _stats_nbytes(store) > DRIVER_SCAN_MAX_BYTES
 
 
-def _prefix_bounds(prefix: str) -> tuple[str, str]:
-    """Half-open [lo, hi) term range covering exactly the prefix: terms
-    are [0-9a-z]+ so every continuation char sorts below '{'."""
-    return prefix, prefix + "{"
-
-
 def _wildcard_regex(pattern: str) -> str:
     out = []
     for ch in pattern:
@@ -90,26 +87,6 @@ def _wildcard_regex(pattern: str) -> str:
 def _literal_prefix(pattern: str) -> str:
     m = re.match(r"^[0-9a-z]*", pattern)
     return m.group(0) if m else ""
-
-
-def _lev_within(a: str, b: str, k: int) -> bool:
-    """Banded two-row Levenshtein DP with early exit at > k."""
-    if abs(len(a) - len(b)) > k:
-        return False
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i] + [0] * len(b)
-        for j, cb in enumerate(b, 1):
-            cur[j] = min(prev[j] + 1, cur[j - 1] + 1,
-                         prev[j - 1] + (ca != cb))
-        if min(cur) > k:
-            return False
-        prev = cur
-    return prev[-1] <= k
-
-
-def _top_cap(pairs: list[tuple[str, int]], cap: int) -> list[tuple[str, int]]:
-    return sorted(pairs, key=lambda p: (-p[1], p[0]))[:cap]
 
 
 def _driver_vocab(store: IndexStore, lo: str | None,
@@ -157,16 +134,13 @@ def expand_prefix(
 ) -> list[tuple[str, int]]:
     """Top-`max_expansions` dictionary terms starting with `prefix`,
     as (term, df) ordered (df desc, term asc)."""
-    prefix = prefix.lower()
-    if not _TERM_RE.match(prefix):
-        raise ValueError(f"prefix must be a single analyzed token, got "
-                         f"{prefix!r}")
+    prefix = termdict.check_prefix(prefix)
     if _use_spark(store, use_spark):
         return _spark_expand(
             spark, store, lambda c: c.startswith(prefix), max_expansions
         )
-    lo, hi = _prefix_bounds(prefix)
-    return _top_cap(_driver_vocab(store, lo, hi), max_expansions)
+    return termdict.complete(partial(_driver_vocab, store), prefix,
+                             max_expansions)
 
 
 def expand_wildcard(
@@ -243,12 +217,8 @@ def expand_fuzzy(
                 cond = c.startswith(pfx) & cond
             return cond
         return _spark_expand(spark, store, pred, max_expansions)
-    lo, hi = _prefix_bounds(pfx) if pfx else (None, None)
-    return _top_cap(
-        [p for p in _driver_vocab(store, lo, hi)
-         if _lev_within(p[0], q, max_edits)],
-        max_expansions,
-    )
+    return termdict.fuzzy(partial(_driver_vocab, store), q, max_edits,
+                          max_expansions, prefix=pfx)
 
 
 def term_df(store: IndexStore, term: str) -> int:
@@ -263,34 +233,12 @@ def term_df(store: IndexStore, term: str) -> int:
 
 def did_you_mean(store: IndexStore, query: str, max_edits: int = 2,
                  max_expansions: int = 10) -> tuple[str, int] | None:
-    """'Did you mean' (the ES phrase-suggester shape, served
-    driver-side with zero Spark jobs): each OOV analyzed query term is
-    replaced by its highest-df dictionary term within `max_edits`
-    Levenshtein edits (ties term-asc, the expand_fuzzy order); known
-    terms pass through untouched — a correction never second-guesses a
-    term that actually matches. Returns (corrected_query, n_corrected)
-    or None when nothing was corrected (all terms known, or no
-    candidate in range for any OOV term)."""
-    toks = tokenize(query)
-    if not toks:
-        return None
-    out: list[str] = []
-    n = 0
-    for t in toks:
-        if term_df(store, t) > 0:
-            out.append(t)
-            continue
-        cands = expand_fuzzy(None, store, t, max_edits=max_edits,
-                             max_expansions=max_expansions,
-                             use_spark=False)
-        if cands:
-            out.append(cands[0][0])
-            n += 1
-        else:
-            out.append(t)
-    if n == 0:
-        return None
-    return " ".join(out), n
+    """'Did you mean' over the term_stats dictionary, served driver-side
+    with zero Spark jobs (query/termdict.did_you_mean — the algorithm
+    the serving tier runs over its in-memory dictionary)."""
+    return termdict.did_you_mean(partial(term_df, store),
+                                 partial(_driver_vocab, store), query,
+                                 max_edits, max_expansions)
 
 
 # ------------------------------------------------------------------ topk

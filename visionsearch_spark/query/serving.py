@@ -15,12 +15,19 @@ Spark path (tested). At 10^12-turn scale one process cannot hold the index;
 the deployment story is one searcher per docid-shard group behind a
 scatter-gather router — the same shard partitioning the Spark path uses,
 served warm. `shards=` loads a subset for exactly that.
+
+Import rule: loading and /search, /suggest, /healthz import neither
+pyspark/py4j nor pandas/pyarrow.dataset (about 47 MB of resident memory
+per serving process, paid once per shard group). Tables come in through
+index/store.read_columns and cross into numpy through the codec's
+buffer views; tests/test_serving_lean.py guards the rule.
 """
 
 from __future__ import annotations
 
+from bisect import bisect_left
+
 import numpy as np
-import pyarrow.dataset as pads
 
 from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
@@ -28,10 +35,17 @@ from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.codec import (
     decode_blocks,
     decode_varint,
+    fixed_values,
+    mask_array,
     payload,
     term_runs,
 )
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.store import (
+    IndexStore,
+    count_rows,
+    read_columns,
+)
+from visionsearch_spark.query import termdict
 
 
 class LocalSearcher:
@@ -41,34 +55,36 @@ class LocalSearcher:
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         self.shards = shards
-        flt = None
+        cols = ["term", "n", "docids_bin", "tfs_bin", "dls_bin"]
+        seg = read_columns(store.segment_paths(),
+                           cols + ([] if shards is None else ["shard"]))
         if shards is not None:
-            import pyarrow.compute as pc
-
-            flt = pc.field("shard").isin(shards)
-        seg = pads.dataset(
-            [pads.dataset(p) for p in store.segment_paths()]
-        ).to_table(
-            columns=["term", "n", "docids_bin", "tfs_bin", "dls_bin"],
-            filter=flt,
-        )
+            keep = np.isin(fixed_values(seg["shard"]), shards)
+            seg = seg.filter(mask_array(keep)).select(cols)
         # load builds only the term -> block-row-range map (one Arrow
         # sort by term); posting bytes stay Arrow buffers and decode
         # LAZILY on a term's first query, cached decoded — cold start is
         # column-scan cheap, the warm working set is as fast as eager
         seg, self._blocks = term_runs(seg)
-        self._ns = seg["n"].to_numpy().astype(np.int64)
+        self._ns = fixed_values(seg["n"]).astype(np.int64)
         self._dbins = seg["docids_bin"]
         self._tbins = seg["tfs_bin"]
         self._lbins = seg["dls_bin"]
         self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+        # the term dictionary /suggest and did_you_mean read: terms in
+        # sorted order, each with its df (Σ n over its blocks)
+        self._terms = list(self._blocks)
+        starts = np.fromiter((r[0] for r in self._blocks.values()),
+                             dtype=np.int64, count=len(self._terms))
+        self._dfs = (np.add.reduceat(self._ns, starts) if starts.size
+                     else np.zeros(0, dtype=np.int64))
         # docmap: docid is dense 0..n-1, so position == docid
-        dm = pads.dataset(store.docmap_path).to_table(
-            columns=["docid", "conv_id", "turn_idx"]
-        )
-        order = np.argsort(np.asarray(dm.column("docid")), kind="stable")
-        self._conv = np.asarray(dm.column("conv_id").to_pylist(), dtype=object)[order]
-        self._turn = np.asarray(dm.column("turn_idx"))[order]
+        dm = read_columns([store.docmap_path],
+                          ["docid", "conv_id", "turn_idx"])
+        order = np.argsort(fixed_values(dm["docid"]), kind="stable")
+        self._conv = np.asarray(dm["conv_id"].to_pylist(),
+                                dtype=object)[order]
+        self._turn = fixed_values(dm["turn_idx"])[order]
 
         self._bounds: np.ndarray | None = None  # derived lazily
 
@@ -77,14 +93,10 @@ class LocalSearcher:
         # wand kernel's deny sideband. Restricted to this searcher's
         # shards (a shard-group process holds only its slice).
         self._dead: np.ndarray | None = None
-        from visionsearch_spark.index.deletes import tombstone_paths
-
-        tpaths = tombstone_paths(store)
+        tpaths = store.tombstone_paths()
         if tpaths:
-            tt = pads.dataset(
-                [pads.dataset(p) for p in tpaths]
-            ).to_table(columns=["docid"])
-            dead = np.asarray(tt.column("docid"), dtype=np.int64)
+            dead = fixed_values(
+                read_columns(tpaths, ["docid"])["docid"]).astype(np.int64)
             if shards is not None and dead.size:
                 shard_range = int(meta["shard_range"])
                 keep = np.isin(dead // shard_range,
@@ -117,6 +129,13 @@ class LocalSearcher:
     def df(self, term: str) -> int:
         run = self._blocks.get(term)
         return 0 if run is None else int(self._ns[slice(*run)].sum())
+
+    def _vocab(self, lo: str | None, hi: str | None):
+        """(term, df) over the dictionary's terms in [lo, hi), or over
+        every term when lo is None (query/termdict's vocab source)."""
+        i = 0 if lo is None else bisect_left(self._terms, lo)
+        j = len(self._terms) if hi is None else bisect_left(self._terms, hi)
+        return zip(self._terms[i:j], self._dfs[i:j].tolist())
 
     def mask_convs(self, conv_ids: list[str]) -> int:
         """Fold freshly tombstoned conversations into the in-process
@@ -301,21 +320,19 @@ class LocalSearcher:
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
         """Autocomplete: top-n dictionary completions of `prefix` as
         (term, df), df-desc — the term dictionary IS the suggester
-        (Lucene's TermsComponent); driver-side pyarrow scan with prefix
-        range pushdown, no Spark job (multiterm.expand_prefix)."""
-        from visionsearch_spark.query.multiterm import expand_prefix
-
-        return expand_prefix(None, self.store, prefix, n, use_spark=False)
+        (Lucene's TermsComponent); answered from the in-memory
+        dictionary, ValueError for a non-token prefix
+        (query/termdict.complete)."""
+        return termdict.complete(self._vocab, prefix, n)
 
     def did_you_mean(self, query: str, max_edits: int = 2
                      ) -> tuple[str, int] | None:
         """Spell correction over the term dictionary ('did you mean' —
         ES phrase suggester): OOV query terms replaced by their
         highest-df dictionary term within max_edits; None when nothing
-        to correct. Spark-free (query/multiterm.did_you_mean)."""
-        from visionsearch_spark.query.multiterm import did_you_mean
-
-        return did_you_mean(self.store, query, max_edits=max_edits)
+        to correct. In-memory (query/termdict.did_you_mean)."""
+        return termdict.did_you_mean(self.df, self._vocab, query,
+                                     max_edits=max_edits)
 
     def term_vector(self, conv_id: str, turn_idx: int
                     ) -> list[tuple[str, int, list[int], int]]:
@@ -412,12 +429,11 @@ class LocalVectorSearcher:
         self.dim = int(m["dim"])
         self._planes = _hyperplanes(self.dim, int(m["n_planes"]),
                                     int(m["seed"]))
-        sig = pads.dataset(os.path.join(ann_root, SIG_DIR)).to_table(
-            columns=["id", "sig"])
-        sig_ids = np.asarray(sig.column("id"), dtype=np.int64)
-        sigs = np.asarray(sig.column("sig"), dtype=np.int64)
-        emb = pads.dataset(emb_path).to_table(columns=[id_col, vec_col])
-        emb_ids = np.asarray(emb.column(id_col), dtype=np.int64)
+        sig = read_columns([os.path.join(ann_root, SIG_DIR)], ["id", "sig"])
+        sig_ids = fixed_values(sig["id"]).astype(np.int64)
+        sigs = fixed_values(sig["sig"]).astype(np.int64)
+        emb = read_columns([emb_path], [id_col, vec_col])
+        emb_ids = fixed_values(emb[id_col]).astype(np.int64)
         vecs = np.asarray(emb.column(vec_col).to_pylist(),
                           dtype=np.float64)
         order = np.argsort(emb_ids, kind="stable")
@@ -521,7 +537,10 @@ class ShardedSearcher:
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         shard_range = int(meta["shard_range"])
-        max_shard = max(0, (self.n_docs - 1) // shard_range)
+        # docids are dense over the staged rows, dead ones included: a
+        # compaction that folds deletes lowers n_docs, not the top docid
+        n_ids = count_rows(store.staged_path)
+        max_shard = max(0, (n_ids - 1) // shard_range)
         groups: list[list[int]] = [
             list(range(g, max_shard + 1, n_groups))
             for g in range(min(n_groups, max_shard + 1))
@@ -566,20 +585,24 @@ class ShardedSearcher:
         hits.sort(key=lambda h: (-h[3], h[0]))  # score desc, docid asc
         return hits[:k]
 
-    def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
-        """Autocomplete over the FULL dictionary (term_stats spans every
-        shard group, so no scatter-gather needed)."""
-        from visionsearch_spark.query.multiterm import expand_prefix
+    def _vocab(self, lo: str | None, hi: str | None):
+        """The FULL dictionary: the union of the groups' terms, df summed
+        (a term's blocks spread over every group holding its docs)."""
+        agg: dict[str, int] = {}
+        for s in self.searchers:
+            for t, d in s._vocab(lo, hi):
+                agg[t] = agg.get(t, 0) + d
+        return agg.items()
 
-        return expand_prefix(None, self.store, prefix, n, use_spark=False)
+    def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
+        """Autocomplete over the FULL dictionary (query/termdict)."""
+        return termdict.complete(self._vocab, prefix, n)
 
     def did_you_mean(self, query: str, max_edits: int = 2
                      ) -> tuple[str, int] | None:
-        """Spell correction over the FULL dictionary (term_stats spans
-        every shard group — no scatter-gather)."""
-        from visionsearch_spark.query.multiterm import did_you_mean
-
-        return did_you_mean(self.store, query, max_edits=max_edits)
+        """Spell correction over the FULL dictionary with global df."""
+        return termdict.did_you_mean(self.df, self._vocab, query,
+                                     max_edits=max_edits)
 
     def search_highlighted(self, query: str, k: int = 5,
                            threshold: float = 0.0,

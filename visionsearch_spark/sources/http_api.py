@@ -216,9 +216,9 @@ class ServingApp:
                     }
                     if not rows and after is None:
                         # zero-hit first page: offer a spell correction
-                        # ("did you mean" — ES suggester trigger); a
-                        # Spark-free dictionary scan, only paid on empty
-                        # results
+                        # ("did you mean" — ES suggester trigger) from
+                        # the searcher's in-memory term dictionary, only
+                        # paid on empty results
                         dym = app.searcher.did_you_mean(q)
                         if dym is not None:
                             resp["did_you_mean"] = dym[0]
