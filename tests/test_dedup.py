@@ -609,20 +609,19 @@ def test_band_candidates_single_join_matches_per_band_union(spark):
     ).cache()
 
     rpb = N_HASHES // N_BANDS
+    sig_pdf = sig.toPandas()
     for cross in (False, True):
         ref = set()
-        sig_pdf = sig.toPandas()
         for b in range(N_BANDS):
             cols = [f"h{i}" for i in range(b * rpb, (b + 1) * rpb)]
-            for _, ra in sig_pdf.iterrows():
-                for _, rb in sig_pdf.iterrows():
-                    if all(ra[c] == rb[c] for c in cols):
-                        ia, ib = int(ra["id"]), int(rb["id"])
-                        if cross:
-                            if ia % 2 == 0 and ib % 2 == 1:
-                                ref.add((ia, ib))
-                        elif ia < ib:
-                            ref.add((ia, ib))
+            # every (a, b) row pair equal on this band's hashes
+            same = sig_pdf.merge(sig_pdf, on=cols, suffixes=("_a", "_b"))
+            for ia, ib in zip(same["id_a"].tolist(), same["id_b"].tolist()):
+                if cross:
+                    if ia % 2 == 0 and ib % 2 == 1:
+                        ref.add((ia, ib))
+                elif ia < ib:
+                    ref.add((ia, ib))
         got = {(r["id_a"], r["id_b"])
                for r in _band_candidates(sig, cross_side=cross).collect()}
         assert got == ref, f"cross_side={cross}"

@@ -99,8 +99,8 @@ def test_suggest_endpoint(served):
 
 
 def test_explain_endpoint(served):
-    """GET /explain returns the per-term breakdown whose reduceat total
-    equals the served hit's score (Spark-free request path)."""
+    """GET /explain returns the per-term breakdown whose score_core
+    total equals the served hit's score (Spark-free request path)."""
     url, searcher, *_ = served
     q = "join filter"
     hits = searcher.search(q, k=1)

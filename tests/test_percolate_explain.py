@@ -167,9 +167,8 @@ def test_explain_sums_to_ranking_score(spark, store):
                                 r["idf"] * r["tf_weight"], rel_tol=1e-12)
         raw = explain_rows(store, q, hit["conv_id"], hit["turn_idx"],
                            spark)
-        # bit-identical: explained_total reuses the kernel's reduceat
-        # reduction tree (pairwise, NOT sequential — a naive sum can be
-        # 1 ulp off)
+        # bit-identical: explained_total and the kernel both sum through
+        # score_core, left to right in sorted-term order
         assert explained_total(raw) == hit["score"]
 
 

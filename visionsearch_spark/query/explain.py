@@ -4,10 +4,9 @@ breakdown of one document's score under the store's CURRENT statistics
 
 Σ contribution over the returned rows equals the score `topk` would
 rank the document with — bit-for-bit when summed with
-`explained_total` (the kernel accumulates per-doc scores with
-`np.add.reduceat`, whose reduction tree is PAIRWISE, not left-to-right;
-a naive sequential sum can differ in the last ulp). Same frozen
-analyzer, same idf and tf-weight formulas, df from the index's
+`explained_total`, which sums through query/score_core like every
+engine: left to right in sorted-term order, the oracle's order. Same
+frozen analyzer, same idf and tf-weight formulas, df from the index's
 term_stats, dl/tf re-derived from the staged row exactly the way SPIMI
 derives postings from it (staged holds TEXT; the index re-tokenizes —
 so re-tokenizing here IS reading what the postings hold; pinned by
@@ -22,12 +21,14 @@ from __future__ import annotations
 
 from collections import Counter
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 
 from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
 from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.query import score_core
 
 EXPLAIN_DDL = ("term string, tf long, dl long, df long, "
                "idf double, tf_weight double, contribution double")
@@ -93,15 +94,13 @@ def explain_rows(store: IndexStore, query_text: str, conv_id: str,
 
 
 def explained_total(rows: list[tuple]) -> float:
-    """The ranking score these rows explain — summed with the SAME
-    reduction tree as the score kernel (np.add.reduceat), so the
-    equality with topk's score is exact, not within-epsilon."""
-    import numpy as np
-
-    if not rows:
-        return 0.0
-    arr = np.array([r[6] for r in rows], dtype=np.float64)
-    return float(np.add.reduceat(arr, [0])[0])
+    """The ranking score these rows explain — summed by score_core in
+    the rows' (sorted term) order, so the equality with topk's score is
+    exact, not within-epsilon."""
+    contribs = np.array([r[6] for r in rows], dtype=np.float64)
+    _docid, total = score_core.accumulate(
+        [(np.zeros(contribs.size, dtype=np.int64), contribs)], 0.0)
+    return float(total[0]) if total.size else 0.0
 
 
 def explain_score(spark: SparkSession, store: IndexStore,

@@ -45,7 +45,7 @@ from visionsearch_spark.index.store import (
     count_rows,
     read_columns,
 )
-from visionsearch_spark.query import termdict
+from visionsearch_spark.query import score_core, termdict
 
 
 class LocalSearcher:
@@ -165,113 +165,45 @@ class LocalSearcher:
         stored table that an append could leave stale. Over a transcript
         store this collapses turns per conversation (conv-level search).
         Returns [(first_unit_docid, conv_id, score)]."""
-        collapsed = self._docs_collapsed(query, threshold, term_weights)
-        if collapsed is None:
-            return []
-        uniq, convs, sums = collapsed
-        # tie-break on the PARENT id (== the distributed path's ordering;
-        # docid order can diverge from conv order on appended stores)
-        if uniq.size > k:
-            kth = -np.partition(-sums, k - 1)[k - 1]
-            cand = np.flatnonzero(sums >= kth)
-            order2 = np.lexsort((convs[cand], -sums[cand]))[:k]
-            sel = cand[order2]
-        else:
-            sel = np.lexsort((convs, -sums))
-        return [
-            (int(uniq[i]), str(convs[i]), float(sums[i]))
-            for i in sel
-        ]
+        return _docs_topk([self._parented(query, threshold, term_weights)],
+                          k)
 
-    def _docs_collapsed(self, query: str, threshold: float,
-                        term_weights: dict[str, float] | None = None):
-        """Score + double-collapse, PRE-cut: (run_start_docids, convs,
-        max_scores) with one entry per matched conv — run_start is this
-        searcher's MIN matched run-start per conv (runs arrive in docid
-        order and the conv collapse keeps the first). Shared by
-        search_docs and the router, so scatter-gather ranking AND
-        representative resolve cost ONE scoring pass per group."""
+    def _parented(self, query: str, threshold: float,
+                  term_weights: dict[str, float] | None = None):
+        """(conv_ids, run-start docids, scores) of the matched units. A
+        conv appended in a later increment owns several runs of docids,
+        so collapses key on the conv_id, min run-start as representative."""
         if self._bounds is None:
             conv = self._conv
-            if conv.size == 0:
-                return None
             change = np.flatnonzero(conv[1:] != conv[:-1]) + 1
             self._bounds = np.concatenate(([0], change)).astype(np.int64)
-        units = self._scored(query, threshold, term_weights)
-        if units is None or units[0].size == 0:
-            return None
-        uniq, sums = units
-        parent = self._bounds[
-            np.searchsorted(self._bounds, uniq, side="right") - 1
-        ]
-        st = np.concatenate(
-            ([0], np.flatnonzero(parent[1:] != parent[:-1]) + 1)
-        )
-        uniq = parent[st]
-        sums = np.maximum.reduceat(sums, st)
-        # second collapse keys on the PARENT id: a parent whose units were
-        # appended in a later increment owns several runs
-        convs = self._conv[uniq]
-        order = np.argsort(convs, kind="stable")  # stable: docid asc kept
-        convs, uniq, sums = convs[order], uniq[order], sums[order]
-        st2 = np.concatenate(
-            ([0], np.flatnonzero(convs[1:] != convs[:-1]) + 1)
-        )
-        return uniq[st2], convs[st2], np.maximum.reduceat(sums, st2)
+        uniq, sums = self._scored(query, threshold, term_weights)
+        return (self._conv[uniq], score_core.parents(self._bounds, uniq),
+                sums)
 
     def _scored(self, query: str, threshold: float,
                 term_weights: dict[str, float] | None = None
-                ) -> tuple[np.ndarray, np.ndarray] | None:
-        """All (docid, score) above threshold — canonical (docid,
-        term-rank) accumulation order; None when every term is OOV.
+                ) -> tuple[np.ndarray, np.ndarray]:
+        """(docids ascending, scores) of every live doc above threshold,
+        summed by score_core in term-rank order; empty when every term
+        is OOV.
 
         term_weights: precomputed per-term idf. REQUIRED when this
         searcher holds a shard subset: its local posting count is not the
         corpus df, so the router (ShardedSearcher) computes global df
         across groups and passes the weights down. A full-index searcher
         derives the identical weights locally (local df == global df)."""
-        qterms = sorted(set(tokenize(query)))
-        present = [t for t in qterms if t in self._blocks]
-        if not present:
-            return None
-        cat_d, cat_c = [], []
-        for t in present:  # sorted unique terms = canonical rank order
-            d, tfw = self._get_postings(t)
+        postings = []
+        for t in sorted(set(tokenize(query))):  # canonical rank order
+            p = self._get_postings(t)
+            if p is None:
+                continue
+            d, tfw = p
             w = (term_weights[t] if term_weights is not None
                  else idf_fn(self.n_docs, d.size))
-            cat_d.append(d)
-            cat_c.append(w * tfw)
-        d = np.concatenate(cat_d)
-        c = np.concatenate(cat_c)
-        # dense scatter-add: bincount sums sequentially in input order, and
-        # terms are concatenated in rank order, so per-doc accumulation
-        # order is (docid, term-rank) — bit-identical to the oracle's
-        # lexsort+reduceat, at O(N + postings) instead of O(P log P).
-        # N is bounded per searcher (one docid-shard group per process).
-        scores = np.bincount(d, weights=c, minlength=self.n_docs)
-        uniq = np.flatnonzero(scores > threshold)
-        if self._dead is not None and uniq.size:  # mask BEFORE any cut
-            pos = np.minimum(
-                np.searchsorted(self._dead, uniq), self._dead.size - 1
-            )
-            uniq = uniq[self._dead[pos] != uniq]
-        return uniq, scores[uniq]
-
-    @staticmethod
-    def _select_topk(uniq: np.ndarray, sums: np.ndarray, k: int
-                     ) -> tuple[np.ndarray, np.ndarray]:
-        """k best by (score desc, docid asc), returned in that order.
-        argpartition narrows to the >=kth-score candidates (O(M)), the
-        deterministic tie-break lexsort then runs only on that set —
-        never on every matching doc."""
-        if uniq.size > k:
-            kth = -np.partition(-sums, k - 1)[k - 1]
-            cand = np.flatnonzero(sums >= kth)  # includes boundary ties
-            order = np.lexsort((uniq[cand], -sums[cand]))[:k]
-            sel = cand[order]
-        else:
-            sel = np.lexsort((uniq, -sums))
-        return uniq[sel], sums[sel]
+            postings.append((d, w * tfw))
+        return score_core.admit(*score_core.accumulate(postings, threshold),
+                                deny=self._dead)
 
     def _prefix_mask(self, uniq: np.ndarray, conv_prefix: str
                      ) -> np.ndarray:
@@ -292,29 +224,20 @@ class LocalSearcher:
                search_after: tuple[float, int] | None = None
                ) -> list[tuple[int, str, int, float]]:
         """[(docid, conv_id, turn_idx, score)] — rank-identical with the
-        oracle: canonical (docid, term-rank) accumulation order, (score
-        desc, docid asc) tie-break, OOV -> [] (never padded hits).
+        oracle: the oracle's term-rank summation order (score_core),
+        (score desc, docid asc) tie-break, OOV -> [] (never padded hits).
         conv_prefix: serve only docs whose conv_id starts with it.
         search_after: (score, docid) of the previous page's last hit —
         cursor pagination in this searcher's own total order; scores are
         deterministic float64, so the strict-after test is exact."""
-        scored = self._scored(query, threshold, term_weights)
-        if scored is None:
-            return []
-        uniq, sums = scored
+        uniq, sums = self._scored(query, threshold, term_weights)
         if conv_prefix is not None:
             m = self._prefix_mask(uniq, conv_prefix)
             uniq, sums = uniq[m], sums[m]
-        if search_after is not None and uniq.size:
-            cs, cd = search_after
-            m = (sums < cs) | ((sums == cs) & (uniq > cd))
-            uniq, sums = uniq[m], sums[m]
-        if not uniq.size:
-            return []
-        uniq, sums = self._select_topk(uniq, sums, k)
+        sel = score_core.select(k, sums, uniq, after=search_after)
         return [
             (int(d), str(self._conv[d]), int(self._turn[d]), float(s))
-            for d, s in zip(uniq, sums)
+            for d, s in zip(uniq[sel], sums[sel])
         ]
 
     def suggest(self, prefix: str, n: int = 10) -> list[tuple[str, int]]:
@@ -386,6 +309,17 @@ class LocalSearcher:
                            search_after=search_after)
         return highlight_hits(self.store, hits, query,
                               max_tokens=max_tokens)
+
+
+def _docs_topk(parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
+               k: int) -> list[tuple[int, str, float]]:
+    """Conv-level top-k over (conv_ids, run-starts, scores) parts: per
+    conv the max score and min run-start, ranked (score desc, conv_id
+    asc) like the distributed path."""
+    convs, reps, sums = (np.concatenate(col) for col in zip(*parts))
+    convs, sums, reps = score_core.collapse(convs, sums, reps)
+    return [(int(reps[i]), str(convs[i]), float(sums[i]))
+            for i in score_core.select(k, sums, convs)]
 
 
 def _popcount64(v: np.ndarray) -> np.ndarray:
@@ -582,8 +516,10 @@ class ShardedSearcher:
                               term_weights=w, conv_prefix=conv_prefix,
                               search_after=search_after)
         ]
-        hits.sort(key=lambda h: (-h[3], h[0]))  # score desc, docid asc
-        return hits[:k]
+        sel = score_core.select(
+            k, np.array([h[3] for h in hits], dtype=np.float64),
+            np.array([h[0] for h in hits], dtype=np.int64))
+        return [hits[i] for i in sel]
 
     def _vocab(self, lo: str | None, hi: str | None):
         """The FULL dictionary: the union of the groups' terms, df summed
@@ -623,42 +559,13 @@ class ShardedSearcher:
     def search_docs(self, query: str, k: int = 5, threshold: float = 0.0
                     ) -> list[tuple[int, str, float]]:
         """Doc-level (conv-collapsed) scatter-gather: a parent's units can
-        span shard groups, so per-group partial maxes re-merge by conv —
-        score = max across groups, representative docid = min run-start
-        over ALL matched units. Each group scores ONCE
-        (LocalSearcher._docs_collapsed); the merge keeps, per conv, the
-        max score and the min group-local run-start — a group holding the
-        conv's lowest-docid units but beaten out of its own top-k still
-        contributes the representative (pre-fix that representative was
-        silently lost, and the naive fix re-scored every group twice)."""
+        span shard groups, so every group's matched units (scored ONCE
+        per group, pre-cut) collapse together by conv — score = max
+        across groups, representative docid = min run-start over ALL
+        matched units, even when the group holding the conv's
+        lowest-docid units would not rank the conv in its own top-k."""
         w = self._weights(query)
         if not w:
             return []
-        parts = [
-            c for c in (
-                s._docs_collapsed(query, threshold, term_weights=w)
-                for s in self.searchers
-            ) if c is not None
-        ]
-        if not parts:
-            return []
-        uniq = np.concatenate([p[0] for p in parts])
-        convs = np.concatenate([p[1] for p in parts])
-        sums = np.concatenate([p[2] for p in parts])
-        order = np.argsort(convs, kind="stable")
-        uniq, convs, sums = uniq[order], convs[order], sums[order]
-        st = np.concatenate(
-            ([0], np.flatnonzero(convs[1:] != convs[:-1]) + 1)
-        )
-        convs = convs[st]
-        score = np.maximum.reduceat(sums, st)
-        rep = np.minimum.reduceat(uniq, st)
-        if convs.size > k:
-            kth = -np.partition(-score, k - 1)[k - 1]
-            cand = np.flatnonzero(score >= kth)
-            sel = cand[np.lexsort((convs[cand], -score[cand]))[:k]]
-        else:
-            sel = np.lexsort((convs, -score))
-        return [
-            (int(rep[i]), str(convs[i]), float(score[i])) for i in sel
-        ]
+        return _docs_topk([s._parented(query, threshold, term_weights=w)
+                           for s in self.searchers], k)

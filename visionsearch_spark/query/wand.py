@@ -11,10 +11,10 @@ Design (SURVEY.md §3.1 "our lifecycle"):
             in exactly one task and per-partition score sums are FINAL
             scores — postings never shuffle (`_partial_scores`).
   mapInArrow: decode each payload column once (codec.decode_blocks),
-            score vectorized in float64, canonical accumulation order
-            (docid, then query-term rank) via
-            lexsort + reduceat — bit-identical to the oracle's summation
-            order (SURVEY.md §7 R2), local top-k per query per partition.
+            score vectorized in float64 through query/score_core: per
+            doc a left-to-right sum in query-term rank order, the
+            oracle's summation order (SURVEY.md §7 R2), then masks,
+            collapse and a keep-ties top-k per query per partition.
   global:   row_number window per query over (score desc, conv_id,
             turn_idx) — k rows per query; ≤ #partitions·k rows ever cross
             the wire.
@@ -49,6 +49,7 @@ from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
 from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.query import score_core
 
 RESULT_DDL = "query_id long, rank int, docid long, conv_id string, turn_idx int, score double"
 RESULT_COLUMNS = ["query_id", "rank", "docid", "conv_id", "turn_idx", "score"]
@@ -110,25 +111,7 @@ def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFram
     )
 
 
-def _topk_keep_ties(docids: np.ndarray, scores: np.ndarray, k: int
-                    ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-PARTITION cut: keep every doc scoring >= the kth best, i.e.
-    boundary ties are NOT resolved here. The global merge orders by
-    (score desc, conv_id[, turn_idx]), and on an appended store docid
-    order diverges from conv order (later increments get higher docids
-    regardless of lexicographic conv_id) — cutting to exactly k by docid
-    inside one partition could drop the doc that wins the global conv
-    tie-break. Keeping ties costs at most the tied-run length extra rows
-    per partition and leaves tie resolution to the final window, which
-    has the conv key."""
-    if docids.size <= k:
-        return docids, scores
-    kth = -np.partition(-scores, k - 1)[k - 1]
-    m = scores >= kth
-    return docids[m], scores[m]
-
-
-def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
+def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                    avgdl: float, threshold: float, hit_terms: list[str],
                    has_filter: bool = False, has_bounds: bool = False,
                    cursors: dict[int, float] | None = None):
@@ -139,8 +122,8 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
     fighting 32 sibling tasks), decodes each payload column ONCE for the
     whole task (codec.decode_blocks), and scores.
 
-    qplans: [(query_id, [(term, idf, term_rank)], k)]; term_rank is the
-    query-term's position in sorted unique-term order (summation order).
+    qplans: [(query_id, [(term, idf)], k)], each query's terms in sorted
+    unique-term order (the summation order).
 
     `side` holds the task's sideband rows (allow-lists / collapse bounds
     / tombstones) as an Arrow table (term, n, docids_bin) — per-shard
@@ -152,13 +135,10 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
     'allowed set empty here' — inferring the mode from row presence would
     silently disable the filter in exactly those tasks.
 
-    cursors: per-query search_after score ceiling (pagination). The cut
-    for a cursored query keeps ALL rows scoring exactly the cursor score
-    (the tie run straddles the page boundary; only the merge — which has
-    the conv key — can split it) plus the keep-ties top-k of rows scoring
-    strictly below. Scores are deterministic float64 (canonical-order
-    reduceat), so the equality test is exact against a cursor taken from
-    a previous page's full-precision result."""
+    cursors: per-query search_after score ceiling (pagination). Every
+    per-partition cut keeps boundary ties (score_core.cut): on an
+    appended store docid order diverges from conv order, so only the
+    merge, which has the conv key, may split a tie run."""
     from visionsearch_spark.index.codec import (
         decode_blocks,
         decode_varint,
@@ -166,6 +146,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
         term_runs,
     )
 
+    threshold = score_core.check_threshold(threshold)
     cursors = cursors or {}
     # cursored queries take the exact path: block-max pruning targets the
     # TOP of the score range, which a ceiling excludes
@@ -227,6 +208,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
         # stale across appends
         bmax = tf_weight(tbl["max_tf"].to_numpy(), tbl["min_dl"].to_numpy(),
                          avgdl)
+        spans = {t: slice(poff[b0], poff[b1]) for t, (b0, b1) in runs.items()}
 
         def single_term_topk(b0: int, b1: int, w: float, k: int):
             """Exact top-k with block-max pruning: descending block-bound
@@ -252,83 +234,38 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float, int]], int]],
                                   if alls.size >= k else threshold)
             if not best_d:
                 return np.zeros(0, dtype=np.int64), np.zeros(0)
-            return _topk_keep_ties(np.concatenate(best_d),
-                                   np.concatenate(best_s), k)
+            d, s = np.concatenate(best_d), np.concatenate(best_s)
+            keep = score_core.cut(s, k)
+            return d[keep], s[keep]
 
         out_qid: list[np.ndarray] = []
         out_docid: list[np.ndarray] = []
         out_score: list[np.ndarray] = []
         for qid, terms, k in qplans:
-            present = [(t, w, r) for t, w, r in terms if t in runs]
+            present = [(t, w) for t, w in terms if t in runs]
             if not present:
                 continue
-            ub = sum(w * bmax[slice(*runs[t])].max() for t, w, _r in present)
+            ub = sum(w * bmax[slice(*runs[t])].max() for t, w in present)
             if ub <= threshold:
                 continue  # safe partition skip: no doc here can pass
             if qid in single_term_q and not has_sideband:
                 # block-max pruning assumes every decoded doc is a
                 # candidate; with an allow-filter or unit-collapse active
                 # the exact path below applies the mask/collapse first
-                t, w, _r = present[0]
-                d, s = single_term_topk(*runs[t], w, k)
-                if d.size:
-                    out_qid.append(np.full(d.size, qid, dtype=np.int64))
-                    out_docid.append(d)
-                    out_score.append(s)
-                continue
-            # multi-term: exact vectorized scoring, canonical order
-            cat_d, cat_c, cat_r = [], [], []
-            for t, w, r in present:
-                lo, hi = poff[runs[t][0]], poff[runs[t][1]]
-                cat_d.append(docids[lo:hi])
-                cat_c.append(w * tfw[lo:hi])
-                cat_r.append(np.full(hi - lo, r, dtype=np.int64))
-            d = np.concatenate(cat_d)
-            c = np.concatenate(cat_c)
-            r = np.concatenate(cat_r)
-            order = np.lexsort((r, d))  # primary docid, secondary term rank
-            d, c = d[order], c[order]
-            starts = np.concatenate(([0], np.flatnonzero(d[1:] != d[:-1]) + 1))
-            uniq = d[starts]
-            sums = np.add.reduceat(c, starts)
-            if deny.size and uniq.size:  # tombstones: mask BEFORE cut
-                pos = np.searchsorted(deny, uniq)
-                pos = np.minimum(pos, deny.size - 1)
-                m = deny[pos] != uniq
-                uniq, sums = uniq[m], sums[m]
-            if allow is not None:  # metadata filter: mask BEFORE the k-cut
-                if allow.size:
-                    pos = np.searchsorted(allow, uniq)
-                    pos = np.minimum(pos, allow.size - 1)
-                    m = allow[pos] == uniq
-                else:
-                    m = np.zeros(uniq.size, dtype=bool)
-                uniq, sums = uniq[m], sums[m]
-            if bounds is not None and uniq.size:
-                # unit->doc collapse: parent = last boundary <= docid.
-                # uniq ascending => parent ascending (monotone), so runs
-                # are contiguous and per-doc max is one reduceat.
-                pidx = np.searchsorted(bounds, uniq, side="right") - 1
-                if pidx[0] < 0:
-                    raise RuntimeError("docid below every bound (carry bug)")
-                parent = bounds[pidx]
-                st = np.concatenate(
-                    ([0], np.flatnonzero(parent[1:] != parent[:-1]) + 1)
-                )
-                uniq = parent[st]
-                sums = np.maximum.reduceat(sums, st)
-            keep = sums > threshold
-            uniq, sums = uniq[keep], sums[keep]
-            cs = cursors.get(qid)
-            if cs is not None:  # pagination ceiling: see factory docstring
-                m = sums <= cs
-                uniq, sums = uniq[m], sums[m]
-                eq = sums == cs
-                lt_d, lt_s = _topk_keep_ties(uniq[~eq], sums[~eq], k)
-                uniq = np.concatenate([uniq[eq], lt_d])
-                sums = np.concatenate([sums[eq], lt_s])
+                t, w = present[0]
+                uniq, sums = single_term_topk(*runs[t], w, k)
             else:
-                uniq, sums = _topk_keep_ties(uniq, sums, k)
+                # exact path, in the oracle's summation order
+                uniq, sums = score_core.accumulate(
+                    [(docids[spans[t]], w * tfw[spans[t]])
+                     for t, w in present], threshold)
+                uniq, sums = score_core.admit(uniq, sums, deny, allow)
+                if bounds is not None:  # unit -> parent doc, max per parent
+                    parent = score_core.parents(bounds, uniq)
+                    uniq, sums, _rep = score_core.collapse(parent, sums,
+                                                           parent)
+                keep = score_core.cut(sums, k, cursors.get(qid))
+                uniq, sums = uniq[keep], sums[keep]
             if uniq.size:
                 out_qid.append(np.full(uniq.size, qid, dtype=np.int64))
                 out_docid.append(uniq)
@@ -773,15 +710,15 @@ def _partial_scores(
         # by the same factor)
         boosts = (term_boosts or {}).get(qid) or {}
         terms = [
-            (t, idf_fn(n_docs, dfs[t]) * float(boosts.get(t, 1.0)), r)
-            for r, t in enumerate(qtoks[qid])
+            (t, idf_fn(n_docs, dfs[t]) * float(boosts.get(t, 1.0)))
+            for t in qtoks[qid]
             if t in dfs
         ]
         if terms:
             qplans.append((qid, terms, k))
     if not qplans:
         return None, []
-    hit_terms = sorted({t for _q, ts, _k in qplans for t, _w, _r in ts})
+    hit_terms = sorted({t for _q, ts, _k in qplans for t, _w in ts})
     docid_deny = _tombstone_docids(spark, store, meta)
     bins = _file_bins(spark, store, hit_terms, n_tasks, len(qplans))
     if not bins:  # store with no committed segments: nothing to hit
@@ -1050,12 +987,13 @@ def batch_topk(
         rows = partials.collect()
         if not rows:
             return _local_df(spark, [], RESULT_DDL, RESULT_COLUMNS)
-        kmap = {qid: k for qid, _t, k in qplans}
+        qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
+        docs = np.array([r["docid"] for r in rows], dtype=np.int64)
+        scores = np.array([r["score"] for r in rows], dtype=np.float64)
         # conv lookup BEFORE the final cut: the contract tie-break is
         # (score desc, conv_id, turn_idx), and on an appended store docid
         # order diverges from conv order — candidates are ≤ tasks·k rows,
         # so looking all of them up costs the same O(k) row groups.
-        hit_ids = sorted({r["docid"] for r in rows})
         # driver-side pyarrow point lookup (docid-sorted staged files →
         # row-group prune touches O(k) groups); avoids a second Spark job
         # on the interactive path
@@ -1064,30 +1002,22 @@ def batch_topk(
 
         dm = pads.dataset(store.docmap_path).to_table(
             columns=["docid", "conv_id", "turn_idx"],
-            filter=pc.field("docid").isin(hit_ids),
+            filter=pc.field("docid").isin(np.unique(docs).tolist()),
         )
-        keymap = {
-            int(d): (c, int(t))
-            for d, c, t in zip(dm.column("docid").to_pylist(),
-                               dm.column("conv_id").to_pylist(),
-                               dm.column("turn_idx").to_pylist())
-        }
-        by_q: dict[int, list] = {}
-        for r in rows:
-            c, t = keymap[r["docid"]]
-            if search_after and r["query_id"] in search_after:
-                cs, cc, ct = search_after[r["query_id"]]
-                if not (r["score"] < cs or (r["score"] == cs
-                                            and (c, t) > (cc, ct))):
-                    continue  # at or before the cursor: previous pages
-            by_q.setdefault(r["query_id"], []).append(
-                (-r["score"], c, t, r["docid"])
-            )
+        pos = pc.index_in(pa.array(docs), value_set=dm.column(
+            "docid").combine_chunks()).to_numpy()
+        convs = np.asarray(dm.column("conv_id").to_pylist(), dtype=object)[pos]
+        turns = dm.column("turn_idx").to_numpy()[pos]
         merged: list[tuple[int, int, int, str, int, float]] = []
-        for qid, cand in by_q.items():
-            cand.sort()
-            for rank, (ns, c, t, d) in enumerate(cand[: kmap[qid]], start=1):
-                merged.append((qid, rank, d, c, t, -ns))
+        for qid, _t, k in qplans:
+            m = np.flatnonzero(qids == qid)
+            sel = m[score_core.select(
+                k, scores[m], convs[m], turns[m], docs[m],
+                after=(search_after or {}).get(qid))]
+            merged.extend(
+                (qid, rank, int(docs[i]), convs[i], int(turns[i]),
+                 float(scores[i]))
+                for rank, i in enumerate(sel, start=1))
         return _local_df(spark, merged, RESULT_DDL, RESULT_COLUMNS)
     kdf = _local_df(spark, [(qid, k) for qid, _t, k in qplans],
                     "query_id long, k int", ["query_id", "k"])
