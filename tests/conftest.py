@@ -26,6 +26,16 @@ def transcripts(spark, transcripts_pdf):
 
 
 @pytest.fixture(scope="session")
+def halves(transcripts_pdf):
+    """(first half of the convs, all of them) — a base build plus one
+    append."""
+    convs = sorted(transcripts_pdf["conv_id"].unique())
+    half = set(convs[: len(convs) // 2])
+    first = transcripts_pdf[transcripts_pdf["conv_id"].isin(half)]
+    return first, transcripts_pdf
+
+
+@pytest.fixture(scope="session")
 def oracle_index(transcripts_pdf):
     from visionsearch_spark.oracle import build_oracle_index
 

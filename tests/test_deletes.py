@@ -189,8 +189,8 @@ def test_second_round_of_deletes_after_purge(spark, store):
     _delete(spark, store, v2)
     got = _top(spark, store)
     assert not ({r["conv_id"] for r in got} & (set(v1) | set(v2)))
-    # second compaction masks fragments with applied ∪ pending — v1 must
-    # not resurface even though its postings are still in the fragments
+    # second compaction merges the live dir (already purged of v1) and
+    # masks only the pending v2 — v1 must not resurface
     store = compact_store(spark, store.root)
     meta = store.read_meta()
     assert len(meta["applied_tombstone_dirs"]) == 2

@@ -36,7 +36,7 @@ def test_clean_store_passes(store):
     report = fsck(store.root, strict=True)
     assert not _errors(report)
     assert set(report) == {"meta", "stats", "segments", "epochs",
-                           "manifests", "tombstones", "blooms"}
+                           "manifests", "fragments", "tombstones", "blooms"}
 
 
 def test_clean_store_with_appends_deletes_and_purge_passes(
@@ -135,6 +135,32 @@ def test_crash_leftover_is_warning_not_error(spark, store, transcripts_pdf):
     report = fsck(store.root)
     assert not _errors(report)
     assert report["manifests"]["warnings"]
+
+
+def test_uncovered_pid_without_fragment_is_fatal(store):
+    """A committed pid that compacted_pids does not list keeps its
+    postings only in its fragment: without it the next merge drops
+    them."""
+    meta = store.read_meta()
+    pid = meta["compacted_pids"].pop()
+    store.write_meta(meta)
+    assert not os.path.exists(store.fragment_path(pid))
+    errs = _errors(fsck(store.root))
+    assert list(errs) == ["fragments"]
+    assert str(pid) in errs["fragments"][0]
+
+
+def test_fragment_of_compacted_pid_is_warning(store):
+    """A fragment whose pid a committed meta covers is a GC leftover (a
+    crash between the flip and gc_dirs): flagged, never an error."""
+    from visionsearch_spark.index.store import parquet_files
+
+    pid = store.read_meta()["compacted_pids"][0]
+    shutil.copy(parquet_files(store.segment_paths()[0])[0],
+                store.fragment_path(pid))
+    report = fsck(store.root, strict=True)
+    assert not _errors(report)
+    assert str(pid) in report["fragments"]["warnings"][0]
 
 
 def test_cli_json_output(store, capsys):

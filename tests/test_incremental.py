@@ -54,14 +54,6 @@ def test_streaming_ingestion(spark, transcripts_pdf, tmp_path_factory):
     assert len(got) == 5
 
 
-@pytest.fixture(scope="module")
-def halves(transcripts_pdf):
-    convs = sorted(transcripts_pdf["conv_id"].unique())
-    half = set(convs[: len(convs) // 2])
-    first = transcripts_pdf[transcripts_pdf["conv_id"].isin(half)]
-    return first, transcripts_pdf
-
-
 def test_incremental_append(spark, halves, tmp_path_factory):
     first_pdf, full_pdf = halves
     root = str(tmp_path_factory.mktemp("idx_incr"))
@@ -484,9 +476,12 @@ def test_legacy_repair_with_torn_fragment_no_duplication(
 
     first_pdf, full_pdf = halves
     root = str(tmp_path_factory.mktemp("idx_torn"))
-    store = incremental_build(
-        spark.createDataFrame(first_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
+    # a real pre-LSM store kept every fragment: build with fragment GC off
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(IndexStore, "gc_dirs", lambda self: None)
+        store = incremental_build(
+            spark.createDataFrame(first_pdf, schema=TRANSCRIPTS_SCHEMA),
+            root, n_partitions=4)
 
     # downgrade to the legacy layout (round-1: single un-suffixed dirs)
     meta = store.read_meta()
@@ -544,7 +539,7 @@ def test_direct_compact_on_crashed_store_repairs(
     import os
 
     import visionsearch_spark.streaming.incremental as inc
-    from visionsearch_spark.index.spimi import compact_store
+    from visionsearch_spark.index.spimi import compact_store, spimi_pending
 
     first_pdf, full_pdf = halves
     root = str(tmp_path_factory.mktemp("idx_directcompact"))
@@ -563,8 +558,15 @@ def test_direct_compact_on_crashed_store_repairs(
     monkeypatch.undo()
 
     store = IndexStore(root)
-    # additionally tear one committed pid (fragment without manifest)
-    torn_pid = sorted(store.done_partitions())[0]
+    # additionally tear one delta pid (fragment without manifest): only a
+    # pid whose SPIMI is in flight can be torn — a compacted pid's
+    # fragment is already GC'd
+    torn_pid = int(spark.read.parquet(store.staged_path)
+                   .agg(F.max("pid")).first()[0])
+    spimi_pending(spark, store, int(store.read_meta()["shard_range"]), 4,
+                  pending=spark.read.parquet(store.staged_path)
+                  .filter(F.col("pid") == torn_pid))
+    assert torn_pid not in store.read_meta()["compacted_pids"]
     os.remove(store.manifest_path(torn_pid))
     assert store.orphan_fragments() == [store.fragment_path(torn_pid)]
 

@@ -4,9 +4,9 @@ Lucene-style liveness model (the proven design for immutable-segment
 indexes, which this store is — segments are immutable LSM epochs):
 
 - `delete_docs` writes an O(delta) tombstone dir (docid, dl) and flips
-  `meta.tombstone_dirs` atomically — segments, fragments, staged and
-  corpus stats are all UNTOUCHED. Deletes are cheap and additive,
-  exactly like appends.
+  `meta.tombstone_dirs` atomically — segments, staged and corpus stats
+  are all UNTOUCHED. Deletes are cheap and additive, exactly like
+  appends.
 - Queries mask tombstoned docids BEFORE every top-k cut ("stale stats"
   semantics: df / N / avgdl keep their as-built values until the next
   compaction — the same contract Lucene serves between merges). The
@@ -17,11 +17,12 @@ indexes, which this store is — segments are immutable LSM epochs):
   recomputed over survivors, and the folded dirs move from
   `tombstone_dirs` (pending — queries must mask) to
   `applied_tombstone_dirs` (reflected in live segments and stats;
-  queries ignore them). Applied dirs are kept forever because the
-  immutable FRAGMENTS still contain the dead postings — every future
-  compaction masks fragments with the union of both lists, so deleted
-  documents can never resurface. O(deleted) bookkeeping is the floor
-  for logical deletes over immutable bases.
+  queries ignore them). Compaction merges the live segment dirs, which
+  no longer hold those postings, so later compactions mask only PENDING
+  tombstones. Applied dirs stay listed because staged keeps the dead
+  rows (append-only source of truth): `live_corpus_stats` subtracts
+  them, and `delete_docs`/`pending_rows` must still see those docids
+  as dead.
 
 Reference parity: the reference rebuilds its FAISS index from scratch
 to remove items (`/root/reference/visionsearch/common_utils/aisearch/
@@ -60,8 +61,9 @@ def pending_tombstones(spark: SparkSession,
 
 def all_tombstones(spark: SparkSession,
                    store: IndexStore) -> DataFrame | None:
-    """Pending + applied (docid, dl) — what compaction must subtract from
-    fragments and staged-derived stats."""
+    """Pending + applied (docid, dl) — every docid that is dead in the
+    staged table: delete_docs skips them (idempotence) and pending_rows
+    lets their (conv, turn) keys be ingested again."""
     paths = store.tombstone_paths() + store.tombstone_paths(applied=True)
     if not paths:
         return None

@@ -27,6 +27,12 @@ Checked invariants (each one is load-bearing for a specific path):
   manifests   every staged pid has a committed manifest; pids without
               one are crash leftovers (repairable by the next
               incremental_build — reported as a WARNING, not an error).
+  fragments   every committed pid NOT in meta `compacted_pids` has its
+              fragment file — the next merge reads its postings from
+              there and nowhere else (missing = ERROR: those docs would
+              vanish). A fragment of a compacted pid is a GC leftover
+              (crash between the meta flip and IndexStore.gc_dirs) —
+              a WARNING; the next flip deletes it.
   tombstones  no docid appears in both pending and applied sets; every
               tombstoned docid exists in the docmap (a dangling
               tombstone signals id reuse — fatal for delete masking).
@@ -241,6 +247,22 @@ def fsck(root: str, strict: bool = False) -> dict:
             f"{len(missing)} staged pid(s) without a committed manifest "
             f"(crash leftover; next incremental_build repairs): "
             f"{sorted(missing)[:8]}")
+
+    # ---- fragments: the merge input no live dir covers --------------------
+    rec = check("fragments")
+    covered = set(meta.get("compacted_pids") or [])
+    on_disk = {pid for pid, _p in store.fragment_files()}
+    lost = store.done_partitions() - covered - on_disk
+    if lost:
+        err(rec, f"{len(lost)} committed pid(s) not in compacted_pids "
+                 f"without a fragment — their postings are in no live dir "
+                 f"and the next merge would drop them: {sorted(lost)[:8]}")
+    leftover = on_disk & covered
+    if leftover:
+        rec["warnings"].append(
+            f"{len(leftover)} fragment(s) of compacted pid(s) (GC "
+            f"leftover; the next meta flip deletes them): "
+            f"{sorted(leftover)[:8]}")
 
     # ---- tombstones ------------------------------------------------------
     rec = check("tombstones")

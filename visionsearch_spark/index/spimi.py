@@ -23,18 +23,23 @@ Pipeline (SURVEY.md §3.2 "ours"):
               payload (_build_block_batches); fragment parquet +
               manifest json commit ATOMICALLY per pid, committed pids
               are skipped (resume).
-  3. MERGE    fragments -> term_stats (sum of block df) and compacted
-              segments, two independent jobs run overlapped: blocks of
-              one term have globally disjoint docid ranges, so merging
-              is concat-in-min_docid-order + re-chunk — never a
-              posting-level merge sort — over ONE range(shard) exchange
-              whose output order is already the final file order.
-              Sharding by docid range bounds per-task work for hot
-              terms (the salted-repartition skew defense of the north
-              rule: fanout grows with df because a hot term spans more
-              shards).
+  3. MERGE    the live segment dirs + the fragments of committed pids
+              no live dir covers yet (`_merge_input`; on a fresh build
+              that is every fragment) -> term_stats (sum of block df)
+              and compacted segments, two independent jobs run
+              overlapped: blocks of one term have globally disjoint
+              docid ranges, so merging is concat-in-min_docid-order +
+              re-chunk — never a posting-level merge sort — over ONE
+              range(shard) exchange whose output order is already the
+              final file order. Sharding by docid range bounds per-task
+              work for hot terms (the salted-repartition skew defense of
+              the north rule: fanout grows with df because a hot term
+              spans more shards).
   4. COMMIT   segments written partitioned by shard (query-side docid
-              co-location comes from this), meta.json snapshot.
+              co-location comes from this), meta.json snapshot flip
+              (`compacted_pids` now lists every merged pid), then
+              IndexStore.gc_dirs deletes the covered fragments: each
+              posting is stored once, in the live segment dirs.
 
 Scale notes: every stage is linear in its partition; nothing funnels
 through the driver except the tiny offsets array (docid.py) and meta.
@@ -560,14 +565,10 @@ def build_index(
                       fail_pids=frozenset(fail_partitions))
     mark("spimi")
 
-    # ---- merge/compact fragments -> term_stats + segments (next epoch) ----
+    # ---- merge -> term_stats + segments (next epoch) ----
     # written into fresh epoch dirs, then the meta pointer flips atomically:
     # a reader concurrent with this merge serves the previous snapshot.
-    frags = (
-        spark.read.schema(SEGMENT_SCHEMA_DDL)
-        .option("pathGlobFilter", "fragment-*.parquet")
-        .parquet(store.fragments_dir)
-    )
+    frags = _merge_input(spark, store, meta)
     next_ep = int(meta.get("epoch") or 0) + 1
     shard_range = int(meta["shard_range"])
     # term_stats and the segment merge are INDEPENDENT jobs over the
@@ -663,7 +664,7 @@ def spimi_pending(spark: SparkSession, store: IndexStore, shard_range: int,
 
 def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
                  shard_range: int) -> list[pa.RecordBatch]:
-    """Fragment blocks with their `deny` docids dropped: every block
+    """Blocks with their `deny` docids dropped: every block
     decoded in one pass per payload column, masked, and re-encoded by
     _build_block_batches with ONE run key per input block. A block holds
     <= BLOCK_SIZE postings of one shard, so each survivor re-encodes
@@ -710,7 +711,7 @@ def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
 def _mask_fragments(frags: DataFrame, dead: DataFrame,
                     shard_range: int,
                     n_tasks: int | None = None) -> DataFrame:
-    """Drop tombstoned docids from fragment blocks (the purge half of
+    """Drop tombstoned docids from merge-input blocks (the purge half of
     index/deletes.py — compaction folds deletes into the new segments).
 
     The dead set rides the SAME shard partitioning as the blocks it
@@ -782,14 +783,45 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
     )
 
 
+def _merge_input(spark: SparkSession, store: IndexStore,
+                 meta: dict) -> DataFrame:
+    """The blocks a full merge (build_index, compact_store) rewrites: the
+    live segment dirs plus the fragments of committed pids that meta's
+    `compacted_pids` does not list — those exist only after a fresh
+    build's SPIMI or a crashed append that the caller just repaired.
+    A meta without `compacted_pids` (a fresh build, or a pre-LSM store)
+    covers no pid, so the same rule reads no live dir and every
+    committed fragment. Live dirs are already purged of APPLIED
+    tombstones, so the caller masks only pending ones; a pre-LSM store
+    with applied tombstones still holds their postings in its fragments
+    and cannot be merged that way."""
+    if "compacted_pids" in meta:
+        paths = store.segment_paths()
+    elif store.tombstone_paths(applied=True):
+        raise ValueError(
+            f"{store.root}: pre-LSM store (no compacted_pids) with applied "
+            "tombstones — its fragments still hold purged postings; run "
+            "reindex (index/reindex.py) to rebuild it")
+    else:
+        paths = []
+    uncovered = store.done_partitions() - set(meta.get("compacted_pids")
+                                              or [])
+    paths += [store.fragment_path(pid) for pid in sorted(uncovered)]
+    if not paths:
+        return spark.createDataFrame([], SEGMENT_SCHEMA_DDL)
+    return spark.read.schema(SEGMENT_SCHEMA_DDL).parquet(*paths)
+
+
 def compact_store(spark: SparkSession, root: str,
                   n_partitions: int | None = None) -> IndexStore:
-    """Full compaction (the LSM maintenance job): merge ALL fragments into
-    ONE fresh segments/term_stats dir pair and flip the live-dir lists to
-    it atomically. Appends are O(delta) (incremental.py) and accumulate
-    one small dir each; run this periodically to restore single-dir scan
-    locality. Superseded dirs are retired for one flip (in-flight
-    readers), then GC'd."""
+    """Full compaction (the LSM maintenance job): merge the live segment
+    dirs and any uncovered fragments (`_merge_input`) into ONE fresh
+    segments/term_stats dir pair, fold pending tombstones, and flip the
+    live-dir lists to it atomically. Appends are O(delta)
+    (incremental.py) and accumulate one small dir each; run this
+    periodically to restore single-dir scan locality. Superseded dirs
+    are retired for one flip (in-flight readers), then GC'd; fragments
+    the flip covers are GC'd at once."""
     store = IndexStore(root)
     meta = store.read_meta()
     n_partitions = n_partitions or int(meta["n_partitions"])
@@ -804,41 +836,25 @@ def compact_store(spark: SparkSession, root: str,
     repaired = spimi_pending(
         spark, store, int(meta["shard_range"]), n_partitions
     )
-    if repaired or meta.get("phase") == "appending":
-        # stats in meta are stale after a crashed append — staged is the
-        # source of truth, same rule as _finish_append's repair. The
-        # phase check matters on its own: a crash AFTER every SPIMI
-        # manifest committed but BEFORE the meta flip leaves nothing
-        # pending yet stats still pre-append.
-        stats = spark.read.parquet(store.staged_path).agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("sum_dl")
-        ).collect()[0]
-        n_docs = int(stats["n"])
-        sum_dl = int(stats["sum_dl"] or 0)
-        meta.update({
-            "n_docs": n_docs,
-            "sum_dl": sum_dl,
-            "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-        })
-    frags = (
-        spark.read.schema(SEGMENT_SCHEMA_DDL)
-        .option("pathGlobFilter", "fragment-*.parquet")
-        .parquet(store.fragments_dir)
-    )
-    # FOLD TOMBSTONES (index/deletes.py): fragments are immutable and
-    # still hold every deleted doc's postings, so EVERY compaction must
-    # mask with the union of pending + applied tombstones — pending ones
-    # leave the query-time deny set at this flip (they're now physically
-    # absent from the live segments and excluded from stats), applied
-    # ones stay recorded forever to keep future compactions honest.
+    frags = _merge_input(spark, store, meta)
+    # FOLD TOMBSTONES (index/deletes.py): the live dirs are already purged
+    # of applied tombstones, so only PENDING ones are masked; they leave
+    # the query-time deny set at this flip (physically absent from the
+    # new segments and excluded from stats).
     from visionsearch_spark.index.deletes import (
-        all_tombstones,
         live_corpus_stats,
+        pending_tombstones,
     )
 
-    dead = all_tombstones(spark, store)
+    dead = pending_tombstones(spark, store)
     if dead is not None:
         frags = _mask_fragments(frags, dead, int(meta["shard_range"]))
+    if repaired or meta.get("phase") == "appending" or dead is not None:
+        # stats in meta are stale after a crashed append or before a
+        # fold — staged minus every tombstone is the truth, same rule as
+        # _finish_append's repair. The phase check matters on its own: a
+        # crash AFTER every SPIMI manifest committed but BEFORE the meta
+        # flip leaves nothing pending yet stats still pre-append.
         n_docs, sum_dl = live_corpus_stats(spark, store,
                                            include_pending=False)
         meta.update({
@@ -859,7 +875,8 @@ def compact_store(spark: SparkSession, root: str,
             bloom_scratch=_bloom_scratch_path(store, next_ep),
         ),
     )
-    prev_live = [os.path.basename(p) for p in store.segment_paths()]         + [os.path.basename(p) for p in store.term_stats_paths()]
+    prev_live = [os.path.basename(p) for p in store.segment_paths()
+                 + store.term_stats_paths()]
     meta.update({
         "epoch": next_ep,
         "segment_dirs": [f"segments-{next_ep:06d}"],

@@ -10,7 +10,11 @@ bundled in this sandbox):
       docmap/           parquet (docid, conv_id, turn_idx, dl)
       term_stats/       parquet (term, df)
       fragments/        per-build-partition parquet, written ATOMICALLY by
-                        executor tasks (tmp -> rename): fragment-{pid}.parquet
+                        executor tasks (tmp -> rename): fragment-{pid}.parquet.
+                        TRANSIENT: a fragment is the SPIMI output of a pid
+                        no live dir covers yet; once a committed meta lists
+                        the pid in `compacted_pids` its postings live in the
+                        segment dirs and gc_dirs deletes the fragment
       manifest/         manifest-{pid}.json per partition — the checkpoint/
                         lineage/metrics record (north rule: postings_written,
                         terms_merged, bytes_compressed per segment)
@@ -183,11 +187,15 @@ class IndexStore:
         return os.path.join(self.root, f"{prefix}-{epoch:06d}")
 
     def gc_dirs(self) -> None:
-        """Delete segments-*/term_stats-* dirs that are neither live nor
-        retired (meta `retired_dirs` — the set superseded by the LAST
-        full compaction, kept one flip for in-flight readers), plus
-        legacy un-suffixed dirs once suffixed snapshots exist."""
-        import re
+        """The retire-then-GC step run right after every meta flip. Delete
+        segments-*/term_stats-* dirs that are neither live nor retired
+        (meta `retired_dirs` — the set superseded by the LAST full
+        compaction, kept one flip for in-flight readers), legacy
+        un-suffixed dirs once suffixed snapshots exist, and the fragment
+        of every pid the COMMITTED meta lists in `compacted_pids` (a live
+        dir holds its postings; no merge reads it again). Reads meta from
+        disk, so it can only ever delete what a committed flip covers; a
+        crash part-way leaves files the next flip deletes."""
         import shutil
 
         meta = self.read_meta() if os.path.exists(self.meta_path) else {}
@@ -207,6 +215,10 @@ class IndexStore:
                                               for k in keep):
                 continue  # legacy dir still the only snapshot
             shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
+        covered = set(meta.get("compacted_pids") or [])
+        for pid, path in self.fragment_files():
+            if pid in covered:
+                os.remove(path)
 
     def ensure_dirs(self) -> None:
         for d in (self.root, self.fragments_dir, self.manifest_dir):
@@ -249,22 +261,26 @@ class IndexStore:
                     done.add(int(m["partition_id"]))
         return done
 
-    def orphan_fragments(self) -> list[str]:
-        """Fragment files whose pid has NO committed manifest — a crash
-        landed between the fragment os.replace and the manifest
-        os.replace in spimi.flush. They are uncommitted work (resume
-        re-SPIMIs those pids from staged), so any reader that globs the
-        whole fragments dir (compact_store) must drop them first or the
-        orphan pid's postings end up BOTH in the compacted dir and in the
-        re-SPIMI'd delta dir — doubled df and scores."""
-        done = self.done_partitions()
+    def fragment_files(self) -> list[tuple[int, str]]:
+        """(pid, path) of every committed-name fragment file on disk
+        (in-flight `.tmp` files excluded), sorted by pid."""
         out = []
         if os.path.isdir(self.fragments_dir):
             for name in os.listdir(self.fragments_dir):
                 m = re.match(r"fragment-(\d+)\.parquet$", name)
-                if m and int(m.group(1)) not in done:
-                    out.append(os.path.join(self.fragments_dir, name))
-        return out
+                if m:
+                    out.append((int(m.group(1)),
+                                os.path.join(self.fragments_dir, name)))
+        return sorted(out)
+
+    def orphan_fragments(self) -> list[str]:
+        """Fragment files whose pid has NO committed manifest — a crash
+        landed between the fragment os.replace and the manifest
+        os.replace in spimi.flush. They are uncommitted work (resume
+        re-SPIMIs those pids from staged), so compact_store drops them
+        first: the re-SPIMI rewrites the pid's fragment from staged."""
+        done = self.done_partitions()
+        return [p for pid, p in self.fragment_files() if pid not in done]
 
     def manifests(self) -> list[dict]:
         out = []

@@ -23,7 +23,9 @@ Spark-first translation — append into the SAME store:
      the live list (O(delta) — existing dirs are immutable; their
      (max_tf, min_dl) block bounds are avgdl-independent so refreshed
      corpus stats can't stale them). Scoring stays exact under current
-     stats because postings store tf+dl, not weights.
+     stats because postings store tf+dl, not weights. Fragments are
+     transient: once the flip lists the delta pids in `compacted_pids`
+     their fragments are GC'd, and the postings live only in the dir.
   4. Query path reads the UNION of live segment dirs (same shard
      repartition — blocks of one docid still land in one task);
      spimi.compact_store() is the periodic full merge.
@@ -84,9 +86,11 @@ def incremental_build(transcripts: DataFrame, root: str,
       2. append  — delta rows staged (job-commit atomic: readers ignore
                    in-flight _temporary files).
       3. finish  — SPIMI every staged pid lacking a committed manifest,
-                   merge ALL fragments into a NEW epoch, then flip
-                   meta (stats + epoch + phase="built") in one atomic
-                   os.replace.
+                   merge the fragments of pids no live dir covers into
+                   a NEW epoch dir, then flip meta (stats + epoch +
+                   compacted_pids + phase="built") in one atomic
+                   os.replace; IndexStore.gc_dirs then deletes the
+                   fragments the flip covered.
 
     A crash anywhere after (1) leaves phase="appending"; the next call
     detects it and re-runs (3), which is idempotent: docid/pid bases are
