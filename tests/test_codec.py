@@ -155,22 +155,22 @@ def test_payload_positions_match_per_block(block_tfs, cut):
 
 
 def test_payload_null_slots_raise():
-    """_build_block_batches writes a NULL pos_bin slot whose offsets
-    still span real bytes of the shared stream (only a parquet round
-    trip empties it), so payload must refuse the column and callers
-    filter the NULL slots out first."""
-    from visionsearch_spark.index.spimi import _build_block_batches
-
-    terms = np.array(["a", "a", "b", "b", "c"], dtype=object)
-    docids = np.array([1, 4, 2, 3, 5], dtype=np.int64)
-    tfs = np.array([2, 1, 1, 2, 1], dtype=np.int64)
-    dls = np.full(5, 9, dtype=np.int64)
-    pos_flat = np.array([0, 3, 5, 1, 2, 6, 4], dtype=np.int64)
-    pos_valid = np.array([True, True, False, False, True])
-    (batch,), _ = _build_block_batches(terms, docids, tfs, dls, 1000,
-                                       pos_flat=pos_flat,
-                                       pos_valid=pos_valid)
-    col = batch["pos_bin"]
+    """A NULL slot's offsets may still span real bytes of a shared stream
+    (an Arrow array built over one buffer; only a parquet round trip
+    empties them), so payload must refuse the column and callers filter
+    the NULL slots out first."""
+    tfs = [np.array([2, 1]), np.array([1, 2]), np.array([1])]
+    pos = [np.array([0, 3, 5]), np.array([1, 2, 6]), np.array([4])]
+    bufs = [encode_positions(p, t) for p, t in zip(pos, tfs)]
+    offsets = np.concatenate(([0], np.cumsum([len(b) for b in bufs])))
+    valid = np.array([True, False, True])
+    col = pa.Array.from_buffers(
+        pa.binary(), 3,
+        [pa.py_buffer(np.packbits(valid, bitorder="little").tobytes()),
+         pa.py_buffer(offsets.astype(np.int32)),
+         pa.py_buffer(b"".join(bufs))],
+        null_count=1,
+    )
     assert col.null_count == 1 and col.is_null()[1].as_py()
     offsets = np.frombuffer(col.buffers()[1], dtype=np.int32)
     assert offsets[2] > offsets[1]  # the NULL slot spans real bytes
@@ -179,7 +179,7 @@ def test_payload_null_slots_raise():
     with pytest.raises(ValueError, match="NULL"):
         decode_blocks(col, [3, 2, 1])
     kept = col.filter(col.is_valid())
-    ktfs = np.array([2, 1, 1], dtype=np.int64)  # blocks a and c
+    ktfs = np.array([2, 1, 1], dtype=np.int64)  # blocks 0 and 2
     assert decode_positions(payload(kept), ktfs).tolist() == [0, 3, 5, 4]
 
 

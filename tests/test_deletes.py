@@ -28,6 +28,7 @@ from visionsearch_spark.index.deletes import (
 )
 from visionsearch_spark.index.spimi import build_index, compact_store
 from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.query import wand
 from visionsearch_spark.query.wand import batch_topk
 
 REL_TOL = 1e-9
@@ -290,24 +291,19 @@ def test_http_delete_endpoint(spark, store, tmp_path):
         srv.shutdown()
 
 
-def test_deny_rides_fast_path_plan(spark, store):
+def test_deny_rides_fast_path_plan(spark, store, monkeypatch):
     """Tombstoned stores keep the zero-posting-shuffle plan: deny packs
     shuffle on route_key; segment dirs never appear in a Spark FileScan.
     Tiny bins pinned so the fixture-sized store fans out to >1 task —
     with one bin the route_key exchange legitimately collapses to
     SinglePartition (r7 _n_bins work-proportional floor)."""
-    import os
-
     victims = _victims(spark, store)
     _delete(spark, store, victims)
     seg_dirs = store.segment_paths()
-    os.environ["VSS_QUERY_BIN_BYTES"] = "1"
-    try:
-        res = batch_topk(spark, store, Q)
-        res.count()
-        plan = res._jdf.queryExecution().executedPlan().toString()
-    finally:
-        os.environ.pop("VSS_QUERY_BIN_BYTES", None)
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
+    res = batch_topk(spark, store, Q)
+    res.count()
+    plan = res._jdf.queryExecution().executedPlan().toString()
     assert not any(d in plan for d in seg_dirs)
     assert "hashpartitioning(route_key" in plan
 
@@ -317,7 +313,9 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
     through byte-identical, fully deleted blocks vanish, partly deleted
     blocks equal the per-block encoders over their kept postings (with
     min/max_docid, n, max_tf, min_dl recomputed), and a NULL pos_bin
-    stays NULL."""
+    stays NULL. A store is positional or not, so positional and NULL
+    pos_bin blocks are masked as two inputs; one input mixing them is
+    refused."""
     import numpy as np
 
     from visionsearch_spark.index.codec import (
@@ -350,23 +348,27 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
               [1, 4, 0, 2, 5, 8, 3]),
         # fully deleted
         block("gamma", [40, 41], [1, 1], [3, 3], [0, 1]),
-        # partly deleted, NULL pos_bin
-        block("delta", [3, 50, 60], [2, 5, 1], [8, 7, 6], None),
     ]
-    frags = spark.createDataFrame(rows, SEGMENT_SCHEMA_DDL)
+    # partly deleted, NULL pos_bin (a positionless store)
+    nopos = [block("delta", [3, 50, 60], [2, 5, 1], [8, 7, 6], None)]
     dead = spark.createDataFrame([(6,), (7,), (40,), (41,), (50,)],
                                  "docid long")
-    out = _mask_fragments(frags, dead, 1000, n_tasks=2).collect()
+
+    def mask(blocks):
+        frags = spark.createDataFrame(blocks, SEGMENT_SCHEMA_DDL)
+        return _mask_fragments(frags, dead, 1000, n_tasks=2).collect()
 
     def norm(r):
         return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
                      for v in r)
 
-    got = sorted(norm(r) for r in out)
-    expect = sorted([
+    assert sorted(norm(r) for r in mask(rows)) == sorted([
         rows[0],
         rows[1],
         block("beta", [2, 30], [2, 1], [5, 6], [1, 4, 3]),
-        block("delta", [3, 60], [2, 1], [8, 6], None),
     ])
-    assert got == expect
+    assert [norm(r) for r in mask(nopos)] == [
+        block("delta", [3, 60], [2, 1], [8, 6], None)]
+    # two partly deleted blocks of one shard: one task sees the mix
+    with pytest.raises(Exception, match="run fsck"):
+        mask([rows[2], block("eps", [41, 42], [1, 1], [4, 4], None)])

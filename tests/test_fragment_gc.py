@@ -11,11 +11,14 @@ Contract under test (index/spimi.py `_merge_input`, index/store.py
   fragments), so compacting an already compacted store rewrites the
   same postings and term_stats;
 - after every build, append and compaction `fragments/` holds no
-  compacted pid.
+  compacted pid;
+- a store of an older layout is refused by every entry point until
+  reindex rebuilds it.
 """
 
 from __future__ import annotations
 
+import json
 import math
 import os
 import shutil
@@ -223,17 +226,79 @@ def test_compaction_of_compacted_store_is_row_identical(spark, halves,
     assert not [e for rec in fsck(root).values() for e in rec["errors"]]
 
 
-def test_legacy_store_with_applied_tombstones_asks_for_reindex(
-        spark, bases, tmp_path):
-    """A pre-LSM meta (no compacted_pids) merges from its fragments,
-    which still hold the postings its applied tombstones purged — only a
-    reindex can rebuild it."""
-    root = str(tmp_path / "store")
-    shutil.copytree(bases["incremental_build"], root)
-    store = IndexStore(root)
-    meta = store.read_meta()
+def _meta_json(root: str) -> dict:
+    with open(os.path.join(root, "meta.json")) as f:
+        return json.load(f)
+
+
+def _no_layout(root: str, meta: dict) -> None:
+    """A store written before the layout stamp existed."""
+
+
+def _pre_lsm(root: str, meta: dict) -> None:
+    """A pre-LSM meta: no `compacted_pids`."""
     del meta["compacted_pids"]
-    meta["applied_tombstone_dirs"] = ["tombstones-000001"]
-    store.write_meta(meta)
-    with pytest.raises(ValueError, match="run reindex"):
-        compact_store(spark, root)
+
+
+def _unsuffixed(root: str, meta: dict) -> None:
+    """The first layout: single un-suffixed segments/term_stats dirs and
+    no live-set lists."""
+    ep = int(meta["epoch"])
+    for prefix in ("segments", "term_stats"):
+        os.rename(os.path.join(root, f"{prefix}-{ep:06d}"),
+                  os.path.join(root, prefix))
+    for key in ("compacted_pids", "segment_dirs", "term_stats_dirs",
+                "retired_dirs", "epoch"):
+        meta.pop(key, None)
+
+
+def _no_sum_dl(root: str, meta: dict) -> None:
+    """A meta from before corpus stats carried `sum_dl`."""
+    del meta["sum_dl"]
+
+
+@pytest.mark.parametrize("downgrade", [_no_layout, _pre_lsm, _unsuffixed,
+                                       _no_sum_dl],
+                         ids=["no_layout", "pre_lsm", "unsuffixed",
+                              "no_sum_dl"])
+def test_older_layout_refused_until_reindex(spark, halves, bases, tmp_path,
+                                            downgrade):
+    """Every reader and writer refuses a store of another layout and asks
+    for reindex; reindex rebuilds it in the current layout with results
+    identical to the oracle."""
+    from visionsearch_spark.index.reindex import reindex
+    from visionsearch_spark.index.store import LAYOUT
+    from visionsearch_spark.query.serving import LocalSearcher
+    from visionsearch_spark.query.wand import batch_topk
+
+    first_pdf, full_pdf = halves
+    root = str(tmp_path / "old")
+    shutil.copytree(bases["incremental_build"], root)
+    meta = _meta_json(root)
+    del meta["layout"]
+    downgrade(root, meta)
+    with open(os.path.join(root, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    store = IndexStore(root)
+
+    for call in (
+        lambda: incremental_build(_tx(spark, full_pdf), root,
+                                  n_partitions=4),
+        lambda: compact_store(spark, root, n_partitions=4),
+        lambda: batch_topk(spark, store, [(0, "join filter", 10)]).collect(),
+        lambda: LocalSearcher(store),
+    ):
+        with pytest.raises(ValueError, match="run reindex"):
+            call()
+    report = fsck(root)
+    assert not report["meta"]["ok"]
+    assert "run reindex" in " ".join(report["meta"]["errors"])
+    assert _meta_json(root) == meta  # refused before any write
+
+    dst = str(tmp_path / "new")
+    reindex(spark, root, dst)
+    migrated = IndexStore(dst)
+    assert migrated.read_meta()["layout"] == LAYOUT == 1
+    assert not [(n, rec) for n, rec in fsck(dst).items()
+                if rec["errors"] or rec["warnings"]]
+    _check_oracle(spark, migrated, first_pdf)

@@ -324,23 +324,6 @@ def test_many_microbatches_bounded_dirs(spark, transcripts_pdf,
             assert math.isclose(g["score"], e[3], rel_tol=1e-9)
 
 
-def test_singular_path_property_guards_multi_dir(spark, halves,
-                                                 tmp_path_factory):
-    """store.segments_path (singular) must refuse to silently pick one dir
-    of a multi-dir store — callers must use segment_paths()."""
-    first_pdf, full_pdf = halves
-    root = str(tmp_path_factory.mktemp("idx_guard"))
-    incremental_build(
-        spark.createDataFrame(first_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
-    store = incremental_build(
-        spark.createDataFrame(full_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
-    assert len(store.segment_paths()) == 2
-    with pytest.raises(ValueError, match="live"):
-        _ = store.segments_path
-
-
 def _mk_tx(spark, rows):
     """rows: (conv_id, turn_idx, text) -> transcripts DataFrame."""
     import pandas as pd
@@ -388,61 +371,6 @@ def test_appended_store_boundary_tie_resolves_by_conv(spark, tmp_path_factory):
         assert len({round(r["score"], 9) for r in got}) == 1  # all tied
 
 
-def test_legacy_store_append_does_not_duplicate_postings(
-        spark, halves, tmp_path_factory):
-    """Appending to a round-1-layout store (meta without compacted_pids,
-    un-suffixed segments/term_stats dirs) must not re-compact the already
-    covered pids — pre-fix every old posting was duplicated, doubling df
-    sums and scores."""
-    import json
-    import os
-    import shutil
-
-    first_pdf, full_pdf = halves
-    root = str(tmp_path_factory.mktemp("idx_legacy"))
-    store = incremental_build(
-        spark.createDataFrame(first_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
-
-    # downgrade to the legacy layout: single un-suffixed dirs, no LSM keys
-    meta = store.read_meta()
-    ep = int(meta["epoch"])
-    os.rename(os.path.join(root, f"segments-{ep:06d}"),
-              os.path.join(root, "segments"))
-    os.rename(os.path.join(root, f"term_stats-{ep:06d}"),
-              os.path.join(root, "term_stats"))
-    for key in ("compacted_pids", "segment_dirs", "term_stats_dirs",
-                "retired_dirs", "epoch"):
-        meta.pop(key, None)
-    with open(store.meta_path, "w") as f:
-        json.dump(meta, f)
-    assert store.segment_paths() == [os.path.join(root, "segments")]
-
-    store = incremental_build(
-        spark.createDataFrame(full_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
-    meta = store.read_meta()
-    assert meta["n_docs"] == len(full_pdf)
-    assert "compacted_pids" in meta
-
-    # df totals must equal distinct (doc, term) pairs — doubling detector
-    oracle = build_oracle_index(
-        list(full_pdf[["conv_id", "turn_idx", "text"]]
-             .itertuples(index=False, name=None)))
-    ts = spark.read.parquet(*store.term_stats_paths())
-    got_df = {r["term"]: r["df"] for r in
-              ts.groupBy("term").agg(F.sum("df").alias("df")).collect()}
-    assert got_df == dict(oracle.df)
-
-    for q, k in [("join filter", 10), ("window", 5)]:
-        exp = oracle_search(oracle, q, k=k)
-        got = topk(spark, store, q, k=k).collect()
-        assert [(r["conv_id"], r["turn_idx"]) for r in got] == [
-            (e[1], e[2]) for e in exp], q
-        for g, e in zip(got, exp):
-            assert math.isclose(g["score"], e[3], rel_tol=1e-9)
-
-
 def test_append_stats_incremental_and_exact(spark, halves, tmp_path_factory):
     """Happy-path appends update corpus stats from meta + delta (no O(N)
     staged re-scan); the result must equal a direct recompute over the
@@ -461,72 +389,6 @@ def test_append_stats_incremental_and_exact(spark, halves, tmp_path_factory):
     assert meta["n_docs"] == int(truth["n"])
     assert meta["sum_dl"] == int(truth["s"])
     assert meta["avgdl"] == int(truth["s"]) / int(truth["n"])
-
-
-def test_legacy_repair_with_torn_fragment_no_duplication(
-        spark, halves, tmp_path_factory):
-    """Crash EXACTLY between the fragment os.replace and the manifest
-    os.replace during a pre-upgrade (legacy) append: the orphan fragment
-    must not be merged by the repair compaction AND re-SPIMI'd into the
-    delta dir — pre-fix that pid's postings existed twice (df and scores
-    doubled). compact_store now drops committed-manifest-less fragments
-    first (store.orphan_fragments)."""
-    import json
-    import os
-
-    first_pdf, full_pdf = halves
-    root = str(tmp_path_factory.mktemp("idx_torn"))
-    # a real pre-LSM store kept every fragment: build with fragment GC off
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(IndexStore, "gc_dirs", lambda self: None)
-        store = incremental_build(
-            spark.createDataFrame(first_pdf, schema=TRANSCRIPTS_SCHEMA),
-            root, n_partitions=4)
-
-    # downgrade to the legacy layout (round-1: single un-suffixed dirs)
-    meta = store.read_meta()
-    ep = int(meta["epoch"])
-    os.rename(os.path.join(root, f"segments-{ep:06d}"),
-              os.path.join(root, "segments"))
-    os.rename(os.path.join(root, f"term_stats-{ep:06d}"),
-              os.path.join(root, "term_stats"))
-    for key in ("compacted_pids", "segment_dirs", "term_stats_dirs",
-                "retired_dirs", "epoch"):
-        meta.pop(key, None)
-    # torn state: one pid's fragment committed, manifest not; append
-    # intent recorded (phase=appending) — the reviewer scenario
-    torn_pid = sorted(store.done_partitions())[0]
-    os.remove(store.manifest_path(torn_pid))
-    assert store.orphan_fragments() == [store.fragment_path(torn_pid)]
-    meta["phase"] = "appending"
-    with open(store.meta_path, "w") as f:
-        json.dump(meta, f)
-
-    # repair + append the second half in one call
-    store = incremental_build(
-        spark.createDataFrame(full_pdf, schema=TRANSCRIPTS_SCHEMA),
-        root, n_partitions=4)
-    meta = store.read_meta()
-    assert meta["phase"] == "built"
-    assert meta["n_docs"] == len(full_pdf)
-    assert store.orphan_fragments() == []
-
-    # doubling detector: df totals == distinct (doc, term) pairs
-    oracle = build_oracle_index(
-        list(full_pdf[["conv_id", "turn_idx", "text"]]
-             .itertuples(index=False, name=None)))
-    ts = spark.read.parquet(*store.term_stats_paths())
-    got_df = {r["term"]: r["df"] for r in
-              ts.groupBy("term").agg(F.sum("df").alias("df")).collect()}
-    assert got_df == dict(oracle.df)
-
-    for q, k in [("join filter", 10), ("window", 5)]:
-        exp = oracle_search(oracle, q, k=k)
-        got = topk(spark, store, q, k=k).collect()
-        assert [(r["conv_id"], r["turn_idx"]) for r in got] == [
-            (e[1], e[2]) for e in exp], q
-        for g, e in zip(got, exp):
-            assert math.isclose(g["score"], e[3], rel_tol=1e-9)
 
 
 def test_direct_compact_on_crashed_store_repairs(

@@ -355,11 +355,11 @@ def test_sloppy_phrase_requires_positions(spark, transcripts,
         phrase_docids(spark, store, "join filter", slop=-1)
 
 
-def test_compact_degrades_mixed_pos_runs_to_null(spark):
-    """Legacy-mix rule through the r7 vectorized compaction kernel: a
-    (term, shard) run holding ANY positionless block emits NULL pos_bin
-    for the whole run, while fully-positional runs round-trip their
-    positions exactly and postings merge identically either way."""
+def test_compact_refuses_mixed_pos_runs(spark):
+    """Through the vectorized compaction kernel, fully-positional runs
+    round-trip their positions and postings exactly; an input mixing
+    positional and NULL pos_bin blocks is corruption (a store's
+    positions flag is fixed at build) and raises, naming fsck."""
     import numpy as np
     from visionsearch_spark.index.codec import (
         decode_docids,
@@ -389,35 +389,36 @@ def test_compact_degrades_mixed_pos_runs_to_null(spark):
         # run A ("alpha", shard 0): two fragments, BOTH positional
         block("alpha", [1, 5], [2, 1], [9, 9], [0, 3, 7]),
         block("alpha", [20, 40], [1, 2], [9, 9], [2, 1, 4]),
-        # run B ("beta", shard 0): one positional + one NULL -> degrade
+        # run B ("beta", shard 0): two positional fragments
         block("beta", [2, 6], [1, 1], [9, 9], [5, 6]),
-        block("beta", [30], [2], [9], None),
+        block("beta", [30], [2], [9], [0, 8]),
     ]
     frags = spark.createDataFrame(rows, SEGMENT_SCHEMA_DDL)
-    out = _compact_segments(frags, shard_range, n_tasks=2).collect()
+    out = _compact_segments(frags, shard_range, n_tasks=1).collect()
     by_term = {}
     for r in out:
         by_term.setdefault(r["term"], []).append(r)
-    # merged postings identical for both runs
-    for term, exp_docids, exp_tfs in [
-        ("alpha", [1, 5, 20, 40], [2, 1, 1, 2]),
-        ("beta", [2, 6, 30], [1, 1, 2]),
+    for term, exp_docids, exp_tfs, exp_pos in [
+        ("alpha", [1, 5, 20, 40], [2, 1, 1, 2], [0, 3, 7, 2, 1, 4]),
+        ("beta", [2, 6, 30], [1, 1, 2], [5, 6, 0, 8]),
     ]:
         blocks = sorted(by_term[term], key=lambda r: r["min_docid"])
         d = np.concatenate(
             [decode_docids(r["docids_bin"], r["n"]) for r in blocks])
         t = np.concatenate(
             [decode_varint(r["tfs_bin"], r["n"]) for r in blocks])
+        p = np.concatenate([
+            decode_positions(
+                r["pos_bin"],
+                decode_varint(r["tfs_bin"], r["n"]).astype(np.int64))
+            for r in blocks
+        ])
         assert d.tolist() == exp_docids
         assert t.tolist() == exp_tfs
-    # run A keeps exact positions; run B is NULL everywhere
-    a = sorted(by_term["alpha"], key=lambda r: r["min_docid"])
-    a_tfs = np.concatenate(
-        [decode_varint(r["tfs_bin"], r["n"]) for r in a]).astype(np.int64)
-    a_pos = np.concatenate([
-        decode_positions(r["pos_bin"],
-                         decode_varint(r["tfs_bin"], r["n"]).astype(np.int64))
-        for r in a
-    ])
-    assert a_pos.tolist() == [0, 3, 7, 2, 1, 4] and a_tfs.sum() == 6
-    assert all(r["pos_bin"] is None for r in by_term["beta"])
+        assert p.tolist() == exp_pos and t.sum() == len(exp_pos)
+
+    # one positionless block in the same input -> refused, not degraded
+    mixed = rows[:3] + [block("beta", [30], [2], [9], None)]
+    frags = spark.createDataFrame(mixed, SEGMENT_SCHEMA_DDL)
+    with pytest.raises(Exception, match="run fsck"):
+        _compact_segments(frags, shard_range, n_tasks=1).collect()

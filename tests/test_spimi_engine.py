@@ -5,7 +5,6 @@ resume-after-failure, manifest metrics, and segment structure invariants
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pytest
@@ -14,6 +13,7 @@ from visionsearch_spark.index.codec import decode_docids, decode_varint
 from visionsearch_spark.index.spimi import BLOCK_SIZE, build_index
 from visionsearch_spark.index.store import IndexStore
 from visionsearch_spark.oracle import oracle_search
+from visionsearch_spark.query import wand
 from visionsearch_spark.query.wand import batch_topk, topk
 
 REL_TOL = 1e-9
@@ -43,13 +43,13 @@ def test_meta_and_manifest_metrics(built_store, oracle_index):
 def test_term_stats_match_oracle(spark, built_store, oracle_index):
     got = {
         r["term"]: r["df"]
-        for r in spark.read.parquet(built_store.term_stats_path).collect()
+        for r in spark.read.parquet(*built_store.term_stats_paths()).collect()
     }
     assert got == dict(oracle_index.df)
 
 
 def test_segment_structure(spark, built_store):
-    segs = spark.read.parquet(built_store.segments_path).collect()
+    segs = spark.read.parquet(*built_store.segment_paths()).collect()
     meta = built_store.read_meta()
     R = meta["shard_range"]
     for r in segs:
@@ -72,7 +72,7 @@ def test_hot_term_shard_fanout(spark, built_store, oracle_index):
     10^12 turns (north rule: 'salted repartition-by-term')."""
     from pyspark.sql import functions as F
 
-    segs = spark.read.parquet(built_store.segments_path)
+    segs = spark.read.parquet(*built_store.segment_paths())
     fanout = {
         r["term"]: r["n_shards"]
         for r in segs.groupBy("term")
@@ -168,7 +168,8 @@ def test_rebuild_is_idempotent(spark, transcripts, built_store, tmp_path_factory
     assert before == after
 
 
-def test_fast_path_plan_has_no_posting_shuffle(spark, built_store):
+def test_fast_path_plan_has_no_posting_shuffle(spark, built_store,
+                                                monkeypatch):
     """Layout-invariant regression guard (PLANS.md §17): the batch plan
     must NOT move posting data through Spark — segment files are
     shard-complete per file and LSM dirs docid-disjoint, so the kernel
@@ -197,15 +198,10 @@ def test_fast_path_plan_has_no_posting_shuffle(spark, built_store):
     # (r7 _n_bins floors task count by bytes x queries; with one bin the
     # route_key exchange legitimately collapses to SinglePartition and
     # the assertion below would have nothing to pin)
-    import os
-
-    os.environ["VSS_QUERY_BIN_BYTES"] = "1"
-    try:
-        filt = batch_topk(spark, built_store, q, docid_filter=allow)
-        filt.count()
-        fplan = filt._jdf.queryExecution().executedPlan().toString()
-    finally:
-        os.environ.pop("VSS_QUERY_BIN_BYTES", None)
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
+    filt = batch_topk(spark, built_store, q, docid_filter=allow)
+    filt.count()
+    fplan = filt._jdf.queryExecution().executedPlan().toString()
     # the filter's own per-shard pack agg may hash on shard; the
     # POSTINGS must not: no Spark scan of any segment dir
     assert not any(d in fplan for d in seg_dirs)
@@ -339,18 +335,14 @@ def test_n_bins_work_proportional():
     assert _n_bins([], 32, 1) == 1
 
 
-def test_topk_results_invariant_to_bin_count(spark, built_store):
+def test_topk_results_invariant_to_bin_count(spark, built_store,
+                                             monkeypatch):
     """ANY whole-file task assignment gives final per-partition scores:
     forcing 1 bin and forcing max fan-out must return identical rows."""
-    import os
-
     q = "join filter stream"
-    try:
-        os.environ["VSS_QUERY_BIN_BYTES"] = str(1 << 40)  # -> 1 bin
-        one = topk(spark, built_store, q, k=7).collect()
-        os.environ["VSS_QUERY_BIN_BYTES"] = "1"  # -> max bins
-        many = topk(spark, built_store, q, k=7).collect()
-    finally:
-        os.environ.pop("VSS_QUERY_BIN_BYTES", None)
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1 << 40)  # -> 1 bin
+    one = topk(spark, built_store, q, k=7).collect()
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)  # -> max bins
+    many = topk(spark, built_store, q, k=7).collect()
     assert [tuple(r) for r in one] == [tuple(r) for r in many]
     assert len(one) == 7

@@ -18,9 +18,21 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.index.spimi import build_index
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.store import LAYOUT, IndexStore
 
 CACHE_VERSION = "v3"  # v3: positional postings (pos_bin) in the main store
+
+
+def _cached_store(tag: str, sf_dir: str) -> IndexStore:
+    """The process-shared temp store for one (corpus, variant). The key
+    carries the store layout, so a cache written under another layout is
+    never reopened (its meta would be refused) — the next call rebuilds
+    under a fresh key instead."""
+    key = hashlib.sha1(
+        f"{CACHE_VERSION}{tag}:layout{LAYOUT}:{os.path.abspath(sf_dir)}"
+        .encode()
+    ).hexdigest()[:12]
+    return IndexStore(os.path.join(tempfile.gettempdir(), f"vss_idx_{key}"))
 
 
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -43,15 +55,14 @@ def doc_id_col(conv_id_col: str = "conv_id"):
 def get_documents_index(spark: SparkSession, sf_dir: str,
                         n_partitions: int = 8) -> IndexStore:
     """Build (once per process+corpus) the compressed index over documents."""
-    key = hashlib.sha1(f"{CACHE_VERSION}:{os.path.abspath(sf_dir)}".encode()).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("", sf_dir)
     if os.path.exists(store.meta_path) and store.read_meta().get("phase") == "built":
         return store
     tx = documents_as_transcripts(spark, sf_dir)
     # positions=True: the shared contract store exercises the positional
     # phrase/proximity verify (bm25_phrase / bm25_proximity rows)
-    return build_index(tx, root, n_partitions=n_partitions, positions=True)
+    return build_index(tx, store.root, n_partitions=n_partitions,
+                       positions=True)
 
 
 # deterministic delete set for the delete/purge contract rows: every
@@ -73,18 +84,14 @@ def get_documents_deleted_index(spark: SparkSession, sf_dir: str,
     index/deletes.py semantics between delete and purge."""
     from visionsearch_spark.index.deletes import delete_convs
 
-    key = hashlib.sha1(
-        f"{CACHE_VERSION}-tomb:{os.path.abspath(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("-tomb", sf_dir)
     if (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"
             and store.read_meta().get("tombstone_dirs")):
         return store
     if not (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"):
-        build_index(documents_as_transcripts(spark, sf_dir), root,
+        build_index(documents_as_transcripts(spark, sf_dir), store.root,
                     n_partitions=n_partitions)
     delete_convs(spark, store, _deleted_conv_ids(spark, sf_dir))
     return store
@@ -97,11 +104,7 @@ def get_documents_purged_index(spark: SparkSession, sf_dir: str,
     from visionsearch_spark.index.deletes import delete_convs
     from visionsearch_spark.index.spimi import compact_store
 
-    key = hashlib.sha1(
-        f"{CACHE_VERSION}-purged:{os.path.abspath(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("-purged", sf_dir)
     if os.path.exists(store.meta_path):
         meta = store.read_meta()
         if (meta.get("phase") == "built"
@@ -110,11 +113,11 @@ def get_documents_purged_index(spark: SparkSession, sf_dir: str,
             return store
     if not (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"):
-        build_index(documents_as_transcripts(spark, sf_dir), root,
+        build_index(documents_as_transcripts(spark, sf_dir), store.root,
                     n_partitions=n_partitions)
     if not store.read_meta().get("tombstone_dirs"):
         delete_convs(spark, store, _deleted_conv_ids(spark, sf_dir))
-    return compact_store(spark, root)
+    return compact_store(spark, store.root)
 
 
 # deterministic upsert set for the bm25_after_upsert contract row: every
@@ -135,11 +138,7 @@ def get_documents_upserted_index(spark: SparkSession, sf_dir: str,
     from visionsearch_spark.streaming.incremental import upsert_convs
     from visionsearch_spark.index.spimi import compact_store
 
-    key = hashlib.sha1(
-        f"{CACHE_VERSION}-upsert:{os.path.abspath(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("-upsert", sf_dir)
     if os.path.exists(store.meta_path):
         meta = store.read_meta()
         if (meta.get("phase") == "built"
@@ -148,14 +147,14 @@ def get_documents_upserted_index(spark: SparkSession, sf_dir: str,
             return store
     if not (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"):
-        build_index(documents_as_transcripts(spark, sf_dir), root,
+        build_index(documents_as_transcripts(spark, sf_dir), store.root,
                     n_partitions=n_partitions)
     if not store.read_meta().get("tombstone_dirs"):
         delta = documents_as_transcripts(spark, sf_dir).filter(
             doc_id_col() % UPSERT_MOD == 0
         ).withColumn("text", F.concat(F.col("text"), F.lit(UPSERT_SUFFIX)))
-        upsert_convs(delta, root, n_partitions=n_partitions)
-    return compact_store(spark, root)
+        upsert_convs(delta, store.root, n_partitions=n_partitions)
+    return compact_store(spark, store.root)
 
 
 def documents_as_unit_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -223,16 +222,12 @@ def documents_as_field_transcripts(spark: SparkSession, sf_dir: str) -> DataFram
 def get_documents_field_index(spark: SparkSession, sf_dir: str,
                               n_partitions: int = 8) -> IndexStore:
     """Field-unit index (title/body units per doc) for fielded_topk."""
-    key = hashlib.sha1(
-        f"{CACHE_VERSION}-fields:{os.path.abspath(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("-fields", sf_dir)
     if (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"):
         return store
     tx = documents_as_field_transcripts(spark, sf_dir)
-    return build_index(tx, root, n_partitions=n_partitions)
+    return build_index(tx, store.root, n_partitions=n_partitions)
 
 
 def get_documents_unit_index(spark: SparkSession, sf_dir: str,
@@ -242,16 +237,12 @@ def get_documents_unit_index(spark: SparkSession, sf_dir: str,
     batch_topk(collapse_bounds=...))."""
     from visionsearch_spark.query.units import bounds_fresh, write_doc_bounds
 
-    key = hashlib.sha1(
-        f"{CACHE_VERSION}-units:{os.path.abspath(sf_dir)}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
-    store = IndexStore(root)
+    store = _cached_store("-units", sf_dir)
     if (os.path.exists(store.meta_path)
             and store.read_meta().get("phase") == "built"
             and bounds_fresh(store)):
         return store
     tx = documents_as_unit_transcripts(spark, sf_dir)
-    store = build_index(tx, root, n_partitions=n_partitions)
+    store = build_index(tx, store.root, n_partitions=n_partitions)
     write_doc_bounds(spark, store)
     return store

@@ -17,7 +17,8 @@ schedules a task that scores nothing. Filters are sidecars
 (``_bloom-<segment-file>.bin``) written by the same distributed pass
 that wrote the segments, atomically (tmp -> rename); the ``_`` prefix
 keeps them invisible to Spark and pyarrow dataset discovery. A file
-with no sidecar (legacy dir, foreign writer) is simply never pruned.
+with no sidecar (foreign writer, or a crash between the two writes) is
+simply never pruned.
 
 Hashing: the first 16 bytes of ``md5(term)`` split into two 64-bit
 words h1, h2; probe positions ``(h1 + i*h2) mod m`` for i in 0..k-1

@@ -35,10 +35,9 @@ never combine_chunks: one Arrow binary chunk's int32 offsets cap it at
 2 GiB (spimi._CHUNK_BYTE_LIMIT), so a large column stays chunked.
 
 Null rule: payload/decode_blocks/fixed_values raise on a column with
-NULL slots. A NULL slot's offsets may still span real bytes in memory
-(spimi._binary_col writes NULL pos_bin slots over the shared stream;
-only a parquet round trip empties them), so callers filter NULL slots
-out first.
+NULL slots. A NULL slot's offsets may still span real bytes of an
+in-memory array built over a shared stream (only a parquet round trip
+empties them), so callers filter NULL slots out first.
 
 Round-trip property-tested in tests/test_codec.py (hypothesis).
 """

@@ -4,7 +4,9 @@ posting decode; runs in seconds on stores whose segments hold terabytes.
 
 Checked invariants (each one is load-bearing for a specific path):
 
-  meta        phase == "built", required stat keys present, every live /
+  meta        the layout stamp is store.LAYOUT (any other layout is an
+              error that asks for reindex — the only migration),
+              phase == "built", required stat keys present, every live /
               tombstone dir listed in meta exists on disk, pending and
               applied tombstone lists are disjoint. (Everything reads
               through meta; a torn flip would surface here.)
@@ -94,12 +96,17 @@ def fsck(root: str, strict: bool = False) -> dict:
         err(rec, "meta.json missing")
         _finish(report, strict)
         return report
-    meta = store.read_meta()
+    try:
+        meta = store.read_meta()
+    except ValueError as e:  # another layout: nothing below applies
+        err(rec, str(e))
+        _finish(report, strict)
+        return report
     if meta.get("phase") != "built":
         rec["warnings"].append(
             f"phase={meta.get('phase')!r}: an append is in flight or "
             "crashed (repairable by the next incremental_build)")
-    for key in ("n_docs", "avgdl", "shard_range", "n_partitions"):
+    for key in ("n_docs", "avgdl", "sum_dl", "shard_range", "n_partitions"):
         if key not in meta:
             err(rec, f"meta missing required key {key!r}")
     pend = set(store.tombstone_paths())
@@ -107,9 +114,7 @@ def fsck(root: str, strict: bool = False) -> dict:
     if pend & appl:
         both = {os.path.relpath(p, root) for p in pend & appl}
         err(rec, f"tombstone dirs both pending and applied: {both}")
-    for p in ([os.path.join(root, d) for d in
-               (meta.get("segment_dirs") or [])
-               + (meta.get("term_stats_dirs") or [])]
+    for p in (store.segment_paths() + store.term_stats_paths()
               + sorted(pend | appl)):
         if not os.path.isdir(p):
             err(rec, f"meta references missing dir "
@@ -126,7 +131,7 @@ def fsck(root: str, strict: bool = False) -> dict:
     if int(meta["n_docs"]) != live_rows:
         err(rec, f"meta n_docs={meta['n_docs']} != staged − applied = "
                  f"{staged_rows} − {applied_rows} = {live_rows}")
-    if meta.get("sum_dl") is not None and int(meta["n_docs"]) > 0:
+    if int(meta["n_docs"]) > 0:
         want = float(meta["sum_dl"]) / float(meta["n_docs"])
         if abs(want - float(meta["avgdl"])) > 1e-9 * max(1.0, want):
             err(rec, f"avgdl={meta['avgdl']} != sum_dl/n_docs={want}")
@@ -152,13 +157,12 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     # ---- segments: the fast-path file invariant -------------------------
     # the load-bearing property is "every shard's blocks are COMPLETE in
-    # exactly one file of its dir" — true under BOTH the current range
-    # layout and the legacy hash layout (any partitioning BY the shard
-    # key sends a whole shard to one file). Footer (min,max) intervals
-    # are only a proxy (legacy files interleave), so compare the actual
-    # per-file shard SETS: one int32 column read per file, O(block rows)
-    # — segments hold block summaries, not postings, so this stays cheap
-    # even when the postings are terabytes.
+    # exactly one file of its dir". Footer (min,max) intervals are only
+    # a proxy, so compare the actual per-file shard SETS: one int32
+    # column read per file, O(block rows) — segments hold block
+    # summaries, not postings, so this stays cheap even when the
+    # postings are terabytes. It is the query path's safety net: a
+    # violation is the one corruption that silently truncates scores.
     rec = check("segments")
     for d in store.segment_paths():
         seen: dict[int, str] = {}
@@ -231,8 +235,7 @@ def fsck(root: str, strict: bool = False) -> dict:
     if n_seg != n_ts:
         err(rec, f"{n_seg} live segment dirs vs {n_ts} term_stats dirs "
                  "(epochs write the pair together)")
-    live = set(meta.get("segment_dirs") or []) \
-        | set(meta.get("term_stats_dirs") or [])
+    live = set(meta["segment_dirs"]) | set(meta["term_stats_dirs"])
     retired = set(meta.get("retired_dirs") or [])
     if live & retired:
         err(rec, f"dirs both live and retired: {live & retired}")
@@ -250,7 +253,7 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     # ---- fragments: the merge input no live dir covers --------------------
     rec = check("fragments")
-    covered = set(meta.get("compacted_pids") or [])
+    covered = set(meta["compacted_pids"])
     on_disk = {pid for pid, _p in store.fragment_files()}
     lost = store.done_partitions() - covered - on_disk
     if lost:
@@ -314,7 +317,7 @@ def store_report(root: str) -> dict:
     watches: live-dir count approaching the compaction threshold, bytes
     by component, pending tombstones awaiting a fold."""
     store = IndexStore(root)
-    meta = store.read_meta() if os.path.exists(store.meta_path) else {}
+    meta = store.read_meta()
     pend, appl = store.tombstone_paths(), store.tombstone_paths(applied=True)
 
     def du(path: str) -> tuple[int, int]:
@@ -349,7 +352,7 @@ def store_report(root: str) -> dict:
         "n_docs": meta.get("n_docs"),
         "avgdl": meta.get("avgdl"),
         "shard_range": meta.get("shard_range"),
-        "live_segment_dirs": len(meta.get("segment_dirs") or []),
+        "live_segment_dirs": len(meta["segment_dirs"]),
         "pending_tombstone_dirs": len(pend),
         "applied_tombstone_dirs": len(appl),
         "components": comp,

@@ -1,6 +1,12 @@
-"""Reindex — rebuild a store under new index options with IDENTICAL
-docids (the Lucene/ES `_reindex` + alias-flip migration, e.g. upgrading
-a legacy store to positional postings without re-ingesting).
+"""Reindex — the migration path between layouts: rebuild a store in the
+current layout (store.LAYOUT), optionally under new index options, with
+IDENTICAL docids (the Lucene/ES `_reindex` + alias-flip migration).
+Every other reader and writer refuses a store of another layout
+(IndexStore.read_meta), including the legacy ones: pre-LSM metas
+without `compacted_pids`, un-suffixed or pre-list epoch dirs, metas
+without `sum_dl`. Reindex reads only the source's staged table,
+tombstone dirs and geometry keys, which every layout has, so it reads
+the source meta's raw JSON.
 
 The staged table is the store's source of truth and already carries the
 docid assignment, so reindexing never re-runs docid assignment: the
@@ -21,13 +27,14 @@ O(corpus), embarrassingly parallel, no shuffle beyond the build's own.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.store import IndexStore, fresh_meta
 
 
 def reindex(
@@ -47,7 +54,8 @@ def reindex(
         raise ValueError(f"{src_root} is not a built store")
     if os.path.exists(dst_root):
         raise ValueError(f"reindex target {dst_root} already exists")
-    smeta = src.read_meta()
+    with open(src.meta_path) as f:
+        smeta = json.load(f)  # any layout: this is the migration
     dst = IndexStore(dst_root)
     dst.ensure_dirs()
 
@@ -67,19 +75,19 @@ def reindex(
     st = spark.read.parquet(dst.staged_path).agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")).collect()[0]
     n_docs, sum_dl = int(st["n"]), int(st["s"] or 0)
-    dst.write_meta({
-        "n_docs": n_docs,
-        "sum_dl": sum_dl,
-        "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-        "shard_range": int(smeta["shard_range"]),
-        "n_partitions": int(n_partitions or smeta["n_partitions"]),
-        "n_shards": int(smeta.get("n_shards") or 0) or None,
-        "block_size": smeta.get("block_size"),
-        "positions": bool(smeta.get("positions")
-                          if positions is None else positions),
-        "tombstone_dirs": tomb_dirs,
-        "phase": "staged",
-    })
+    dst.write_meta(fresh_meta(
+        n_docs=n_docs,
+        sum_dl=sum_dl,
+        avgdl=(sum_dl / n_docs) if n_docs else 0.0,
+        shard_range=int(smeta["shard_range"]),
+        n_partitions=int(n_partitions or smeta["n_partitions"]),
+        n_shards=int(smeta.get("n_shards") or 0) or None,
+        block_size=smeta.get("block_size"),
+        positions=bool(smeta.get("positions")
+                       if positions is None else positions),
+        tombstone_dirs=tomb_dirs,
+        phase="staged",
+    ))
     dummy = spark.createDataFrame(
         [], "conv_id string, turn_idx int, text string")
     build_index(dummy, dst_root,

@@ -78,8 +78,7 @@ def snapshot_store(src_root: str, dst_root: str) -> dict:
     # sidecar tables written beside the epochs (doc_bounds, ANN indexes)
     # travel too: skip ONLY epoch/tombstone dirs the meta doesn't
     # reference (retired or mid-GC leftovers); everything else is live
-    epoch_prefixes = ("segments-", "term_stats-", "tombstones-",
-                      "segments", "term_stats")
+    epoch_prefixes = ("segments-", "term_stats-", "tombstones-")
     skip = {
         name for name in os.listdir(src_root)
         if name.startswith(epoch_prefixes) and name not in wanted

@@ -66,6 +66,7 @@ from visionsearch_spark.index.store import (
     MANIFEST_SCHEMA_DDL,
     SEGMENT_SCHEMA_DDL,
     IndexStore,
+    fresh_meta,
 )
 
 BLOCK_SIZE = 128
@@ -104,8 +105,7 @@ _FRAGMENT_PA_SCHEMA = pa.schema(
 _CHUNK_BYTE_LIMIT = (1 << 31) - (1 << 16)
 
 
-def _binary_col(stream: np.ndarray, boffs: np.ndarray,
-                valid: np.ndarray | None = None) -> pa.Array:
+def _binary_col(stream: np.ndarray, boffs: np.ndarray) -> pa.Array:
     """Zero-copy Arrow binary column over a shared byte stream: per-block
     values are SLICES of `stream` at byte offsets `boffs` (len n_blocks+1)
     — the offsets array IS the Arrow offsets buffer, so no per-block bytes
@@ -114,17 +114,8 @@ def _binary_col(stream: np.ndarray, boffs: np.ndarray,
     base = int(boffs[0])
     off32 = (boffs - base).astype(np.int32)
     data = np.ascontiguousarray(stream[base:int(boffs[-1])])
-    validity = None
-    nulls = 0
-    if valid is not None and not valid.all():
-        validity = pa.py_buffer(
-            np.packbits(valid, bitorder="little").tobytes()
-        )
-        nulls = int((~valid).sum())
     return pa.Array.from_buffers(
-        pa.binary(), n,
-        [validity, pa.py_buffer(off32), pa.py_buffer(data)],
-        null_count=nulls,
+        pa.binary(), n, [None, pa.py_buffer(off32), pa.py_buffer(data)],
     )
 
 
@@ -132,7 +123,6 @@ def _build_block_batches(
     terms: np.ndarray, docids: np.ndarray, tfs: np.ndarray,
     dls: np.ndarray, shard_range: int,
     pos_flat: np.ndarray | None = None,
-    pos_valid: np.ndarray | None = None,
     with_shard: bool = False,
     term_values: np.ndarray | None = None,
 ) -> tuple[list[pa.RecordBatch], dict]:
@@ -150,12 +140,10 @@ def _build_block_batches(
     Pruning metadata stays (max_tf, min_dl) — avgdl-independent, so
     blocks remain valid across appends that shift corpus stats.
 
-    `pos_valid`: per-posting flag, constant within each (term, shard)
-    run — blocks of invalid runs emit NULL pos_bin (the legacy-mix
-    degradation rule of the compaction path). `term_values`: when `terms`
-    holds int run keys (cheap comparisons for the compaction kernel),
-    the string looked up per output block is term_values[key]. Returns
-    (record batches, stats)."""
+    Without `pos_flat` every block's pos_bin is NULL. `term_values`:
+    when `terms` holds int run keys (cheap comparisons for the
+    compaction kernel), the string looked up per output block is
+    term_values[key]. Returns (record batches, stats)."""
     schema = _FRAGMENT_PA_SCHEMA
     if with_shard:
         schema = schema.append(pa.field("shard", pa.int64()))
@@ -196,7 +184,7 @@ def _build_block_batches(
     np.cumsum(l_nb, out=off[1:])
     l_boffs = off[bnd]
 
-    p_stream = p_boffs = valid_blocks = None
+    p_stream = p_boffs = None
     if pos_flat is not None:
         occ = np.zeros(n + 1, dtype=np.int64)
         np.cumsum(tfs, out=occ[1:])
@@ -212,8 +200,6 @@ def _build_block_batches(
         poff = np.zeros(p.size + 1, dtype=np.int64)
         np.cumsum(p_nb, out=poff[1:])
         p_boffs = poff[occ[bnd]]
-        if pos_valid is not None:
-            valid_blocks = pos_valid[bstarts]
 
     n_blocks = bstarts.size
     max_tf = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
@@ -238,10 +224,7 @@ def _build_block_batches(
         if p_boffs is None:
             pos_col = pa.nulls(end - start, pa.binary())
         else:
-            pos_col = _binary_col(
-                p_stream, p_boffs[sl1],
-                None if valid_blocks is None else valid_blocks[sl],
-            )
+            pos_col = _binary_col(p_stream, p_boffs[sl1])
         blk_terms = (term_values[terms[bstarts[sl]]]
                      if term_values is not None else terms[bstarts[sl]])
         cols = [
@@ -522,19 +505,17 @@ def build_index(
         ).parquet(store.staged_path)
         sum_dl = int(obs.get["sum_dl"] or 0)
         mark("stage_write")
-        store.write_meta(
-            {
-                "n_docs": n_docs,
-                "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
-                "sum_dl": sum_dl,
-                "shard_range": shard_range,
-                "n_partitions": n_partitions,
-                "n_shards": n_shards_eff,
-                "block_size": BLOCK_SIZE,
-                "positions": bool(positions),
-                "phase": "staged",
-            }
-        )
+        store.write_meta(fresh_meta(
+            n_docs=n_docs,
+            avgdl=(sum_dl / n_docs) if n_docs else 0.0,
+            sum_dl=sum_dl,
+            shard_range=shard_range,
+            n_partitions=n_partitions,
+            n_shards=n_shards_eff,
+            block_size=BLOCK_SIZE,
+            positions=bool(positions),
+            phase="staged",
+        ))
         fresh_staged = staged
     meta = store.read_meta()
 
@@ -593,7 +574,7 @@ def build_index(
         ),
     )
     mark("term_stats+compact_write")
-    prev_live = (meta.get("segment_dirs") or []) + (meta.get("term_stats_dirs") or [])
+    prev_live = meta["segment_dirs"] + meta["term_stats_dirs"]
     meta.update({
         "phase": "built",
         "epoch": next_ep,
@@ -662,6 +643,20 @@ def spimi_pending(spark: SparkSession, store: IndexStore, shard_range: int,
     return True
 
 
+def _has_positions(pos_col: pa.Array | pa.ChunkedArray) -> bool:
+    """True iff the blocks of a merge input carry pos_bin. A store's
+    positions flag is fixed at build and inherited by every append and
+    compaction, so its blocks are all positional or all NULL; a mix is
+    corruption, refused here rather than merged."""
+    nulls = pos_col.null_count
+    if 0 < nulls < len(pos_col):
+        raise ValueError(
+            f"{nulls} of {len(pos_col)} merge-input blocks have a NULL "
+            "pos_bin: positional and positionless blocks mixed in one "
+            "store — run fsck (index/fsck.py)")
+    return nulls == 0 and len(pos_col) > 0
+
+
 def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
                  shard_range: int) -> list[pa.RecordBatch]:
     """Blocks with their `deny` docids dropped: every block
@@ -686,23 +681,16 @@ def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
     dls = decode_varint(payload(hits["dls_bin"]), total).astype(np.int64)
     keep = deny[np.minimum(np.searchsorted(deny, docids), deny.size - 1)] \
         != docids
-    pos_flat = pos_valid = None
-    pos_col = hits["pos_bin"]
-    if pos_col.null_count < len(pos_col):
-        # NULL slots are filtered out before decoding (codec null rule)
-        # and re-emitted NULL through pos_valid. Positions are per-doc
-        # reset, so dropping whole docs keeps the rest exact.
-        valid = np.repeat(pos_col.is_valid().to_numpy(zero_copy_only=False),
-                          ns)
-        pos_flat = np.zeros(int(tfs.sum()), dtype=np.int64)
-        pos_flat[np.repeat(valid, tfs)] = decode_positions(
-            payload(pos_col.filter(pos_col.is_valid())), tfs[valid])
-        pos_flat = pos_flat[np.repeat(keep, tfs)]
-        pos_valid = valid[keep]
+    pos_flat = None
+    if _has_positions(hits["pos_bin"]):
+        # positions are per-doc reset, so dropping whole docs keeps the
+        # rest exact
+        pos_flat = decode_positions(payload(hits["pos_bin"]), tfs)[
+            np.repeat(keep, tfs)]
     run = np.repeat(np.arange(ns.size), ns)
     batches, _stats = _build_block_batches(
         run[keep], docids[keep], tfs[keep], dls[keep], shard_range,
-        pos_flat=pos_flat, pos_valid=pos_valid,
+        pos_flat=pos_flat,
         term_values=hits["term"].to_numpy(zero_copy_only=False),
     )
     return batches
@@ -788,25 +776,12 @@ def _merge_input(spark: SparkSession, store: IndexStore,
     """The blocks a full merge (build_index, compact_store) rewrites: the
     live segment dirs plus the fragments of committed pids that meta's
     `compacted_pids` does not list — those exist only after a fresh
-    build's SPIMI or a crashed append that the caller just repaired.
-    A meta without `compacted_pids` (a fresh build, or a pre-LSM store)
-    covers no pid, so the same rule reads no live dir and every
-    committed fragment. Live dirs are already purged of APPLIED
-    tombstones, so the caller masks only pending ones; a pre-LSM store
-    with applied tombstones still holds their postings in its fragments
-    and cannot be merged that way."""
-    if "compacted_pids" in meta:
-        paths = store.segment_paths()
-    elif store.tombstone_paths(applied=True):
-        raise ValueError(
-            f"{store.root}: pre-LSM store (no compacted_pids) with applied "
-            "tombstones — its fragments still hold purged postings; run "
-            "reindex (index/reindex.py) to rebuild it")
-    else:
-        paths = []
-    uncovered = store.done_partitions() - set(meta.get("compacted_pids")
-                                              or [])
-    paths += [store.fragment_path(pid) for pid in sorted(uncovered)]
+    build's SPIMI (whose meta lists no dir and no pid) or a crashed
+    append that the caller just repaired. Live dirs are already purged
+    of APPLIED tombstones, so the caller masks only pending ones."""
+    uncovered = store.done_partitions() - set(meta["compacted_pids"])
+    paths = store.segment_paths() \
+        + [store.fragment_path(pid) for pid in sorted(uncovered)]
     if not paths:
         return spark.createDataFrame([], SEGMENT_SCHEMA_DDL)
     return spark.read.schema(SEGMENT_SCHEMA_DDL).parquet(*paths)
@@ -875,8 +850,7 @@ def compact_store(spark: SparkSession, root: str,
             bloom_scratch=_bloom_scratch_path(store, next_ep),
         ),
     )
-    prev_live = [os.path.basename(p) for p in store.segment_paths()
-                 + store.term_stats_paths()]
+    prev_live = meta["segment_dirs"] + meta["term_stats_dirs"]
     meta.update({
         "epoch": next_ep,
         "segment_dirs": [f"segments-{next_ep:06d}"],
@@ -983,7 +957,9 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     """Re-chunk per (term, shard): fragment blocks of one term never overlap
     in docid and never cross shard boundaries, so compaction is
     concat-in-min_docid-order + re-chunk to BLOCK_SIZE (a metadata-level
-    merge, never a posting-level merge sort).
+    merge, never a posting-level merge sort). The input is
+    `_merge_input`'s blocks (build, compaction) or an append's delta
+    fragments.
 
     Partitioned by RANGE of shard — the SAME partitioning the segment
     write needs — and sorted (term, shard, min_docid), so the kernel's
@@ -997,9 +973,9 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     varint-decoded in one pass each (LEB128 streams concatenate), merged
     runs are re-cut and re-encoded by the same batch builder the SPIMI
     flush uses — byte-identical output to the old per-run loop, with no
-    per-run or per-block Python. A run with any positionless block
-    degrades the whole run's pos_bin to NULL (mixed legacy data only —
-    flag-built stores are uniform).
+    per-run or per-block Python. pos_bin is decoded and re-cut the same
+    way when the store is positional; an input mixing positional and
+    NULL blocks raises (`_has_positions`).
 
     bloom_scratch (r7): when set, each kernel task ALSO writes its
     partition's term Bloom filter to `{bloom_scratch}/pid-NNNNN.bin` —
@@ -1048,22 +1024,12 @@ def _compact_segments(frags: DataFrame, shard_range: int,
         run_terms = terms_b.filter(pa.array(runc)).to_numpy()
         term_keys = np.repeat(run_id_b, ns)
 
-        pos_col = tbl["pos_bin"]
-        null_b = pc.is_null(pos_col).to_numpy()
-        pos_flat = pos_valid = None
-        if not null_b.all():
-            # NULL slots are filtered out before decoding (codec null
-            # rule); a run holding one degrades whole to NULL
-            run_null = np.logical_or.reduceat(null_b, np.flatnonzero(runc))
-            valid = np.repeat(~null_b, ns)
-            pos_flat = np.zeros(int(tfs.sum()), dtype=np.int64)
-            pos_flat[np.repeat(valid, tfs)] = decode_positions(
-                payload(pos_col.filter(pa.array(~null_b))), tfs[valid])
-            pos_valid = np.repeat(~run_null[run_id_b], ns)
+        pos_flat = None
+        if _has_positions(tbl["pos_bin"]):
+            pos_flat = decode_positions(payload(tbl["pos_bin"]), tfs)
         out_batches, _stats = _build_block_batches(
             term_keys, docids, tfs, dls, shard_range,
-            pos_flat=pos_flat, pos_valid=pos_valid,
-            with_shard=True, term_values=run_terms,
+            pos_flat=pos_flat, with_shard=True, term_values=run_terms,
         )
         if bloom_scratch is not None:
             from visionsearch_spark.index.bloom import write_partition_bloom

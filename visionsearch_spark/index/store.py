@@ -5,10 +5,13 @@ give us — SURVEY.md §7 R4 fallback since no iceberg-spark-runtime jar is
 bundled in this sandbox):
 
     root/
-      meta.json         build parameters + corpus stats (n_docs, avgdl,
-                        shard docid range R, n_partitions)
-      docmap/           parquet (docid, conv_id, turn_idx, dl)
-      term_stats/       parquet (term, df)
+      meta.json         build parameters + corpus stats (n_docs, sum_dl,
+                        avgdl, shard docid range R, n_partitions), the
+                        `layout` stamp (== LAYOUT) and the live-set lists
+                        `segment_dirs`, `term_stats_dirs`, `compacted_pids`
+      staged/           parquet (pid, docid, conv_id, turn_idx, dl, text)
+                        — the source of truth; the docmap is its
+                        column-pruned view
       fragments/        per-build-partition parquet, written ATOMICALLY by
                         executor tasks (tmp -> rename): fragment-{pid}.parquet.
                         TRANSIENT: a fragment is the SPIMI output of a pid
@@ -18,8 +21,16 @@ bundled in this sandbox):
       manifest/         manifest-{pid}.json per partition — the checkpoint/
                         lineage/metrics record (north rule: postings_written,
                         terms_merged, bytes_compressed per segment)
-      segments/         compacted posting blocks (term, min_docid, max_docid,
-                        n, docids_bin, tfs_bin, dls_bin, max_tf, min_dl)
+      segments-NNNNNN/  compacted posting blocks (term, min_docid, max_docid,
+                        n, docids_bin, tfs_bin, dls_bin, max_tf, min_dl,
+                        pos_bin), one immutable dir per epoch
+      term_stats-NNNNNN/ parquet (term, df), paired with its segments dir
+      tombstones-NNNNNN/ parquet (docid, dl) per delete (index/deletes.py)
+
+One layout is supported: `read_meta` refuses any meta whose `layout` is
+not LAYOUT, and every reader and writer resolves meta through it. A
+store written under another layout is rebuilt by index/reindex.py, the
+migration path; a layout change bumps LAYOUT.
 
 The fragment+manifest pair written together per partition is the
 distributed analog of the reference's index+ids sidecar pair
@@ -36,6 +47,9 @@ import json
 import os
 import re
 from dataclasses import dataclass
+
+# The one store layout this code reads and writes (meta["layout"]).
+LAYOUT = 1
 
 # Per-block pruning metadata is (max_tf, min_dl), NOT a precomputed
 # tf-weight bound: tf_weight is monotone up in tf and down in dl, so
@@ -58,6 +72,14 @@ MANIFEST_SCHEMA_DDL = (
     "partition_id int, status string, postings_written long, "
     "terms_merged long, bytes_compressed long, lineage string, ts string"
 )
+
+
+def fresh_meta(**fields) -> dict:
+    """The meta a store is founded with (build_index, reindex): the
+    layout stamp and empty live-set lists, which every later writer
+    read-modify-writes — a missing key never means "fresh build"."""
+    return {"layout": LAYOUT, "segment_dirs": [], "term_stats_dirs": [],
+            "compacted_pids": [], **fields}
 
 
 def parquet_files(d: str) -> list[str]:
@@ -111,20 +133,12 @@ class IndexStore:
         return os.path.join(self.root, "staged")
 
     @property
-    def term_stats_path(self) -> str:
-        return self._epoch_path("term_stats")
-
-    @property
     def fragments_dir(self) -> str:
         return os.path.join(self.root, "fragments")
 
     @property
     def manifest_dir(self) -> str:
         return os.path.join(self.root, "manifest")
-
-    @property
-    def segments_path(self) -> str:
-        return self._epoch_path("segments")
 
     @property
     def staged_path(self) -> str:
@@ -148,38 +162,20 @@ class IndexStore:
         ep = self.read_meta().get("epoch")
         return None if ep is None else int(ep)
 
-    def _live_dirs(self, key: str, prefix: str) -> list[str]:
-        if not os.path.exists(self.meta_path):
-            return [os.path.join(self.root, prefix)]
-        meta = self.read_meta()
-        dirs = meta.get(key)
-        if dirs:
-            return [os.path.join(self.root, d) for d in dirs]
-        ep = meta.get("epoch")  # pre-list epoched store
-        name = prefix if ep is None else f"{prefix}-{int(ep):06d}"
-        return [os.path.join(self.root, name)]
+    def _live_dirs(self, key: str) -> list[str]:
+        return [os.path.join(self.root, d) for d in self.read_meta()[key]]
 
     def segment_paths(self) -> list[str]:
-        return self._live_dirs("segment_dirs", "segments")
+        return self._live_dirs("segment_dirs")
 
     def term_stats_paths(self) -> list[str]:
-        return self._live_dirs("term_stats_dirs", "term_stats")
-
-    def _epoch_path(self, prefix: str) -> str:
-        key = "segment_dirs" if prefix == "segments" else "term_stats_dirs"
-        dirs = self._live_dirs(key, prefix)
-        if len(dirs) != 1:
-            raise ValueError(
-                f"store has {len(dirs)} live {prefix} dirs — use the "
-                f"*_paths() list API (appends make snapshots additive)"
-            )
-        return dirs[0]
+        return self._live_dirs("term_stats_dirs")
 
     def tombstone_paths(self, applied: bool = False) -> list[str]:
         """Absolute paths of the PENDING tombstone dirs (queries mask
         these); applied=True returns the folded-into-segments dirs
         instead (index/deletes.py)."""
-        meta = self.read_meta() if os.path.exists(self.meta_path) else {}
+        meta = self.read_meta()
         key = "applied_tombstone_dirs" if applied else "tombstone_dirs"
         return [os.path.join(self.root, d) for d in meta.get(key) or []]
 
@@ -190,32 +186,22 @@ class IndexStore:
         """The retire-then-GC step run right after every meta flip. Delete
         segments-*/term_stats-* dirs that are neither live nor retired
         (meta `retired_dirs` — the set superseded by the LAST full
-        compaction, kept one flip for in-flight readers), legacy
-        un-suffixed dirs once suffixed snapshots exist, and the fragment
+        compaction, kept one flip for in-flight readers), and the fragment
         of every pid the COMMITTED meta lists in `compacted_pids` (a live
         dir holds its postings; no merge reads it again). Reads meta from
         disk, so it can only ever delete what a committed flip covers; a
         crash part-way leaves files the next flip deletes."""
         import shutil
 
-        meta = self.read_meta() if os.path.exists(self.meta_path) else {}
-        keep = set(meta.get("segment_dirs") or []) \
-            | set(meta.get("term_stats_dirs") or []) \
+        meta = self.read_meta()
+        keep = set(meta["segment_dirs"]) | set(meta["term_stats_dirs"]) \
             | set(meta.get("retired_dirs") or [])
-        ep = meta.get("epoch")
-        if ep is not None and not meta.get("segment_dirs"):
-            keep |= {f"segments-{int(ep):06d}", f"term_stats-{int(ep):06d}",
-                     f"segments-{int(ep)-1:06d}", f"term_stats-{int(ep)-1:06d}"}
-        pat = re.compile(r"^(segments|term_stats)(-\d{6})?$")
+        pat = re.compile(r"^(segments|term_stats)-\d{6}$")
         for name in os.listdir(self.root):
-            m = pat.match(name)
-            if not m or name in keep:
-                continue
-            if m.group(2) is None and not any(k.startswith(m.group(1) + "-")
-                                              for k in keep):
-                continue  # legacy dir still the only snapshot
-            shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)
-        covered = set(meta.get("compacted_pids") or [])
+            if pat.match(name) and name not in keep:
+                shutil.rmtree(os.path.join(self.root, name),
+                              ignore_errors=True)
+        covered = set(meta["compacted_pids"])
         for pid, path in self.fragment_files():
             if pid in covered:
                 os.remove(path)
@@ -231,16 +217,22 @@ class IndexStore:
         os.replace(tmp, self.meta_path)
 
     def read_meta(self) -> dict:
+        """meta.json, refused unless it carries the supported layout
+        stamp — the one place the layout is decided."""
         with open(self.meta_path) as f:
-            return json.load(f)
+            meta = json.load(f)
+        if meta.get("layout") != LAYOUT:
+            raise ValueError(
+                f"{self.root}: store layout {meta.get('layout')!r}, this "
+                f"version reads layout {LAYOUT} only; run reindex "
+                "(index/reindex.py) to rebuild it")
+        return meta
 
     def has_positions(self) -> bool:
         """True iff this store was built with the positional-postings
         option (meta['positions']) — the flag is fixed at build time so
-        every live dir is consistent; legacy stores default to False."""
-        if not os.path.exists(self.meta_path):
-            return False
-        return bool(self.read_meta().get("positions"))
+        every live dir is consistent."""
+        return bool(self.read_meta()["positions"])
 
     def fragment_path(self, pid: int) -> str:
         return os.path.join(self.fragments_dir, f"fragment-{pid:05d}.parquet")

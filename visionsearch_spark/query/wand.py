@@ -54,6 +54,8 @@ from visionsearch_spark.query import score_core
 RESULT_DDL = "query_id long, rank int, docid long, conv_id string, turn_idx int, score double"
 RESULT_COLUMNS = ["query_id", "rank", "docid", "conv_id", "turn_idx", "score"]
 PARTIAL_DDL = "query_id long, docid long, score double"
+# segment bytes per scan task, per query in the batch (_n_bins)
+QUERY_BIN_BYTES = 4 << 20
 
 
 def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
@@ -566,21 +568,16 @@ def _bloom_prune(files: list[tuple[int, str]],
 def _n_bins(files: list[tuple[int, str]], n_tasks: int,
             n_queries: int) -> int:
     """Task count for the file-aligned scan: one bin per
-    VSS_QUERY_BIN_BYTES (default 4 MB) of segment bytes PER QUERY in the
-    batch, capped at min(n_tasks, n_files) as before. A local[32]
-    32-task job costs ~0.2 s job + ~6 ms/task scheduling (measured r7),
-    so slicing a 6 MB store into 32 bins for ONE interactive query is
-    pure fixed overhead; sizing parallelism to the work (bytes x
-    queries) keeps small scans at a handful of tasks while a
-    fleet-sized store — or a big batch — still fans out exactly as
-    before (the floor only ever REDUCES task count, never caps it below
-    the work). Env-tunable: per-task fixed cost is a cluster property,
-    not a local[32] constant."""
-    import os as _os
-
-    bin_bytes = int(_os.environ.get("VSS_QUERY_BIN_BYTES", 4 << 20))
+    QUERY_BIN_BYTES of segment bytes PER QUERY in the batch, capped at
+    min(n_tasks, n_files) as before. A local[32] 32-task job costs
+    ~0.2 s job + ~6 ms/task scheduling (measured r7), so slicing a 6 MB
+    store into 32 bins for ONE interactive query is pure fixed
+    overhead; sizing parallelism to the work (bytes x queries) keeps
+    small scans at a handful of tasks while a fleet-sized store — or a
+    big batch — still fans out exactly as before (the floor only ever
+    REDUCES task count, never caps it below the work)."""
     total = sum(sz for sz, _p in files)
-    by_work = -(-(total * max(1, n_queries)) // max(1, bin_bytes))
+    by_work = -(-(total * max(1, n_queries)) // max(1, QUERY_BIN_BYTES))
     return max(1, min(n_tasks, len(files), by_work))
 
 

@@ -121,24 +121,6 @@ def incremental_build(transcripts: DataFrame, root: str,
     meta = store.read_meta()
     needs_repair = meta.get("phase") == "appending"
     n_partitions = n_partitions or int(meta["n_partitions"])
-    if "compacted_pids" not in meta:
-        # legacy (pre-LSM) store upgrade: its single live segments dir
-        # already covers every committed pid. Record that BEFORE the first
-        # additive append — with compacted_pids empty, _finish_append would
-        # re-compact those pids into a SECOND live dir and every old
-        # posting would exist twice (df sums and scores double).
-        if needs_repair:
-            # crashed pre-upgrade append: the fragment set is the single
-            # source of truth — a full merge covers every committed pid
-            # exactly once and stamps compacted_pids; staged pids without
-            # manifests are still pending and repaired below.
-            from visionsearch_spark.index.spimi import compact_store
-
-            store = compact_store(spark, store.root, n_partitions)
-        else:
-            meta["compacted_pids"] = sorted(store.done_partitions())
-            store.write_meta(meta)
-        meta = store.read_meta()
     delta = pending_rows(
         transcripts.select("conv_id", "turn_idx", "text"), store
     )
@@ -193,7 +175,7 @@ def incremental_build(transcripts: DataFrame, root: str,
         spark, store, meta, n_partitions,
         delta_stats=None if needs_repair else delta_stats,
     )
-    n_dirs = len(store.read_meta().get("segment_dirs") or [])
+    n_dirs = len(store.read_meta()["segment_dirs"])
     if n_dirs > max_live_dirs:
         needs_compact = True
     elif n_dirs > 1:
@@ -259,13 +241,12 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
     crash.
 
     delta_stats = (delta_rows, delta_sum_dl) from the just-committed
-    append write: with it (and a meta that carries sum_dl) corpus stats
-    update incrementally — no O(N) staged re-scan per append. Repair
-    re-runs and legacy metas (no sum_dl) fall back to the full scan; the
-    staged table remains the source of truth either way."""
+    append write: with it corpus stats update incrementally from meta
+    — no O(N) staged re-scan per append. Repair re-runs fall back to the
+    full scan; the staged table remains the source of truth either way."""
     from visionsearch_spark.index.spimi import _compact_segments, spimi_pending
 
-    if delta_stats is not None and meta.get("sum_dl") is not None:
+    if delta_stats is not None:
         # meta stats already exclude APPLIED tombstones (purge fold,
         # spimi.compact_store) — the increment keeps that property
         n_docs = int(meta["n_docs"]) + delta_stats[0]
@@ -289,7 +270,7 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
     # independent, so an append never rewrites or re-reads the existing
     # index (LSM contract; compact_store() is the periodic full merge).
     done = store.done_partitions()
-    already = set(meta.get("compacted_pids") or [])
+    already = set(meta["compacted_pids"])
     delta_pids = sorted(set(done) - already)
     if delta_pids:
         frag_paths = [store.fragment_path(p) for p in delta_pids]
@@ -327,12 +308,12 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
                 bloom_scratch=_bloom_scratch_path(store, next_ep),
             ),
         )
-        seg_dirs = [os.path.basename(p) for p in store.segment_paths()]
-        ts_dirs = [os.path.basename(p) for p in store.term_stats_paths()]
         meta.update({
             "epoch": next_ep,
-            "segment_dirs": seg_dirs + [f"segments-{next_ep:06d}"],
-            "term_stats_dirs": ts_dirs + [f"term_stats-{next_ep:06d}"],
+            "segment_dirs": meta["segment_dirs"]
+            + [f"segments-{next_ep:06d}"],
+            "term_stats_dirs": meta["term_stats_dirs"]
+            + [f"term_stats-{next_ep:06d}"],
             "compacted_pids": sorted(done),
             # dirs retired by the previous full compaction are now two
             # flips old — no reader can still hold them
