@@ -148,9 +148,8 @@ def test_build_and_compact_never_fall_back_to_rescan(
         spark, transcripts, tmp_path_factory):
     """Plan-shape pin for the r7 fused sidecar path: builds and full
     compactions must cover every part file from the kernel-written
-    scratch filters alone — no post-write write_segment_blooms job, no
-    per-file write_bloom_for_file fallback (either would re-read the
-    fresh segments)."""
+    scratch filters alone — no per-file write_bloom_for_file fallback
+    (it would re-read the fresh segments)."""
     from unittest import mock
 
     from visionsearch_spark.index.spimi import compact_store
@@ -160,10 +159,7 @@ def test_build_and_compact_never_fall_back_to_rescan(
     def boom(*a, **k):
         raise AssertionError(f"sidecar fallback used: {a!r}")
 
-    with mock.patch.object(bloom, "write_segment_blooms",
-                           side_effect=boom), \
-            mock.patch.object(bloom, "write_bloom_for_file",
-                              side_effect=boom):
+    with mock.patch.object(bloom, "write_bloom_for_file", side_effect=boom):
         store = build_index(transcripts, root, n_partitions=8, n_shards=16)
         compact_store(spark, root, n_partitions=8)
     _assert_sidecars_match_file_terms(store)
@@ -196,7 +192,7 @@ def test_prune_keeps_only_matching_files(bloom_store):
     import pyarrow.parquet as pq
 
     term = _rare_term(bloom_store)
-    files = wand._segment_files(bloom_store)
+    files = bloom_store.segment_files()
     kept = wand._bloom_prune(files, [term])
     # df==1 term lives in ONE of the 8 files; <5% FPR on the rest
     assert 1 <= len(kept) < len(files)
@@ -209,7 +205,7 @@ def test_prune_keeps_only_matching_files(bloom_store):
 
 
 def test_missing_sidecar_file_is_kept(bloom_store, tmp_path):
-    files = wand._segment_files(bloom_store)
+    files = bloom_store.segment_files()
     victim = files[0][1]
     side = bloom.bloom_path(victim)
     saved = side + ".saved"
@@ -269,10 +265,7 @@ def test_append_writes_sidecars_via_kernel(spark, transcripts,
     def boom(*a, **k):
         raise AssertionError(f"sidecar fallback used: {a!r}")
 
-    with mock.patch.object(bloom, "write_segment_blooms",
-                           side_effect=boom), \
-            mock.patch.object(bloom, "write_bloom_for_file",
-                              side_effect=boom):
+    with mock.patch.object(bloom, "write_bloom_for_file", side_effect=boom):
         incremental_build(transcripts, root, n_partitions=8)
     store = IndexStore(root)
     assert len(store.segment_paths()) > 1  # base + delta dirs live

@@ -3,10 +3,13 @@ lists its pid in `compacted_pids`, then IndexStore.gc_dirs deletes it.
 
 Contract under test (index/spimi.py `_merge_input`, index/store.py
 `gc_dirs`):
-- build_index, incremental_build and compact_store each flip meta and
-  then GC; a crash before the flip or part-way through the GC is
-  repaired by re-running the same call — results match the oracle and
-  no posting is counted twice;
+- build_index, incremental_build and compact_store each end in the one
+  epoch writer and the one flip; a crash part-way through the sidecar
+  attach, before the flip or part-way through the GC is repaired by
+  re-running the same call — results match the oracle, no posting is
+  counted twice and every sidecar matches its file;
+- a compaction whose merge input is empty (every conv deleted) still
+  commits a clean, searchable store that returns nothing;
 - a full compaction merges the live segment dirs (plus uncovered
   fragments), so compacting an already compacted store rewrites the
   same postings and term_stats;
@@ -44,6 +47,8 @@ from visionsearch_spark.streaming.incremental import (
     incremental_build,
     upsert_convs,
 )
+
+from test_bloom import _assert_sidecars_match_file_terms
 
 QUERIES = [("join filter", 10), ("window", 5)]
 
@@ -129,6 +134,22 @@ def _crash_mid_gc(monkeypatch) -> None:
     monkeypatch.setattr(os, "remove", remove)
 
 
+def _crash_mid_sidecar_attach(monkeypatch) -> None:
+    """Move one scratch filter into place as a sidecar, then die on the
+    next."""
+    real = os.replace
+    moved: list[str] = []
+
+    def replace(src, dst, *a, **kw):
+        if os.path.basename(dst).startswith("_bloom-"):
+            if moved:
+                raise Crash("part-way through the sidecar attach")
+            moved.append(dst)
+        real(src, dst, *a, **kw)
+
+    monkeypatch.setattr(os, "replace", replace)
+
+
 @pytest.fixture(scope="module")
 def bases(spark, halves, tmp_path_factory):
     """Per operation, the store it runs on (None = a fresh root)."""
@@ -148,8 +169,9 @@ def bases(spark, halves, tmp_path_factory):
             "compact_store": crashed}
 
 
-@pytest.mark.parametrize("crash", [_crash_before_flip, _crash_mid_gc],
-                         ids=["before_flip", "mid_gc"])
+@pytest.mark.parametrize("crash", [_crash_mid_sidecar_attach,
+                                   _crash_before_flip, _crash_mid_gc],
+                         ids=["mid_sidecar_attach", "before_flip", "mid_gc"])
 @pytest.mark.parametrize("op", ["build_index", "incremental_build",
                                 "compact_store"])
 def test_crash_at_commit_point_then_rerun(spark, halves, bases, tmp_path,
@@ -180,6 +202,8 @@ def test_crash_at_commit_point_then_rerun(spark, halves, bases, tmp_path,
     assert not [name for name, rec in report.items()
                 if rec["warnings"] and name != "fragments"], report
     _check_oracle(spark, store, pdf)
+    assert not [n for n in os.listdir(root) if n.startswith("_bloomstage-")]
+    _assert_sidecars_match_file_terms(store)
     if _compacted_fragments(store):
         # a no-op rerun does not flip: the GC leftover stays, flagged,
         # until the next flip deletes it
@@ -188,6 +212,38 @@ def test_crash_at_commit_point_then_rerun(spark, halves, bases, tmp_path,
         _check_oracle(spark, store, pdf)
     assert not _compacted_fragments(store)
     assert not [w for rec in fsck(root).values() for w in rec["warnings"]]
+
+
+def test_compaction_of_fully_deleted_store_is_empty(spark, halves, tmp_path):
+    """Delete every conv, then compact: the merge input is empty, so no
+    kernel task writes a scratch filter and the segment file Spark still
+    writes gets its sidecar from the per-file fallback. The store stays
+    clean and every search returns nothing."""
+    from unittest import mock
+
+    from visionsearch_spark.index import bloom
+    from visionsearch_spark.query.serving import LocalSearcher
+
+    first_pdf, _full_pdf = halves
+    root = str(tmp_path / "store")
+    store = build_index(_tx(spark, first_pdf), root, n_partitions=4)
+    convs = sorted(first_pdf["conv_id"].unique())
+    delete_convs(spark, store,
+                 spark.createDataFrame([(c,) for c in convs],
+                                       "conv_id string"))
+    with mock.patch.object(bloom, "write_bloom_for_file",
+                           wraps=bloom.write_bloom_for_file) as fallback:
+        compact_store(spark, root, n_partitions=4)
+    assert fallback.call_count == len(store.segment_files()) >= 1
+
+    assert not [(n, rec) for n, rec in fsck(root).items()
+                if rec["errors"] or rec["warnings"]]
+    assert _df_totals(store) == {}
+    _assert_sidecars_match_file_terms(store)
+    assert not [n for n in os.listdir(root) if n.startswith("_bloomstage-")]
+    for q, k in QUERIES:
+        assert topk(spark, store, q, k=k).collect() == []
+        assert LocalSearcher(store).search(q, k=k) == []
 
 
 def test_compaction_of_compacted_store_is_row_identical(spark, halves,

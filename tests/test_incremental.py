@@ -513,7 +513,7 @@ def test_fast_path_holds_at_many_live_dirs(spark, transcripts_pdf,
     plain AND sideband queries — straddling dir-boundary shards
     included. Then one more append with a tight file budget must
     trigger the file-count compaction arm."""
-    from visionsearch_spark.query.wand import _segment_files, batch_topk
+    from visionsearch_spark.query.wand import batch_topk
 
     queries = [(0, "join filter stream", 7), (1, "vector", 4)]
 
@@ -567,7 +567,7 @@ def test_fast_path_holds_at_many_live_dirs(spark, transcripts_pdf,
     # file-count compaction arm: next append (4 genuinely new convs —
     # a no-op delta early-returns before the policy) exceeds
     # max_live_files
-    n_files = len(_segment_files(store))
+    n_files = len(store.segment_files())
     assert n_files >= 40  # 11 dirs x 4 partitions (minus small dirs)
     chunk = pdf  # all 48 convs, 4 of them new
     tx = spark.createDataFrame(chunk, schema=TRANSCRIPTS_SCHEMA)
@@ -576,7 +576,7 @@ def test_fast_path_holds_at_many_live_dirs(spark, transcripts_pdf,
                               n_shards=8)
     meta = store.read_meta()
     assert len(meta["segment_dirs"]) == 1, meta["segment_dirs"]
-    assert len(_segment_files(store)) <= 4
+    assert len(store.segment_files()) <= 4
     # post-compaction correctness on the new (4-convs-larger) corpus
     got = batch_topk(spark, store, queries).orderBy(
         "query_id", "rank").collect()

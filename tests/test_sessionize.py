@@ -33,6 +33,20 @@ STREAM_SCHEMA = (
 SENTINEL_USER = -1
 
 
+def _spool_write(table: pa.Table, path: str, **kw) -> None:
+    """Write one spool file that ARRIVES after every file already in its
+    dir. The file source takes files in modification-time order, and
+    files written within the same millisecond tie in an arbitrary
+    order; the order-sensitive operators here need the write order."""
+    pq.write_table(table, path, **kw)
+    d = os.path.dirname(path)
+    prior = [os.stat(os.path.join(d, f)).st_mtime for f in os.listdir(d)
+             if os.path.join(d, f) != path]
+    if prior:
+        t = max(prior) + 1
+        os.utime(path, (t, t))
+
+
 def test_fold_matches_session_window_semantics(spark):
     """Boundary pin: an event at exactly last+gap starts a NEW session
     (session_window's end is exclusive); one inside extends. Checked
@@ -91,7 +105,7 @@ def spool(spark, tmp_path_factory):
     step = (len(pdf) + n_chunks - 1) // n_chunks
     for i in range(n_chunks):
         chunk = pdf.iloc[i * step:(i + 1) * step]
-        pq.write_table(
+        _spool_write(
             pa.Table.from_pandas(chunk, preserve_index=False),
             os.path.join(root, f"{i:04d}.parquet"),
             coerce_timestamps="us",
@@ -114,7 +128,7 @@ def _write_sentinel(spool_dir: str, max_us: int) -> None:
             "value": pa.array([0.0], pa.float64()),
         }
     )
-    pq.write_table(sentinel, path)
+    _spool_write(sentinel, path)
 
 
 def _run_stream(spark, spool_dir: str, transform, ckpt: str, out: str) -> None:
@@ -236,7 +250,7 @@ def test_streaming_dedup_equals_batch_keep_first(spark, tmp_path_factory):
     os.makedirs(spool_dir)
     chunks = [rows[: n // 2], rows[n // 2: n], rows[n:]]
     for i, chunk in enumerate(chunks):
-        pq.write_table(
+        _spool_write(
             pa.table(
                 {
                     "doc_id": pa.array([c[0] for c in chunk], pa.int64()),
@@ -267,7 +281,7 @@ def test_streaming_dedup_equals_batch_keep_first(spark, tmp_path_factory):
     run()
     # restart with one more chunk: half re-duplicates, half fresh
     extra = [(20000, rows[0][1]), (20001, "a brand new unseen text")]
-    pq.write_table(
+    _spool_write(
         pa.table(
             {
                 "doc_id": pa.array([c[0] for c in extra], pa.int64()),

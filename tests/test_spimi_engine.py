@@ -298,9 +298,7 @@ def test_segment_files_never_split_under_session_conf(
     try:
         root = str(tmp_path_factory.mktemp("nosplit"))
         store = build_index(transcripts, root, n_partitions=4, n_shards=8)
-        from visionsearch_spark.query.wand import _segment_files
-
-        files = _segment_files(store)
+        files = store.segment_files()
         assert 0 < len(files) <= 4, files  # never more files than pids
         got = topk(spark, store, "join filter", k=5).collect()
         # scores must be complete per-doc sums: compare against a store

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -24,15 +25,30 @@ CACHE_VERSION = "v3"  # v3: positional postings (pos_bin) in the main store
 
 
 def _cached_store(tag: str, sf_dir: str) -> IndexStore:
-    """The process-shared temp store for one (corpus, variant). The key
-    carries the store layout, so a cache written under another layout is
-    never reopened (its meta would be refused) — the next call rebuilds
-    under a fresh key instead."""
+    """The process-shared temp store for one (corpus, variant), at a path
+    keyed on (tag, sf_dir) alone. A stamp file inside records the
+    CACHE_VERSION and store LAYOUT the store was built under; a dir with
+    no stamp or another one is deleted first, so a version or layout
+    bump rebuilds the store in place instead of leaving the old one
+    behind under a key nothing opens again."""
     key = hashlib.sha1(
-        f"{CACHE_VERSION}{tag}:layout{LAYOUT}:{os.path.abspath(sf_dir)}"
-        .encode()
+        f"{tag}:{os.path.abspath(sf_dir)}".encode()
     ).hexdigest()[:12]
-    return IndexStore(os.path.join(tempfile.gettempdir(), f"vss_idx_{key}"))
+    root = os.path.join(tempfile.gettempdir(), f"vss_idx_{key}")
+    stamp_path = os.path.join(root, "_cache_stamp")
+    stamp = f"{CACHE_VERSION} layout{LAYOUT}"
+    try:
+        with open(stamp_path) as f:
+            current = f.read() == stamp
+    except OSError:
+        current = False
+    if not current:
+        shutil.rmtree(root, ignore_errors=True)
+        os.makedirs(root)
+        with open(stamp_path + ".tmp", "w") as f:
+            f.write(stamp)
+        os.replace(stamp_path + ".tmp", stamp_path)
+    return IndexStore(root)
 
 
 def documents_as_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:

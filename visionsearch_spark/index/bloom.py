@@ -34,6 +34,8 @@ import struct
 
 import numpy as np
 
+from visionsearch_spark.index.store import parquet_files
+
 MAGIC = b"VSSB1\0"
 BITS_PER_KEY = 10          # ~1% FPR at k=7
 K_HASHES = 7
@@ -156,18 +158,15 @@ def write_partition_bloom(scratch_dir: str, terms) -> None:
 def attach_scratch_blooms(segments_dir: str, scratch_dir: str) -> None:
     """Pair each written part file with its kernel-written scratch
     filter (part file number == partition id) and move it into place as
-    the file's sidecar. A part file whose scratch filter is missing
-    (e.g. a writer that split differently) falls back to the read-back
-    path — sidecar coverage is total either way. Removes the scratch
-    dir."""
+    the file's sidecar. A part file with no scratch filter — the one
+    empty file Spark writes when the merge input is empty, whose kernel
+    saw no terms — gets its sidecar from `write_bloom_for_file`, so
+    sidecar coverage is total either way. Removes the scratch dir."""
     import shutil
 
-    for f in sorted(os.listdir(segments_dir)):
-        if not f.endswith(".parquet") or f.startswith(("_", ".")):
-            continue
-        seg = os.path.join(segments_dir, f)
+    for seg in parquet_files(segments_dir):
         try:
-            part_no = int(f.split("-")[1])
+            part_no = int(os.path.basename(seg).split("-")[1])
         except (IndexError, ValueError):
             part_no = -1
         src = os.path.join(scratch_dir, f"pid-{part_no:05d}.bin")
@@ -176,18 +175,3 @@ def attach_scratch_blooms(segments_dir: str, scratch_dir: str) -> None:
         else:
             write_bloom_for_file(seg)
     shutil.rmtree(scratch_dir, ignore_errors=True)
-
-
-def write_segment_blooms(spark, segments_dir: str) -> None:
-    """Distributed sidecar pass over every parquet file in a freshly
-    written segment dir — one task per file, no driver collect of bloom
-    bytes (each task writes its own sidecar next to its file)."""
-    files = sorted(
-        os.path.join(segments_dir, f)
-        for f in os.listdir(segments_dir)
-        if f.endswith(".parquet") and not f.startswith(("_", "."))
-    )
-    if not files:
-        return
-    sc = spark.sparkContext
-    sc.parallelize(files, len(files)).foreach(write_bloom_for_file)

@@ -23,23 +23,26 @@ Pipeline (SURVEY.md §3.2 "ours"):
               payload (_build_block_batches); fragment parquet +
               manifest json commit ATOMICALLY per pid, committed pids
               are skipped (resume).
-  3. MERGE    the live segment dirs + the fragments of committed pids
-              no live dir covers yet (`_merge_input`; on a fresh build
-              that is every fragment) -> term_stats (sum of block df)
-              and compacted segments, two independent jobs run
-              overlapped: blocks of one term have globally disjoint
-              docid ranges, so merging is concat-in-min_docid-order +
-              re-chunk — never a posting-level merge sort — over ONE
-              range(shard) exchange whose output order is already the
-              final file order. Sharding by docid range bounds per-task
-              work for hot terms (the salted-repartition skew defense of
-              the north rule: fanout grows with df because a hot term
-              spans more shards).
-  4. COMMIT   segments written partitioned by shard (query-side docid
-              co-location comes from this), meta.json snapshot flip
+  3. MERGE    `_write_epoch`, the one epoch writer (build, append and
+              compaction all end in it): blocks -> term_stats (sum of
+              block df) and compacted segments partitioned by shard
+              (query-side docid co-location comes from this), one Bloom
+              sidecar per file, two independent jobs run overlapped.
+              A full merge feeds it the live segment dirs + the
+              fragments of committed pids no live dir covers yet
+              (`_merge_input`; on a fresh build that is every fragment).
+              Blocks of one term have globally disjoint docid ranges, so
+              merging is concat-in-min_docid-order + re-chunk — never a
+              posting-level merge sort — over ONE range(shard) exchange
+              whose output order is already the final file order.
+              Sharding by docid range bounds per-task work for hot terms
+              (the salted-repartition skew defense of the north rule:
+              fanout grows with df because a hot term spans more shards).
+  4. COMMIT   `_flip`, the one publish step: the meta.json snapshot flip
               (`compacted_pids` now lists every merged pid), then
-              IndexStore.gc_dirs deletes the covered fragments: each
-              posting is stored once, in the live segment dirs.
+              IndexStore.gc_dirs deletes the covered fragments — each
+              posting is stored once, in the live segment dirs — and
+              the store's df memo is dropped.
 
 Scale notes: every stage is linear in its partition; nothing funnels
 through the driver except the tiny offsets array (docid.py) and meta.
@@ -546,47 +549,62 @@ def build_index(
                       fail_pids=frozenset(fail_partitions))
     mark("spimi")
 
-    # ---- merge -> term_stats + segments (next epoch) ----
-    # written into fresh epoch dirs, then the meta pointer flips atomically:
-    # a reader concurrent with this merge serves the previous snapshot.
-    frags = _merge_input(spark, store, meta)
-    next_ep = int(meta.get("epoch") or 0) + 1
-    shard_range = int(meta["shard_range"])
-    # term_stats and the segment merge are INDEPENDENT jobs over the
-    # same immutable fragments — submit them from two driver threads so
-    # the merge's tasks back-fill cores the tiny term_stats agg leaves
-    # idle (guide §2.6 overlap-independent-jobs; actions were only
-    # sequential because this code called them sequentially)
-    _run_overlapped(
-        lambda: (
-            frags.groupBy("term")
-            .agg(F.sum("n").alias("df"))
-            .write.mode("overwrite")
-            .parquet(store.epoch_path("term_stats", next_ep))
-        ),
-        lambda: write_segments(
-            _compact_segments(frags, shard_range,
-                              n_tasks=int(meta["n_partitions"]),
-                              bloom_scratch=_bloom_scratch_path(store, next_ep)),
-            int(meta["n_partitions"]),
-            store.epoch_path("segments", next_ep),
-            bloom_scratch=_bloom_scratch_path(store, next_ep),
-        ),
-    )
+    # ---- merge -> term_stats + segments (next epoch), then the flip ----
+    epoch = _write_epoch(store, meta, _merge_input(spark, store, meta),
+                         int(meta["n_partitions"]))
     mark("term_stats+compact_write")
-    prev_live = meta["segment_dirs"] + meta["term_stats_dirs"]
     meta.update({
+        **epoch,
+        "retired_dirs": meta["segment_dirs"] + meta["term_stats_dirs"],
         "phase": "built",
-        "epoch": next_ep,
-        "segment_dirs": [f"segments-{next_ep:06d}"],
-        "term_stats_dirs": [f"term_stats-{next_ep:06d}"],
-        "compacted_pids": sorted(store.done_partitions()),
-        "retired_dirs": prev_live,
     })
     meta["stage_sec"] = {**meta.get("stage_sec", {}), **stage_sec}
+    _flip(store, meta)
+    return store
+
+
+def _write_epoch(store: IndexStore, meta: dict, frags: DataFrame,
+                 n_partitions: int) -> dict:
+    """THE epoch writer (build, append and compaction all end here): turn
+    the blocks `frags` into a fresh segments/term_stats dir pair for the
+    next epoch. Returns the meta fields naming it — `epoch`, the two new
+    dirs as one-element `segment_dirs`/`term_stats_dirs` lists, and
+    `compacted_pids` — which the caller folds into its own meta (a full
+    merge replaces the live lists, an append extends them) and publishes
+    with `_flip`. Until then nothing points at the new dirs: a reader
+    concurrent with the write serves the previous snapshot.
+
+    term_stats and the segment merge are INDEPENDENT jobs over the same
+    immutable blocks — submitted from two driver threads so the merge's
+    tasks back-fill cores the tiny term_stats agg leaves idle (guide
+    §2.6 overlap-independent-jobs)."""
+    epoch = int(meta.get("epoch") or 0) + 1
+    _run_overlapped(
+        lambda: frags.groupBy("term").agg(F.sum("n").alias("df"))
+        .write.mode("overwrite")
+        .parquet(store.epoch_path("term_stats", epoch)),
+        lambda: write_segments(frags, int(meta["shard_range"]), n_partitions,
+                               store.epoch_path("segments", epoch),
+                               _bloom_scratch_path(store, epoch)),
+    )
+    return {
+        "epoch": epoch,
+        "segment_dirs": [f"segments-{epoch:06d}"],
+        "term_stats_dirs": [f"term_stats-{epoch:06d}"],
+        "compacted_pids": sorted(store.done_partitions()),
+    }
+
+
+def _flip(store: IndexStore, meta: dict) -> None:
+    """Publish `meta` — the one commit of build, append and compaction:
+    the atomic meta write (one os.replace — readers resolve the old
+    snapshot or the new one, never a torn table), then the GC of what it
+    retired or covered, then the df memo of this root (df/N moved)."""
+    from visionsearch_spark.query.wand import invalidate_term_df_memo
+
     store.write_meta(meta)
     store.gc_dirs()
-    return store
+    invalidate_term_df_memo(store.root)
 
 
 def _bloom_scratch_path(store: IndexStore, epoch: int) -> str:
@@ -604,9 +622,6 @@ def _run_overlapped(*thunks) -> None:
     exceptions re-raise in submission order."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(thunks) == 1:
-        thunks[0]()
-        return
     with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
         futs = [pool.submit(t) for t in thunks]
         for f in futs:
@@ -837,26 +852,10 @@ def compact_store(spark: SparkSession, root: str,
             "sum_dl": sum_dl,
             "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
         })
-    next_ep = int(meta.get("epoch") or 0) + 1
-    # independent jobs — overlap (guide §2.6; same pattern as build)
-    _run_overlapped(
-        lambda: frags.groupBy("term").agg(F.sum("n").alias("df")).write
-        .mode("overwrite").parquet(store.epoch_path("term_stats", next_ep)),
-        lambda: write_segments(
-            _compact_segments(frags, int(meta["shard_range"]),
-                              n_tasks=n_partitions,
-                              bloom_scratch=_bloom_scratch_path(store, next_ep)),
-            n_partitions, store.epoch_path("segments", next_ep),
-            bloom_scratch=_bloom_scratch_path(store, next_ep),
-        ),
-    )
-    prev_live = meta["segment_dirs"] + meta["term_stats_dirs"]
+    epoch = _write_epoch(store, meta, frags, n_partitions)
     meta.update({
-        "epoch": next_ep,
-        "segment_dirs": [f"segments-{next_ep:06d}"],
-        "term_stats_dirs": [f"term_stats-{next_ep:06d}"],
-        "compacted_pids": sorted(store.done_partitions()),
-        "retired_dirs": prev_live,
+        **epoch,
+        "retired_dirs": meta["segment_dirs"] + meta["term_stats_dirs"],
         "phase": "built",
     })
     if meta.get("tombstone_dirs"):
@@ -865,30 +864,24 @@ def compact_store(spark: SparkSession, root: str,
             + meta["tombstone_dirs"]
         )
         meta["tombstone_dirs"] = []
-    store.write_meta(meta)
-    store.gc_dirs()
-    from visionsearch_spark.query.wand import invalidate_term_df_memo
-
-    invalidate_term_df_memo(store.root)
+    _flip(store, meta)
     return store
 
 
-def write_segments(compacted, n_partitions: int, path: str,
-                   blooms: bool = True,
-                   bloom_scratch: str | None = None) -> None:
-    """THE segment write: one file per partition of an input that
-    `_compact_segments` already range-partitioned by shard and emitted in
-    (term, shard, min_docid) order. ONE FILE PER PARTITION is a
-    correctness invariant, not a perf preference — the query fast path
-    assigns whole FILES to tasks and relies on each file holding complete
-    shards (PLANS.md §17); a deployment-level maxRecordsPerFile would
-    silently split a shard's term blocks across files and turn per-task
-    sums partial. One shared implementation (build, compact, append) so
-    the invariant cannot drift (the spimi_pending rule, CLAUDE.md r3).
+def write_segments(blocks: DataFrame, shard_range: int, n_partitions: int,
+                   path: str, bloom_scratch: str) -> None:
+    """THE segment write (called only by `_write_epoch`): merge `blocks`
+    with `_compact_segments` and write one file per partition of its
+    output, with one term Bloom sidecar per file. ONE FILE PER PARTITION
+    is a correctness invariant, not a perf preference — the query fast
+    path assigns whole FILES to tasks and relies on each file holding
+    complete shards (PLANS.md §17); a deployment-level maxRecordsPerFile
+    would silently split a shard's term blocks across files and turn
+    per-task sums partial. Build, compaction and append all reach it
+    through the one epoch writer, so the invariant cannot drift.
 
-    Partitioning/order contract (established by _compact_segments, which
-    MUST be this function's producer — r7 fused the old second
-    range-exchange + re-sort into that one upstream exchange):
+    Partitioning/order contract (established by the _compact_segments
+    call below, the one exchange between the blocks and the files):
       * RANGE-partitioned by shard, not hash: equal keys stay together
         (shard-complete files hold), every partition fills (hashing n
         shard keys into n buckets left ~1/e of the files empty), row
@@ -903,52 +896,34 @@ def write_segments(compacted, n_partitions: int, path: str,
         read path. Trade-off: LocalSearcher(shards=...) per-shard loads
         scan more row groups — a once-per-process load, vs pruning on
         every query."""
-    if bloom_scratch is not None:
-        # clear BEFORE the write job starts: a crashed previous attempt
-        # leaves scratch filters keyed by THAT run's range boundaries
-        # (repartitionByRange re-samples per job), and pairing a stale
-        # filter with a fresh part file would be a FALSE-NEGATIVE bloom
-        # — wrong pruning, wrong results. Empty scratch + rerun is
-        # always safe: this run's tasks repopulate it.
-        import shutil
+    import shutil
 
-        shutil.rmtree(bloom_scratch, ignore_errors=True)
+    from visionsearch_spark.index.bloom import attach_scratch_blooms
+
+    # clear BEFORE the write job starts: a crashed previous attempt
+    # leaves scratch filters keyed by THAT run's range boundaries
+    # (repartitionByRange re-samples per job), and pairing a stale
+    # filter with a fresh part file would be a FALSE-NEGATIVE bloom —
+    # wrong pruning, wrong results. Empty scratch + rerun is always
+    # safe: this run's tasks repopulate it.
+    shutil.rmtree(bloom_scratch, ignore_errors=True)
     (
-        compacted
+        _compact_segments(blocks, shard_range, n_tasks=n_partitions,
+                          bloom_scratch=bloom_scratch)
         .write.option("maxRecordsPerFile", 0)
         .option("parquet.block.size", 8 * 1024 * 1024)
         .mode("overwrite")
         .parquet(path)
     )
-    # per-file term Bloom sidecars (planner file pruning; index/bloom.py).
-    # bloom_scratch (r7): the compaction kernel — which runs in THIS
-    # write's stage and sees every term of its partition anyway — wrote
-    # each partition's filter to the scratch dir during the write; pair
-    # them with the part files (part number == partition id) instead of
-    # re-reading the fresh segments in a second Spark job. Pass the SAME
-    # path given to _compact_segments(bloom_scratch=...). Builds,
-    # compactions AND appends all use it since r7 (the r6 blooms=False
-    # append deferral priced a sidecar as the full re-read job this path
-    # deleted; delta dirs are now born prunable). blooms=False remains
-    # for callers that genuinely want bare files; a file with no sidecar
-    # is simply never pruned (wand._bloom_prune keeps it — never wrong
-    # results), same rule as a crash between the two writes.
-    if blooms:
-        from visionsearch_spark.index.bloom import (
-            attach_scratch_blooms,
-            write_segment_blooms,
-        )
-
-        if bloom_scratch is not None and os.path.isdir(bloom_scratch):
-            attach_scratch_blooms(path, bloom_scratch)
-        else:
-            write_segment_blooms(compacted.sparkSession, path)
-    elif bloom_scratch is not None:
-        # bare write over a scratch-writing plan: drop the unused
-        # kernel filters so the scratch dir can't outlive the job
-        import shutil
-
-        shutil.rmtree(bloom_scratch, ignore_errors=True)
+    # per-file term Bloom sidecars (planner file pruning; index/bloom.py):
+    # the compaction kernel runs in THIS write's stage and sees every
+    # term of its partition anyway, so it wrote each partition's filter
+    # to the scratch dir; pair them with the part files (part number ==
+    # partition id) instead of re-reading the fresh segments in a second
+    # Spark job. The attach runs before the meta flip, so a crash
+    # part-way through it leaves an epoch no meta names; the rerun
+    # writes that epoch again from a cleared scratch dir.
+    attach_scratch_blooms(path, bloom_scratch)
 
 
 def _compact_segments(frags: DataFrame, shard_range: int,
@@ -959,15 +934,12 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     concat-in-min_docid-order + re-chunk to BLOCK_SIZE (a metadata-level
     merge, never a posting-level merge sort). The input is
     `_merge_input`'s blocks (build, compaction) or an append's delta
-    fragments.
+    fragments; write_segments is its one production caller.
 
     Partitioned by RANGE of shard — the SAME partitioning the segment
     write needs — and sorted (term, shard, min_docid), so the kernel's
     output leaves each partition already in final file order and
-    merge_segments can write it with NO second exchange (r7: the old
-    chain was hash(term, shard) exchange -> kernel -> range(shard)
-    exchange -> re-sort -> write; one full shuffle+sort of every block
-    existed only to undo the other's partitioning).
+    write_segments writes it with NO second exchange.
 
     The kernel is fully vectorized (r7): ALL blocks of the partition are
     varint-decoded in one pass each (LEB128 streams concatenate), merged
@@ -977,17 +949,16 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     way when the store is positional; an input mixing positional and
     NULL blocks raises (`_has_positions`).
 
-    bloom_scratch (r7): when set, each kernel task ALSO writes its
-    partition's term Bloom filter to `{bloom_scratch}/pid-NNNNN.bin` —
-    the partition's distinct terms are already in hand as the sorted
-    run boundaries, and because write_segments emits ONE file per
-    partition in the SAME stage (part file number == partition id),
-    this replaces the post-write sidecar job's full re-read of the
-    fresh segments with zero extra passes (guide §1.2 step 1: remove a
-    pass). write_segments attaches the scratch filters to the final
-    file names after the write commits. Atomic per attempt
-    (tmp+replace); retried/speculative attempts rewrite identical
-    bytes, so last-wins is safe."""
+    bloom_scratch: each kernel task ALSO writes its partition's term
+    Bloom filter to `{bloom_scratch}/pid-NNNNN.bin` — the partition's
+    distinct terms are already in hand as the sorted run boundaries, and
+    because write_segments emits ONE file per partition in the SAME
+    stage (part file number == partition id), the sidecars cost no
+    re-read of the fresh segments (guide §1.2 step 1: remove a pass).
+    write_segments attaches the scratch filters to the final file names
+    after the write commits. Atomic per attempt (tmp+replace);
+    retried/speculative attempts rewrite identical bytes, so last-wins
+    is safe. None (a kernel run with no write) writes no filters."""
     from visionsearch_spark.index.codec import (
         decode_blocks,
         decode_positions,

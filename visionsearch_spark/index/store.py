@@ -171,6 +171,12 @@ class IndexStore:
     def term_stats_paths(self) -> list[str]:
         return self._live_dirs("term_stats_dirs")
 
+    def segment_files(self) -> list[tuple[int, str]]:
+        """Every live segment data file across the LSM dirs, as
+        (size_bytes, path) — O(n_files) driver listing + stat."""
+        return [(os.path.getsize(p), p)
+                for d in self.segment_paths() for p in parquet_files(d)]
+
     def tombstone_paths(self, applied: bool = False) -> list[str]:
         """Absolute paths of the PENDING tombstone dirs (queries mask
         these); applied=True returns the folded-into-segments dirs

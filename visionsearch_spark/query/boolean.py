@@ -5,7 +5,7 @@
   ZERO shuffle on the same file-aligned plan as scoring
   (`wand._partial_scores`): every posting for a given docid — all
   terms — lives in exactly ONE segment file (files are shard-complete
-  per the `spimi.write_segments` invariant, LSM dirs own disjoint
+  per the `spimi._write_epoch` invariant, LSM dirs own disjoint
   docid ranges), so per-file set algebra is globally exact and tasks
   emit only the (small) matching docid sets. Only `docids_bin` is
   decoded — tf/dl bytes are never read.

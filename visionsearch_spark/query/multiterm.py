@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import tokenize
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.store import IndexStore, parquet_files
 from visionsearch_spark.query import termdict, wand
 from visionsearch_spark.query.termdict import _prefix_bounds, _top_cap
 
@@ -61,14 +61,8 @@ _WILD_RE = re.compile(r"^[0-9a-z*?]+$")
 def _stats_nbytes(store: IndexStore) -> int:
     import os
 
-    total = 0
-    for d in store.term_stats_paths():
-        for root, _dirs, files in os.walk(d):
-            total += sum(
-                os.path.getsize(os.path.join(root, f))
-                for f in files if f.endswith(".parquet")
-            )
-    return total
+    return sum(os.path.getsize(f) for d in store.term_stats_paths()
+               for f in parquet_files(d))
 
 
 def _use_spark(store: IndexStore, force: bool | None) -> bool:

@@ -519,20 +519,6 @@ def _file_shard_range(path: str) -> tuple[int, int]:
     return rng
 
 
-def _segment_files(store: IndexStore) -> list[tuple[int, str]]:
-    """Every live segment parquet file across all LSM dirs, as
-    (size_bytes, path). Listing + stat is O(n_files) driver metadata."""
-    import os
-
-    files = []
-    for d in store.segment_paths():
-        for f in sorted(os.listdir(d)):
-            if f.endswith(".parquet") and not f.startswith(("_", ".")):
-                p = os.path.join(d, f)
-                files.append((os.path.getsize(p), p))
-    return files
-
-
 # per-file bloom cache: files are immutable (LSM append-only), keyed
 # (path, mtime). Count-bounded; worst-case entry is CAP_BITS/8 bytes.
 _BLOOM_CACHE: dict[tuple[str, float], object] = {}
@@ -605,7 +591,7 @@ def _file_bins(spark: SparkSession, store: IndexStore, terms: list[str],
     Parallelism caps at the file count (= build n_partitions per live
     dir — size n_partitions for the query fleet, not just the build).
     [] when no file can hold any term."""
-    files = _bloom_prune(_segment_files(store), terms)
+    files = _bloom_prune(store.segment_files(), terms)
     if not files:
         return []
     n_tasks = n_tasks or spark.sparkContext.defaultParallelism
@@ -667,7 +653,7 @@ def _partial_scores(
 
     FILE-ALIGNED FAST PATH (no sidebands — the hot batch/serving path):
     ZERO data shuffle. Every live segment dir is written by the ONE
-    shared `spimi.write_segments` (`repartitionByRange(n_partitions,
+    epoch writer, `spimi._write_epoch` (`repartitionByRange(n_partitions,
     "shard")` + maxRecordsPerFile=0 — build, compact, and append all
     call it), so each segment FILE holds complete shards —
     all terms' blocks for a shard co-located — and LSM increments own

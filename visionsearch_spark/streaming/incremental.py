@@ -19,11 +19,14 @@ Spark-first translation — append into the SAME store:
      arrival position (`aisearch/main.py:28-33` sorted order applies to
      the initial corpus; later adds append).
   3. SPIMI the delta into new fragments/manifests (new pid range), then
-     compact ONLY the delta fragments into one NEW segments dir added to
-     the live list (O(delta) — existing dirs are immutable; their
-     (max_tf, min_dl) block bounds are avgdl-independent so refreshed
-     corpus stats can't stale them). Scoring stays exact under current
-     stats because postings store tf+dl, not weights. Fragments are
+     hand ONLY the delta fragments to the one epoch writer
+     (`spimi._write_epoch`, shared with build and compaction): one NEW
+     segments dir with its Bloom sidecars, which the one flip
+     (`spimi._flip`) adds to the live list. O(delta) — existing dirs are
+     immutable; their (max_tf, min_dl) block bounds are
+     avgdl-independent, so refreshed corpus stats can't stale them.
+     Scoring stays exact under current stats because postings store
+     tf+dl, not weights. Fragments are
      transient: once the flip lists the delta pids in `compacted_pids`
      their fragments are GC'd, and the postings live only in the dir.
   4. Query path reads the UNION of live segment dirs (same shard
@@ -181,9 +184,7 @@ def incremental_build(transcripts: DataFrame, root: str,
     elif n_dirs > 1:
         # file-count arm: O(n_files) driver listing, only consulted on
         # multi-dir stores (a single dir is already fully compacted)
-        from visionsearch_spark.query.wand import _segment_files
-
-        needs_compact = len(_segment_files(store)) > max_live_files
+        needs_compact = len(store.segment_files()) > max_live_files
     else:
         needs_compact = False
     if needs_compact:
@@ -244,7 +245,11 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
     append write: with it corpus stats update incrementally from meta
     — no O(N) staged re-scan per append. Repair re-runs fall back to the
     full scan; the staged table remains the source of truth either way."""
-    from visionsearch_spark.index.spimi import _compact_segments, spimi_pending
+    from visionsearch_spark.index.spimi import (
+        _flip,
+        _write_epoch,
+        spimi_pending,
+    )
 
     if delta_stats is not None:
         # meta stats already exclude APPLIED tombstones (purge fold,
@@ -269,63 +274,24 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
     # dirs are immutable and their (max_tf, min_dl) bounds are avgdl-
     # independent, so an append never rewrites or re-reads the existing
     # index (LSM contract; compact_store() is the periodic full merge).
-    done = store.done_partitions()
-    already = set(meta["compacted_pids"])
-    delta_pids = sorted(set(done) - already)
+    # The delta dir is born with its Bloom sidecars, like every epoch.
+    delta_pids = sorted(store.done_partitions() - set(meta["compacted_pids"]))
     if delta_pids:
-        frag_paths = [store.fragment_path(p) for p in delta_pids]
-        frags = spark.read.schema(SEGMENT_SCHEMA_DDL).parquet(*frag_paths)
-        next_ep = int(meta.get("epoch") or 0) + 1
-        from visionsearch_spark.index.spimi import (
-            _run_overlapped,
-            write_segments,
-        )
-
-        # Sidecars on appends (r7, revisits the r6 blooms=False
-        # deferral): the r6 decision priced a sidecar as a full
-        # post-write re-read job of the fresh delta (honest cost now
-        # measured: 1.20x on a 10%-delta append — the r6 "near-null"
-        # A/B had a broken ON arm, OPTIMIZATION_r07.md). The
-        # fused kernel path removed that job: the merge kernel writes
-        # each partition's filter in the write stage for a few ms, so
-        # delta dirs are now born PRUNABLE — on a long-lived LSM store
-        # every tail-term query otherwise fans tasks over every bare
-        # delta file until the next full compaction. term_stats and the
-        # delta merge are independent jobs — overlap them (guide §2.6;
-        # same pattern as build_index).
-        from visionsearch_spark.index.spimi import _bloom_scratch_path
-
-        _run_overlapped(
-            lambda: frags.groupBy("term").agg(F.sum("n").alias("df"))
-            .write.mode("overwrite")
-            .parquet(store.epoch_path("term_stats", next_ep)),
-            lambda: write_segments(
-                _compact_segments(frags, int(meta["shard_range"]),
-                                  n_tasks=n_partitions,
-                                  bloom_scratch=_bloom_scratch_path(
-                                      store, next_ep)),
-                n_partitions, store.epoch_path("segments", next_ep),
-                bloom_scratch=_bloom_scratch_path(store, next_ep),
-            ),
-        )
+        frags = spark.read.schema(SEGMENT_SCHEMA_DDL).parquet(
+            *[store.fragment_path(p) for p in delta_pids])
+        epoch = _write_epoch(store, meta, frags, n_partitions)
         meta.update({
-            "epoch": next_ep,
-            "segment_dirs": meta["segment_dirs"]
-            + [f"segments-{next_ep:06d}"],
+            **epoch,
+            "segment_dirs": meta["segment_dirs"] + epoch["segment_dirs"],
             "term_stats_dirs": meta["term_stats_dirs"]
-            + [f"term_stats-{next_ep:06d}"],
-            "compacted_pids": sorted(done),
+            + epoch["term_stats_dirs"],
             # dirs retired by the previous full compaction are now two
             # flips old — no reader can still hold them
             "retired_dirs": [],
         })
     meta.update({"n_docs": n_docs, "avgdl": avgdl, "sum_dl": sum_dl,
                  "phase": "built"})
-    store.write_meta(meta)  # the atomic snapshot flip
-    store.gc_dirs()
-    from visionsearch_spark.query.wand import invalidate_term_df_memo
-
-    invalidate_term_df_memo(store.root)  # df/N changed under this root
+    _flip(store, meta)
     return store
 
 
