@@ -1424,7 +1424,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 # every round: _CHECKED_LAST_ROUND from CORRECTNESS_r{N-1}.json keys,
 # _ROUND_CHANGED from this round's operator diffs.
 
-# keys of CORRECTNESS_r06.json (50 rows, all green)
+# keys of CORRECTNESS_r07.json (50 rows, all green; the same key set
+# as CORRECTNESS_r06.json)
 _CHECKED_LAST_ROUND = {
     "bigram_lm_nll", "tfidf_keywords", "related_docs", "mixture_weights",
     "bm25_phrase", "bm25_proximity", "percolate_queries",
@@ -1443,32 +1444,23 @@ _CHECKED_LAST_ROUND = {
     "bm25_querystring", "bm25_explain", "knn_join_exact", "hybrid_rrf",
 }
 
-# Round 7 (optimization round) rewrote the SPIMI/compaction kernels
-# (vectorized block encode; pos_bin merge path), the scoring kernel's
-# block decode, docid assignment, and the query job shape/bin sizing —
-# every ranked row rides those. Tier 1 lists the AFFECTED rows that were
-# r6-green (and so would otherwise rotate out of the window); the
-# affected rows NOT checked in r6 (bm25_after_delete/purge/upsert,
-# bm25_boolean — VERDICT r6 "What's wrong" #1 — plus bm25_unit_topk,
-# bm25_fielded, bm25_prefix/wildcard/fuzzy and the rest) are already in
-# tier 2 by construction. Budget: |tier1 ∩ checked| <= 15 keeps
-# |tier1| + |tier2| <= 50.
+# This round moved every doc length out of the postings into per-doc
+# DL_TERM rows (segment layout 2): the SPIMI flush, compaction, delete
+# masking, the wand score kernel and LocalSearcher all read the new
+# segments, so every ranked row rides them. Tier 1 lists them all:
+# the r7-green ones (13 bm25_* rows and hybrid_rrf — the budget's
+# |tier1 ∩ checked| = 14 keeps |tier1| + |tier2| = 49 <= 50) and the
+# ones already in tier 2 (the delete, purge and upsert rows, the
+# boolean/multi-term/unit/fielded rows and hybrid_weighted), listed
+# because the rotation rule says changed ops MUST be.
 _ROUND_CHANGED = [
     "bm25_topk_hot", "bm25_topk_tail", "bm25_topk_single", "bm25_batch",
     "bm25_filtered", "bm25_page2", "bm25_boosted", "bm25_synonyms",
     "bm25_querystring", "bm25_explain", "bm25_phrase", "bm25_proximity",
     "bm25_phrase_slop", "hybrid_rrf",
-    # session 3 (same round): dedup-family shared-subtree persistence,
-    # single-join band candidates, one-fold hashed signatures,
-    # weighted_fuse list persistence. All were already tier 2 (not
-    # r6-checked), so listing them here moves them tier2 -> tier1
-    # without changing window membership or the 49-row budget — but the
-    # rotation rule says changed ops MUST be listed, and the listing is
-    # what keeps them in-window if a future round's CORRECTNESS file
-    # turns them green.
-    "dedup_minhash_lsh", "dedup_minhash_stream", "cross_contamination",
-    "dedup_ngram_jaccard", "dedup_clusters", "dedup_corpus",
-    "simhash64", "simhash_neardup", "hybrid_weighted",
+    "bm25_after_delete", "bm25_after_purge", "bm25_after_upsert",
+    "bm25_boolean", "bm25_prefix", "bm25_wildcard", "bm25_fuzzy",
+    "bm25_unit_topk", "bm25_fielded", "hybrid_weighted",
 ]
 
 

@@ -312,21 +312,25 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
     """The purge kernel on hand-built fragments: untouched blocks pass
     through byte-identical, fully deleted blocks vanish, partly deleted
     blocks equal the per-block encoders over their kept postings (with
-    min/max_docid, n, max_tf, min_dl recomputed), and a NULL pos_bin
-    stays NULL. A store is positional or not, so positional and NULL
-    pos_bin blocks are masked as two inputs; one input mixing them is
-    refused."""
+    min/max_docid, n, max_tf, min_dl recomputed, dl looked up in the
+    DL_TERM rows), and a NULL pos_bin stays NULL. The DL_TERM rows lose
+    the dead docs too. A store is positional or not, so positional and
+    NULL pos_bin blocks are masked as two inputs; one input mixing them
+    is refused."""
     import numpy as np
 
     from visionsearch_spark.index.codec import (
+        decode_docids,
         encode_docids,
         encode_positions,
         encode_varint,
     )
     from visionsearch_spark.index.spimi import _mask_fragments
-    from visionsearch_spark.index.store import SEGMENT_SCHEMA_DDL
+    from visionsearch_spark.index.store import DL_TERM, SEGMENT_SCHEMA_DDL
 
     def block(term, docids, tfs, dls, pos_flat):
+        """A segment row; `dls` (each posting's doc length) gives min_dl
+        and is stored only in the DL_TERM rows (`dl_block`)."""
         d = np.asarray(docids, dtype=np.int64)
         t = np.asarray(tfs, dtype=np.int64)
         L = np.asarray(dls, dtype=np.int64)
@@ -335,8 +339,21 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
         return (term, int(d[0]), int(d[-1]), len(d),
                 bytes(encode_docids(d)),
                 bytes(encode_varint(t.astype(np.uint64))),
-                bytes(encode_varint(L.astype(np.uint64))),
                 int(t.max()), int(L.min()), pb)
+
+    def dl_block(lengths):
+        docids = sorted(lengths)
+        dls = [lengths[x] for x in docids]
+        return block(DL_TERM, docids, dls, dls, None)
+
+    def with_dl(blocks, lengths):
+        """`blocks` plus the DL_TERM row of their docs."""
+        docs = {int(x) for b in blocks
+                for x in decode_docids(b[4], b[3]).tolist()}
+        return blocks + [dl_block({x: lengths[x] for x in docs})]
+
+    lengths = {1: 4, 5: 7, 9: 3, 4: 9, 8: 8, 2: 5, 6: 2, 7: 9, 30: 6,
+               40: 3, 41: 3, 3: 8, 50: 7, 60: 6, 42: 4}
 
     rows = [
         # untouched: no dead docid inside [min_docid, max_docid]
@@ -351,6 +368,7 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
     ]
     # partly deleted, NULL pos_bin (a positionless store)
     nopos = [block("delta", [3, 50, 60], [2, 5, 1], [8, 7, 6], None)]
+    dead_ids = {6, 7, 40, 41, 50}
     dead = spark.createDataFrame([(6,), (7,), (40,), (41,), (50,)],
                                  "docid long")
 
@@ -362,13 +380,20 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
         return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
                      for v in r)
 
-    assert sorted(norm(r) for r in mask(rows)) == sorted([
+    def live_dl(docs):
+        return dl_block({x: lengths[x] for x in docs if x not in dead_ids})
+
+    assert sorted(norm(r) for r in mask(with_dl(rows, lengths))) == sorted([
         rows[0],
         rows[1],
         block("beta", [2, 30], [2, 1], [5, 6], [1, 4, 3]),
+        live_dl([1, 5, 9, 4, 8, 2, 6, 7, 30, 40, 41]),
     ])
-    assert [norm(r) for r in mask(nopos)] == [
-        block("delta", [3, 60], [2, 1], [8, 6], None)]
+    assert sorted(norm(r) for r in mask(with_dl(nopos, lengths))) == sorted([
+        block("delta", [3, 60], [2, 1], [8, 6], None),
+        live_dl([3, 50, 60]),
+    ])
     # two partly deleted blocks of one shard: one task sees the mix
     with pytest.raises(Exception, match="run fsck"):
-        mask([rows[2], block("eps", [41, 42], [1, 1], [4, 4], None)])
+        mask(with_dl([rows[2], block("eps", [41, 42], [1, 1], [4, 4], None)],
+                     lengths))

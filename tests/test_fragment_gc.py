@@ -28,19 +28,22 @@ import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow.compute as pc
 import pytest
 
 from visionsearch_spark.fixtures import TRANSCRIPTS_SCHEMA
 from visionsearch_spark.index.codec import (
     decode_blocks,
     decode_varint,
+    doc_lengths,
     fixed_values,
+    gather_dl,
     payload,
 )
 from visionsearch_spark.index.deletes import delete_convs
 from visionsearch_spark.index.fsck import fsck
 from visionsearch_spark.index.spimi import build_index, compact_store
-from visionsearch_spark.index.store import IndexStore, read_columns
+from visionsearch_spark.index.store import DL_TERM, IndexStore, read_columns
 from visionsearch_spark.oracle import build_oracle_index, oracle_search
 from visionsearch_spark.query.wand import topk
 from visionsearch_spark.streaming.incremental import (
@@ -76,16 +79,21 @@ def _df_totals(store: IndexStore) -> dict[str, int]:
 
 
 def _postings(store: IndexStore) -> np.ndarray:
-    """Every live posting as (term, docid, tf, dl), sorted."""
+    """Every live posting as (term, docid, tf, dl), sorted; dl is looked
+    up in the DL_TERM rows."""
     tbl = read_columns(store.segment_paths(),
-                       ["term", "n", "docids_bin", "tfs_bin", "dls_bin"])
+                       ["term", "n", "docids_bin", "tfs_bin"])
+    is_dl = pc.equal(tbl["term"], DL_TERM)
+    lengths = doc_lengths(tbl.filter(is_dl))
+    tbl = tbl.filter(pc.invert(is_dl))
     ns = fixed_values(tbl["n"]).astype(np.int64)
     total = int(ns.sum())
+    docids = decode_blocks(tbl["docids_bin"], ns)
     rows = np.rec.fromarrays([
         np.repeat(np.asarray(tbl["term"].to_pylist(), dtype=object), ns),
-        decode_blocks(tbl["docids_bin"], ns),
+        docids,
         decode_varint(payload(tbl["tfs_bin"]), total).astype(np.int64),
-        decode_varint(payload(tbl["dls_bin"]), total).astype(np.int64),
+        gather_dl(lengths, docids),
     ], names="term,docid,tf,dl")
     return rows[np.lexsort((rows.docid, rows.term))]
 
@@ -313,15 +321,45 @@ def _no_sum_dl(root: str, meta: dict) -> None:
     del meta["sum_dl"]
 
 
+def _layout1(root: str, meta: dict) -> None:
+    """Layout 1: every posting carries its doc's length in a `dls_bin`
+    column (taken from staged `dl`), and there are no DL_TERM rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from visionsearch_spark.index.codec import encode_varint
+    from visionsearch_spark.index.store import parquet_files
+
+    meta["layout"] = 1
+    staged = read_columns([os.path.join(root, "staged")], ["docid", "dl"])
+    dl = np.zeros(staged.num_rows, dtype=np.int64)
+    dl[fixed_values(staged["docid"])] = fixed_values(staged["dl"])
+    for d in meta["segment_dirs"]:
+        for f in parquet_files(os.path.join(root, d)):
+            tbl = pq.read_table(f)
+            tbl = tbl.filter(pc.not_equal(tbl["term"], DL_TERM))
+            ns = fixed_values(tbl["n"]).astype(np.int64)
+            ends = np.cumsum(ns)
+            docl = dl[decode_blocks(tbl["docids_bin"], ns)]
+            dls_bin = pa.array(
+                [encode_varint(docl[e - n:e].astype(np.uint64))
+                 for n, e in zip(ns.tolist(), ends.tolist())], pa.binary())
+            tbl = tbl.add_column(tbl.schema.get_field_index("tfs_bin") + 1,
+                                 "dls_bin", dls_bin)
+            pq.write_table(tbl, f)
+
+
 @pytest.mark.parametrize("downgrade", [_no_layout, _pre_lsm, _unsuffixed,
-                                       _no_sum_dl],
+                                       _no_sum_dl, _layout1],
                          ids=["no_layout", "pre_lsm", "unsuffixed",
-                              "no_sum_dl"])
+                              "no_sum_dl", "layout1"])
 def test_older_layout_refused_until_reindex(spark, halves, bases, tmp_path,
                                             downgrade):
     """Every reader and writer refuses a store of another layout and asks
     for reindex; reindex rebuilds it in the current layout with results
     identical to the oracle."""
+    import pyarrow.parquet as pq
+
     from visionsearch_spark.index.reindex import reindex
     from visionsearch_spark.index.store import LAYOUT
     from visionsearch_spark.query.serving import LocalSearcher
@@ -354,7 +392,9 @@ def test_older_layout_refused_until_reindex(spark, halves, bases, tmp_path,
     dst = str(tmp_path / "new")
     reindex(spark, root, dst)
     migrated = IndexStore(dst)
-    assert migrated.read_meta()["layout"] == LAYOUT == 1
+    assert migrated.read_meta()["layout"] == LAYOUT == 2
+    assert not [f for _sz, f in migrated.segment_files()
+                if "dls_bin" in pq.read_schema(f).names]
     assert not [(n, rec) for n, rec in fsck(dst).items()
                 if rec["errors"] or rec["warnings"]]
     _check_oracle(spark, migrated, first_pdf)

@@ -35,7 +35,7 @@ def _errors(report):
 def test_clean_store_passes(store):
     report = fsck(store.root, strict=True)
     assert not _errors(report)
-    assert set(report) == {"meta", "stats", "segments", "epochs",
+    assert set(report) == {"meta", "stats", "segments", "dl", "epochs",
                            "manifests", "fragments", "tombstones", "blooms"}
 
 
@@ -161,6 +161,88 @@ def test_fragment_of_compacted_pid_is_warning(store):
     report = fsck(store.root, strict=True)
     assert not _errors(report)
     assert str(pid) in report["fragments"]["warnings"][0]
+
+
+def _rewrite_dl_rows(store, edit) -> None:
+    """Rewrite the first live segment file with `edit` applied to the
+    list of its DL_TERM rows (dicts)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from visionsearch_spark.index.store import DL_TERM, parquet_files
+
+    path = parquet_files(store.segment_paths()[0])[0]
+    tbl = pq.read_table(path)
+    rows = tbl.to_pylist()
+    dl = [r for r in rows if r["term"] == DL_TERM]
+    assert dl
+    rest = [r for r in rows if r["term"] != DL_TERM]
+    pq.write_table(pa.Table.from_pylist(edit(dl) + rest, schema=tbl.schema),
+                   path)
+
+
+def test_dropped_dl_block_caught(store):
+    """Term postings whose docs lost their DL_TERM entry cannot be
+    scored: the `dl` check names the file."""
+    _rewrite_dl_rows(store, lambda dl: dl[1:])
+    errs = _errors(fsck(store.root))
+    assert list(errs) == ["dl"]
+    assert "no '\\x00dl' entry" in errs["dl"][0]
+
+
+def test_changed_dl_value_caught(store):
+    """A stored doc length that differs from the staged dl is caught."""
+    import numpy as np
+
+    from visionsearch_spark.index.codec import decode_varint, encode_varint
+
+    def bump(dl):
+        r = dl[0]
+        v = decode_varint(r["tfs_bin"], r["n"])
+        v[0] += np.uint64(1)
+        return [{**r, "tfs_bin": encode_varint(v)}] + dl[1:]
+
+    _rewrite_dl_rows(store, bump)
+    errs = _errors(fsck(store.root))
+    assert list(errs) == ["dl"]
+    assert "differ from the staged dl" in errs["dl"][0]
+
+
+@pytest.mark.parametrize("damage", ["torn_docids", "stray_leading_row"])
+def test_undecodable_dl_rows_reported(store, damage):
+    """A DL_TERM row whose docids_bin holds one value too many (the
+    bytes of a torn write), or a stray reserved row sorting before
+    DL_TERM, is reported as a `dl` error, not raised out of fsck."""
+    from visionsearch_spark.index.store import BOUNDS_TERM
+
+    def torn(dl):
+        return [{**dl[0], "docids_bin": dl[0]["docids_bin"] + b"\x05"}] \
+            + dl[1:]
+
+    def stray(dl):
+        return [{**dl[0], "term": BOUNDS_TERM}] + dl
+
+    _rewrite_dl_rows(store, torn if damage == "torn_docids" else stray)
+    errs = _errors(fsck(store.root))
+    assert "docids/tfs do not decode" in " ".join(errs["dl"])
+
+
+def test_dl_row_in_term_stats_caught(store):
+    """DL_TERM is no term: a term_stats row for it would leak into df,
+    idf and the term dictionary."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from visionsearch_spark.index.store import DL_TERM
+
+    d = store.term_stats_paths()[0]
+    pq.write_table(
+        pa.table({"term": pa.array([DL_TERM]),
+                  "df": pa.array([5], pa.int64())}),
+        os.path.join(d, "part-zz-dl.parquet"))
+    errs = _errors(fsck(store.root))
+    assert list(errs) == ["dl"]
+    assert "lists the reserved" in errs["dl"][0]
 
 
 def test_cli_json_output(store, capsys):

@@ -358,8 +358,10 @@ def test_sloppy_phrase_requires_positions(spark, transcripts,
 def test_compact_refuses_mixed_pos_runs(spark):
     """Through the vectorized compaction kernel, fully-positional runs
     round-trip their positions and postings exactly; an input mixing
-    positional and NULL pos_bin blocks is corruption (a store's
-    positions flag is fixed at build) and raises, naming fsck."""
+    positional and NULL pos_bin term blocks is corruption (a store's
+    positions flag is fixed at build) and raises, naming fsck. The
+    DL_TERM rows (pos_bin always NULL) are split off first: they neither
+    count as a mix nor lose their lengths."""
     import numpy as np
     from visionsearch_spark.index.codec import (
         decode_docids,
@@ -370,7 +372,7 @@ def test_compact_refuses_mixed_pos_runs(spark):
         encode_varint,
     )
     from visionsearch_spark.index.spimi import _compact_segments
-    from visionsearch_spark.index.store import SEGMENT_SCHEMA_DDL
+    from visionsearch_spark.index.store import DL_TERM, SEGMENT_SCHEMA_DDL
 
     def block(term, docids, tfs, dls, pos_flat):
         d = np.asarray(docids, dtype=np.int64)
@@ -381,7 +383,6 @@ def test_compact_refuses_mixed_pos_runs(spark):
         return (term, int(d[0]), int(d[-1]), len(d),
                 bytes(encode_docids(d)),
                 bytes(encode_varint(t.astype(np.uint64))),
-                bytes(encode_varint(L.astype(np.uint64))),
                 int(t.max()), int(L.min()), pb)
 
     shard_range = 1000
@@ -392,9 +393,12 @@ def test_compact_refuses_mixed_pos_runs(spark):
         # run B ("beta", shard 0): two positional fragments
         block("beta", [2, 6], [1, 1], [9, 9], [5, 6]),
         block("beta", [30], [2], [9], [0, 8]),
+        # the docs' lengths, in two fragments' DL_TERM rows
+        block(DL_TERM, [1, 2, 5, 6], [9] * 4, [9] * 4, None),
+        block(DL_TERM, [20, 30, 40], [9] * 3, [9] * 3, None),
     ]
     frags = spark.createDataFrame(rows, SEGMENT_SCHEMA_DDL)
-    out = _compact_segments(frags, shard_range, n_tasks=1).collect()
+    out = _compact_segments(frags, shard_range, (0, 0), n_tasks=1).collect()
     by_term = {}
     for r in out:
         by_term.setdefault(r["term"], []).append(r)
@@ -416,9 +420,15 @@ def test_compact_refuses_mixed_pos_runs(spark):
         assert d.tolist() == exp_docids
         assert t.tolist() == exp_tfs
         assert p.tolist() == exp_pos and t.sum() == len(exp_pos)
+        assert all(r["min_dl"] == 9 for r in blocks)
+    [dl] = by_term[DL_TERM]  # one shard: re-cut into one block
+    assert decode_docids(dl["docids_bin"], dl["n"]).tolist() \
+        == [1, 2, 5, 6, 20, 30, 40]
+    assert decode_varint(dl["tfs_bin"], dl["n"]).tolist() == [9] * 7
+    assert dl["pos_bin"] is None
 
     # one positionless block in the same input -> refused, not degraded
-    mixed = rows[:3] + [block("beta", [30], [2], [9], None)]
+    mixed = rows[:3] + [block("beta", [30], [2], [9], None)] + rows[4:]
     frags = spark.createDataFrame(mixed, SEGMENT_SCHEMA_DDL)
-    with pytest.raises(Exception, match="run fsck"):
-        _compact_segments(frags, shard_range, n_tasks=1).collect()
+    with pytest.raises(Exception, match="mixed in one store — run fsck"):
+        _compact_segments(frags, shard_range, (0, 0), n_tasks=1).collect()

@@ -11,7 +11,7 @@ import pytest
 
 from visionsearch_spark.index.codec import decode_docids, decode_varint
 from visionsearch_spark.index.spimi import BLOCK_SIZE, build_index
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.store import DL_TERM, IndexStore
 from visionsearch_spark.oracle import oracle_search
 from visionsearch_spark.query import wand
 from visionsearch_spark.query.wand import batch_topk, topk
@@ -52,6 +52,15 @@ def test_segment_structure(spark, built_store):
     segs = spark.read.parquet(*built_store.segment_paths()).collect()
     meta = built_store.read_meta()
     R = meta["shard_range"]
+    # each doc's length, once: the DL_TERM rows (tfs_bin holds the dl)
+    lengths = {}
+    for r in segs:
+        if r["term"] == DL_TERM:
+            d = decode_docids(r["docids_bin"], r["n"])
+            lengths.update(zip(d.tolist(),
+                               decode_varint(r["tfs_bin"], r["n"]).tolist()))
+    staged = spark.read.parquet(built_store.staged_path).collect()
+    assert lengths == {r["docid"]: r["dl"] for r in staged if r["dl"]}
     for r in segs:
         assert 1 <= r["n"] <= BLOCK_SIZE
         d = decode_docids(r["docids_bin"], r["n"])
@@ -60,9 +69,11 @@ def test_segment_structure(spark, built_store):
         assert r["min_docid"] // R == r["max_docid"] // R == r["shard"]
         # (max_tf, min_dl) must bound the block's actual postings exactly
         tfs = decode_varint(r["tfs_bin"], r["n"])
-        dls = decode_varint(r["dls_bin"], r["n"])
+        dls = np.array([lengths[x] for x in d.tolist()])
         assert r["max_tf"] == int(tfs.max()) >= 1
         assert r["min_dl"] == int(dls.min()) >= 0
+        assert (r["pos_bin"] is None) == (r["term"] == DL_TERM or
+                                          not meta["positions"])
 
 
 def test_hot_term_shard_fanout(spark, built_store, oracle_index):

@@ -1,7 +1,9 @@
 """Delta + varint (LEB128) posting-list codec, numpy-vectorized.
 
 Postings are stored as binary columns: docids delta-encoded within a block
-(first value absolute) then varint-packed; tfs and dls plain varint. All
+(first value absolute) then varint-packed; tfs plain varint. Doc lengths
+are stored once per doc, as the tfs of the reserved DL_TERM rows
+(store.DL_TERM), never per posting. All
 encode/decode paths are vectorized over whole arrays — byte positions are
 looped (<= 10 iterations), elements never are. This is the Arrow-friendly
 analog of the reference's contiguous float32 matrix
@@ -13,11 +15,20 @@ decoders, never a per-block or per-row loop:
   decode_blocks(col, ns) -> int64 docids of every block of a binary
                             column, in row order (block i holds ns[i]);
   payload(col)           -> the column's value bytes as one uint8 array,
-                            fed to decode_varint (tfs_bin, dls_bin) or
+                            fed to decode_varint (tfs_bin) or
                             decode_positions (pos_bin);
   term_runs(tbl)         -> a posting table sorted by term plus each
                             term's row range, so a term's blocks are one
-                            zero-copy slice.
+                            zero-copy slice;
+  split_dl(tbl, runs)    -> term_runs' output split into the DL_TERM rows
+                            and the term rows (with their shifted runs),
+                            before any tf or positions decode;
+  doc_lengths(rows)      -> DocLengths of DL_TERM rows: (docids
+                            ascending, dl) and a dense docid -> dl table
+                            (dl_lookup builds one from arrays);
+  gather_dl(lens, ids)   -> the dl of each docid, looked up in a
+                            DocLengths — the one per-posting dl lookup
+                            of every reader and merge kernel.
   fixed_values(col)      -> a fixed-width (integer/float) column as one
                             numpy array (n, docid, shard, turn_idx, ...);
   mask_array(mask)       -> a numpy bool mask as an Arrow filter mask.
@@ -44,9 +55,13 @@ Round-trip property-tested in tests/test_codec.py (hypothesis).
 
 from __future__ import annotations
 
+from typing import NamedTuple
+
 import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
+
+from visionsearch_spark.index.store import DL_TERM
 
 _MASK = np.uint64(0x7F)
 _CONT = np.uint8(0x80)
@@ -95,6 +110,10 @@ def decode_varint(buf: bytes, n: int) -> np.ndarray:
         return np.zeros(0, dtype=np.uint64)
     raw = np.frombuffer(buf, dtype=np.uint8)
     is_last = (raw & _CONT) == 0
+    if raw.size == n and is_last.all():
+        # every value is one byte: the common case for tfs and doc
+        # lengths, decoded without the byte-to-value scatter
+        return raw.astype(np.uint64)
     # element index for each byte: cumsum of "previous byte was last"
     elem = np.zeros(raw.size, dtype=np.int64)
     elem[1:] = np.cumsum(is_last[:-1])
@@ -271,3 +290,63 @@ def term_runs(tbl: pa.Table) -> tuple[pa.Table, dict[str, tuple[int, int]]]:
     starts = np.concatenate(([0], ends[:-1]))
     return tbl, dict(zip(ree.values.to_pylist(),
                          zip(starts.tolist(), ends.tolist())))
+
+
+def split_dl(tbl: pa.Table, runs: dict[str, tuple[int, int]]
+             ) -> tuple[pa.Table, pa.Table, dict[str, tuple[int, int]]]:
+    """term_runs' (tbl, runs) -> (the DL_TERM rows, the term rows, the
+    term rows' runs). DL_TERM sorts before every analyzer term, so both
+    parts are zero-copy slices of the sorted table."""
+    lo, hi = runs.get(DL_TERM, (0, 0))
+    if lo:
+        raise ValueError(f"a term sorts before {DL_TERM!r}")
+    return tbl.slice(0, hi), tbl.slice(hi), {
+        t: (a - hi, b - hi) for t, (a, b) in runs.items() if t != DL_TERM}
+
+
+class DocLengths(NamedTuple):
+    """A set of docs' lengths: (docids ascending, dl) plus the dense
+    lookup table gather_dl indexes (table[d - lo] = dl of docid d, -1
+    where the set has no entry)."""
+    docids: np.ndarray
+    dls: np.ndarray
+    lo: int
+    table: np.ndarray
+
+
+def dl_lookup(docids: np.ndarray, dls: np.ndarray) -> DocLengths:
+    """DocLengths of unique docids with lengths dls, in any order. The
+    table spans the docids' range: a file's shards hold every docid of
+    their span but the deleted ones, so it is about one slot per doc and
+    never more than the staged row count."""
+    if docids.size > 1 and (docids[1:] <= docids[:-1]).any():
+        order = np.argsort(docids, kind="stable")
+        docids, dls = docids[order], dls[order]
+    lo = int(docids[0]) if docids.size else 0
+    table = np.full(int(docids[-1]) - lo + 1 if docids.size else 0, -1,
+                    dtype=np.int64)
+    table[docids - lo] = dls
+    return DocLengths(docids, dls, lo, table)
+
+
+def doc_lengths(rows: pa.Table) -> DocLengths:
+    """DocLengths of DL_TERM rows (columns n, docids_bin, tfs_bin): a
+    DL_TERM block holds its docids like any term and their lengths where
+    a term holds tfs."""
+    ns = fixed_values(rows["n"]).astype(np.int64)
+    return dl_lookup(decode_blocks(rows["docids_bin"], ns),
+                     decode_varint(payload(rows["tfs_bin"]),
+                                   int(ns.sum())).astype(np.int64))
+
+
+def gather_dl(lengths: DocLengths, docids: np.ndarray) -> np.ndarray:
+    """The dl of each docid: one table index per posting. A docid with no
+    entry is corruption (fsck's `dl` check) and raises."""
+    i = np.asarray(docids, dtype=np.int64) - lengths.lo
+    inside = (i >= 0) & (i < lengths.table.size)
+    if inside.all():
+        out = lengths.table[i]
+        if not (out < 0).any():
+            return out
+    raise ValueError("posting docid without a doc length in its file's "
+                     "DL_TERM rows — run fsck (index/fsck.py)")

@@ -11,7 +11,7 @@ indexes, which this store is — segments are immutable LSM epochs):
   semantics: df / N / avgdl keep their as-built values until the next
   compaction — the same contract Lucene serves between merges). The
   deny set rides the query plan as per-shard packed sideband rows
-  (`wand.DENY_TERM`), never an unbounded broadcast.
+  (`store.DENY_TERM`), never an unbounded broadcast.
 - `compact_store` FOLDS tombstones: postings of dead docids are dropped
   during the merge, corpus stats (n_docs / avgdl / per-term df) are
   recomputed over survivors, and the folded dirs move from

@@ -1,6 +1,7 @@
 """Store integrity checker (fsck): verify every on-disk invariant the
-query paths rely on, from parquet METADATA only — no Spark session, no
-posting decode; runs in seconds on stores whose segments hold terabytes.
+query paths rely on, with no Spark session. Every check reads parquet
+metadata or small columns, except `dl`, which decodes each segment
+file's docids once (one varint pass per file).
 
 Checked invariants (each one is load-bearing for a specific path):
 
@@ -23,6 +24,18 @@ Checked invariants (each one is load-bearing for a specific path):
               fast path (wand._partial_scores). A violated interval
               means per-partition scores are partial and top-k silently
               wrong: the single worst corruption this store can have.
+  positions   (positional stores) every segment file has pos_bin, and
+              it is NULL on no term row: the footer NULL count equals the
+              file's DL_TERM row count (those rows are NULL in every
+              store), so a store mixing positional and positionless term
+              blocks is caught.
+  dl          per segment file: every docid of its term rows has a
+              DL_TERM entry in the SAME file (a task reads whole files and
+              looks dl up there — codec.gather_dl), each entry equals the
+              staged `dl`, and on a positional store the first term
+              block's positions decode and stay below their docs' dl. No
+              term_stats dir lists DL_TERM (it is no term: df, /suggest
+              and idf never see it).
   epochs      segments and term_stats live lists are the same length
               (each epoch writes the pair together), and no dir is both
               live and retired.
@@ -57,6 +70,7 @@ import numpy as np
 
 from visionsearch_spark.index.codec import fixed_values
 from visionsearch_spark.index.store import (
+    DL_TERM,
     IndexStore,
     count_rows,
     parquet_files,
@@ -178,17 +192,12 @@ def fsck(root: str, strict: bool = False) -> dict:
                     seen[s] = os.path.basename(p)
 
     # ---- positions sidecar column (positional stores only) ---------------
-    if meta.get("positions"):
+    positional = bool(meta.get("positions"))
+    if positional:
         rec = check("positions")
-        from visionsearch_spark.index.codec import (
-            decode_positions,
-            decode_varint,
-        )
-
         for d in store.segment_paths():
             for p in parquet_files(d):
-                pf = pq.ParquetFile(p)
-                md = pf.metadata
+                md = pq.ParquetFile(p).metadata
                 idx = {md.schema.column(i).name: i
                        for i in range(md.num_columns)}
                 if "pos_bin" not in idx:
@@ -203,31 +212,18 @@ def fsck(root: str, strict: bool = False) -> dict:
                     if md.row_group(g).column(idx["pos_bin"]).statistics
                     is not None
                 )
+                nulls -= pq.read_table(p, columns=["term"],
+                                       filters=[("term", "=", DL_TERM)]
+                                       ).num_rows
                 if nulls:
-                    err(rec, f"{os.path.basename(p)}: {nulls} block(s) "
-                             "with NULL pos_bin in a positional store")
-                    continue
-                # one decoded block per file: positions align with tfs
-                # (occurrence counts) and stay below the doc length
-                head = pf.read_row_group(
-                    0, columns=["n", "tfs_bin", "dls_bin", "pos_bin"]
-                ).slice(0, 1).to_pylist()
-                if head:
-                    row = head[0]
-                    tf = decode_varint(row["tfs_bin"],
-                                       int(row["n"])).astype(np.int64)
-                    try:
-                        pos = decode_positions(row["pos_bin"], tf)
-                    except Exception as e:  # torn payload
-                        err(rec, f"{os.path.basename(p)}: pos_bin does "
-                                 f"not decode ({e})")
-                        continue
-                    dl = decode_varint(row["dls_bin"],
-                                       int(row["n"])).astype(np.int64)
-                    if pos.size and (pos >= np.repeat(dl, tf)).any():
-                        err(rec, f"{os.path.basename(p)}: position >= "
-                                 "doc length in first block")
+                    err(rec, f"{os.path.basename(p)}: {nulls} term "
+                             "block(s) with NULL pos_bin in a positional "
+                             "store")
 
+    # ---- dl: one length per doc, in the file that holds its postings ----
+    rec = check("dl")
+    _check_dl(store, positional and report["positions"]["ok"],
+              lambda msg: err(rec, msg))
     # ---- epochs ----------------------------------------------------------
     rec = check("epochs")
     n_seg = len(store.segment_paths())
@@ -301,6 +297,79 @@ def fsck(root: str, strict: bool = False) -> dict:
 
     _finish(report, strict)
     return report
+
+
+def _check_dl(store: IndexStore, positional: bool, err) -> None:
+    """The `dl` check (module docstring), one segment file at a time."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from visionsearch_spark.index.codec import (
+        decode_blocks,
+        decode_docids,
+        decode_positions,
+        decode_varint,
+        doc_lengths,
+        gather_dl,
+        split_dl,
+        term_runs,
+    )
+
+    for d in store.term_stats_paths():
+        for p in parquet_files(d):
+            if pq.read_table(p, columns=["term"],
+                             filters=[("term", "=", DL_TERM)]).num_rows:
+                err(f"{os.path.basename(d)}/{os.path.basename(p)} lists "
+                    f"the reserved {DL_TERM!r} as a term")
+    dm = read_columns([store.docmap_path], ["docid", "dl"])
+    staged_dl = np.zeros(dm.num_rows, dtype=np.int64)
+    staged_dl[fixed_values(dm["docid"])] = fixed_values(dm["dl"])
+    for d in store.segment_paths():
+        for p in parquet_files(d):
+            name = f"{os.path.basename(d)}/{os.path.basename(p)}"
+            try:
+                dl_rows, rows, _runs = split_dl(*term_runs(pq.read_table(
+                    p, columns=["term", "n", "docids_bin", "tfs_bin"])))
+                lengths = doc_lengths(dl_rows)
+                docids = decode_blocks(rows["docids_bin"],
+                                       fixed_values(rows["n"]))
+            except Exception as e:  # torn payload or a stray leading row
+                err(f"{name}: docids/tfs do not decode ({e})")
+                continue
+            known, dls = lengths.docids, lengths.dls
+            missing = np.setdiff1d(docids, known)
+            if missing.size:
+                err(f"{name}: {missing.size} docid(s) of its term rows "
+                    f"have no {DL_TERM!r} entry in the file (first: "
+                    f"{missing[:5].tolist()}) — their scores cannot be "
+                    "computed; rebuild via reindex")
+                continue
+            bad = (known >= staged_dl.size) | (
+                staged_dl[np.minimum(known, staged_dl.size - 1)] != dls)
+            if bad.any():
+                err(f"{name}: {int(bad.sum())} {DL_TERM!r} entries "
+                    f"differ from the staged dl (first docid: "
+                    f"{int(known[bad][0])})")
+                continue
+            if not positional:
+                continue
+            # one decoded term block per file (the first one after the
+            # leading DL_TERM rows): positions align with tfs (occurrence
+            # counts) and stay below the doc length
+            rg = pq.ParquetFile(p).read_row_group(
+                0, columns=["term", "n", "docids_bin", "tfs_bin", "pos_bin"])
+            for r in rg.filter(pc.not_equal(rg["term"], DL_TERM)) \
+                    .slice(0, 1).to_pylist():
+                tf = decode_varint(r["tfs_bin"], r["n"]).astype(np.int64)
+                try:
+                    pos = decode_positions(r["pos_bin"], tf)
+                except Exception as e:  # torn payload
+                    err(f"{name}: pos_bin does not decode ({e})")
+                    continue
+                dl = gather_dl(lengths,
+                               decode_docids(r["docids_bin"], r["n"]))
+                if pos.size and (pos >= np.repeat(dl, tf)).any():
+                    err(f"{name}: position >= doc length in first block")
 
 
 def _finish(report: dict, strict: bool) -> None:

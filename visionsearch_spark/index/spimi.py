@@ -20,7 +20,8 @@ Pipeline (SURVEY.md §3.2 "ours"):
               postings with one dictionary-encode + int lexsort, cuts
               blocks at 128 docs AND docid-shard boundaries (R), and
               varint-encodes the whole partition in one stream per
-              payload (_build_block_batches); fragment parquet +
+              payload (_build_block_batches), each doc's length once as
+              DL_TERM rows (_dl_batches); fragment parquet +
               manifest json commit ATOMICALLY per pid, committed pids
               are skipped (resume).
   3. MERGE    `_write_epoch`, the one epoch writer (build, append and
@@ -33,7 +34,8 @@ Pipeline (SURVEY.md §3.2 "ours"):
               (`_merge_input`; on a fresh build that is every fragment).
               Blocks of one term have globally disjoint docid ranges, so
               merging is concat-in-min_docid-order + re-chunk — never a
-              posting-level merge sort — over ONE range(shard) exchange
+              posting-level merge sort — over ONE shard exchange (each
+              partition a contiguous run of shards, no sampled bounds)
               whose output order is already the final file order.
               Sharding by docid range bounds per-task work for hot terms
               (the salted-repartition skew defense of the north rule:
@@ -65,10 +67,14 @@ from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import TOKEN_SEP_RE, token_count_col
 from visionsearch_spark.docid import assign_docids_with_count
+from visionsearch_spark.index.codec import DocLengths
 from visionsearch_spark.index.store import (
+    DENY_TERM,
+    DL_TERM,
     MANIFEST_SCHEMA_DDL,
     SEGMENT_SCHEMA_DDL,
     IndexStore,
+    count_rows,
     fresh_meta,
 )
 
@@ -95,7 +101,6 @@ _FRAGMENT_PA_SCHEMA = pa.schema(
         ("n", pa.int32()),
         ("docids_bin", pa.binary()),
         ("tfs_bin", pa.binary()),
-        ("dls_bin", pa.binary()),
         ("max_tf", pa.int32()),
         ("min_dl", pa.int32()),
         ("pos_bin", pa.binary()),
@@ -141,7 +146,9 @@ def _build_block_batches(
     cost ~330 us/block in tiny-array numpy calls).
 
     Pruning metadata stays (max_tf, min_dl) — avgdl-independent, so
-    blocks remain valid across appends that shift corpus stats.
+    blocks remain valid across appends that shift corpus stats. `dls`
+    (each posting's doc length) feeds min_dl only: lengths are stored
+    once per doc, in the DL_TERM rows `_dl_batches` builds.
 
     Without `pos_flat` every block's pos_bin is NULL. `term_values`:
     when `terms` holds int run keys (cheap comparisons for the
@@ -176,16 +183,12 @@ def _build_block_batches(
 
     d_stream, d_nb = varint_stream(deltas.astype(np.uint64))
     t_stream, t_nb = varint_stream(tfs.astype(np.uint64))
-    l_stream, l_nb = varint_stream(dls.astype(np.uint64))
     off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(d_nb, out=off[1:])
     d_boffs = off[bnd]
     off = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(t_nb, out=off[1:])
     t_boffs = off[bnd]
-    off = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(l_nb, out=off[1:])
-    l_boffs = off[bnd]
 
     p_stream = p_boffs = None
     if pos_flat is not None:
@@ -216,7 +219,7 @@ def _build_block_batches(
     while start < n_blocks:
         # largest end keeping every stream's chunk under the int32 cap
         end = n_blocks
-        for boffs in (d_boffs, t_boffs, l_boffs, p_boffs):
+        for boffs in (d_boffs, t_boffs, p_boffs):
             if boffs is None:
                 continue
             lim = int(np.searchsorted(
@@ -237,7 +240,6 @@ def _build_block_batches(
             pa.array(blens[sl], type=pa.int32()),
             _binary_col(d_stream, d_boffs[sl1]),
             _binary_col(t_stream, t_boffs[sl1]),
-            _binary_col(l_stream, l_boffs[sl1]),
             pa.array(max_tf[sl], type=pa.int32()),
             pa.array(min_dl[sl], type=pa.int32()),
             pos_col,
@@ -250,9 +252,21 @@ def _build_block_batches(
         "postings": n,
         "terms": int((terms[1:] != terms[:-1]).sum()) + 1,
         "n_blocks": int(n_blocks),
-        "bytes": int(d_boffs[-1] + t_boffs[-1] + l_boffs[-1]),
+        "bytes": int(d_boffs[-1] + t_boffs[-1]),
     }
     return batches, stats
+
+
+def _dl_batches(docids: np.ndarray, dls: np.ndarray, shard_range: int,
+                with_shard: bool = False) -> list[pa.RecordBatch]:
+    """The DL_TERM rows of docs `docids` (ascending, unique) with
+    lengths `dls`: built by _build_block_batches as the postings of one
+    term whose tfs are the lengths, so its blocks hold <= BLOCK_SIZE docs,
+    never cross a shard and carry a NULL pos_bin."""
+    return _build_block_batches(
+        np.zeros(docids.size, dtype=np.int64), docids, dls, dls,
+        shard_range, with_shard=with_shard,
+        term_values=np.array([DL_TERM], dtype=object))[0]
 
 
 def _make_spimi_fn(store_root: str, shard_range: int,
@@ -332,6 +346,11 @@ def _make_spimi_fn(store_root: str, shard_range: int,
                 pos_flat=pos_flat if positions else None,
                 term_values=vocab_sorted,
             )
+            # each doc's length once: every posting of a doc carries the
+            # same dl (counted from this token stream above)
+            doc_ids, first = np.unique(docids, return_index=True)
+            batches_out = _dl_batches(doc_ids, dls[first], shard_range) \
+                + batches_out
             tbl = (pa.Table.from_batches(batches_out)
                    if batches_out else _FRAGMENT_PA_SCHEMA.empty_table())
             pq.write_table(tbl, frag_tmp, compression="zstd")
@@ -551,7 +570,7 @@ def build_index(
 
     # ---- merge -> term_stats + segments (next epoch), then the flip ----
     epoch = _write_epoch(store, meta, _merge_input(spark, store, meta),
-                         int(meta["n_partitions"]))
+                         int(meta["n_partitions"]), first_docid=0)
     mark("term_stats+compact_write")
     meta.update({
         **epoch,
@@ -564,11 +583,14 @@ def build_index(
 
 
 def _write_epoch(store: IndexStore, meta: dict, frags: DataFrame,
-                 n_partitions: int) -> dict:
+                 n_partitions: int, first_docid: int) -> dict:
     """THE epoch writer (build, append and compaction all end here): turn
     the blocks `frags` into a fresh segments/term_stats dir pair for the
-    next epoch. Returns the meta fields naming it — `epoch`, the two new
-    dirs as one-element `segment_dirs`/`term_stats_dirs` lists, and
+    next epoch. The blocks hold docids `first_docid` (0 for a full merge,
+    the delta's first docid for an append) up to the last staged docid,
+    which fixes the shard span `write_segments` spreads over its files.
+    Returns the meta fields naming it — `epoch`, the two new dirs as
+    one-element `segment_dirs`/`term_stats_dirs` lists, and
     `compacted_pids` — which the caller folds into its own meta (a full
     merge replaces the live lists, an append extends them) and publishes
     with `_flip`. Until then nothing points at the new dirs: a reader
@@ -579,13 +601,18 @@ def _write_epoch(store: IndexStore, meta: dict, frags: DataFrame,
     tasks back-fill cores the tiny term_stats agg leaves idle (guide
     §2.6 overlap-independent-jobs)."""
     epoch = int(meta.get("epoch") or 0) + 1
+    shard_range = int(meta["shard_range"])
+    last_docid = max(count_rows(store.staged_path) - 1, first_docid)
     _run_overlapped(
-        lambda: frags.groupBy("term").agg(F.sum("n").alias("df"))
+        lambda: frags.filter(F.col("term") != DL_TERM)
+        .groupBy("term").agg(F.sum("n").alias("df"))
         .write.mode("overwrite")
         .parquet(store.epoch_path("term_stats", epoch)),
-        lambda: write_segments(frags, int(meta["shard_range"]), n_partitions,
+        lambda: write_segments(frags, shard_range, n_partitions,
                                store.epoch_path("segments", epoch),
-                               _bloom_scratch_path(store, epoch)),
+                               _bloom_scratch_path(store, epoch),
+                               (first_docid // shard_range,
+                                last_docid // shard_range)),
     )
     return {
         "epoch": epoch,
@@ -659,9 +686,10 @@ def spimi_pending(spark: SparkSession, store: IndexStore, shard_range: int,
 
 
 def _has_positions(pos_col: pa.Array | pa.ChunkedArray) -> bool:
-    """True iff the blocks of a merge input carry pos_bin. A store's
-    positions flag is fixed at build and inherited by every append and
-    compaction, so its blocks are all positional or all NULL; a mix is
+    """True iff the TERM blocks of a merge input carry pos_bin (callers
+    split the DL_TERM rows, always NULL, off first). A store's positions
+    flag is fixed at build and inherited by every append and compaction,
+    so its term blocks are all positional or all NULL; a mix is
     corruption, refused here rather than merged."""
     nulls = pos_col.null_count
     if 0 < nulls < len(pos_col):
@@ -673,19 +701,23 @@ def _has_positions(pos_col: pa.Array | pa.ChunkedArray) -> bool:
 
 
 def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
-                 shard_range: int) -> list[pa.RecordBatch]:
+                 shard_range: int,
+                 lengths: DocLengths) -> list[pa.RecordBatch]:
     """Blocks with their `deny` docids dropped: every block
     decoded in one pass per payload column, masked, and re-encoded by
     _build_block_batches with ONE run key per input block. A block holds
     <= BLOCK_SIZE postings of one shard, so each survivor re-encodes
     byte-identically to per-block encode_docids/encode_varint/
     encode_positions of its kept postings, with min/max_docid, n, max_tf
-    and min_dl recomputed; an emptied block vanishes and a NULL pos_bin
-    stays NULL."""
+    and min_dl (dl looked up in `lengths`, codec.doc_lengths of the
+    shards' DL_TERM rows) recomputed; an emptied block vanishes and a
+    NULL pos_bin stays NULL. DL_TERM blocks mask the same way, as a
+    separate call: their tfs ARE the lengths and their pos_bin is NULL."""
     from visionsearch_spark.index.codec import (
         decode_blocks,
         decode_positions,
         decode_varint,
+        gather_dl,
         payload,
     )
 
@@ -693,7 +725,7 @@ def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
     total = int(ns.sum())
     docids = decode_blocks(hits["docids_bin"], ns)
     tfs = decode_varint(payload(hits["tfs_bin"]), total).astype(np.int64)
-    dls = decode_varint(payload(hits["dls_bin"]), total).astype(np.int64)
+    dls = gather_dl(lengths, docids)
     keep = deny[np.minimum(np.searchsorted(deny, docids), deny.size - 1)] \
         != docids
     pos_flat = None
@@ -720,24 +752,30 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
     The dead set rides the SAME shard partitioning as the blocks it
     edits, packed per shard with the posting codec (wand._sideband_rows
     — never an unbounded broadcast), and sorts FIRST within each task
-    ("\\x00deny" < every analyzer term), so the kernel sees the complete
-    deny set before any block. Blocks whose [min_docid, max_docid] range
-    contains no dead docid — the overwhelming majority under realistic
-    delete rates — pass through as an Arrow filter with ZERO
-    decode/encode work; only intersecting blocks re-encode
-    (`_mask_blocks`). Emptied blocks vanish (term df then falls out of
-    the post-mask groupBy naturally)."""
-    from visionsearch_spark.index.codec import decode_blocks
-    from visionsearch_spark.query.wand import DENY_TERM, _sideband_rows
+    ("\\x00deny" < DL_TERM < every analyzer term), so the kernel sees the
+    complete deny set, then the shards' DL_TERM rows, before any term
+    block. Blocks whose [min_docid, max_docid] range contains no dead
+    docid — the overwhelming majority under realistic delete rates —
+    pass through as an Arrow filter with ZERO decode/encode work; only
+    intersecting blocks re-encode (`_mask_blocks`), DL_TERM blocks
+    included, so a dead doc's length goes with its postings. Emptied
+    blocks vanish (term df then falls out of the post-mask groupBy
+    naturally)."""
+    from visionsearch_spark.index.codec import (
+        decode_blocks,
+        dl_lookup,
+        doc_lengths,
+    )
+    from visionsearch_spark.query.wand import _sideband_rows
 
     in_cols = ["term", "min_docid", "max_docid", "n", "docids_bin",
-               "tfs_bin", "dls_bin", "max_tf", "min_dl", "pos_bin"]
+               "tfs_bin", "max_tf", "min_dl", "pos_bin"]
     side = _sideband_rows(dead.select("docid"), shard_range, DENY_TERM) \
         .select(
             "term",
             F.lit(None).cast("long").alias("min_docid"),
             F.lit(None).cast("long").alias("max_docid"),
-            "n", "docids_bin", "tfs_bin", "dls_bin", "max_tf", "min_dl",
+            "n", "docids_bin", "tfs_bin", "max_tf", "min_dl",
             F.lit(None).cast("binary").alias("pos_bin"),
             "shard",
         )
@@ -750,19 +788,11 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
         import pyarrow.compute as pc
 
         deny_parts: list[np.ndarray] = []
+        dl_parts: list[pa.RecordBatch] = []
         deny: np.ndarray | None = None
-        for batch in batches:
-            is_deny = pc.equal(batch["term"], DENY_TERM)
-            rows = batch.filter(is_deny)
-            if rows.num_rows:
-                deny_parts.append(decode_blocks(rows["docids_bin"],
-                                                rows["n"].to_numpy()))
-            blocks = batch.filter(pc.invert(is_deny)).select(in_cols)
-            if not blocks.num_rows:
-                continue
-            if deny is None:  # sort order: all deny rows precede blocks
-                deny = (np.unique(np.concatenate(deny_parts))
-                        if deny_parts else np.empty(0, dtype=np.int64))
+        lengths: DocLengths | None = None
+
+        def masked(blocks: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
             mins = blocks["min_docid"].to_numpy()
             maxs = blocks["max_docid"].to_numpy()
             if deny.size:
@@ -776,7 +806,41 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
                 yield blocks.filter(pa.array(~hit)).cast(_FRAGMENT_PA_SCHEMA)
             if hit.any():
                 yield from _mask_blocks(blocks.filter(pa.array(hit)), deny,
-                                        shard_range)
+                                        shard_range, lengths)
+
+        def dl_rows() -> Iterator[pa.RecordBatch]:
+            # sort order: every deny and DL_TERM row precedes the term
+            # blocks, so both sets are complete here
+            nonlocal deny, lengths
+            deny = (np.unique(np.concatenate(deny_parts))
+                    if deny_parts else np.empty(0, dtype=np.int64))
+            lengths = dl_lookup(*(np.empty(0, dtype=np.int64),) * 2)
+            if dl_parts:
+                rows = pa.Table.from_batches(dl_parts).combine_chunks() \
+                    .to_batches()[0]
+                lengths = doc_lengths(rows)
+                yield from masked(rows)
+
+        for batch in batches:
+            term = batch["term"]
+            is_deny = pc.equal(term, DENY_TERM)
+            is_dl = pc.equal(term, DL_TERM)
+            rows = batch.filter(is_deny)
+            if rows.num_rows:
+                deny_parts.append(decode_blocks(rows["docids_bin"],
+                                                rows["n"].to_numpy()))
+            rows = batch.filter(is_dl).select(in_cols)
+            if rows.num_rows:
+                dl_parts.append(rows)
+            blocks = batch.filter(
+                pc.invert(pc.or_(is_deny, is_dl))).select(in_cols)
+            if not blocks.num_rows:
+                continue
+            if deny is None:
+                yield from dl_rows()
+            yield from masked(blocks)
+        if deny is None:  # no term block came
+            yield from dl_rows()
 
     n_tasks = n_tasks or frags.sparkSession.sparkContext.defaultParallelism
     return (
@@ -852,7 +916,7 @@ def compact_store(spark: SparkSession, root: str,
             "sum_dl": sum_dl,
             "avgdl": (sum_dl / n_docs) if n_docs else 0.0,
         })
-    epoch = _write_epoch(store, meta, frags, n_partitions)
+    epoch = _write_epoch(store, meta, frags, n_partitions, first_docid=0)
     meta.update({
         **epoch,
         "retired_dirs": meta["segment_dirs"] + meta["term_stats_dirs"],
@@ -869,7 +933,8 @@ def compact_store(spark: SparkSession, root: str,
 
 
 def write_segments(blocks: DataFrame, shard_range: int, n_partitions: int,
-                   path: str, bloom_scratch: str) -> None:
+                   path: str, bloom_scratch: str,
+                   shards: tuple[int, int]) -> None:
     """THE segment write (called only by `_write_epoch`): merge `blocks`
     with `_compact_segments` and write one file per partition of its
     output, with one term Bloom sidecar per file. ONE FILE PER PARTITION
@@ -882,12 +947,12 @@ def write_segments(blocks: DataFrame, shard_range: int, n_partitions: int,
 
     Partitioning/order contract (established by the _compact_segments
     call below, the one exchange between the blocks and the files):
-      * RANGE-partitioned by shard, not hash: equal keys stay together
-        (shard-complete files hold), every partition fills (hashing n
-        shard keys into n buckets left ~1/e of the files empty), row
-        counts balance via sampling. Range boundaries re-sample per job,
-        but this is a single write action (the CLAUDE.md
-        repartitionByRange gotcha concerns branching two actions).
+      * each partition takes a CONTIGUOUS run of the span `shards`
+        (min_shard, max_shard), computed from the shard span alone:
+        equal shards stay together (shard-complete files hold), and with
+        at least as many shards as partitions every partition fills.
+        The map is a pure function of (span, n_partitions), so the same
+        blocks always land in the same files — no sampled bounds.
       * WITHIN each file rows sort TERM-FIRST with bounded row groups
         (8 MB): row-group statistics on the term column then cover
         narrow term ranges, so a query's term-IN filter PRUNES row
@@ -900,15 +965,14 @@ def write_segments(blocks: DataFrame, shard_range: int, n_partitions: int,
 
     from visionsearch_spark.index.bloom import attach_scratch_blooms
 
-    # clear BEFORE the write job starts: a crashed previous attempt
-    # leaves scratch filters keyed by THAT run's range boundaries
-    # (repartitionByRange re-samples per job), and pairing a stale
-    # filter with a fresh part file would be a FALSE-NEGATIVE bloom —
-    # wrong pruning, wrong results. Empty scratch + rerun is always
-    # safe: this run's tasks repopulate it.
+    # clear BEFORE the write job starts: a crashed previous attempt may
+    # have run over other blocks or another partition count, and pairing
+    # its stale filter with a fresh part file would be a FALSE-NEGATIVE
+    # bloom — wrong pruning, wrong results. Empty scratch + rerun is
+    # always safe: this run's tasks repopulate it.
     shutil.rmtree(bloom_scratch, ignore_errors=True)
     (
-        _compact_segments(blocks, shard_range, n_tasks=n_partitions,
+        _compact_segments(blocks, shard_range, shards, n_tasks=n_partitions,
                           bloom_scratch=bloom_scratch)
         .write.option("maxRecordsPerFile", 0)
         .option("parquet.block.size", 8 * 1024 * 1024)
@@ -927,6 +991,7 @@ def write_segments(blocks: DataFrame, shard_range: int, n_partitions: int,
 
 
 def _compact_segments(frags: DataFrame, shard_range: int,
+                      shards: tuple[int, int],
                       n_tasks: int | None = None,
                       bloom_scratch: str | None = None) -> DataFrame:
     """Re-chunk per (term, shard): fragment blocks of one term never overlap
@@ -936,18 +1001,23 @@ def _compact_segments(frags: DataFrame, shard_range: int,
     `_merge_input`'s blocks (build, compaction) or an append's delta
     fragments; write_segments is its one production caller.
 
-    Partitioned by RANGE of shard — the SAME partitioning the segment
-    write needs — and sorted (term, shard, min_docid), so the kernel's
-    output leaves each partition already in final file order and
-    write_segments writes it with NO second exchange.
+    Partitioned by contiguous runs of the shard span `shards` —
+    min(n_tasks, span) partitions, shard s in partition
+    (s - lo) * n_parts // span, each routed to its own partition by a
+    `wand._route_keys` key — and sorted (term, shard, min_docid), so the
+    kernel's output leaves each partition already in final file order
+    and write_segments writes it with NO second exchange.
 
     The kernel is fully vectorized (r7): ALL blocks of the partition are
     varint-decoded in one pass each (LEB128 streams concatenate), merged
     runs are re-cut and re-encoded by the same batch builder the SPIMI
     flush uses — byte-identical output to the old per-run loop, with no
-    per-run or per-block Python. pos_bin is decoded and re-cut the same
-    way when the store is positional; an input mixing positional and
-    NULL blocks raises (`_has_positions`).
+    per-run or per-block Python. The DL_TERM rows (sorted first) are
+    split off before any tf or positions decode: they re-cut into
+    `_dl_batches` and give the term blocks' min_dl (codec.gather_dl).
+    pos_bin is decoded and re-cut the same way when the store is
+    positional; an input mixing positional and NULL term blocks raises
+    (`_has_positions`).
 
     bloom_scratch: each kernel task ALSO writes its partition's term
     Bloom filter to `{bloom_scratch}/pid-NNNNN.bin` — the partition's
@@ -963,12 +1033,14 @@ def _compact_segments(frags: DataFrame, shard_range: int,
         decode_blocks,
         decode_positions,
         decode_varint,
+        doc_lengths,
+        gather_dl,
         payload,
     )
+    from visionsearch_spark.query.wand import _route_keys
 
     in_cols = ["term", "min_docid", "max_docid", "n", "docids_bin",
-               "tfs_bin", "dls_bin", "max_tf", "min_dl", "pos_bin",
-               "shard"]
+               "tfs_bin", "max_tf", "min_dl", "pos_bin", "shard"]
 
     def compact_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
@@ -979,46 +1051,67 @@ def _compact_segments(frags: DataFrame, shard_range: int,
         tbl = pa.Table.from_batches(got).select(in_cols)
         if not tbl.num_rows:
             return
-        terms_b = tbl["term"]
-        shards_b = tbl["shard"].to_numpy()
-        ns = tbl["n"].to_numpy().astype(np.int64)  # always >= 1
-        total = int(ns.sum())
-        # one decode per payload column for the WHOLE partition
-        docids = decode_blocks(tbl["docids_bin"], ns)
-        tfs = decode_varint(payload(tbl["tfs_bin"]), total).astype(np.int64)
-        dls = decode_varint(payload(tbl["dls_bin"]), total).astype(np.int64)
-        # (term, shard) runs -> int keys; builder cuts on key+shard change
-        runc = np.ones(ns.size, dtype=bool)
-        runc[1:] = pc.not_equal(terms_b[1:], terms_b[:-1]).to_numpy() \
-            | (shards_b[1:] != shards_b[:-1])
-        run_id_b = np.cumsum(runc) - 1
-        run_terms = terms_b.filter(pa.array(runc)).to_numpy()
-        term_keys = np.repeat(run_id_b, ns)
+        # DL_TERM sorts before every term: its rows lead the partition
+        n_dl = int(pc.sum(pc.equal(tbl["term"], DL_TERM)).as_py() or 0)
+        lengths = doc_lengths(tbl.slice(0, n_dl))
+        tbl = tbl.slice(n_dl)
+        out_batches = _dl_batches(lengths.docids, lengths.dls, shard_range,
+                                  with_shard=True)
+        run_terms = np.zeros(0, dtype=object)
+        if tbl.num_rows:
+            terms_b = tbl["term"]
+            shards_b = tbl["shard"].to_numpy()
+            ns = tbl["n"].to_numpy().astype(np.int64)  # always >= 1
+            total = int(ns.sum())
+            # one decode per payload column for the WHOLE partition
+            docids = decode_blocks(tbl["docids_bin"], ns)
+            tfs = decode_varint(payload(tbl["tfs_bin"]),
+                                total).astype(np.int64)
+            # (term, shard) runs -> int keys; builder cuts on key+shard
+            runc = np.ones(ns.size, dtype=bool)
+            runc[1:] = pc.not_equal(terms_b[1:], terms_b[:-1]).to_numpy() \
+                | (shards_b[1:] != shards_b[:-1])
+            run_id_b = np.cumsum(runc) - 1
+            run_terms = terms_b.filter(pa.array(runc)).to_numpy()
+            term_keys = np.repeat(run_id_b, ns)
 
-        pos_flat = None
-        if _has_positions(tbl["pos_bin"]):
-            pos_flat = decode_positions(payload(tbl["pos_bin"]), tfs)
-        out_batches, _stats = _build_block_batches(
-            term_keys, docids, tfs, dls, shard_range,
-            pos_flat=pos_flat, with_shard=True, term_values=run_terms,
-        )
+            pos_flat = None
+            if _has_positions(tbl["pos_bin"]):
+                pos_flat = decode_positions(payload(tbl["pos_bin"]), tfs)
+            out_batches += _build_block_batches(
+                term_keys, docids, tfs, gather_dl(lengths, docids),
+                shard_range, pos_flat=pos_flat, with_shard=True,
+                term_values=run_terms,
+            )[0]
         if bloom_scratch is not None:
             from visionsearch_spark.index.bloom import write_partition_bloom
 
             # distinct terms of this partition = run boundaries of the
-            # (term, shard)-sorted run_terms (a term repeats per shard)
+            # (term, shard)-sorted run_terms (a term repeats per shard),
+            # plus DL_TERM: the filter covers every term of the file
             uniq = np.ones(run_terms.size, dtype=bool)
             if run_terms.size > 1:
                 uniq[1:] = run_terms[1:] != run_terms[:-1]
-            write_partition_bloom(bloom_scratch, run_terms[uniq].tolist())
+            write_partition_bloom(
+                bloom_scratch,
+                ([DL_TERM] if n_dl else []) + run_terms[uniq].tolist())
         yield from out_batches
 
     n_tasks = n_tasks or frags.sparkSession.sparkContext.defaultParallelism
+    lo, hi = shards
+    span = hi - lo + 1
+    n_parts = max(1, min(n_tasks, span))
+    part = F.least(F.greatest(
+        F.expr(f"(shard - {lo}) * {n_parts} div {span}"),
+        F.lit(0)), F.lit(n_parts - 1))
+    route = F.array(*[F.lit(k).cast("long") for k in _route_keys(n_parts)])
     return (
         frags.withColumn(
             "shard", (F.col("min_docid") / F.lit(shard_range)).cast("long")
         )
-        .repartitionByRange(n_tasks, "shard")
+        .withColumn("route_key", F.element_at(route, (part + 1).cast("int")))
+        .repartition(n_parts, "route_key")
+        .drop("route_key")
         .sortWithinPartitions("term", "shard", "min_docid")
         .mapInArrow(compact_runs, SEGMENT_SCHEMA_DDL + ", shard long")
     )

@@ -22,8 +22,10 @@ bundled in this sandbox):
                         lineage/metrics record (north rule: postings_written,
                         terms_merged, bytes_compressed per segment)
       segments-NNNNNN/  compacted posting blocks (term, min_docid, max_docid,
-                        n, docids_bin, tfs_bin, dls_bin, max_tf, min_dl,
-                        pos_bin), one immutable dir per epoch
+                        n, docids_bin, tfs_bin, max_tf, min_dl, pos_bin,
+                        shard), one immutable dir per epoch; each file
+                        also holds the DL_TERM rows of its shards (every
+                        indexed doc's length, stored once per doc)
       term_stats-NNNNNN/ parquet (term, df), paired with its segments dir
       tombstones-NNNNNN/ parquet (docid, dl) per delete (index/deletes.py)
 
@@ -49,22 +51,45 @@ import re
 from dataclasses import dataclass
 
 # The one store layout this code reads and writes (meta["layout"]).
-LAYOUT = 1
+# Layout 2 stores each doc's length once, in DL_TERM rows; layout 1
+# repeated it per posting in a `dls_bin` column.
+LAYOUT = 2
+
+# Reserved row tags: "\x00" never appears in analyzer output ([0-9a-z]+),
+# so these rows share the segment schema with the postings and sort
+# before every term. ALLOW/BOUNDS/DENY are query-time sideband rows
+# (query/wand.py): each task receives exactly its files' shards'
+# allow-list / doc-boundary / tombstoned docids, routed by route_key,
+# with no broadcast of unbounded sets. Unlike ALLOW, absence of deny
+# rows in a task is safe — it means "no deleted docs in these shards".
+ALLOW_TERM = "\x00allow"
+BOUNDS_TERM = "\x00bounds"
+DENY_TERM = "\x00deny"
+# DL_TERM rows are stored: the doc lengths of a file's shards, built like
+# any term's blocks (<= BLOCK_SIZE docs, never crossing a shard;
+# docids_bin = the docids, tfs_bin = their dl, pos_bin NULL), so they
+# travel through the shard partitioning with the postings they describe.
+# Readers split them off before decoding tfs or positions and look dl up
+# by docid (codec.gather_dl); term_stats, the term dictionary and df()
+# never list them.
+DL_TERM = "\x00dl"
 
 # Per-block pruning metadata is (max_tf, min_dl), NOT a precomputed
 # tf-weight bound: tf_weight is monotone up in tf and down in dl, so
 # tf_weight(max_tf, min_dl, avgdl_now) is a valid upper bound under ANY
 # current avgdl — blocks never go stale when appends shift corpus stats,
-# which is what makes segments immutable across appends.
+# which is what makes segments immutable across appends. A term block's
+# min_dl is taken over the dl of its docids, looked up in the DL_TERM rows.
 # pos_bin (nullable, r6): per-doc delta+varint token positions aligned
 # with the block's postings (occurrence counts = decoded tfs_bin) —
-# written only for stores built with positions=True (meta["positions"]).
-# Scoring kernels never select it, so parquet column pruning keeps the
-# ranked path byte-identical in cost; phrase/proximity verify reads it
-# instead of re-tokenizing staged text (query/boolean.py).
+# written only for stores built with positions=True (meta["positions"]),
+# and NULL on DL_TERM rows in every store. Scoring kernels never select
+# it, so parquet column pruning keeps the ranked path byte-identical in
+# cost; phrase/proximity verify reads it instead of re-tokenizing staged
+# text (query/boolean.py).
 SEGMENT_SCHEMA_DDL = (
     "term string, min_docid long, max_docid long, n int, "
-    "docids_bin binary, tfs_bin binary, dls_bin binary, "
+    "docids_bin binary, tfs_bin binary, "
     "max_tf int, min_dl int, pos_bin binary"
 )
 

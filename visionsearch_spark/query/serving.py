@@ -35,9 +35,12 @@ from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.codec import (
     decode_blocks,
     decode_varint,
+    doc_lengths,
     fixed_values,
+    gather_dl,
     mask_array,
     payload,
+    split_dl,
     term_runs,
 )
 from visionsearch_spark.index.store import (
@@ -55,7 +58,7 @@ class LocalSearcher:
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         self.shards = shards
-        cols = ["term", "n", "docids_bin", "tfs_bin", "dls_bin"]
+        cols = ["term", "n", "docids_bin", "tfs_bin"]
         seg = read_columns(store.segment_paths(),
                            cols + ([] if shards is None else ["shard"]))
         if shards is not None:
@@ -64,12 +67,14 @@ class LocalSearcher:
         # load builds only the term -> block-row-range map (one Arrow
         # sort by term); posting bytes stay Arrow buffers and decode
         # LAZILY on a term's first query, cached decoded — cold start is
-        # column-scan cheap, the warm working set is as fast as eager
-        seg, self._blocks = term_runs(seg)
+        # column-scan cheap, the warm working set is as fast as eager.
+        # The DL_TERM rows are split off and decoded at once into the
+        # docid -> dl lookup every term's first decode gathers from.
+        dl_rows, seg, self._blocks = split_dl(*term_runs(seg))
+        self._lengths = doc_lengths(dl_rows)
         self._ns = fixed_values(seg["n"]).astype(np.int64)
         self._dbins = seg["docids_bin"]
         self._tbins = seg["tfs_bin"]
-        self._lbins = seg["dls_bin"]
         self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         # the term dictionary /suggest and did_you_mean read: terms in
         # sorted order, each with its df (Σ n over its blocks)
@@ -118,9 +123,9 @@ class LocalSearcher:
         total = int(ns.sum())
         d = decode_blocks(self._dbins.slice(lo, hi - lo), ns)
         tf = decode_varint(payload(self._tbins.slice(lo, hi - lo)), total)
-        dl = decode_varint(payload(self._lbins.slice(lo, hi - lo)), total)
         order = np.argsort(d, kind="stable")
-        tfw = tf_weight(tf.astype(np.float64), dl.astype(np.float64),
+        tfw = tf_weight(tf.astype(np.float64),
+                        gather_dl(self._lengths, d).astype(np.float64),
                         self.avgdl)
         p = (d[order], tfw[order])
         self._decoded[term] = p

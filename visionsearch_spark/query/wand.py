@@ -48,7 +48,14 @@ from pyspark.sql import functions as F
 from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
 from visionsearch_spark.bm25 import tf_weight
-from visionsearch_spark.index.store import IndexStore
+from visionsearch_spark.index.codec import DocLengths
+from visionsearch_spark.index.store import (
+    ALLOW_TERM,
+    BOUNDS_TERM,
+    DENY_TERM,
+    DL_TERM,
+    IndexStore,
+)
 from visionsearch_spark.query import score_core
 
 RESULT_DDL = "query_id long, rank int, docid long, conv_id string, turn_idx int, score double"
@@ -68,16 +75,9 @@ def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
     pdf = pd.DataFrame(rows, columns=columns)
     return spark.createDataFrame(pdf, ddl)
 
-# Sideband row tags: "\x00" never appears in analyzer output ([0-9a-z]+),
-# so these rows share the segment schema with the postings — each task
-# receives exactly its files' shards' allow-list / doc-boundary docids
-# (routed by route_key), with no broadcast of unbounded sets.
-ALLOW_TERM = "\x00allow"
-BOUNDS_TERM = "\x00bounds"
-# tombstoned docids (index/deletes.py): masked before every k-cut.
-# Unlike ALLOW, absence of deny rows in a task is safe — it means "no
-# deleted docs in these shards", not "everything deleted".
-DENY_TERM = "\x00deny"
+# Sideband row tags ALLOW_TERM / BOUNDS_TERM / DENY_TERM and the stored
+# DL_TERM are defined together in index/store.py (the serving tier reads
+# DL_TERM rows and must not import this module's pyspark).
 
 
 def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFrame:
@@ -106,7 +106,6 @@ def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFram
             "n",
             pack("ds").alias("docids_bin"),
             F.lit(b"").alias("tfs_bin"),
-            F.lit(b"").alias("dls_bin"),
             F.lit(0).cast("int").alias("max_tf"),
             F.lit(0).cast("int").alias("min_dl"),
         )
@@ -122,7 +121,9 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     groups off the footer min/max stats; use_threads=False because
     parallelism belongs to the task scheduler, not a nested Arrow pool
     fighting 32 sibling tasks), decodes each payload column ONCE for the
-    whole task (codec.decode_blocks), and scores.
+    whole task (codec.decode_blocks), looks each posting's dl up by docid
+    in the files' DL_TERM rows (codec.gather_dl over `_doc_lengths`,
+    decoded once per file and worker), and scores.
 
     qplans: [(query_id, [(term, idf)], k)], each query's terms in sorted
     unique-term order (the summation order).
@@ -144,7 +145,9 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     from visionsearch_spark.index.codec import (
         decode_blocks,
         decode_varint,
+        gather_dl,
         payload,
+        split_dl,
         term_runs,
     )
 
@@ -156,8 +159,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
         qid: terms[0][0] for qid, terms, _k in qplans
         if len(terms) == 1 and qid not in cursors
     }
-    cols = ["term", "n", "docids_bin", "tfs_bin", "dls_bin", "max_tf",
-            "min_dl"]
+    cols = ["term", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"]
 
     def side_docids(side: pa.Table | None, tag: str) -> np.ndarray:
         import pyarrow.compute as pc
@@ -173,11 +175,16 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
-        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
-            columns=cols,
-            filter=pc.field("term").isin(hit_terms),
-            use_threads=False,
-        ).to_table())
+        # a file whose doc lengths this worker has not cached yet adds
+        # the DL_TERM rows, tagged by file, to the same scan
+        keys = [_dl_key(p) for p in paths]
+        cold = any(k not in _DL_CACHE for k in keys)
+        dl_rows, tbl, runs = split_dl(*term_runs(
+            pads.dataset(paths, format="parquet").scanner(
+                columns=cols + ["__filename"] * cold,
+                filter=pc.field("term").isin(hit_terms + [DL_TERM] * cold),
+                use_threads=False,
+            ).to_table()))
         if not runs:
             return
         allow = side_docids(side, ALLOW_TERM) if has_filter else None
@@ -203,7 +210,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
         docids = decode_blocks(tbl["docids_bin"], ns)
         tfw = tf_weight(
             decode_varint(payload(tbl["tfs_bin"]), total).astype(np.float64),
-            decode_varint(payload(tbl["dls_bin"]), total).astype(np.float64),
+            gather_dl(_doc_lengths(keys, dl_rows), docids).astype(np.float64),
             avgdl)
         # tf_weight(max_tf, min_dl) under the CURRENT avgdl >= tf_weight
         # of every posting in the block (monotonicity) — safe and never
@@ -340,7 +347,7 @@ def invalidate_term_df_memo(root: str | None = None) -> None:
 CARRY_DRIVER_MAX_SHARDS = 4096
 
 _CARRY_DDL = ("term string, shard long, n int, docids_bin binary, "
-              "tfs_bin binary, dls_bin binary, max_tf int, min_dl int")
+              "tfs_bin binary, max_tf int, min_dl int")
 
 
 def _carry_bounds_rows(spark: SparkSession, bounds: DataFrame,
@@ -372,14 +379,13 @@ def _carry_bounds_rows(spark: SparkSession, bounds: DataFrame,
             rows.append(
                 (BOUNDS_TERM, s, 1,
                  bytes(encode_docids(np.asarray([cur], dtype=np.int64))),
-                 b"", b"", 0, 0)
+                 b"", 0, 0)
             )
         if s in per_shard:
             cur = per_shard[s]
     return _local_df(
         spark, rows, _CARRY_DDL,
-        ["term", "shard", "n", "docids_bin", "tfs_bin", "dls_bin",
-         "max_tf", "min_dl"],
+        ["term", "shard", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"],
     )
 
 
@@ -409,7 +415,6 @@ def _carry_bounds_spark(spark: SparkSession, per: DataFrame,
         F.lit(1).cast("int").alias("n"),
         pack_one("cur").alias("docids_bin"),
         F.lit(b"").alias("tfs_bin"),
-        F.lit(b"").alias("dls_bin"),
         F.lit(0).cast("int").alias("max_tf"),
         F.lit(0).cast("int").alias("min_dl"),
     )
@@ -484,10 +489,10 @@ def _file_shard_range(path: str) -> tuple[int, int]:
     """(min_shard, max_shard) of one segment file from its parquet
     footer (row-group stats on the shard column — O(1) metadata, no data
     read). Needed to route per-shard sideband rows to the task that owns
-    the file: range partitioning makes a file's shards contiguous, and a
-    dir-boundary shard straddling two LSM dirs simply appears in both
-    files' ranges (the sideband row is duplicated to both tasks;
-    np.unique in the kernel absorbs it)."""
+    the file: the segment write gives each file a contiguous run of
+    shards (spimi.write_segments), and a dir-boundary shard straddling
+    two LSM dirs simply appears in both files' ranges (the sideband row
+    is duplicated to both tasks; np.unique in the kernel absorbs it)."""
     import os
 
     import pyarrow.parquet as pq
@@ -517,6 +522,49 @@ def _file_shard_range(path: str) -> tuple[int, int]:
             _SHARD_RANGE_CACHE.pop(next(iter(_SHARD_RANGE_CACHE)))
         _SHARD_RANGE_CACHE[key] = rng
     return rng
+
+
+# per-file doc-length cache (the decoded DL_TERM rows, codec.DocLengths):
+# files are immutable, keyed (path, mtime) like the shard-range cache, so
+# a worker decodes a file's lengths once, not once per query batch.
+# Bounded by the docs it holds (about 24 B each with the table).
+_DL_CACHE: dict[tuple[str, float], DocLengths] = {}
+_DL_CACHE_MAX_DOCS = 1 << 21
+
+
+def _dl_key(path: str) -> tuple[str, float]:
+    import os
+
+    return path, os.path.getmtime(path)
+
+
+def _doc_lengths(keys: list[tuple[str, float]],
+                 dl_rows: pa.Table) -> DocLengths:
+    """The docid -> dl lookup of a task's segment files (`_dl_key`s):
+    each file's DL_TERM rows (its shards' docs, spimi._dl_batches)
+    decoded once per worker process and cached. `dl_rows` holds every
+    file's DL_TERM rows with their `__filename` whenever one of the
+    files is not cached."""
+    import pyarrow.compute as pc
+
+    from visionsearch_spark.index.codec import dl_lookup, doc_lengths
+
+    parts = []
+    for key in keys:
+        got = _DL_CACHE.get(key)
+        if got is None:
+            got = doc_lengths(dl_rows.filter(
+                pc.equal(dl_rows["__filename"], key[0])))
+            while _DL_CACHE and got.docids.size + sum(
+                    v.docids.size for v in _DL_CACHE.values()
+            ) > _DL_CACHE_MAX_DOCS:
+                _DL_CACHE.pop(next(iter(_DL_CACHE)))
+            _DL_CACHE[key] = got
+        parts.append(got)
+    if len(parts) == 1:
+        return parts[0]
+    return dl_lookup(np.concatenate([p.docids for p in parts]),
+                     np.concatenate([p.dls for p in parts]))
 
 
 # per-file bloom cache: files are immutable (LSM append-only), keyed
@@ -653,15 +701,15 @@ def _partial_scores(
 
     FILE-ALIGNED FAST PATH (no sidebands — the hot batch/serving path):
     ZERO data shuffle. Every live segment dir is written by the ONE
-    epoch writer, `spimi._write_epoch` (`repartitionByRange(n_partitions,
-    "shard")` + maxRecordsPerFile=0 — build, compact, and append all
-    call it), so each segment FILE holds complete shards —
-    all terms' blocks for a shard co-located — and LSM increments own
-    disjoint docid ranges; therefore ANY whole-file task assignment
-    computes complete per-docid sums, and the per-partition k-cut stays
-    exact. Tasks receive their bin of file PATHS in the task closure
-    (`_launch_bins`, one stage), read their files in-task, score, and
-    emit ≤ k+ties rows per query.
+    epoch writer, `spimi._write_epoch` (contiguous shard runs per
+    partition + maxRecordsPerFile=0 — build, compact, and append all
+    call it), so each segment FILE holds complete shards — all terms'
+    blocks and the DL_TERM rows for a shard co-located — and LSM
+    increments own disjoint docid ranges; therefore ANY whole-file task
+    assignment computes complete per-docid sums, and the per-partition
+    k-cut stays exact. Tasks receive their bin of file PATHS in the task
+    closure (`_launch_bins`, one stage), read their files in-task, score,
+    and emit ≤ k+ties rows per query.
     The r3 scaling decomposition blamed the residual efficiency gap on
     shuffle serialization of the filtered posting KBs through one host
     memory bus — this path removes that exchange entirely instead of

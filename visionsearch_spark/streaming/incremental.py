@@ -25,8 +25,8 @@ Spark-first translation — append into the SAME store:
      (`spimi._flip`) adds to the live list. O(delta) — existing dirs are
      immutable; their (max_tf, min_dl) block bounds are
      avgdl-independent, so refreshed corpus stats can't stale them.
-     Scoring stays exact under current stats because postings store
-     tf+dl, not weights. Fragments are
+     Scoring stays exact under current stats because segments store
+     tf and doc length (DL_TERM rows), not weights. Fragments are
      transient: once the flip lists the delta pids in `compacted_pids`
      their fragments are GC'd, and the postings live only in the dir.
   4. Query path reads the UNION of live segment dirs (same shard
@@ -36,6 +36,7 @@ Spark-first translation — append into the SAME store:
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -46,6 +47,7 @@ from visionsearch_spark.docid import assign_docids_with_count
 from visionsearch_spark.index.store import (
     SEGMENT_SCHEMA_DDL,
     IndexStore,
+    count_rows,
 )
 
 
@@ -279,7 +281,15 @@ def _finish_append(spark: SparkSession, store: IndexStore, meta: dict,
     if delta_pids:
         frags = spark.read.schema(SEGMENT_SCHEMA_DDL).parquet(
             *[store.fragment_path(p) for p in delta_pids])
-        epoch = _write_epoch(store, meta, frags, n_partitions)
+        # the delta's docids continue past every live dir's: its first
+        # one (manifest lineage) starts the shard span of the new dir
+        lineage = [json.loads(m["lineage"]) for m in store.manifests()
+                   if m["partition_id"] in delta_pids]
+        first_docid = min((ln["docid_min"] for ln in lineage
+                           if ln.get("docid_min") is not None),
+                          default=count_rows(store.staged_path) - 1)
+        epoch = _write_epoch(store, meta, frags, n_partitions,
+                             first_docid=first_docid)
         meta.update({
             **epoch,
             "segment_dirs": meta["segment_dirs"] + epoch["segment_dirs"],
