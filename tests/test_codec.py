@@ -3,6 +3,8 @@
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
 import pyarrow as pa
 import pytest
@@ -18,7 +20,6 @@ from visionsearch_spark.index.codec import (
     encode_positions,
     encode_varint,
     fixed_values,
-    mask_array,
     payload,
     term_runs,
 )
@@ -42,6 +43,45 @@ def test_known_values():
 def test_varint_roundtrip(vals):
     arr = np.array(vals, dtype=np.uint64)
     assert decode_varint(encode_varint(arr), len(vals)).tolist() == vals
+
+
+def _leb128(vals):
+    """Reference LEB128 encoder, one value at a time in pure Python."""
+    out = bytearray()
+    for v in vals:
+        while True:
+            byte, v = v & 0x7F, v >> 7
+            out.append(byte | (0x80 if v else 0))
+            if not v:
+                break
+    return bytes(out)
+
+
+def test_varint_decode_mixes_every_width():
+    """1- to 10-byte values interleaved, up to 2**64 - 1: the byte-position
+    fold restores each value exactly (no float, no overflow at bit 63)."""
+    edges = [0, 1, 2**64 - 1, 2**63, 2**63 - 1]
+    for k in range(1, 10):
+        edges += [2**(7 * k) - 1, 2**(7 * k), 2**(7 * k) + 1]
+    rnd = random.Random(7)
+    bits = [rnd.randint(1, 64) for _ in range(2000)]
+    vals = edges + [(1 << (b - 1)) | rnd.getrandbits(b - 1) if b > 1 else 1
+                    for b in bits]
+    rnd.shuffle(vals)
+    buf = _leb128(vals)
+    assert encode_varint(np.array(vals, dtype=np.uint64)) == buf
+    assert {len(_leb128([v])) for v in vals} == set(range(1, 11))
+    assert decode_varint(buf, len(vals)).tolist() == vals
+    # the one-byte fast path and a stream whose count disagrees
+    assert decode_varint(bytes([0, 5, 127]), 3).tolist() == [0, 5, 127]
+    with pytest.raises(ValueError):
+        decode_varint(buf, len(vals) + 1)
+
+
+@given(st.lists(st.integers(min_value=0, max_value=2**64 - 1), max_size=300))
+@settings(max_examples=200, deadline=None)
+def test_varint_roundtrip_full_width(vals):
+    assert decode_varint(_leb128(vals), len(vals)).tolist() == vals
 
 
 @given(
@@ -236,12 +276,3 @@ def test_fixed_values_rejects_nulls_and_non_numeric():
         == [7, 8]
     with pytest.raises(TypeError):
         fixed_values(pa.array(["a"]))
-
-
-@given(st.lists(st.booleans(), max_size=100))
-@settings(max_examples=100, deadline=None)
-def test_mask_array_filters_like_the_numpy_mask(bits):
-    mask = np.array(bits, dtype=bool)
-    tbl = pa.table({"x": pa.array(np.arange(mask.size), pa.int64())})
-    got = tbl.filter(mask_array(mask))["x"].to_pylist()
-    assert got == np.flatnonzero(mask).tolist()

@@ -14,12 +14,22 @@ Decode API. Every reader of more than one block goes through the column
 decoders, never a per-block or per-row loop:
   decode_blocks(col, ns) -> int64 docids of every block of a binary
                             column, in row order (block i holds ns[i]);
+  block_docids(raw, ns)  -> the same over the blocks' docids_bin bytes
+                            already concatenated — the one block decoder
+                            decode_blocks and LocalSearcher's first-touch
+                            decode (query/serving.py) share;
   payload(col)           -> the column's value bytes as one uint8 array,
                             fed to decode_varint (tfs_bin) or
                             decode_positions (pos_bin);
+  binary_parts(arr)      -> one binary array's (offsets, data) views, so
+                            a row range's bytes are one numpy slice;
   term_runs(tbl)         -> a posting table sorted by term plus each
                             term's row range, so a term's blocks are one
-                            zero-copy slice;
+                            zero-copy slice: the grouping of the Spark-side
+                            readers (wand, boolean, fsck). It imports
+                            pyarrow.compute where it runs; the serving tier
+                            never calls it (it groups each file's rows in
+                            place, numpy only);
   split_dl(tbl, runs)    -> term_runs' output split into the DL_TERM rows
                             and the term rows (with their shifted runs),
                             before any tf or positions decode;
@@ -30,20 +40,21 @@ decoders, never a per-block or per-row loop:
                             DocLengths — the one per-posting dl lookup
                             of every reader and merge kernel.
   fixed_values(col)      -> a fixed-width (integer/float) column as one
-                            numpy array (n, docid, shard, turn_idx, ...);
-  mask_array(mask)       -> a numpy bool mask as an Arrow filter mask.
+                            numpy array (n, docid, shard, turn_idx, ...).
 These cross the Arrow boundary through buffers, never through pyarrow's
 converters (to_numpy, np.asarray of an Arrow array, pa.array), which
-import pandas: the serving tier reads everything through them and stays
-pandas-free (query/serving.py).
+import pandas, and never through pyarrow.compute: the serving tier reads
+everything through them and stays pandas- and compute-free
+(query/serving.py).
 The scalar decode_docids/decode_varint/decode_positions primitives stay
 for callers that decode exactly ONE block (fsck's spot check).
 
 Chunk rule: a column may be a ChunkedArray. Each chunk's value bytes are
 read zero-copy from its data buffer over the span its offsets give
-(honouring the array's slice offset) and decoded in one pass per chunk —
-never combine_chunks: one Arrow binary chunk's int32 offsets cap it at
-2 GiB (spimi._CHUNK_BYTE_LIMIT), so a large column stays chunked.
+(honouring the array's slice offset), concatenated in numpy when there
+are several, and decoded in one pass — never combine_chunks: one Arrow
+binary chunk's int32 offsets cap it at 2 GiB (spimi._CHUNK_BYTE_LIMIT),
+so a large column stays chunked.
 
 Null rule: payload/decode_blocks/fixed_values raise on a column with
 NULL slots. A NULL slot's offsets may still span real bytes of an
@@ -59,12 +70,12 @@ from typing import NamedTuple
 
 import numpy as np
 import pyarrow as pa
-import pyarrow.compute as pc
 
 from visionsearch_spark.index.store import DL_TERM
 
 _MASK = np.uint64(0x7F)
 _CONT = np.uint8(0x80)
+_MASK7 = np.uint8(0x7F)
 
 
 # ceil(bit_length/7) boundaries: value v needs 1 + (number of these <= v)
@@ -105,25 +116,33 @@ def encode_varint(values: np.ndarray) -> bytes:
 
 
 def decode_varint(buf: bytes, n: int) -> np.ndarray:
-    """LEB128 bytes -> uint64 array of n values."""
+    """LEB128 bytes -> uint64 array of n values. A fold over byte
+    positions: each value's first byte, then the values still running OR
+    in their byte at position 1, 2, ... (<= 10 passes, each over the
+    values that long), so no per-byte scatter."""
     if n == 0:
         return np.zeros(0, dtype=np.uint64)
     raw = np.frombuffer(buf, dtype=np.uint8)
     is_last = (raw & _CONT) == 0
     if raw.size == n and is_last.all():
         # every value is one byte: the common case for tfs and doc
-        # lengths, decoded without the byte-to-value scatter
+        # lengths
         return raw.astype(np.uint64)
-    # element index for each byte: cumsum of "previous byte was last"
-    elem = np.zeros(raw.size, dtype=np.int64)
-    elem[1:] = np.cumsum(is_last[:-1])
-    # position of each byte within its element
-    starts = np.zeros(raw.size, dtype=np.int64)
-    last_pos = np.flatnonzero(is_last)
-    run_start = np.concatenate(([0], last_pos[:-1] + 1))
-    pos = np.arange(raw.size, dtype=np.int64) - run_start[elem]
-    out = np.zeros(n, dtype=np.uint64)
-    np.add.at(out, elem, (raw & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64)))
+    ends = np.flatnonzero(is_last)
+    if ends.size != n:
+        raise ValueError(f"LEB128 stream holds {ends.size} values, not {n}")
+    starts = np.empty(n, dtype=np.int64)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    out = (raw[starts] & _MASK7).astype(np.uint64)
+    extra = ends - starts  # bytes after each value's first
+    live = np.flatnonzero(extra)
+    pos = 1
+    while live.size:
+        out[live] |= ((raw[starts[live] + pos] & _MASK7).astype(np.uint64)
+                      << np.uint64(7 * pos))
+        live = live[extra[live] > pos]
+        pos += 1
     return out
 
 
@@ -180,20 +199,27 @@ def decode_docids(buf: bytes, n: int) -> np.ndarray:
     return np.cumsum(deltas)
 
 
-def _value_bytes(chunk: pa.Array) -> np.ndarray:
-    """Zero-copy uint8 view of one binary chunk's values, concatenated."""
+def binary_parts(chunk: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """Zero-copy (offsets, data) views of one null-free binary array:
+    value i is data[offsets[i]:offsets[i + 1]] (the array's slice offset
+    honoured), so any row range's bytes are one numpy slice."""
     if chunk.null_count:
         raise ValueError("posting column has NULL slots; filter them out "
                          "before decoding (codec null rule)")
     data = chunk.buffers()[2]
     if len(chunk) == 0 or data is None:
-        return np.zeros(0, dtype=np.uint8)
+        return (np.zeros(len(chunk) + 1, dtype=np.int64),
+                np.zeros(0, dtype=np.uint8))
     odt = np.int64 if pa.types.is_large_binary(chunk.type) else np.int32
     off = np.frombuffer(chunk.buffers()[1], dtype=odt, count=len(chunk) + 1,
                         offset=chunk.offset * np.dtype(odt).itemsize)
-    lo = int(off[0])
-    return np.frombuffer(data, dtype=np.uint8, count=int(off[-1]) - lo,
-                         offset=lo)
+    return off, np.frombuffer(data, dtype=np.uint8)
+
+
+def _value_bytes(chunk: pa.Array) -> np.ndarray:
+    """Zero-copy uint8 view of one binary chunk's values, concatenated."""
+    off, data = binary_parts(chunk)
+    return data[int(off[0]):int(off[-1])]
 
 
 def _chunks(col: pa.Array | pa.ChunkedArray) -> list[pa.Array]:
@@ -209,15 +235,6 @@ def _fixed_chunk(chunk: pa.Array, dt: np.dtype) -> np.ndarray:
         return np.zeros(0, dtype=dt)
     return np.frombuffer(chunk.buffers()[1], dtype=dt, count=len(chunk),
                          offset=chunk.offset * dt.itemsize)
-
-
-def mask_array(mask: np.ndarray) -> pa.BooleanArray:
-    """A numpy bool mask as an Arrow boolean array for Table.filter, built
-    from its bit-packed buffer (pa.array would import pandas)."""
-    m = np.ascontiguousarray(mask, dtype=bool)
-    return pa.Array.from_buffers(
-        pa.bool_(), m.size,
-        [None, pa.py_buffer(np.packbits(m, bitorder="little"))])
 
 
 def fixed_values(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
@@ -251,19 +268,21 @@ def payload(col: pa.Array | pa.ChunkedArray) -> np.ndarray:
 def decode_blocks(col: pa.Array | pa.ChunkedArray,
                   ns: np.ndarray) -> np.ndarray:
     """Docids of every block of a docids_bin column, concatenated in row
-    order: one decode_varint pass per chunk, then per-block absolutes
-    restored by a segmented cumsum (each block's first delta is
-    absolute). Equal to np.concatenate of decode_docids per block."""
+    order (block_docids over the column's payload). Equal to
+    np.concatenate of decode_docids per block."""
     ns = np.asarray(ns, dtype=np.int64)
     if ns.size != len(col):
         raise ValueError(f"{ns.size} block counts for {len(col)} blocks")
-    parts, i = [], 0
-    for c in _chunks(col):
-        m = int(ns[i:i + len(c)].sum())
-        parts.append(decode_varint(_value_bytes(c), m))
-        i += len(c)
-    deltas = (np.concatenate(parts) if parts
-              else np.zeros(0, dtype=np.uint64)).astype(np.int64)
+    return block_docids(payload(col), ns)
+
+
+def block_docids(raw: np.ndarray, ns: np.ndarray) -> np.ndarray:
+    """Docids of consecutive docids_bin blocks whose bytes are
+    concatenated in `raw` (block i holds ns[i] values): one decode_varint
+    pass, then per-block absolutes restored by a segmented cumsum (each
+    block's first delta is absolute)."""
+    ns = np.asarray(ns, dtype=np.int64)
+    deltas = decode_varint(raw, int(ns.sum())).astype(np.int64)
     if deltas.size == 0:
         return deltas
     starts = np.zeros(ns.size, dtype=np.int64)
@@ -279,7 +298,11 @@ def term_runs(tbl: pa.Table) -> tuple[pa.Table, dict[str, tuple[int, int]]]:
     [start, stop) row range in the sorted table — a term's blocks are
     then one zero-copy slice. Binary columns are widened to large_binary
     first: the sort gathers every chunk into one, and large_binary's
-    int64 offsets lift the 2 GiB per-chunk cap."""
+    int64 offsets lift the 2 GiB per-chunk cap. The Spark-side grouping
+    (wand, boolean, fsck): the cast, the sort and the run-end encoding
+    import pyarrow.compute, which the serving tier never loads."""
+    import pyarrow.compute as pc
+
     tbl = tbl.cast(pa.schema([
         f.with_type(pa.large_binary()) if pa.types.is_binary(f.type) else f
         for f in tbl.schema

@@ -123,22 +123,35 @@ def count_rows(d: str) -> int:
     return sum(pq.ParquetFile(f).metadata.num_rows for f in parquet_files(d))
 
 
+def file_tables(dirs: list[str], columns: list[str],
+                read_dictionary: list[str] | None = None) -> list:
+    """`columns` of every data file in `dirs`, one pyarrow Table per file
+    as read. Reads are single-threaded, so no Arrow thread pool starts
+    (the serving tier keeps its process to the threads it made);
+    `read_dictionary` columns come back dictionary-encoded, one value
+    object per distinct value of a file."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for d in dirs:
+        for f in parquet_files(d):
+            with pq.ParquetFile(f, read_dictionary=read_dictionary) as pf:
+                out.append(pf.read(columns=columns, use_threads=False))
+    return out
+
+
 def read_columns(dirs: list[str], columns: list[str]):
-    """`columns` of every data file in `dirs`, as one pyarrow Table. The
-    untargeted reader: no predicate pushdown, and deliberately not
+    """`columns` of every data file in `dirs`, as one pyarrow Table (the
+    file_tables concatenated, in file order). The untargeted reader: no
+    predicate pushdown, single-threaded, and deliberately not
     pyarrow.dataset, whose import pulls in pandas (readers that need
     pushdown use pyarrow.dataset)."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    parts = []
-    for d in dirs:
-        for f in parquet_files(d):
-            with pq.ParquetFile(f) as pf:
-                parts.append(pf.read(columns=columns))
     # "default" promotion unifies field nullability: files of one table
     # written by different jobs may disagree on it
-    return pa.concat_tables(parts, promote_options="default")
+    return pa.concat_tables(file_tables(dirs, columns),
+                            promote_options="default")
 
 
 @dataclass
