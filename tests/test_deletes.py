@@ -24,7 +24,6 @@ from visionsearch_spark.index.deletes import (
     delete_convs,
     delete_docs,
     n_deleted,
-    pending_tombstones,
 )
 from visionsearch_spark.index.spimi import build_index, compact_store
 from visionsearch_spark.index.store import IndexStore
@@ -113,7 +112,6 @@ def test_delete_idempotent_unknown_and_counts(spark, store):
     ghost = spark.createDataFrame([(10**9,)], "docid long")
     assert delete_docs(spark, store, ghost) == 0  # unknown docid: no-op
     assert n_deleted(store) == (n, 0)
-    assert pending_tombstones(spark, store).count() == n
     # meta lists exactly one tombstone dir (the two no-ops added none)
     assert len(store.read_meta()["tombstone_dirs"]) == 1
 
@@ -291,24 +289,72 @@ def test_http_delete_endpoint(spark, store, tmp_path):
         srv.shutdown()
 
 
+def test_readers_use_one_meta_snapshot(spark, store, monkeypatch):
+    """A compaction flip between two meta reads of one reader must not
+    mix the old stats and deny set with the new segments: LocalSearcher
+    and topk resolve every dir from their first read. The dirs the flip
+    retires stay on disk for one flip, so the old snapshot still
+    answers, exactly as it did before the flip."""
+    from visionsearch_spark.query.serving import LocalSearcher
+    from visionsearch_spark.query.wand import topk
+
+    _delete(spark, store, _victims(spark, store))
+    pre = store.read_meta()
+    queries = [("join filter stream", 10), ("join", 8)]
+
+    def local(q, k):
+        return LocalSearcher(store).search(q, k=k)
+
+    def spark_topk(q, k):
+        return [tuple(r) for r in topk(spark, store, q, k=k).collect()]
+
+    want = [(local(q, k), spark_topk(q, k)) for q, k in queries]
+    compact_store(spark, store.root)
+    post = store.read_meta()
+    assert post["segment_dirs"] != pre["segment_dirs"]
+    assert post["tombstone_dirs"] == [] != pre["tombstone_dirs"]
+    real = IndexStore.read_meta
+
+    def first_read_pre():
+        calls = []
+
+        def read_meta(self):
+            calls.append(self)
+            return dict(pre) if len(calls) == 1 else real(self)
+        monkeypatch.setattr(IndexStore, "read_meta", read_meta)
+
+    for (q, k), (want_local, want_topk) in zip(queries, want):
+        first_read_pre()
+        assert local(q, k) == want_local, q
+        first_read_pre()
+        assert spark_topk(q, k) == want_topk, q
+
+
 def test_deny_rides_fast_path_plan(spark, store, monkeypatch):
-    """Tombstoned stores keep the zero-posting-shuffle plan: deny packs
-    shuffle on route_key; segment dirs never appear in a Spark FileScan.
-    Tiny bins pinned so the fixture-sized store fans out to >1 task —
-    with one bin the route_key exchange legitimately collapses to
-    SinglePartition (r7 _n_bins work-proportional floor)."""
+    """Tombstoned stores keep the one-stage scan: each task reads the
+    pending tombstones itself, so with more than one bin the scan plan
+    has no Exchange, the query plan no route_key, and segment dirs never
+    appear in a Spark FileScan. Tiny bins pinned so the fixture-sized
+    store fans out to >1 task (r7 _n_bins work-proportional floor)."""
     victims = _victims(spark, store)
     _delete(spark, store, victims)
     seg_dirs = store.segment_paths()
     monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
+    assert len(wand._file_bins(spark, store, ["filter", "join", "stream"],
+                               None, 1)) > 1
+    partials, _qplans = wand._partial_scores(spark, store, Q, 0.0, None,
+                                             None, False)
+    partials.count()
+    scan = partials._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in scan
     res = batch_topk(spark, store, Q)
     res.count()
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert not any(d in plan for d in seg_dirs)
-    assert "hashpartitioning(route_key" in plan
+    assert "route_key" not in plan
 
 
-def test_mask_fragments_reencodes_hit_blocks(spark):
+def test_mask_fragments_reencodes_hit_blocks(spark, tmp_path):
     """The purge kernel on hand-built fragments: untouched blocks pass
     through byte-identical, fully deleted blocks vanish, partly deleted
     blocks equal the per-block encoders over their kept postings (with
@@ -318,6 +364,8 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
     NULL pos_bin blocks are masked as two inputs; one input mixing them
     is refused."""
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from visionsearch_spark.index.codec import (
         decode_docids,
@@ -369,12 +417,18 @@ def test_mask_fragments_reencodes_hit_blocks(spark):
     # partly deleted, NULL pos_bin (a positionless store)
     nopos = [block("delta", [3, 50, 60], [2, 5, 1], [8, 7, 6], None)]
     dead_ids = {6, 7, 40, 41, 50}
-    dead = spark.createDataFrame([(6,), (7,), (40,), (41,), (50,)],
-                                 "docid long")
+    dead = tmp_path / "tombstones-000001"
+    dead.mkdir()
+    ids = sorted(dead_ids)
+    pq.write_table(pa.table({"docid": pa.array(ids, pa.int64()),
+                             "dl": pa.array([lengths[x] for x in ids],
+                                            pa.int64())}),
+                   str(dead / "part-00000.parquet"))
 
     def mask(blocks):
         frags = spark.createDataFrame(blocks, SEGMENT_SCHEMA_DDL)
-        return _mask_fragments(frags, dead, 1000, n_tasks=2).collect()
+        return _mask_fragments(frags, [str(dead)], 1000,
+                               n_tasks=2).collect()
 
     def norm(r):
         return tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v

@@ -213,14 +213,13 @@ def test_undecodable_dl_rows_reported(store, damage):
     """A DL_TERM row whose docids_bin holds one value too many (the
     bytes of a torn write), or a stray reserved row sorting before
     DL_TERM, is reported as a `dl` error, not raised out of fsck."""
-    from visionsearch_spark.index.store import BOUNDS_TERM
-
     def torn(dl):
         return [{**dl[0], "docids_bin": dl[0]["docids_bin"] + b"\x05"}] \
             + dl[1:]
 
     def stray(dl):
-        return [{**dl[0], "term": BOUNDS_TERM}] + dl
+        # a reserved "\x00" tag that sorts before DL_TERM ("\x00dl")
+        return [{**dl[0], "term": "\x00bogus"}] + dl
 
     _rewrite_dl_rows(store, torn if damage == "torn_docids" else stray)
     errs = _errors(fsck(store.root))

@@ -222,15 +222,15 @@ def test_positions_survive_lifecycle(spark, transcripts,
           .select("docid", "conv_id").collect()}
     assert not any(dm[d] in victims for d in hit_ids)  # tombstones mask
     parity("deleted-pending", victims)
-    # the tombstone anti-join sits on top of the one-stage launcher: no
-    # Exchange anywhere beneath the kernel
+    # each task drops the tombstones itself: the one-stage launcher is
+    # the whole plan, with no anti-join and no Exchange
     for df in (positional_docids(spark, store, ["join", "filter"]),
                matching_docids(spark, store, all_of=["join", "filter"])):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "LeftAnti" in plan
+        assert "LeftAnti" not in plan
+        assert "Exchange" not in plan
         sub = _kernel_subtree(plan)
         assert any("Range (" in ln for ln in sub), plan
-        assert not any("Exchange" in ln for ln in sub), plan
     compact_store(spark, root, n_partitions=8)
     store = IndexStore(root)
     assert len(store.read_meta()["segment_dirs"]) == 1

@@ -187,21 +187,6 @@ def test_collapse_equals_per_key_max(rows):
 
 
 @settings(max_examples=200, deadline=None)
-@given(bounds=st.sets(st.integers(1, 60), max_size=10),
-       docids=st.lists(st.integers(0, 80), max_size=30))
-def test_parents_is_last_bound_at_or_below(bounds, docids):
-    b = np.array(sorted(bounds | {0}), dtype=np.int64)
-    got = score_core.parents(b, np.array(docids, dtype=np.int64))
-    assert got.tolist() == [max(x for x in b.tolist() if x <= d)
-                            for d in docids]
-
-
-def test_parents_rejects_docid_below_every_bound():
-    with pytest.raises(RuntimeError):
-        score_core.parents(np.array([5, 9]), np.array([3, 6]))
-
-
-@settings(max_examples=200, deadline=None)
 @given(docids=st.sets(st.integers(0, 50), max_size=30),
        deny=st.sets(st.integers(0, 50), max_size=20),
        allow=st.one_of(st.none(), st.sets(st.integers(0, 50), max_size=20)))

@@ -101,18 +101,18 @@ def test_snapshot_is_independently_mutable(spark, store, tmp_path,
 def test_snapshot_carries_tombstones_and_bounds(spark, store, tmp_path,
                                                 transcripts):
     from visionsearch_spark.index.deletes import delete_convs, n_deleted
-    from visionsearch_spark.query.units import write_doc_bounds
 
     conv = _top(spark, store)[0][0]
     delete_convs(
         spark, store, spark.createDataFrame([(conv,)], "conv_id string"))
-    write_doc_bounds(spark, store)
+    # a non-epoch sidecar dir beside the epochs travels with the store
+    spark.range(3).write.parquet(os.path.join(store.root, "sidecar"))
     dst = str(tmp_path / "clone")
     snapshot_store(store.root, dst)
     clone = IndexStore(dst)
     assert n_deleted(clone)[0] == n_deleted(store)[0] > 0
     assert conv not in {c for c, _t, _s in _top(spark, clone)}
-    assert os.path.isdir(os.path.join(dst, "doc_bounds"))
+    assert spark.read.parquet(os.path.join(dst, "sidecar")).count() == 3
 
 
 def test_snapshot_refuses_existing_target(store, tmp_path):

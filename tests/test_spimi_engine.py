@@ -267,20 +267,18 @@ def _sideband_oracle(oracle_index, query, k, allowed=None,
 
 def test_sideband_fast_path_matches_oracle(spark, built_store,
                                            oracle_index):
-    """The routed-sideband path is exact for filter, collapse, and their
-    composition — on a multi-term query and on a single-term one (the
-    block-max path must stand down under a sideband)."""
+    """The routed allow path, the in-task collapse and their composition
+    are exact — on a multi-term query and on a single-term one (the
+    block-max path must stand down under either)."""
     from pyspark.sql import functions as F
 
     docmap = spark.read.parquet(built_store.docmap_path)
     allow = docmap.filter(F.col("docid") % 3 != 1).select("docid")
     allowed = {d for d in range(len(oracle_index.docs)) if d % 3 != 1}
-    bounds = docmap.groupBy("conv_id").agg(
-        F.min("docid").alias("docid")).select("docid")
     cases = [
         (dict(docid_filter=allow), allowed, False),
-        (dict(collapse_bounds=bounds), None, True),
-        (dict(docid_filter=allow, collapse_bounds=bounds), allowed, True),
+        (dict(collapse=True), None, True),
+        (dict(docid_filter=allow, collapse=True), allowed, True),
     ]
     queries = [(0, "join filter stream", 7), (1, "xylophone", 4)]
     for kw, allowed_ids, collapse in cases:

@@ -1,6 +1,6 @@
 """Unit fan-out search (per-doc max collapse) and metadata-filtered BM25
 vs the exhaustive pure-Python oracle — including doc-straddles-shard edges
-(tiny shard_range) where the carry sideband rows are load-bearing."""
+(tiny shard_range), where one parent's units sit in several files."""
 
 from __future__ import annotations
 
@@ -39,7 +39,7 @@ def unit_store(spark, tmp_path_factory):
         "tool string, ts timestamp",
     )
     # n_shards=40 over ~240 units -> shard_range ~6: docs with 7 units
-    # MUST straddle shard edges, exercising the carry rows
+    # MUST straddle shard edges
     store = build_index(df, root, n_partitions=4, n_shards=40)
     assert store.read_meta()["shard_range"] <= 8
     return store, rows
@@ -122,8 +122,7 @@ def test_filter_and_collapse_compose(spark, unit_store):
     got = batch_topk(
         spark, store, [(0, "join filter", 6)],
         docid_filter=allowed,
-        collapse_bounds=docmap.groupBy("conv_id")
-        .agg(F.min("docid").alias("docid")).select("docid"),
+        collapse=True,
     ).orderBy("rank").collect()
     exp_units = _filtered_oracle(rows, allowed_convs, "join filter", 10**6)
     best: dict[str, float] = {}
@@ -140,16 +139,8 @@ def test_local_searcher_unit_collapse_matches_spark(spark, unit_store):
     import math
 
     from visionsearch_spark.query.serving import LocalSearcher
-    from pyspark.sql import functions as F
-    import os
 
     store, _rows = unit_store
-    # materialize doc_bounds like get_documents_unit_index does
-    bounds_path = os.path.join(store.root, "doc_bounds")
-    if not os.path.isdir(bounds_path):
-        (spark.read.parquet(store.docmap_path)
-         .groupBy("conv_id").agg(F.min("docid").alias("docid"))
-         .select("docid").write.mode("overwrite").parquet(bounds_path))
     ls = LocalSearcher(store)
     for query, k in [("join filter", 10), ("vector scan merge", 6),
                      ("zzznotaword", 4)]:
@@ -199,37 +190,47 @@ def test_unit_collapse_after_append_split_parent(spark, tmp_path_factory):
     for (_d, _c, s), (_c2, s2) in zip(served, exp):
         assert math.isclose(s, s2, rel_tol=1e-9)
 
+    # a k that cuts: the split parent's two runs sit in one task and
+    # must take ONE of its k slots, leaving the other for the runner-up
+    inc1 = [(c, 1, "user", x, "", None) for c, x in
+            [("a", "zebra"), ("b", "zebra filter"), ("c", "join"),
+             ("d", "stream scan")]]
+    inc2 = inc1 + [("a", 2, "user", "zebra zebra zebra", "", None)]
+    root = str(tmp_path_factory.mktemp("idx_split_cut"))
+    incremental_build(spark.createDataFrame(inc1, schema), root,
+                      n_partitions=2)
+    store = incremental_build(spark.createDataFrame(inc2, schema), root,
+                              n_partitions=2)
+    exp = _collapsed_oracle(
+        [(c, t, x) for c, t, _r, x, _tl, _ts in inc2], "zebra", 2)
+    assert [c for c, _s in exp] == ["a", "b"]
+    for n_tasks in (1, 4):
+        got = unit_batch_topk(spark, store, [(0, "zebra", 2)],
+                              n_tasks=n_tasks).orderBy("rank").collect()
+        assert [r["conv_id"] for r in got] == [c for c, _s in exp], n_tasks
+        for g, (_c, s) in zip(got, exp):
+            assert math.isclose(g["score"], s, rel_tol=1e-9)
+    served = LocalSearcher(store).search_docs("zebra", k=2)
+    assert [c for _d, c, _s in served] == [c for c, _s in exp]
+    for (_d, _c, s), (_c2, s2) in zip(served, exp):
+        assert math.isclose(s, s2, rel_tol=1e-9)
 
-def test_carry_bounds_spark_path_matches_driver_loop(spark, unit_store,
-                                                     monkeypatch):
-    """The distributed carry (forced by shrinking the driver threshold)
-    must emit the identical (shard, carried docid) sideband set as the
-    driver loop, and unit collapse stays oracle-exact through it."""
+
+def test_unit_collapse_plan_has_no_exchange_below_kernel(spark, unit_store,
+                                                         monkeypatch):
+    """A collapsing query runs on the one-stage scan: each task reads its
+    units' conv_ids itself, so no Exchange sits beneath the kernel (the
+    conv-level merge above it may shuffle). Tiny bins pinned so the
+    fixture-sized store fans out to more than one task."""
     import visionsearch_spark.query.wand as wand
-    from visionsearch_spark.index.codec import decode_docids
-    from visionsearch_spark.query.units import doc_bounds
+    from test_positions import _kernel_subtree
 
-    store, rows = unit_store
-    meta = store.read_meta()
-    bounds = doc_bounds(spark, store)
-
-    def carried_set(df):
-        return {
-            (r["shard"], int(decode_docids(r["docids_bin"], 1)[0]))
-            for r in df.collect()
-        }
-
-    drv = carried_set(wand._carry_bounds_rows(
-        spark, bounds, int(meta["shard_range"]), int(meta["n_docs"])))
-    monkeypatch.setattr(wand, "CARRY_DRIVER_MAX_SHARDS", 0)
-    spk = carried_set(wand._carry_bounds_rows(
-        spark, bounds, int(meta["shard_range"]), int(meta["n_docs"])))
-    assert spk == drv and drv  # identical and non-empty
-
-    # end-to-end through the forced Spark carry
-    query, k = "join filter", 8
-    got = unit_batch_topk(spark, store, [(0, query, k)]).orderBy("rank").collect()
-    exp = _collapsed_oracle(rows, query, k)
-    assert [(r["conv_id"],) for r in got] == [(c,) for c, _s in exp]
-    for r, (_c, s) in zip(got, exp):
-        assert math.isclose(r["score"], s, rel_tol=1e-9)
+    store, _rows = unit_store
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
+    res = batch_topk(spark, store, [(0, "join filter", 5)], collapse=True)
+    res.count()
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    sub = _kernel_subtree(plan)
+    assert any("Range (" in ln for ln in sub), plan
+    assert not any("Exchange" in ln for ln in sub), plan
+    assert "route_key" not in plan

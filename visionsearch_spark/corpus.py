@@ -248,17 +248,11 @@ def get_documents_field_index(spark: SparkSession, sf_dir: str,
 
 def get_documents_unit_index(spark: SparkSession, sf_dir: str,
                              n_partitions: int = 8) -> IndexStore:
-    """Unit-level index (one indexed unit per sentence) + doc_bounds
-    parquet (first unit docid per parent doc — the collapse map for
-    batch_topk(collapse_bounds=...))."""
-    from visionsearch_spark.query.units import bounds_fresh, write_doc_bounds
-
+    """Unit-level index (one indexed unit per sentence) for
+    units.unit_topk; the collapse reads its parents from the docmap."""
     store = _cached_store("-units", sf_dir)
     if (os.path.exists(store.meta_path)
-            and store.read_meta().get("phase") == "built"
-            and bounds_fresh(store)):
+            and store.read_meta().get("phase") == "built"):
         return store
     tx = documents_as_unit_transcripts(spark, sf_dir)
-    store = build_index(tx, store.root, n_partitions=n_partitions)
-    write_doc_bounds(spark, store)
-    return store
+    return build_index(tx, store.root, n_partitions=n_partitions)

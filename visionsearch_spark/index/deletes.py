@@ -9,9 +9,11 @@ indexes, which this store is — segments are immutable LSM epochs):
   appends.
 - Queries mask tombstoned docids BEFORE every top-k cut ("stale stats"
   semantics: df / N / avgdl keep their as-built values until the next
-  compaction — the same contract Lucene serves between merges). The
-  deny set rides the query plan as per-shard packed sideband rows
-  (`store.DENY_TERM`), never an unbounded broadcast.
+  compaction — the same contract Lucene serves between merges). No
+  query ships the deny set: every reader takes the pending dirs from
+  its own meta snapshot and reads them with `store.tombstone_docids` —
+  LocalSearcher once per load, each Spark scan or membership task once
+  per dir and worker, cut to the docids of its own files.
 - `compact_store` FOLDS tombstones: postings of dead docids are dropped
   during the merge, corpus stats (n_docs / avgdl / per-term df) are
   recomputed over survivors, and the folded dirs move from
@@ -45,18 +47,6 @@ TOMBSTONE_SCHEMA_DDL = "docid long, dl long"
 
 def _dir_list(meta: dict, key: str) -> list[str]:
     return list(meta.get(key) or [])
-
-
-def pending_tombstones(spark: SparkSession,
-                       store: IndexStore) -> DataFrame | None:
-    """DataFrame(docid) of docids deleted but not yet compacted away —
-    the query-time deny set. None when there are none (the hot path
-    must not pay a plan change for stores that never delete)."""
-    paths = store.tombstone_paths()
-    if not paths:
-        return None
-    return spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(*paths) \
-        .select("docid")
 
 
 def all_tombstones(spark: SparkSession,

@@ -75,7 +75,7 @@ def snapshot_store(src_root: str, dst_root: str) -> dict:
     wanted |= set(meta.get("term_stats_dirs") or [])
     wanted |= set(meta.get("tombstone_dirs") or [])
     wanted |= set(meta.get("applied_tombstone_dirs") or [])
-    # sidecar tables written beside the epochs (doc_bounds, ANN indexes)
+    # sidecar tables written beside the epochs (ANN indexes and the like)
     # travel too: skip ONLY epoch/tombstone dirs the meta doesn't
     # reference (retired or mid-GC leftovers); everything else is live
     epoch_prefixes = ("segments-", "term_stats-", "tombstones-")

@@ -69,7 +69,6 @@ from visionsearch_spark.analyzer import TOKEN_SEP_RE, token_count_col
 from visionsearch_spark.docid import assign_docids_with_count
 from visionsearch_spark.index.codec import DocLengths
 from visionsearch_spark.index.store import (
-    DENY_TERM,
     DL_TERM,
     MANIFEST_SCHEMA_DDL,
     SEGMENT_SCHEMA_DDL,
@@ -743,53 +742,34 @@ def _mask_blocks(hits: pa.RecordBatch, deny: np.ndarray,
     return batches
 
 
-def _mask_fragments(frags: DataFrame, dead: DataFrame,
+def _mask_fragments(frags: DataFrame, tombstones: list[str],
                     shard_range: int,
                     n_tasks: int | None = None) -> DataFrame:
-    """Drop tombstoned docids from merge-input blocks (the purge half of
-    index/deletes.py — compaction folds deletes into the new segments).
+    """Drop the docids of the `tombstones` dirs from merge-input blocks
+    (the purge half of index/deletes.py — compaction folds deletes into
+    the new segments).
 
-    The dead set rides the SAME shard partitioning as the blocks it
-    edits, packed per shard with the posting codec (wand._sideband_rows
-    — never an unbounded broadcast), and sorts FIRST within each task
-    ("\\x00deny" < DL_TERM < every analyzer term), so the kernel sees the
-    complete deny set, then the shards' DL_TERM rows, before any term
-    block. Blocks whose [min_docid, max_docid] range contains no dead
-    docid — the overwhelming majority under realistic delete rates —
-    pass through as an Arrow filter with ZERO decode/encode work; only
+    Each task reads the deny set itself (store.tombstone_docids). The
+    blocks move by shard, and DL_TERM sorts before every analyzer term,
+    so the kernel sees its shards' DL_TERM rows before any term block.
+    Blocks whose [min_docid, max_docid] range contains no dead docid —
+    the overwhelming majority under realistic delete rates — pass
+    through as an Arrow filter with ZERO decode/encode work; only
     intersecting blocks re-encode (`_mask_blocks`), DL_TERM blocks
     included, so a dead doc's length goes with its postings. Emptied
     blocks vanish (term df then falls out of the post-mask groupBy
     naturally)."""
-    from visionsearch_spark.index.codec import (
-        decode_blocks,
-        dl_lookup,
-        doc_lengths,
-    )
-    from visionsearch_spark.query.wand import _sideband_rows
+    from visionsearch_spark.index.codec import dl_lookup, doc_lengths
+    from visionsearch_spark.index.store import tombstone_docids
 
     in_cols = ["term", "min_docid", "max_docid", "n", "docids_bin",
                "tfs_bin", "max_tf", "min_dl", "pos_bin"]
-    side = _sideband_rows(dead.select("docid"), shard_range, DENY_TERM) \
-        .select(
-            "term",
-            F.lit(None).cast("long").alias("min_docid"),
-            F.lit(None).cast("long").alias("max_docid"),
-            "n", "docids_bin", "tfs_bin", "max_tf", "min_dl",
-            F.lit(None).cast("binary").alias("pos_bin"),
-            "shard",
-        )
-    tagged = frags.select(
-        *in_cols,
-        (F.col("min_docid") / F.lit(shard_range)).cast("long").alias("shard"),
-    ).unionByName(side)
 
     def mask_runs(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
 
-        deny_parts: list[np.ndarray] = []
+        deny = tombstone_docids(tombstones)
         dl_parts: list[pa.RecordBatch] = []
-        deny: np.ndarray | None = None
         lengths: DocLengths | None = None
 
         def masked(blocks: pa.RecordBatch) -> Iterator[pa.RecordBatch]:
@@ -809,11 +789,9 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
                                         shard_range, lengths)
 
         def dl_rows() -> Iterator[pa.RecordBatch]:
-            # sort order: every deny and DL_TERM row precedes the term
-            # blocks, so both sets are complete here
-            nonlocal deny, lengths
-            deny = (np.unique(np.concatenate(deny_parts))
-                    if deny_parts else np.empty(0, dtype=np.int64))
+            # sort order: every DL_TERM row precedes the term blocks, so
+            # the lengths are complete here
+            nonlocal lengths
             lengths = dl_lookup(*(np.empty(0, dtype=np.int64),) * 2)
             if dl_parts:
                 rows = pa.Table.from_batches(dl_parts).combine_chunks() \
@@ -822,29 +800,24 @@ def _mask_fragments(frags: DataFrame, dead: DataFrame,
                 yield from masked(rows)
 
         for batch in batches:
-            term = batch["term"]
-            is_deny = pc.equal(term, DENY_TERM)
-            is_dl = pc.equal(term, DL_TERM)
-            rows = batch.filter(is_deny)
-            if rows.num_rows:
-                deny_parts.append(decode_blocks(rows["docids_bin"],
-                                                rows["n"].to_numpy()))
+            is_dl = pc.equal(batch["term"], DL_TERM)
             rows = batch.filter(is_dl).select(in_cols)
             if rows.num_rows:
                 dl_parts.append(rows)
-            blocks = batch.filter(
-                pc.invert(pc.or_(is_deny, is_dl))).select(in_cols)
+            blocks = batch.filter(pc.invert(is_dl)).select(in_cols)
             if not blocks.num_rows:
                 continue
-            if deny is None:
+            if lengths is None:
                 yield from dl_rows()
             yield from masked(blocks)
-        if deny is None:  # no term block came
+        if lengths is None:  # no term block came
             yield from dl_rows()
 
     n_tasks = n_tasks or frags.sparkSession.sparkContext.defaultParallelism
     return (
-        tagged.repartition(n_tasks, "shard")
+        frags.select(*in_cols)
+        .repartition(n_tasks,
+                     (F.col("min_docid") / F.lit(shard_range)).cast("long"))
         .sortWithinPartitions("term", "min_docid")
         .mapInArrow(mask_runs, SEGMENT_SCHEMA_DDL)
     )
@@ -895,15 +868,12 @@ def compact_store(spark: SparkSession, root: str,
     # of applied tombstones, so only PENDING ones are masked; they leave
     # the query-time deny set at this flip (physically absent from the
     # new segments and excluded from stats).
-    from visionsearch_spark.index.deletes import (
-        live_corpus_stats,
-        pending_tombstones,
-    )
+    from visionsearch_spark.index.deletes import live_corpus_stats
 
-    dead = pending_tombstones(spark, store)
-    if dead is not None:
-        frags = _mask_fragments(frags, dead, int(meta["shard_range"]))
-    if repaired or meta.get("phase") == "appending" or dead is not None:
+    tombstones = store.tombstone_paths()
+    if tombstones:
+        frags = _mask_fragments(frags, tombstones, int(meta["shard_range"]))
+    if repaired or meta.get("phase") == "appending" or tombstones:
         # stats in meta are stale after a crashed append or before a
         # fold — staged minus every tombstone is the truth, same rule as
         # _finish_append's repair. The phase check matters on its own: a

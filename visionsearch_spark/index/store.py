@@ -57,14 +57,12 @@ LAYOUT = 2
 
 # Reserved row tags: "\x00" never appears in analyzer output ([0-9a-z]+),
 # so these rows share the segment schema with the postings and sort
-# before every term. ALLOW/BOUNDS/DENY are query-time sideband rows
-# (query/wand.py): each task receives exactly its files' shards'
-# allow-list / doc-boundary / tombstoned docids, routed by route_key,
-# with no broadcast of unbounded sets. Unlike ALLOW, absence of deny
-# rows in a task is safe — it means "no deleted docs in these shards".
+# before every term. ALLOW_TERM rows are the one query-time sideband
+# (query/wand.py): a caller's allow-list, packed per shard and routed by
+# route_key to the task reading those shards, with no broadcast of an
+# unbounded set. Tombstones and unit parents need no sideband: each scan
+# task reads them itself (tombstone_docids, the docmap).
 ALLOW_TERM = "\x00allow"
-BOUNDS_TERM = "\x00bounds"
-DENY_TERM = "\x00deny"
 # DL_TERM rows are stored: the doc lengths of a file's shards, built like
 # any term's blocks (<= BLOCK_SIZE docs, never crossing a shard;
 # docids_bin = the docids, tfs_bin = their dl, pos_bin NULL), so they
@@ -154,6 +152,22 @@ def read_columns(dirs: list[str], columns: list[str]):
                             promote_options="default")
 
 
+def tombstone_docids(dirs: list[str]):
+    """The docids of tombstone dirs (index/deletes.py) as one sorted
+    unique int64 array: the deny set that LocalSearcher, the wand and
+    membership kernels and the compaction mask kernel each read for
+    themselves. Single-threaded file_tables reads, numpy only, so the
+    serving tier may call it."""
+    import numpy as np
+
+    from visionsearch_spark.index.codec import fixed_values
+
+    return np.unique(np.concatenate(
+        [np.zeros(0, dtype=np.int64)]
+        + [fixed_values(t["docid"]).astype(np.int64)
+           for t in file_tables(dirs, ["docid"])]))
+
+
 @dataclass
 class IndexStore:
     root: str
@@ -199,6 +213,14 @@ class IndexStore:
             return None
         ep = self.read_meta().get("epoch")
         return None if ep is None else int(ep)
+
+    def snapshot(self) -> "IndexStore":
+        """This store pinned to one meta read: every read_meta of the
+        returned store gives that same snapshot, so a reader that
+        resolves stats, term_stats, segments and tombstones through it
+        never mixes two flips (the dirs a compaction retires stay on
+        disk for one flip)."""
+        return _Pinned(self.root, self.read_meta())
 
     def _live_dirs(self, key: str) -> list[str]:
         return [os.path.join(self.root, d) for d in self.read_meta()[key]]
@@ -326,3 +348,19 @@ class IndexStore:
                     with open(os.path.join(self.manifest_dir, name)) as f:
                         out.append(json.load(f))
         return out
+
+
+@dataclass
+class _Pinned(IndexStore):
+    """An IndexStore whose meta is the one snapshot it was made with
+    (IndexStore.snapshot); readers only, writers read the live meta."""
+    meta: dict
+
+    def read_meta(self) -> dict:
+        return dict(self.meta)
+
+    def write_meta(self, meta: dict) -> None:
+        raise TypeError(f"{self.root}: a pinned meta snapshot is read-only")
+
+    def snapshot(self) -> IndexStore:
+        return self

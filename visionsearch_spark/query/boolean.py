@@ -136,8 +136,8 @@ def matching_docids(
         raise ValueError("matching_docids requires all_of or any_of terms")
 
     empty = wand._local_df(spark, [], "docid long", ["docid"])
-    meta = store.read_meta()
-    if int(meta.get("n_docs", 0)) == 0:
+    store = store.snapshot()
+    if int(store.read_meta().get("n_docs", 0)) == 0:
         return empty
     # driver-side df lookup (memoized pyarrow, same as query planning):
     # a required term with zero postings empties the conjunction without
@@ -157,27 +157,32 @@ def matching_docids(
     # inclusion term matched in the SAME file — files holding none of
     # all_of/any_of contribute an empty base regardless of none_of
     return _launch_members(
-        spark, store, meta, sorted(set(all_of) | set(any_of)), n_tasks,
+        spark, store, sorted(set(all_of) | set(any_of)), n_tasks,
         _make_match_fn(all_of, any_of, none_of), empty)
 
 
-def _launch_members(spark: SparkSession, store: IndexStore, meta: dict,
+def _launch_members(spark: SparkSession, store: IndexStore,
                     terms: list[str], n_tasks: int | None, kernel,
                     empty: DataFrame) -> DataFrame:
     """Run a docid-membership kernel on the one-stage file-aligned plan
-    (`wand._launch_bins`), then drop tombstoned docs: they are not
-    members (index/deletes.py), so counts/facets built on the set must
-    not see them. The deny set is O(deleted) and AQE broadcasts it when
-    small; ranking paths downstream mask again in-kernel, which is
-    idempotent."""
+    (`wand._launch_bins`). Tombstoned docs are not members
+    (index/deletes.py), so counts/facets built on the set must not see
+    them: each task drops the pending tombstones of the store's meta
+    snapshot from its own output, read once per dir and worker
+    (`wand._pending_deny`)."""
     bins = wand._file_bins(spark, store, terms, n_tasks, 1)
     if not bins:
         return empty
-    matched = wand._launch_bins(spark, bins, kernel, "docid long")
-    dead = wand._tombstone_docids(spark, store, meta)
-    if dead is not None:
-        matched = matched.join(dead, "docid", "left_anti")
-    return matched
+    tombstones = store.tombstone_paths()
+
+    def live(paths: list[str]) -> Iterator[pa.RecordBatch]:
+        deny = wand._pending_deny(tombstones)
+        for b in kernel(paths):
+            keep = ~np.isin(b.column("docid").to_numpy(), deny)
+            if keep.any():
+                yield b.filter(pa.array(keep))
+
+    return wand._launch_bins(spark, bins, live, "docid long")
 
 
 def _make_positional_fn(toks: list[str], window: int | None,
@@ -308,16 +313,16 @@ def positional_docids(
     sloppy phrase when `slop` is set — see _make_positional_fn) — the
     index-only verify path for stores built with positions=True. Same
     one-stage file-aligned plumbing as matching_docids (`_launch_members`):
-    bloom-pruned whole files per task, tombstones anti-joined after."""
+    bloom-pruned whole files per task, tombstones dropped in-task."""
     empty = wand._local_df(spark, [], "docid long", ["docid"])
-    meta = store.read_meta()
-    if int(meta.get("n_docs", 0)) == 0:
+    store = store.snapshot()
+    if int(store.read_meta().get("n_docs", 0)) == 0:
         return empty
     dfs = wand._lookup_term_dfs(spark, store, sorted(set(toks)))
     if any(t not in dfs for t in toks):
         return empty  # a phrase/window term with zero postings
     return _launch_members(
-        spark, store, meta, sorted(set(toks)), n_tasks,
+        spark, store, sorted(set(toks)), n_tasks,
         _make_positional_fn(toks, window, slop=slop), empty)
 
 

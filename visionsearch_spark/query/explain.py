@@ -53,6 +53,7 @@ def explain_rows(store: IndexStore, query_text: str, conv_id: str,
     qterms = sorted(set(tokenize(query_text)))
     if not qterms:
         return []
+    store = store.snapshot()  # stats, tombstones and df of one flip
     meta = store.read_meta()
     tbl = pads.dataset(store.staged_path).to_table(
         columns=["docid", "text"],

@@ -92,15 +92,6 @@ def admit(docids: np.ndarray, scores: np.ndarray,
     return docids, scores
 
 
-def parents(bounds: np.ndarray, docids: np.ndarray) -> np.ndarray:
-    """Unit -> parent: the last bound <= each docid. `bounds` are the
-    sorted first-unit docids of the parent documents."""
-    pidx = np.searchsorted(bounds, docids, side="right") - 1
-    if pidx.size and pidx.min() < 0:
-        raise RuntimeError("docid below every parent bound")
-    return bounds[pidx]
-
-
 def collapse(keys: np.ndarray, scores: np.ndarray, reps: np.ndarray
              ) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Group rows by key: (keys ascending, max score per key, min

@@ -48,6 +48,7 @@ from visionsearch_spark.index.store import (
     count_rows,
     file_tables,
     read_columns,
+    tombstone_docids,
 )
 from visionsearch_spark.query import score_core, termdict
 
@@ -110,8 +111,10 @@ def _term_index(tables: list, shards: list[int] | None):
 
 class LocalSearcher:
     def __init__(self, store: IndexStore, shards: list[int] | None = None):
-        meta = store.read_meta()
         self.store = store
+        # one meta snapshot: stats, segments and tombstones of one flip
+        snap = store.snapshot()
+        meta = snap.read_meta()
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         self.shards = shards
@@ -125,7 +128,7 @@ class LocalSearcher:
         cols = ["term", "n", "docids_bin", "tfs_bin"]
         self._batches, names, self._runs, self._ptr, self._gdf = \
             _term_index(file_tables(
-                store.segment_paths(),
+                snap.segment_paths(),
                 cols + ([] if shards is None else ["shard"]),
                 read_dictionary=["term"]), shards)
         has_run = self._ptr[1:] > self._ptr[:-1]
@@ -155,24 +158,17 @@ class LocalSearcher:
             for t in dm for c in t["conv_id"].chunks])[order]
         self._turn = _cat([fixed_values(t["turn_idx"]) for t in dm])[order]
 
-        self._bounds: np.ndarray | None = None  # derived lazily
+        self._first: np.ndarray | None = None  # derived lazily
 
         # pending tombstones (index/deletes.py): loaded once per process,
-        # masked in _scored before every cut — the serving twin of the
-        # wand kernel's deny sideband. Restricted to this searcher's
-        # shards (a shard-group process holds only its slice).
-        self._dead: np.ndarray | None = None
-        tpaths = store.tombstone_paths()
-        if tpaths:
-            dead = fixed_values(
-                read_columns(tpaths, ["docid"])["docid"]).astype(np.int64)
-            if shards is not None and dead.size:
-                shard_range = int(meta["shard_range"])
-                keep = np.isin(dead // shard_range,
-                               np.asarray(shards, dtype=np.int64))
-                dead = dead[keep]
-            if dead.size:
-                self._dead = np.unique(dead)
+        # masked in _scored before every cut, as the wand kernel masks
+        # them in-task. Restricted to this searcher's shards (a
+        # shard-group process holds only its slice).
+        dead = tombstone_docids(snap.tombstone_paths())
+        if shards is not None and dead.size:
+            dead = dead[np.isin(dead // int(meta["shard_range"]),
+                                np.asarray(shards, dtype=np.int64))]
+        self._dead: np.ndarray | None = dead if dead.size else None
 
     def _decode(self, g: int) -> tuple[np.ndarray, np.ndarray]:
         """(docids, tf as int64) of term id g in (file, row) order: its
@@ -239,26 +235,27 @@ class LocalSearcher:
                     term_weights: dict[str, float] | None = None
                     ) -> list[tuple[int, str, float]]:
         """Doc-level top-k over a UNIT store: per-unit scores collapse to
-        per-document max (units.py semantics, served in-memory). Bounds
-        are derived from the loaded docid-ordered conv column — never a
-        stored table that an append could leave stale. Over a transcript
-        store this collapses turns per conversation (conv-level search).
-        Returns [(first_unit_docid, conv_id, score)]."""
+        per-document max (units.py semantics, served in-memory), keyed on
+        the conv_id of the loaded docmap. Over a transcript store this
+        collapses turns per conversation (conv-level search). Returns
+        [(first_unit_docid, conv_id, score)]: the conv's first unit in
+        the store, as batch_topk(collapse=True) reports it."""
         return _docs_topk([self._parented(query, threshold, term_weights)],
                           k)
 
     def _parented(self, query: str, threshold: float,
                   term_weights: dict[str, float] | None = None):
-        """(conv_ids, run-start docids, scores) of the matched units. A
-        conv appended in a later increment owns several runs of docids,
-        so collapses key on the conv_id, min run-start as representative."""
-        if self._bounds is None:
-            conv = self._conv
-            change = np.flatnonzero(conv[1:] != conv[:-1]) + 1
-            self._bounds = np.concatenate(([0], change)).astype(np.int64)
+        """(conv_ids, first-unit docids, scores) of the matched units. A
+        conv appended in a later increment owns several runs of docids;
+        the collapse keys on its conv_id all the same."""
+        if self._first is None:
+            # positions are docids: each conv's first index is its
+            # lowest docid, dead units included, as the docmap holds it
+            _convs, first, inv = np.unique(self._conv, return_index=True,
+                                           return_inverse=True)
+            self._first = first[inv].astype(np.int64)
         uniq, sums = self._scored(query, threshold, term_weights)
-        return (self._conv[uniq], score_core.parents(self._bounds, uniq),
-                sums)
+        return self._conv[uniq], self._first[uniq], sums
 
     def _scored(self, query: str, threshold: float,
                 term_weights: dict[str, float] | None = None
@@ -392,9 +389,9 @@ class LocalSearcher:
 
 def _docs_topk(parts: list[tuple[np.ndarray, np.ndarray, np.ndarray]],
                k: int) -> list[tuple[int, str, float]]:
-    """Conv-level top-k over (conv_ids, run-starts, scores) parts: per
-    conv the max score and min run-start, ranked (score desc, conv_id
-    asc) like the distributed path."""
+    """Conv-level top-k over (conv_ids, first-unit docids, scores)
+    parts: per conv the max score, ranked (score desc, conv_id asc) like
+    the distributed path."""
     convs, reps, sums = (np.concatenate(col) for col in zip(*parts))
     convs, sums, reps = score_core.collapse(convs, sums, reps)
     return [(int(reps[i]), str(convs[i]), float(sums[i]))
@@ -545,8 +542,9 @@ class ShardedSearcher:
     tests/test_serving.py."""
 
     def __init__(self, store: IndexStore, n_groups: int = 4):
-        meta = store.read_meta()
         self.store = store
+        snap = store.snapshot()  # every group loads the same flip
+        meta = snap.read_meta()
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         shard_range = int(meta["shard_range"])
@@ -558,7 +556,7 @@ class ShardedSearcher:
             list(range(g, max_shard + 1, n_groups))
             for g in range(min(n_groups, max_shard + 1))
         ]
-        self.searchers = [LocalSearcher(store, shards=g) for g in groups]
+        self.searchers = [LocalSearcher(snap, shards=g) for g in groups]
 
     def df(self, term: str) -> int:
         return sum(s.df(term) for s in self.searchers)
@@ -640,9 +638,9 @@ class ShardedSearcher:
         """Doc-level (conv-collapsed) scatter-gather: a parent's units can
         span shard groups, so every group's matched units (scored ONCE
         per group, pre-cut) collapse together by conv — score = max
-        across groups, representative docid = min run-start over ALL
-        matched units, even when the group holding the conv's
-        lowest-docid units would not rank the conv in its own top-k."""
+        across groups, representative docid = the conv's first unit in
+        the store (every group loads the whole docmap), even when the
+        group holding it would not rank the conv in its own top-k."""
         w = self._weights(query)
         if not w:
             return []

@@ -5,81 +5,23 @@ left a TODO about deduplicating multi-unit hits per document
 (`/root/reference/visionsearch/common_utils/aisearch/core.py:96-104`
 mean-pools then abandons it). Here the collapse is MAX over unit scores —
 deterministic, monotone (a doc ranks by its best-matching sentence), and
-exact under the distributed k-cut: per-partition candidates collapse to
-per-doc max BEFORE truncation (wand.py `collapse_bounds`), partial maxes
-re-combine with one groupBy, and the tie-break (score desc, first-unit
-docid asc) equals (score desc, doc key asc) because unit docids are dense
-in (conv_id, unit_idx) order.
+exact under the distributed k-cut: each scan task maps its candidate
+units to their conv_id from the docmap over its own docid span and keeps
+each conv's max BEFORE truncation (wand.py `collapse`), the per-task
+maxes re-combine with one groupBy on conv_id, and the ranking breaks
+ties on conv_id. The parent key is the conv_id, never a docid run: a
+parent that gains units in a later append owns several runs of docids
+and still ranks once.
 """
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from visionsearch_spark.index.store import IndexStore
 from visionsearch_spark.query.wand import batch_topk
 
-DOC_BOUNDS_DIR = "doc_bounds"
-DOC_BOUNDS_META = "doc_bounds_meta.json"
-
 UNIT_RESULT_DDL = "query_id long, rank int, conv_id string, score double"
-
-
-def _run_starts(spark: SparkSession, store: IndexStore) -> DataFrame:
-    """Docids starting a contiguous same-parent run in docid order —
-    computed with a docid-1 self-join (no global window). One bound per
-    parent on a fresh build; a parent that gained units in a LATER
-    append owns several runs (they re-merge in the conv-level agg)."""
-    dm = spark.read.parquet(store.docmap_path).select("docid", "conv_id")
-    prev = dm.select(
-        (F.col("docid") + 1).alias("docid"),
-        F.col("conv_id").alias("_prev_conv"),
-    )
-    return (
-        dm.join(prev, "docid", "left")
-        .filter(
-            F.col("_prev_conv").isNull()
-            | (F.col("_prev_conv") != F.col("conv_id"))
-        )
-        .select("docid")
-    )
-
-
-def write_doc_bounds(spark: SparkSession, store: IndexStore) -> None:
-    """Materialize run-start bounds plus a freshness marker (n_docs at
-    write time): an append grows the docmap, and a stale bounds table
-    would silently mis-collapse the new docs' units."""
-    import json
-
-    path = os.path.join(store.root, DOC_BOUNDS_DIR)
-    _run_starts(spark, store).write.mode("overwrite").parquet(path)
-    tmp = os.path.join(store.root, DOC_BOUNDS_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump({"n_docs": int(store.read_meta()["n_docs"])}, f)
-    os.replace(tmp, os.path.join(store.root, DOC_BOUNDS_META))
-
-
-def bounds_fresh(store: IndexStore) -> bool:
-    import json
-
-    mpath = os.path.join(store.root, DOC_BOUNDS_META)
-    if not (os.path.isdir(os.path.join(store.root, DOC_BOUNDS_DIR))
-            and os.path.exists(mpath)):
-        return False
-    with open(mpath) as f:
-        return int(json.load(f)["n_docs"]) == int(store.read_meta()["n_docs"])
-
-
-def doc_bounds(spark: SparkSession, store: IndexStore) -> DataFrame:
-    """Run-start bounds for collapse. Uses the materialized parquet only
-    while its freshness marker matches the store's n_docs; otherwise
-    derives from the docmap (exact at any snapshot)."""
-    if bounds_fresh(store):
-        return spark.read.parquet(os.path.join(store.root, DOC_BOUNDS_DIR))
-    return _run_starts(spark, store)
 
 
 def unit_batch_topk(
@@ -93,13 +35,13 @@ def unit_batch_topk(
     """Top-k DOCUMENTS by max unit BM25 score over a unit-level store.
     search_after: per-query (score, conv_id) cursor from the previous
     page's last row. The doc-level ranking holds each conv at most once,
-    so the parent key alone identifies the cursor row; the turn
-    component of wand's three-part cursor is pinned to INT_MAX to
-    exclude that row itself."""
+    so the parent key alone identifies the cursor row; the turn slot
+    of wand's three-part cursor is filled with 0 and never compared
+    under collapse."""
     res = batch_topk(
         spark, store, queries, threshold=threshold, n_tasks=n_tasks,
-        collapse_bounds=doc_bounds(spark, store),
-        search_after={qid: (s, c, (1 << 31) - 1)
+        collapse=True,
+        search_after={qid: (s, c, 0)
                       for qid, (s, c) in search_after.items()}
         if search_after else None,
     )

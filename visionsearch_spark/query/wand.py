@@ -15,6 +15,10 @@ Design (SURVEY.md §3.1 "our lifecycle"):
             doc a left-to-right sum in query-term rank order, the
             oracle's summation order (SURVEY.md §7 R2), then masks,
             collapse and a keep-ties top-k per query per partition.
+            The task reads what gates its candidates next to the data
+            (PAPERS.md: ICDE 2025, Koios): the meta snapshot's pending
+            tombstones, cut to its files' docids, and for a unit
+            collapse the docmap's conv_id over its docid span.
   global:   row_number window per query over (score desc, conv_id,
             turn_idx) — k rows per query; ≤ #partitions·k rows ever cross
             the wire.
@@ -51,10 +55,9 @@ from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.codec import DocLengths
 from visionsearch_spark.index.store import (
     ALLOW_TERM,
-    BOUNDS_TERM,
-    DENY_TERM,
     DL_TERM,
     IndexStore,
+    tombstone_docids,
 )
 from visionsearch_spark.query import score_core
 
@@ -75,15 +78,15 @@ def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
     pdf = pd.DataFrame(rows, columns=columns)
     return spark.createDataFrame(pdf, ddl)
 
-# Sideband row tags ALLOW_TERM / BOUNDS_TERM / DENY_TERM and the stored
-# DL_TERM are defined together in index/store.py (the serving tier reads
-# DL_TERM rows and must not import this module's pyspark).
+# The sideband row tag ALLOW_TERM and the stored DL_TERM are defined
+# together in index/store.py (the serving tier reads DL_TERM rows and
+# must not import this module's pyspark).
 
 
-def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFrame:
-    """Pack a docid set into segment-schema rows (one per shard): the
-    docids are delta+varint encoded with the posting codec and delivered
-    to the task that reads the blocks they gate."""
+def _sideband_rows(docids_df: DataFrame, shard_range: int) -> DataFrame:
+    """Pack an allow-set into segment-schema ALLOW_TERM rows (one per
+    shard): the docids are delta+varint encoded with the posting codec
+    and delivered to the task that reads the blocks they gate."""
     from visionsearch_spark.index.codec import encode_docids
 
     @F.pandas_udf("binary")
@@ -101,7 +104,7 @@ def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFram
             F.count(F.lit(1)).cast("int").alias("n"),
         )
         .select(
-            F.lit(tag).alias("term"),
+            F.lit(ALLOW_TERM).alias("term"),
             "shard",
             "n",
             pack("ds").alias("docids_bin"),
@@ -114,7 +117,8 @@ def _sideband_rows(docids_df: DataFrame, shard_range: int, tag: str) -> DataFram
 
 def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                    avgdl: float, threshold: float, hit_terms: list[str],
-                   has_filter: bool = False, has_bounds: bool = False,
+                   tombstones: list[str] | None = None,
+                   docmap: str | None = None, has_filter: bool = False,
                    cursors: dict[int, float] | None = None):
     """File-aligned kernel `score(paths, side=None)`: reads the task's
     segment FILES directly (pyarrow dataset; term-IN filter prunes row
@@ -128,13 +132,24 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     qplans: [(query_id, [(term, idf)], k)], each query's terms in sorted
     unique-term order (the summation order).
 
-    `side` holds the task's sideband rows (allow-lists / collapse bounds
-    / tombstones) as an Arrow table (term, n, docids_bin) — per-shard
-    packs routed by route_key to the task owning the files whose shard
-    ranges cover them (`_partial_scores`).
+    tombstones: the meta snapshot's pending tombstone dirs (None when
+    there are none). The task reads them itself (`_task_deny`: once per
+    dir and worker, cut to the docids of its own files) and masks them
+    before every cut; the single-term block-max path masks block by
+    block.
 
-    has_filter/has_bounds are PLAN-level flags: a task whose shards hold
-    no allowed docids receives zero allow sideband rows, which must mean
+    docmap: the docmap dir when units collapse to their conversation
+    (batch_topk(collapse=True)), else None. The task reads (docid,
+    conv_id) over the docid span of its postings (`_conv_codes`, docid
+    pushdown) and keeps each conv's max, represented by its lowest
+    candidate docid, before the k-cut: a conv's units in one task take
+    one of its k slots however many docid runs they form.
+
+    `side` holds a caller's allow-list as an Arrow table (term, n,
+    docids_bin) of ALLOW_TERM rows — per-shard packs routed by route_key
+    to the task owning the files whose shard ranges cover them
+    (`_partial_scores`). has_filter is the PLAN-level flag: a task whose
+    shards hold no allowed docids receives zero rows, which must mean
     'allowed set empty here' — inferring the mode from row presence would
     silently disable the filter in exactly those tasks.
 
@@ -161,14 +176,11 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     }
     cols = ["term", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"]
 
-    def side_docids(side: pa.Table | None, tag: str) -> np.ndarray:
-        import pyarrow.compute as pc
-
+    def side_docids(side: pa.Table | None) -> np.ndarray:
         if side is None:
             return np.empty(0, dtype=np.int64)
-        rows = side.filter(pc.equal(side["term"], tag))
-        return np.unique(decode_blocks(rows["docids_bin"],
-                                       rows["n"].to_numpy()))
+        return np.unique(decode_blocks(side["docids_bin"],
+                                       side["n"].to_numpy()))
 
     def score(paths: list[str], side: pa.Table | None = None
               ) -> Iterator[pa.RecordBatch]:
@@ -187,20 +199,10 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
             ).to_table()))
         if not runs:
             return
-        allow = side_docids(side, ALLOW_TERM) if has_filter else None
-        bounds = side_docids(side, BOUNDS_TERM) if has_bounds else None
-        if bounds is not None and not bounds.size:
-            # carry rows cover every shard from the first doc on, so a
-            # block-bearing task with no bounds is a wiring bug — fail
-            # loudly rather than emit un-collapsed units
-            raise RuntimeError("collapse requested but no bounds rows")
-        # deny differs from allow: a task whose shards hold no dead docs
-        # legitimately receives zero rows (nothing to mask) — per-task
-        # presence IS the constraint, so no plan-flag trap here. A task
-        # that does hold deny rows skips the single-term block-max path
-        # below (masking must precede the k-cut).
-        deny = side_docids(side, DENY_TERM)
-        has_sideband = has_filter or has_bounds or deny.size > 0
+        lengths = _doc_lengths(keys, dl_rows)
+        deny = _task_deny(tombstones or [], lengths)
+        allow = side_docids(side) if has_filter else None
+        conv = None  # the docmap span, read on the first collapse
         # every block of the task in one pass per payload column; a
         # term's blocks are the contiguous row run term_runs reports,
         # its postings the matching run of poff
@@ -210,7 +212,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
         docids = decode_blocks(tbl["docids_bin"], ns)
         tfw = tf_weight(
             decode_varint(payload(tbl["tfs_bin"]), total).astype(np.float64),
-            gather_dl(_doc_lengths(keys, dl_rows), docids).astype(np.float64),
+            gather_dl(lengths, docids).astype(np.float64),
             avgdl)
         # tf_weight(max_tf, min_dl) under the CURRENT avgdl >= tf_weight
         # of every posting in the block (monotonicity) — safe and never
@@ -231,10 +233,11 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
             for i in b0 + np.argsort(-bmax[b0:b1], kind="stable"):
                 if count >= k and w * bmax[i] < kth:
                     break
-                s = w * tfw[poff[i]:poff[i + 1]]
+                d, s = score_core.admit(docids[poff[i]:poff[i + 1]],
+                                        w * tfw[poff[i]:poff[i + 1]], deny)
                 keep = s > threshold
                 if keep.any():
-                    best_d.append(docids[poff[i]:poff[i + 1]][keep])
+                    best_d.append(d[keep])
                     best_s.append(s[keep])
                     count += int(keep.sum())
                     if count >= k:
@@ -257,10 +260,10 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
             ub = sum(w * bmax[slice(*runs[t])].max() for t, w in present)
             if ub <= threshold:
                 continue  # safe partition skip: no doc here can pass
-            if qid in single_term_q and not has_sideband:
-                # block-max pruning assumes every decoded doc is a
-                # candidate; with an allow-filter or unit-collapse active
-                # the exact path below applies the mask/collapse first
+            if qid in single_term_q and not has_filter and docmap is None:
+                # block-max pruning counts every admitted doc as a
+                # candidate; under an allow-filter or a unit collapse
+                # the exact path below applies them before the cut
                 t, w = present[0]
                 uniq, sums = single_term_topk(*runs[t], w, k)
             else:
@@ -269,10 +272,13 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                     [(docids[spans[t]], w * tfw[spans[t]])
                      for t, w in present], threshold)
                 uniq, sums = score_core.admit(uniq, sums, deny, allow)
-                if bounds is not None:  # unit -> parent doc, max per parent
-                    parent = score_core.parents(bounds, uniq)
-                    uniq, sums, _rep = score_core.collapse(parent, sums,
-                                                           parent)
+                if docmap is not None:  # unit -> its conv, max per conv
+                    if conv is None:
+                        conv = _conv_codes(docmap, int(docids.min()),
+                                           int(docids.max()))
+                    code = conv[1][np.searchsorted(conv[0], uniq)]
+                    _code, sums, uniq = score_core.collapse(code, sums,
+                                                            uniq)
                 keep = score_core.cut(sums, k, cursors.get(qid))
                 uniq, sums = uniq[keep], sums[keep]
             if uniq.size:
@@ -300,14 +306,16 @@ _TERM_DF_MEMO: dict[str, dict[str, int]] = {}
 
 def _lookup_term_dfs(spark: SparkSession, store: IndexStore,
                      terms: list[str]) -> dict[str, int]:
-    import os
+    import json
 
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    # meta.json mtime in the key: an incremental append rewrites meta, so
-    # stale df values age out automatically even across serving processes
-    key = f"{store.root}:{os.path.getmtime(store.meta_path)}"
+    # the meta snapshot is the key: every flip (append, compaction)
+    # writes a new meta, so stale df values age out automatically, and
+    # the dirs read below are the ones that snapshot names
+    store = store.snapshot()
+    key = f"{store.root}:{json.dumps(store.read_meta(), sort_keys=True)}"
     memo = _TERM_DF_MEMO.setdefault(key, {})
     missing = [t for t in terms if t not in memo]
     if missing:
@@ -332,92 +340,13 @@ def _lookup_term_dfs(spark: SparkSession, store: IndexStore,
 
 
 def invalidate_term_df_memo(root: str | None = None) -> None:
-    """Drop memoized df lookups (belt-and-braces; the meta-mtime key
+    """Drop memoized df lookups (belt-and-braces; the meta-snapshot key
     already ages out stale entries after an append)."""
     if root is None:
         _TERM_DF_MEMO.clear()
     else:
         for k in [k for k in _TERM_DF_MEMO if k.startswith(f"{root}:")]:
             _TERM_DF_MEMO.pop(k, None)
-
-
-# above this shard count the carry forward-fill runs in Spark instead of
-# a driver loop (one python tuple per shard stops being "metadata" at
-# ~10^6+ shards; below it the driver loop avoids two extra tiny jobs)
-CARRY_DRIVER_MAX_SHARDS = 4096
-
-_CARRY_DDL = ("term string, shard long, n int, docids_bin binary, "
-              "tfs_bin binary, max_tf int, min_dl int")
-
-
-def _carry_bounds_rows(spark: SparkSession, bounds: DataFrame,
-                       shard_range: int, n_docs: int) -> DataFrame:
-    """A parent doc's units can straddle a shard edge: the later shard
-    holds units whose boundary docid lives in an earlier shard. Forward-
-    fill the last boundary per shard and emit it as one extra sideband
-    row per shard (the carried bound each shard sees from its past).
-
-    Small stores: driver loop over one int per shard (bounded metadata,
-    no extra jobs). Past CARRY_DRIVER_MAX_SHARDS: the same forward-fill
-    as a Spark last-ignorenulls window over the shard sequence — one
-    8-byte row per shard through a single-task sort (64 MB at 8M shards),
-    never an O(n_shards) driver materialization."""
-    from visionsearch_spark.index.codec import encode_docids
-
-    max_shard = max(0, (n_docs - 1) // shard_range)
-    per = (
-        bounds.select("docid")
-        .withColumn("shard", (F.col("docid") / F.lit(shard_range)).cast("long"))
-        .groupBy("shard").agg(F.max("docid").alias("m"))
-    )
-    if max_shard + 1 > CARRY_DRIVER_MAX_SHARDS:
-        return _carry_bounds_spark(spark, per, max_shard)
-    per_shard = {int(r["shard"]): int(r["m"]) for r in per.collect()}
-    rows, cur = [], None
-    for s in range(max_shard + 1):
-        if cur is not None:
-            rows.append(
-                (BOUNDS_TERM, s, 1,
-                 bytes(encode_docids(np.asarray([cur], dtype=np.int64))),
-                 b"", 0, 0)
-            )
-        if s in per_shard:
-            cur = per_shard[s]
-    return _local_df(
-        spark, rows, _CARRY_DDL,
-        ["term", "shard", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"],
-    )
-
-
-def _carry_bounds_spark(spark: SparkSession, per: DataFrame,
-                        max_shard: int) -> DataFrame:
-    """Distributed carry: shard s carries the max boundary of any shard
-    < s (strictly-preceding window; rows with no predecessor drop out,
-    matching the driver loop's leading-None skip)."""
-    from visionsearch_spark.index.codec import encode_docids
-
-    @F.pandas_udf("binary")
-    def pack_one(v: pd.Series) -> pd.Series:
-        return v.map(
-            lambda x: bytes(encode_docids(np.asarray([x], dtype=np.int64)))
-        )
-
-    shards = spark.range(0, max_shard + 1).select(F.col("id").alias("shard"))
-    w = Window.orderBy("shard").rowsBetween(Window.unboundedPreceding, -1)
-    carried = (
-        shards.join(per, "shard", "left")
-        .withColumn("cur", F.last("m", ignorenulls=True).over(w))
-        .filter(F.col("cur").isNotNull())
-    )
-    return carried.select(
-        F.lit(BOUNDS_TERM).alias("term"),
-        "shard",
-        F.lit(1).cast("int").alias("n"),
-        pack_one("cur").alias("docids_bin"),
-        F.lit(b"").alias("tfs_bin"),
-        F.lit(0).cast("int").alias("max_tf"),
-        F.lit(0).cast("int").alias("min_dl"),
-    )
 
 
 def _mm3_long(v: int, seed: int = 42) -> int:
@@ -488,7 +417,7 @@ _SHARD_RANGE_CACHE_MAX = 8192
 def _file_shard_range(path: str) -> tuple[int, int]:
     """(min_shard, max_shard) of one segment file from its parquet
     footer (row-group stats on the shard column — O(1) metadata, no data
-    read). Needed to route per-shard sideband rows to the task that owns
+    read). Needed to route per-shard allow rows to the task that owns
     the file: the segment write gives each file a contiguous run of
     shards (spimi.write_segments), and a dir-boundary shard straddling
     two LSM dirs simply appears in both files' ranges (the sideband row
@@ -565,6 +494,64 @@ def _doc_lengths(keys: list[tuple[str, float]],
         return parts[0]
     return dl_lookup(np.concatenate([p.docids for p in parts]),
                      np.concatenate([p.dls for p in parts]))
+
+
+# per-dir tombstone cache: a tombstone dir is written once (deletes.py)
+# and never changed, keyed (path, mtime) like the doc-length cache, so a
+# worker reads each pending dir once, not once per query batch. Bounded
+# by the docids it holds.
+_DENY_CACHE: dict[tuple[str, float], np.ndarray] = {}
+_DENY_CACHE_MAX_DOCS = 1 << 22
+
+
+def _pending_deny(dirs: list[str]) -> np.ndarray:
+    """Sorted unique docids of the pending tombstone `dirs`
+    (store.tombstone_docids), each dir read once per worker process."""
+    parts = []
+    for key in (_dl_key(d) for d in dirs):
+        got = _DENY_CACHE.get(key)
+        if got is None:
+            got = tombstone_docids([key[0]])
+            while _DENY_CACHE and got.size + sum(
+                    v.size for v in _DENY_CACHE.values()
+            ) > _DENY_CACHE_MAX_DOCS:
+                _DENY_CACHE.pop(next(iter(_DENY_CACHE)))
+            _DENY_CACHE[key] = got
+        parts.append(got)
+    if len(parts) == 1:
+        return parts[0]
+    return np.unique(np.concatenate([np.zeros(0, dtype=np.int64)] + parts))
+
+
+def _task_deny(dirs: list[str], lengths: DocLengths) -> np.ndarray:
+    """The pending tombstones among a task's own docs: `lengths` (its
+    files' DL_TERM rows) holds every docid those files index."""
+    deny = _pending_deny(dirs)
+    i = deny - lengths.lo
+    inside = (i >= 0) & (i < lengths.table.size)
+    inside[inside] = lengths.table[i[inside]] >= 0
+    return deny[inside]
+
+
+def _conv_codes(docmap: str, lo: int, hi: int
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """(docids ascending, conv code of each) for the docmap rows with
+    lo <= docid <= hi; the docid filter prunes row groups of the
+    docid-sorted staged files. Equal codes mean one conversation (codes
+    compare within one call only)."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    tbl = pads.dataset(docmap).to_table(
+        columns=["docid", "conv_id"],
+        filter=(pc.field("docid") >= lo) & (pc.field("docid") <= hi),
+        use_threads=False,
+    )
+    d = tbl["docid"].to_numpy()
+    codes = tbl["conv_id"].combine_chunks().dictionary_encode() \
+        .indices.to_numpy()
+    order = np.argsort(d, kind="stable")
+    return d[order], codes[order]
 
 
 # per-file bloom cache: files are immutable (LSM append-only), keyed
@@ -663,25 +650,6 @@ def _launch_bins(spark: SparkSession, bins: list[list[str]],
     return spark.range(0, len(bins), 1, len(bins)).mapInArrow(by_bin_id, ddl)
 
 
-def _tombstone_docids(spark: SparkSession, store: IndexStore,
-                      meta: dict) -> DataFrame | None:
-    """PENDING tombstones (index/deletes.py) as DataFrame('docid long'),
-    or None when there are none. Read from the caller's OWN meta
-    snapshot — the one its stats came from — so a concurrent
-    delete/compact flip can't mix masked segments with an un-matching
-    deny list. Stores that never delete pay nothing."""
-    import os
-
-    from visionsearch_spark.index.deletes import TOMBSTONE_SCHEMA_DDL
-
-    dirs = meta.get("tombstone_dirs") or []
-    if not dirs:
-        return None
-    return spark.read.schema(TOMBSTONE_SCHEMA_DDL).parquet(
-        *[os.path.join(store.root, d) for d in dirs]
-    ).select("docid")
-
-
 def _partial_scores(
     spark: SparkSession,
     store: IndexStore,
@@ -689,41 +657,39 @@ def _partial_scores(
     threshold: float,
     n_tasks: int | None,
     docid_filter: DataFrame | None,
-    collapse_bounds: DataFrame | None,
+    collapse: bool,
     cursors: dict[int, float] | None = None,
     term_boosts: dict[int, dict[str, float]] | None = None,
 ) -> tuple[DataFrame | None, list]:
     """Shared plan prefix: query planning (driver-side df lookups), then
-    one of two physical strategies for the scan+score stage. Returns
-    (partials, qplans) — partials is (query_id, docid, score),
-    per-partition-cut to each query's k (with boundary ties kept); None
-    when every term is OOV.
+    the scan+score stage. Returns (partials, qplans) — partials is
+    (query_id, docid, score), per-partition-cut to each query's k (with
+    boundary ties kept); None when every term is OOV. Stats, term_stats,
+    segments and tombstones all come from ONE meta snapshot
+    (IndexStore.snapshot), so a flip mid-plan cannot mix two of them.
 
-    FILE-ALIGNED FAST PATH (no sidebands — the hot batch/serving path):
-    ZERO data shuffle. Every live segment dir is written by the ONE
-    epoch writer, `spimi._write_epoch` (contiguous shard runs per
-    partition + maxRecordsPerFile=0 — build, compact, and append all
-    call it), so each segment FILE holds complete shards — all terms'
-    blocks and the DL_TERM rows for a shard co-located — and LSM
-    increments own disjoint docid ranges; therefore ANY whole-file task
-    assignment computes complete per-docid sums, and the per-partition
-    k-cut stays exact. Tasks receive their bin of file PATHS in the task
-    closure (`_launch_bins`, one stage), read their files in-task, score,
-    and emit ≤ k+ties rows per query.
-    The r3 scaling decomposition blamed the residual efficiency gap on
-    shuffle serialization of the filtered posting KBs through one host
-    memory bus — this path removes that exchange entirely instead of
-    tuning it.
+    FILE-ALIGNED PLAN — ZERO data shuffle. Every live segment dir is
+    written by the ONE epoch writer, `spimi._write_epoch` (contiguous
+    shard runs per partition + maxRecordsPerFile=0 — build, compact, and
+    append all call it), so each segment FILE holds complete shards —
+    all terms' blocks and the DL_TERM rows for a shard co-located — and
+    LSM increments own disjoint docid ranges; therefore ANY whole-file
+    task assignment computes complete per-docid sums, and the
+    per-partition k-cut stays exact. Tasks receive their bin of file
+    PATHS in the task closure (`_launch_bins`, one stage), read their
+    files in-task, score, and emit ≤ k+ties rows per query. Pending
+    tombstones and a unit collapse ride this same plan: the kernel reads
+    them itself (`_make_score_fn`). Collapse stays exact per task: a
+    conv's best unit lives in exactly one (docid-disjoint) file, that
+    task emits the conv's global max, and other tasks' lower partials
+    lose in the final conv-level max merge (batch_topk).
 
-    SIDEBAND QUERIES (docid_filter / collapse_bounds / pending
-    tombstones) ride the SAME file-aligned plan since r5: the gating
-    rows stay per-shard packs and are routed to their blocks' task by
-    each file's footer shard range, shuffling ONLY the packs on
-    route_key — postings never move. Collapse stays exact per task: a
-    parent's best unit lives in exactly one (docid-disjoint) file, that
-    task emits the parent's global max, and other tasks' lower partials
-    lose in the final conv-level max merge (batch_topk). The filter
-    masks before the k-cut."""
+    ALLOW PATH (docid_filter): a caller's DataFrame allow-set cannot be
+    read in-task, so it stays per-shard ALLOW_TERM packs routed to their
+    blocks' task by each file's footer shard range, shuffling ONLY the
+    packs on route_key — postings never move. The filter masks before
+    the k-cut."""
+    store = store.snapshot()
     meta = store.read_meta()
     avgdl, n_docs = float(meta["avgdl"]), int(meta["n_docs"])
     shard_range = int(meta["shard_range"])
@@ -750,35 +716,31 @@ def _partial_scores(
     if not qplans:
         return None, []
     hit_terms = sorted({t for _q, ts, _k in qplans for t, _w in ts})
-    docid_deny = _tombstone_docids(spark, store, meta)
     bins = _file_bins(spark, store, hit_terms, n_tasks, len(qplans))
     if not bins:  # store with no committed segments: nothing to hit
         return None, []
-    has_filter = docid_filter is not None
-    has_bounds = collapse_bounds is not None
-    has_deny = docid_deny is not None
     score_files = _make_score_fn(
-        qplans, avgdl, threshold, hit_terms, has_filter=has_filter,
-        has_bounds=has_bounds, cursors=cursors)
-    if not has_filter and not has_bounds and not has_deny:
+        qplans, avgdl, threshold, hit_terms, store.tombstone_paths(),
+        docmap=store.docmap_path if collapse else None,
+        has_filter=docid_filter is not None, cursors=cursors)
+    if docid_filter is None:
         return _launch_bins(spark, bins, score_files, PARTIAL_DDL), qplans
-    # SIDEBAND PATH (r5): allow/bounds/deny rows stay DISTRIBUTED
-    # per-shard packs (never an unbounded driver materialization or
-    # broadcast) and ride ONE small shuffle keyed by route_key to the
-    # task owning the files whose shard range covers them. The
-    # shard→task map is a STAB QUERY against per-file (shard_lo,
-    # shard_hi) intervals read from parquet footers: the sorted interval
-    # arrays (n_files entries — driver metadata) ship in a pandas_udf
-    # closure, each shard binary-searches them (prefix-max-hi early
-    # exit), and the matching route keys explode into rows.
-    # O(shards · log files), unlike the broadcast range join it
-    # replaced, whose nested-loop predicate was O(shards · files) — a
-    # real cost once a fleet-sized store holds 10^4+ files. Equal route
-    # keys co-locate under ANY hash, so correctness (every gating row
-    # reaches its blocks' task) never depends on the engineered-key
-    # balance. A dir-boundary shard straddling several files (tiny
-    # appends can slice one shard across many dirs) routes to ALL their
-    # tasks (np.unique in the kernel absorbs duplicates).
+    # ALLOW PATH (r5): the allow rows stay DISTRIBUTED per-shard packs
+    # (never an unbounded driver materialization or broadcast) and ride
+    # ONE small shuffle keyed by route_key to the task owning the files
+    # whose shard range covers them. The shard→task map is a STAB QUERY
+    # against per-file (shard_lo, shard_hi) intervals read from parquet
+    # footers: the sorted interval arrays (n_files entries — driver
+    # metadata) ship in a pandas_udf closure, each shard binary-searches
+    # them (prefix-max-hi early exit), and the matching route keys
+    # explode into rows. O(shards · log files), unlike the broadcast
+    # range join it replaced, whose nested-loop predicate was
+    # O(shards · files). Equal route keys co-locate under ANY hash, so
+    # correctness (every allow row reaches its blocks' task) never
+    # depends on the engineered-key balance. A dir-boundary shard
+    # straddling several files (tiny appends can slice one shard across
+    # many dirs) routes to ALL their tasks (np.unique in the kernel
+    # absorbs duplicates).
     rkeys = _route_keys(len(bins))
     intervals = sorted(
         (*_file_shard_range(p), rkeys[i])
@@ -806,35 +768,18 @@ def _partial_scores(
             out.append(sorted(acc))
         return pd.Series(out)
 
-    union_ddl = ("route_key long, paths array<string>, term string, "
-                 "shard long, n int, docids_bin binary")
-    union_cols = ["route_key", "paths", "term", "shard", "n",
-                  "docids_bin"]
-    parts = [_local_df(
+    seg = _local_df(
         spark,
-        [(rkeys[i], b, None, None, None, None)
-         for i, b in enumerate(bins)],
-        union_ddl, union_cols,
-    )]
-
-    def routed(side: DataFrame) -> DataFrame:
-        return side.select(
+        [(rkeys[i], b, None, None, None, None) for i, b in enumerate(bins)],
+        "route_key long, paths array<string>, term string, shard long, "
+        "n int, docids_bin binary",
+        ["route_key", "paths", "term", "shard", "n", "docids_bin"],
+    ).unionByName(
+        _sideband_rows(docid_filter, shard_range).select(
             F.explode(_routes_of(F.col("shard"))).alias("route_key"),
             F.lit(None).cast("array<string>").alias("paths"),
             "term", "shard", "n", "docids_bin",
-        )
-
-    for side_df, tag in ((docid_filter, ALLOW_TERM), (docid_deny, DENY_TERM),
-                         (collapse_bounds, BOUNDS_TERM)):
-        if side_df is not None:
-            parts.append(routed(_sideband_rows(side_df, shard_range, tag)))
-    if has_bounds:
-        parts.append(routed(
-            _carry_bounds_rows(spark, collapse_bounds, shard_range, n_docs)
         ))
-    seg = parts[0]
-    for p_ in parts[1:]:
-        seg = seg.unionByName(p_)
 
     def score_routed(batches: Iterator[pa.RecordBatch]
                      ) -> Iterator[pa.RecordBatch]:
@@ -872,7 +817,7 @@ def unit_scores(
     (BM25F, fielded.py) needs every unit score, aggregated downstream."""
     partials, _qplans = _partial_scores(
         spark, store, [(qid, text, UNCUT_K) for qid, text in queries],
-        threshold, n_tasks, None, None,
+        threshold, n_tasks, None, False,
     )
     if partials is None:
         return _local_df(
@@ -896,7 +841,7 @@ def batch_topk(
     n_tasks: int | None = None,
     driver_merge: bool = False,
     docid_filter: DataFrame | None = None,
-    collapse_bounds: DataFrame | None = None,
+    collapse: bool = False,
     search_after: dict[int, tuple[float, str, int]] | None = None,
     term_boosts: dict[int, dict[str, float]] | None = None,
 ) -> DataFrame:
@@ -922,12 +867,12 @@ def batch_topk(
     to the task reading those shards' files (no unbounded broadcast), and masks
     candidates BEFORE the per-partition k-cut, so the cut stays exact.
 
-    collapse_bounds: DataFrame with a `docid` column holding the FIRST
-    unit docid of each parent document (unit fan-out stores, units.py):
-    per-unit scores collapse to per-document max BEFORE the k-cut (the
-    cut is exact at doc level: a doc's best-unit partition gives its
-    global max, so fewer than k docs can outrank it there). Result docid
-    = the parent's first-unit docid.
+    collapse: rank PARENT documents (unit fan-out stores, units.py):
+    per-unit scores collapse to the max per conv_id BEFORE the k-cut
+    (the cut is exact at conv level: a conv's best-unit task gives its
+    global max, so fewer than k convs can outrank it there), ranked
+    (score desc, conv_id). Result (docid, turn_idx) = the conv's first
+    unit in the store, looked up for the k winners only.
 
     search_after: {query_id: (score, conv_id, turn_idx)} — the LAST row
     of the previous page; the query returns the NEXT k rows of the same
@@ -939,15 +884,17 @@ def batch_topk(
     (e.g. from a previous batch_topk result); scores are deterministic,
     so the strict-after comparison is exact.
 
+    Under collapse a conv ranks once, so the cursor's turn_idx is
+    never compared.
+
     term_boosts: {query_id: {term: boost}} — Lucene-style query-time
     boosting; each matching term's BM25 contribution is multiplied by
     its boost (default 1.0). Plan-time reweight only.
     """
-    if driver_merge and collapse_bounds is not None:
-        raise ValueError("driver_merge does not support collapse_bounds")
+    if driver_merge and collapse:
+        raise ValueError("driver_merge does not support collapse")
     partials, qplans = _partial_scores(
-        spark, store, queries, threshold, n_tasks, docid_filter,
-        collapse_bounds,
+        spark, store, queries, threshold, n_tasks, docid_filter, collapse,
         cursors={qid: float(s) for qid, (s, _c, _t) in search_after.items()}
         if search_after else None,
         term_boosts=term_boosts,
@@ -958,10 +905,10 @@ def batch_topk(
         "docid", "conv_id", "turn_idx"
     )
 
-    def _after_filter(df: DataFrame) -> DataFrame:
-        # strict-after predicate in the (score desc, conv_id, turn_idx)
-        # total order; the kernel ceiling already dropped everything
-        # ABOVE the cursor score, this resolves the tie run AT it
+    def _after_filter(df: DataFrame, keys: list[str]) -> DataFrame:
+        # strict-after predicate in the (score desc, *keys) total order;
+        # the kernel ceiling already dropped everything ABOVE the cursor
+        # score, this resolves the tie run AT it
         if not search_after:
             return df
         cdf = _local_df(
@@ -971,47 +918,47 @@ def batch_topk(
             "query_id long, c_score double, c_conv string, c_turn int",
             ["query_id", "c_score", "c_conv", "c_turn"],
         )
+        after = F.lit(False)
+        for key, cur in reversed(list(zip(keys, ("c_conv", "c_turn")))):
+            after = (F.col(key) > F.col(cur)) \
+                | ((F.col(key) == F.col(cur)) & after)
         strict = (
             F.col("c_score").isNull()
             | (F.col("score") < F.col("c_score"))
-            | ((F.col("score") == F.col("c_score"))
-               & ((F.col("conv_id") > F.col("c_conv"))
-                  | ((F.col("conv_id") == F.col("c_conv"))
-                     & (F.col("turn_idx") > F.col("c_turn")))))
+            | ((F.col("score") == F.col("c_score")) & after)
         )
         return (df.join(F.broadcast(cdf), "query_id", "left")
                 .filter(strict).drop("c_score", "c_conv", "c_turn"))
 
-    if collapse_bounds is not None:
-        # final collapse keys on the PARENT (conv_id), not the run-start
-        # docid: partitions sharing a straddling run each emit a partial
-        # max, and a parent whose units were appended in a later increment
-        # owns several runs — the conv-level max re-merges both cases.
-        # Representative (docid, turn_idx) = the parent's first unit.
-        partials = (
-            partials.join(docmap, "docid")
-            .groupBy("query_id", "conv_id")
-            .agg(
-                F.max("score").alias("score"),
-                F.min(F.struct("docid", "turn_idx")).alias("_first"),
-            )
-            .select(
-                "query_id", "conv_id", "score",
-                F.col("_first.docid").alias("docid"),
-                F.col("_first.turn_idx").alias("turn_idx"),
-            )
-        )
-        kdf = _local_df(spark, [(qid, k) for qid, _t, k in qplans],
-                        "query_id long, k int", ["query_id", "k"])
+    def k_of() -> DataFrame:
+        return F.broadcast(_local_df(
+            spark, [(qid, k) for qid, _t, k in qplans],
+            "query_id long, k int", ["query_id", "k"]))
+
+    if collapse:
+        # the final collapse merges the per-task maxes of a conv whose
+        # units sit in several tasks (a run straddling a file edge, a
+        # turn appended in a later increment), then cuts at k
         w = Window.partitionBy("query_id").orderBy(
             F.desc("score"), F.asc("conv_id")
         )
-        return (
-            _after_filter(partials)
+        winners = (
+            _after_filter(
+                partials.join(docmap, "docid")
+                .groupBy("query_id", "conv_id")
+                .agg(F.max("score").alias("score")), ["conv_id"])
             .withColumn("rank", F.row_number().over(w))
-            .join(F.broadcast(kdf), "query_id")
+            .join(k_of(), "query_id")
             .filter(F.col("rank") <= F.col("k"))
-            .select("query_id", "rank", "docid", "conv_id", "turn_idx",
+        )
+        # representative (docid, turn_idx): the conv's first unit in the
+        # store, resolved for the <= k winners per query only
+        return (
+            docmap.join(F.broadcast(winners), "conv_id")
+            .groupBy("query_id", "rank", "conv_id", "score")
+            .agg(F.min(F.struct("docid", "turn_idx")).alias("_first"))
+            .select("query_id", "rank", F.col("_first.docid").alias("docid"),
+                    "conv_id", F.col("_first.turn_idx").alias("turn_idx"),
                     "score")
         )
     if driver_merge:
@@ -1050,15 +997,14 @@ def batch_topk(
                  float(scores[i]))
                 for rank, i in enumerate(sel, start=1))
         return _local_df(spark, merged, RESULT_DDL, RESULT_COLUMNS)
-    kdf = _local_df(spark, [(qid, k) for qid, _t, k in qplans],
-                    "query_id long, k int", ["query_id", "k"])
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("conv_id"), F.asc("turn_idx")
     )
     return (
-        _after_filter(partials.join(docmap, "docid"))
+        _after_filter(partials.join(docmap, "docid"),
+                      ["conv_id", "turn_idx"])
         .withColumn("rank", F.row_number().over(w))
-        .join(F.broadcast(kdf), "query_id")
+        .join(k_of(), "query_id")
         .filter(F.col("rank") <= F.col("k"))
         .select("query_id", "rank", "docid", "conv_id", "turn_idx", "score")
     )
