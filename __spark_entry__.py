@@ -102,8 +102,9 @@ FILTERED_QUERY = ("join filter stream", 20, "src1")
 def _bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Metadata-filtered top-k (predicate ∧ BM25): rank only docs whose
     source starts with the prefix, under UNCHANGED global stats — the
-    reference's S2 scan filter composed with search. The allow-set rides
-    the shard shuffle as sideband rows (wand.py docid_filter)."""
+    reference's S2 scan filter composed with search. The allow-set is
+    written once and each scan task reads it over its own docid span
+    (wand.py docid_filter)."""
     qtext, k, prefix = FILTERED_QUERY
     store = get_documents_index(spark, sf_dir)
     allowed_convs = (
@@ -230,7 +231,7 @@ def _bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bm25_querystring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene-style query string (query/querylang.py): one pass that
     composes must/must_not membership, exact-phrase verify, and boosted
-    BM25 scoring — the allow-set rides the routed sideband fast path."""
+    BM25 scoring — the scan tasks read the allow-set in-task."""
     from visionsearch_spark.query.querylang import query_string_topk
 
     qs, k = QS_QUERY
@@ -434,7 +435,7 @@ def _bm25_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _bm25_boolean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lucene-rule boolean search: must conjunctive, should score-only,
     must_not excluded — zero-shuffle membership kernel feeding the
-    sideband fast path (query/boolean.boolean_topk)."""
+    in-task allow-set read (query/boolean.boolean_topk)."""
     from visionsearch_spark.query.boolean import boolean_topk
 
     must, should, must_not, k = BOOLEAN_QUERY

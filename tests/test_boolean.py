@@ -225,11 +225,16 @@ def test_proximity_topk_rank_identity(spark, bool_store, doc_tokens,
         assert math.isclose(r.score, e[3], rel_tol=1e-9)
 
 
-def test_membership_plan_no_segment_scan(spark, bool_store):
+def test_membership_plan_no_segment_scan(spark, bool_store, monkeypatch):
     """Plan guard (PLANS.md §23): the membership kernel reads segment
     files in-task on the one-stage launcher — no Spark FileScan of any
     segment dir and no Exchange at all (the store has no tombstones,
-    so no anti-join either)."""
+    so no anti-join either). boolean_topk ranks on the same one-stage
+    scan, its tasks reading the allow-set over their own docid span:
+    with the scan fanned out, every job it runs before the merge is a
+    single stage, and no plan holds a route_key or a segment dir."""
+    import visionsearch_spark.query.wand as wand
+
     assert not bool_store.read_meta().get("tombstone_dirs")
     df = matching_docids(spark, bool_store, all_of=["join", "filter"],
                          none_of=["dup"])
@@ -239,3 +244,20 @@ def test_membership_plan_no_segment_scan(spark, bool_store):
     assert not any(d in plan for d in seg_dirs)
     assert "hashpartitioning(shard" not in plan
     assert "Exchange" not in plan
+
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
+    sc = spark.sparkContext
+    sc.setJobGroup("boolean-plan-guard", "boolean_topk before the merge")
+    try:
+        res = boolean_topk(spark, bool_store, must=["join", "filter"],
+                           must_not=["dup"], k=5)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = [sc.statusTracker().getJobInfo(j)
+            for j in sc.statusTracker().getJobIdsForGroup(
+                "boolean-plan-guard")]
+    assert jobs and all(len(j.stageIds) == 1 for j in jobs), jobs
+    res.count()
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    assert not any(d in plan for d in seg_dirs)
+    assert "route_key" not in plan

@@ -185,12 +185,9 @@ def test_fast_path_plan_has_no_posting_shuffle(spark, built_store,
     must NOT move posting data through Spark — segment files are
     shard-complete per file and LSM dirs docid-disjoint, so the kernel
     runs over whole-file tasks with only the ~100-byte path exchange.
-    Since r5 SIDEBAND queries (allow-filter / collapse) ride the same
-    file-aligned plan: their per-shard gating packs shuffle on
-    route_key (tiny), but segment files never appear in a Spark scan.
-    The sharp assertion is therefore "no FileScan over a segment dir"
-    — a shard-keyed exchange of the sideband AGG is fine; a shard-keyed
-    exchange fed by a segment scan is the r3 plan regressing."""
+    Filtered queries ride the same file-aligned plan: each task reads
+    the allow-set's docids over its own span, so no route_key exchange
+    exists and segment files never appear in a Spark scan."""
     from pyspark.sql import functions as F
 
     seg_dirs = built_store.segment_paths()
@@ -206,17 +203,13 @@ def test_fast_path_plan_has_no_posting_shuffle(spark, built_store,
 
     allow = spark.range(0, 50).select(F.col("id").alias("docid"))
     # pin tiny bins so the fixture-sized store still fans out to >1 task
-    # (r7 _n_bins floors task count by bytes x queries; with one bin the
-    # route_key exchange legitimately collapses to SinglePartition and
-    # the assertion below would have nothing to pin)
+    # (r7 _n_bins floors task count by bytes x queries)
     monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
     filt = batch_topk(spark, built_store, q, docid_filter=allow)
     filt.count()
     fplan = filt._jdf.queryExecution().executedPlan().toString()
-    # the filter's own per-shard pack agg may hash on shard; the
-    # POSTINGS must not: no Spark scan of any segment dir
     assert not any(d in fplan for d in seg_dirs)
-    assert "hashpartitioning(route_key" in fplan
+    assert "route_key" not in fplan
 
 
 def test_route_key_hash_matches_spark(spark):
@@ -266,19 +259,27 @@ def _sideband_oracle(oracle_index, query, k, allowed=None,
 
 
 def test_sideband_fast_path_matches_oracle(spark, built_store,
-                                           oracle_index):
-    """The routed allow path, the in-task collapse and their composition
-    are exact — on a multi-term query and on a single-term one (the
-    block-max path must stand down under either)."""
+                                           oracle_index, monkeypatch):
+    """The in-task allow-set read, the in-task collapse and their
+    composition are exact — on a multi-term query and on a single-term
+    one (the block-max path must stand down under either). Tiny bins
+    fan the scan out, so under the one-docid allow-set every task but
+    one finds no allowed docid in its span and must admit nothing."""
     from pyspark.sql import functions as F
 
+    monkeypatch.setattr(wand, "QUERY_BIN_BYTES", 1)
     docmap = spark.read.parquet(built_store.docmap_path)
     allow = docmap.filter(F.col("docid") % 3 != 1).select("docid")
     allowed = {d for d in range(len(oracle_index.docs)) if d % 3 != 1}
+    one = oracle_search(oracle_index, "join filter stream", k=1)[0][0]
     cases = [
         (dict(docid_filter=allow), allowed, False),
         (dict(collapse=True), None, True),
         (dict(docid_filter=allow, collapse=True), allowed, True),
+        (dict(docid_filter=docmap.filter("false").select("docid")), set(),
+         False),
+        (dict(docid_filter=docmap.filter(F.col("docid") == one)
+              .select("docid")), {one}, False),
     ]
     queries = [(0, "join filter stream", 7), (1, "xylophone", 4)]
     for kw, allowed_ids, collapse in cases:
@@ -288,11 +289,33 @@ def test_sideband_fast_path_matches_oracle(spark, built_store,
             rows = [r for r in got if r["query_id"] == qid]
             exp = _sideband_oracle(oracle_index, text, k, allowed_ids,
                                    collapse)
-            assert exp, (kw, text)
+            # an empty or one-docid allow-set may leave a query no hit
+            assert exp or (allowed_ids is not None
+                           and len(allowed_ids) <= 1), (kw, text)
             assert [(r["docid"], r["conv_id"], r["turn_idx"])
                     for r in rows] == [e[:3] for e in exp], (kw, text)
             for r, e in zip(rows, exp):
                 assert math.isclose(r["score"], e[3], rel_tol=REL_TOL)
+
+
+def test_allow_scratch_removed_when_filter_fails(spark, built_store):
+    """A filtered query writes its allow-set to `_allow-<uuid>` under
+    the store root; the dir is removed even when evaluating the
+    allow-set itself raises."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    @F.udf("long")
+    def boom(v):
+        raise RuntimeError("allow-set failed")
+
+    bad = spark.range(0, 50).select(boom("id").alias("docid"))
+    with pytest.raises(Exception, match="allow-set failed"):
+        batch_topk(spark, built_store, [(0, "join filter stream", 5)],
+                   docid_filter=bad).count()
+    assert not [n for n in os.listdir(built_store.root)
+                if n.startswith("_allow-")]
 
 
 def test_segment_files_never_split_under_session_conf(

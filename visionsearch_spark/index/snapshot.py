@@ -77,11 +77,14 @@ def snapshot_store(src_root: str, dst_root: str) -> dict:
     wanted |= set(meta.get("applied_tombstone_dirs") or [])
     # sidecar tables written beside the epochs (ANN indexes and the like)
     # travel too: skip ONLY epoch/tombstone dirs the meta doesn't
-    # reference (retired or mid-GC leftovers); everything else is live
+    # reference (retired or mid-GC leftovers) and "_"-prefixed scratch
+    # (an in-flight _bloomstage-*, a query's _allow-*: their owner may
+    # remove files mid-walk); everything else is live
     epoch_prefixes = ("segments-", "term_stats-", "tombstones-")
     skip = {
         name for name in os.listdir(src_root)
-        if name.startswith(epoch_prefixes) and name not in wanted
+        if name.startswith("_")
+        or name.startswith(epoch_prefixes) and name not in wanted
     }
     n_files = 0
     dirs = []

@@ -55,15 +55,9 @@ from dataclasses import dataclass
 # repeated it per posting in a `dls_bin` column.
 LAYOUT = 2
 
-# Reserved row tags: "\x00" never appears in analyzer output ([0-9a-z]+),
-# so these rows share the segment schema with the postings and sort
-# before every term. ALLOW_TERM rows are the one query-time sideband
-# (query/wand.py): a caller's allow-list, packed per shard and routed by
-# route_key to the task reading those shards, with no broadcast of an
-# unbounded set. Tombstones and unit parents need no sideband: each scan
-# task reads them itself (tombstone_docids, the docmap).
-ALLOW_TERM = "\x00allow"
-# DL_TERM rows are stored: the doc lengths of a file's shards, built like
+# Reserved row tag: "\x00" never appears in analyzer output ([0-9a-z]+),
+# so DL_TERM rows share the segment schema with the postings and sort
+# before every term. They are stored: the doc lengths of a file's shards, built like
 # any term's blocks (<= BLOCK_SIZE docs, never crossing a shard;
 # docids_bin = the docids, tfs_bin = their dl, pos_bin NULL), so they
 # travel through the shard partitioning with the postings they describe.

@@ -14,7 +14,8 @@
   no musts, in which case any `should` match qualifies), `must_not`
   excludes. Ranking is exact BM25 over must+should with UNCHANGED
   global stats, delivered through `wand.batch_topk(docid_filter=...)`
-  — the membership set rides the r5 sideband fast path.
+  — the membership set is written once and each scan task of the one
+  ranked plan reads it over its own docid span.
 * :func:`phrase_topk` — exact phrase search. On stores built with
   positions=True (meta flag), adjacency/window checks run ENTIRELY on
   the index via :func:`positional_docids`: the per-term pos_bin
@@ -444,8 +445,8 @@ def phrase_topk(
     """Phrase BM25 top-k (exact at slop=0, ordered sloppy otherwise):
     rank only docs containing the analyzed token sequence, scored over
     the phrase's terms with UNCHANGED global stats (filter-the-results
-    semantics, like every sideband query). search_after: cursor for the
-    next page of the same ranking."""
+    semantics, like every allow-filtered query). search_after: cursor
+    for the next page of the same ranking."""
     toks = tokenize(phrase)
     if not toks:
         return wand._local_df(

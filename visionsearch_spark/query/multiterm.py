@@ -334,7 +334,7 @@ def synonym_topk(
     with their OWN idf (the scoring-boolean rewrite, like this module's
     prefix/fuzzy), not Lucene SynonymQuery's df-blending — documented
     difference, chosen because it needs no stats rewrite and composes
-    with every sideband. Synonyms of terms absent from the query are
+    with every allow-set. Synonyms of terms absent from the query are
     ignored; OOV synonyms drop out like any OOV term."""
     base = set(tokenize(query_text))
     if not base:

@@ -5,7 +5,7 @@ primitives — one string in, one ranked DataFrame out:
     boosted^2.5 plain terms
 
 Grammar (whitespace-separated clauses; no nesting — the reference's
-users type flat queries, and flat composes with every sideband):
+users type flat queries, and flat composes with every allow-set):
 
   +term        MUST contain (conjunctive; like boolean must)
   -term        MUST NOT contain (boolean must_not)
@@ -27,8 +27,9 @@ Semantics — one pass, filter ∧ rank, frozen stats:
   * scoring: BM25 over every positive clause's terms — expansions
     contribute at their own idf (scoring-boolean rewrite), boosts
     multiply, `-` terms never score.
-  * the allow-set rides the routed sideband fast path; scoring is the
-    unchanged zero-shuffle kernel. Pagination composes (search_after).
+  * the allow-set is read in-task by the unchanged zero-shuffle scoring
+    kernel (wand.batch_topk docid_filter). Pagination composes
+    (search_after).
 
 Parsing is driver-side string work; every expansion reuses the
 term-dictionary rewrites (multiterm.py), membership reuses the
@@ -161,9 +162,9 @@ def query_string_topk(
     query_id: int = 0,
 ) -> DataFrame:
     """Execute a query-string query (module docstring grammar): ONE
-    ranked job — membership constraints become a docid allow-set on the
-    routed sideband fast path, scoring terms (plain + boosted +
-    expansions) one BM25 disjunction with per-term boosts."""
+    ranked job — membership constraints become a docid allow-set the
+    scan tasks read over their own docid spans, scoring terms (plain +
+    boosted + expansions) one BM25 disjunction with per-term boosts."""
     from visionsearch_spark.query import multiterm
     from visionsearch_spark.query.boolean import (
         matching_docids,

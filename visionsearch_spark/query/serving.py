@@ -286,7 +286,7 @@ class LocalSearcher:
         """Boolean mask over matched docids whose conv_id starts with
         the prefix — the reference's S2 key-prefix filter served
         in-memory (filter ∧ top-k with UNCHANGED global stats, masked
-        BEFORE the k-cut, exactly like wand's allow sideband). The
+        BEFORE the k-cut, exactly like wand's allow-set). The
         conv gather is the same O(matches) indexing the collapse path
         already performs."""
         return np.fromiter(

@@ -17,8 +17,11 @@ Design (SURVEY.md §3.1 "our lifecycle"):
             collapse and a keep-ties top-k per query per partition.
             The task reads what gates its candidates next to the data
             (PAPERS.md: ICDE 2025, Koios): the meta snapshot's pending
-            tombstones, cut to its files' docids, and for a unit
-            collapse the docmap's conv_id over its docid span.
+            tombstones, cut to its files' docids, for a unit collapse
+            the docmap's conv_id over its docid span, and for a
+            caller's allow-set the docids over that span of the
+            scratch copy `_partial_scores` wrote. One plan shape for
+            every ranked query.
   global:   row_number window per query over (score desc, conv_id,
             turn_idx) — k rows per query; ≤ #partitions·k rows ever cross
             the wire.
@@ -41,6 +44,9 @@ asset_ids[-1] padding bug (`aisearch/core.py:62`).
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from typing import Iterator
 
 import numpy as np
@@ -54,7 +60,6 @@ from visionsearch_spark.bm25 import idf as idf_fn
 from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.codec import DocLengths
 from visionsearch_spark.index.store import (
-    ALLOW_TERM,
     DL_TERM,
     IndexStore,
     tombstone_docids,
@@ -78,49 +83,16 @@ def _local_df(spark: SparkSession, rows: list[tuple], ddl: str,
     pdf = pd.DataFrame(rows, columns=columns)
     return spark.createDataFrame(pdf, ddl)
 
-# The sideband row tag ALLOW_TERM and the stored DL_TERM are defined
-# together in index/store.py (the serving tier reads DL_TERM rows and
-# must not import this module's pyspark).
-
-
-def _sideband_rows(docids_df: DataFrame, shard_range: int) -> DataFrame:
-    """Pack an allow-set into segment-schema ALLOW_TERM rows (one per
-    shard): the docids are delta+varint encoded with the posting codec
-    and delivered to the task that reads the blocks they gate."""
-    from visionsearch_spark.index.codec import encode_docids
-
-    @F.pandas_udf("binary")
-    def pack(lst: pd.Series) -> pd.Series:
-        return lst.map(
-            lambda v: encode_docids(np.asarray(v, dtype=np.int64))
-        )
-
-    return (
-        docids_df.select("docid")
-        .withColumn("shard", (F.col("docid") / F.lit(shard_range)).cast("long"))
-        .groupBy("shard")
-        .agg(
-            F.sort_array(F.collect_list("docid")).alias("ds"),
-            F.count(F.lit(1)).cast("int").alias("n"),
-        )
-        .select(
-            F.lit(ALLOW_TERM).alias("term"),
-            "shard",
-            "n",
-            pack("ds").alias("docids_bin"),
-            F.lit(b"").alias("tfs_bin"),
-            F.lit(0).cast("int").alias("max_tf"),
-            F.lit(0).cast("int").alias("min_dl"),
-        )
-    )
+# DL_TERM is defined in index/store.py: the serving tier reads DL_TERM
+# rows and must not import this module's pyspark.
 
 
 def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                    avgdl: float, threshold: float, hit_terms: list[str],
                    tombstones: list[str] | None = None,
-                   docmap: str | None = None, has_filter: bool = False,
+                   docmap: str | None = None, allow: str | None = None,
                    cursors: dict[int, float] | None = None):
-    """File-aligned kernel `score(paths, side=None)`: reads the task's
+    """File-aligned kernel `score(paths)`: reads the task's
     segment FILES directly (pyarrow dataset; term-IN filter prunes row
     groups off the footer min/max stats; use_threads=False because
     parallelism belongs to the task scheduler, not a nested Arrow pool
@@ -145,13 +117,12 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     candidate docid, before the k-cut: a conv's units in one task take
     one of its k slots however many docid runs they form.
 
-    `side` holds a caller's allow-list as an Arrow table (term, n,
-    docids_bin) of ALLOW_TERM rows — per-shard packs routed by route_key
-    to the task owning the files whose shard ranges cover them
-    (`_partial_scores`). has_filter is the PLAN-level flag: a task whose
-    shards hold no allowed docids receives zero rows, which must mean
-    'allowed set empty here' — inferring the mode from row presence would
-    silently disable the filter in exactly those tasks.
+    allow: the scratch dir holding a caller's allow-set (docid-sorted
+    parquet, written once by `_partial_scores`), else None. The task
+    reads the allowed docids inside its files' docid span (`_docid_span`,
+    docid pushdown) and masks candidates before every cut. A task whose
+    span holds no allowed docid admits nothing: the mode follows from
+    the dir being passed, never from what the task finds in it.
 
     cursors: per-query search_after score ceiling (pagination). Every
     per-partition cut keeps boundary ties (score_core.cut): on an
@@ -176,14 +147,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     }
     cols = ["term", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"]
 
-    def side_docids(side: pa.Table | None) -> np.ndarray:
-        if side is None:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(decode_blocks(side["docids_bin"],
-                                       side["n"].to_numpy()))
-
-    def score(paths: list[str], side: pa.Table | None = None
-              ) -> Iterator[pa.RecordBatch]:
+    def score(paths: list[str]) -> Iterator[pa.RecordBatch]:
         import pyarrow.compute as pc
         import pyarrow.dataset as pads
 
@@ -201,7 +165,9 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
             return
         lengths = _doc_lengths(keys, dl_rows)
         deny = _task_deny(tombstones or [], lengths)
-        allow = side_docids(side) if has_filter else None
+        allowed = None if allow is None else np.unique(_docid_span(
+            allow, lengths.lo, lengths.lo + lengths.table.size - 1,
+            ["docid"])["docid"].to_numpy().astype(np.int64))
         conv = None  # the docmap span, read on the first collapse
         # every block of the task in one pass per payload column; a
         # term's blocks are the contiguous row run term_runs reports,
@@ -260,7 +226,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
             ub = sum(w * bmax[slice(*runs[t])].max() for t, w in present)
             if ub <= threshold:
                 continue  # safe partition skip: no doc here can pass
-            if qid in single_term_q and not has_filter and docmap is None:
+            if qid in single_term_q and allowed is None and docmap is None:
                 # block-max pruning counts every admitted doc as a
                 # candidate; under an allow-filter or a unit collapse
                 # the exact path below applies them before the cut
@@ -271,7 +237,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                 uniq, sums = score_core.accumulate(
                     [(docids[spans[t]], w * tfw[spans[t]])
                      for t, w in present], threshold)
-                uniq, sums = score_core.admit(uniq, sums, deny, allow)
+                uniq, sums = score_core.admit(uniq, sums, deny, allowed)
                 if docmap is not None:  # unit -> its conv, max per conv
                     if conv is None:
                         conv = _conv_codes(docmap, int(docids.min()),
@@ -408,53 +374,8 @@ def _route_keys(n: int) -> list[int]:
     return keys
 
 
-# per-file shard range cache: files are immutable (LSM dirs append, never
-# rewrite in place), keyed (path, mtime) belt-and-braces. Bounded.
-_SHARD_RANGE_CACHE: dict[tuple[str, float], tuple[int, int]] = {}
-_SHARD_RANGE_CACHE_MAX = 8192
-
-
-def _file_shard_range(path: str) -> tuple[int, int]:
-    """(min_shard, max_shard) of one segment file from its parquet
-    footer (row-group stats on the shard column — O(1) metadata, no data
-    read). Needed to route per-shard allow rows to the task that owns
-    the file: the segment write gives each file a contiguous run of
-    shards (spimi.write_segments), and a dir-boundary shard straddling
-    two LSM dirs simply appears in both files' ranges (the sideband row
-    is duplicated to both tasks; np.unique in the kernel absorbs it)."""
-    import os
-
-    import pyarrow.parquet as pq
-
-    key = (path, os.path.getmtime(path))
-    rng = _SHARD_RANGE_CACHE.get(key)
-    if rng is None:
-        md = pq.ParquetFile(path).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        si = idx["shard"]
-        lo, hi = None, None
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(si).statistics
-            if st is None or not st.has_min_max:
-                # stats absent (foreign writer): one column read, still
-                # cheap, and cached
-                import pyarrow.parquet as _pq
-
-                col = _pq.read_table(path, columns=["shard"])["shard"]
-                lo = int(pa.compute.min(col).as_py())
-                hi = int(pa.compute.max(col).as_py())
-                break
-            lo = st.min if lo is None else min(lo, st.min)
-            hi = st.max if hi is None else max(hi, st.max)
-        rng = (int(lo), int(hi))
-        while len(_SHARD_RANGE_CACHE) >= _SHARD_RANGE_CACHE_MAX:
-            _SHARD_RANGE_CACHE.pop(next(iter(_SHARD_RANGE_CACHE)))
-        _SHARD_RANGE_CACHE[key] = rng
-    return rng
-
-
 # per-file doc-length cache (the decoded DL_TERM rows, codec.DocLengths):
-# files are immutable, keyed (path, mtime) like the shard-range cache, so
+# files are immutable, keyed (path, mtime) like the bloom cache, so
 # a worker decodes a file's lengths once, not once per query batch.
 # Bounded by the docs it holds (about 24 B each with the table).
 _DL_CACHE: dict[tuple[str, float], DocLengths] = {}
@@ -533,20 +454,27 @@ def _task_deny(dirs: list[str], lengths: DocLengths) -> np.ndarray:
     return deny[inside]
 
 
-def _conv_codes(docmap: str, lo: int, hi: int
-                ) -> tuple[np.ndarray, np.ndarray]:
-    """(docids ascending, conv code of each) for the docmap rows with
-    lo <= docid <= hi; the docid filter prunes row groups of the
-    docid-sorted staged files. Equal codes mean one conversation (codes
-    compare within one call only)."""
+def _docid_span(path: str, lo: int, hi: int, columns: list[str]
+                ) -> pa.Table:
+    """The `columns` of the rows with lo <= docid <= hi in the parquet
+    dir `path` (the docmap, an allow-set): the docid filter prunes row
+    groups off the footer stats of docid-sorted files."""
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
-    tbl = pads.dataset(docmap).to_table(
-        columns=["docid", "conv_id"],
+    return pads.dataset(path).to_table(
+        columns=columns,
         filter=(pc.field("docid") >= lo) & (pc.field("docid") <= hi),
         use_threads=False,
     )
+
+
+def _conv_codes(docmap: str, lo: int, hi: int
+                ) -> tuple[np.ndarray, np.ndarray]:
+    """(docids ascending, conv code of each) for the docmap rows with
+    lo <= docid <= hi. Equal codes mean one conversation (codes compare
+    within one call only)."""
+    tbl = _docid_span(docmap, lo, hi, ["docid", "conv_id"])
     d = tbl["docid"].to_numpy()
     codes = tbl["conv_id"].combine_chunks().dictionary_encode() \
         .indices.to_numpy()
@@ -678,21 +606,23 @@ def _partial_scores(
     per-partition k-cut stays exact. Tasks receive their bin of file
     PATHS in the task closure (`_launch_bins`, one stage), read their
     files in-task, score, and emit ≤ k+ties rows per query. Pending
-    tombstones and a unit collapse ride this same plan: the kernel reads
-    them itself (`_make_score_fn`). Collapse stays exact per task: a
-    conv's best unit lives in exactly one (docid-disjoint) file, that
-    task emits the conv's global max, and other tasks' lower partials
-    lose in the final conv-level max merge (batch_topk).
+    tombstones, a unit collapse and a caller's allow-set ride this same
+    plan: the kernel reads them itself (`_make_score_fn`). Collapse stays
+    exact per task: a conv's best unit lives in exactly one
+    (docid-disjoint) file, that task emits the conv's global max, and
+    other tasks' lower partials lose in the final conv-level max merge
+    (batch_topk).
 
-    ALLOW PATH (docid_filter): a caller's DataFrame allow-set cannot be
-    read in-task, so it stays per-shard ALLOW_TERM packs routed to their
-    blocks' task by each file's footer shard range, shuffling ONLY the
-    packs on route_key — postings never move. The filter masks before
-    the k-cut."""
+    An allow-set (docid_filter) is written once, docid-sorted, to a
+    "_"-prefixed scratch dir under the store root (`_allow-<uuid>`,
+    invisible to dataset discovery, gc_dirs and fsck); each task reads
+    the part inside its own docid span. The partials are then collected
+    (≤ bins·(k+ties) rows) and returned as a local frame, and the
+    scratch dir is removed whether the write, the scan or neither
+    failed."""
     store = store.snapshot()
     meta = store.read_meta()
     avgdl, n_docs = float(meta["avgdl"]), int(meta["n_docs"])
-    shard_range = int(meta["shard_range"])
     qtoks = {qid: sorted(set(tokenize(text))) for qid, text, _k in queries}
     all_terms = sorted({t for ts in qtoks.values() for t in ts})
     if not all_terms or n_docs == 0:
@@ -719,84 +649,22 @@ def _partial_scores(
     bins = _file_bins(spark, store, hit_terms, n_tasks, len(qplans))
     if not bins:  # store with no committed segments: nothing to hit
         return None, []
-    score_files = _make_score_fn(
+    allow = None if docid_filter is None else os.path.join(
+        store.root, f"_allow-{uuid.uuid4().hex}")
+    partials = _launch_bins(spark, bins, _make_score_fn(
         qplans, avgdl, threshold, hit_terms, store.tombstone_paths(),
-        docmap=store.docmap_path if collapse else None,
-        has_filter=docid_filter is not None, cursors=cursors)
-    if docid_filter is None:
-        return _launch_bins(spark, bins, score_files, PARTIAL_DDL), qplans
-    # ALLOW PATH (r5): the allow rows stay DISTRIBUTED per-shard packs
-    # (never an unbounded driver materialization or broadcast) and ride
-    # ONE small shuffle keyed by route_key to the task owning the files
-    # whose shard range covers them. The shard→task map is a STAB QUERY
-    # against per-file (shard_lo, shard_hi) intervals read from parquet
-    # footers: the sorted interval arrays (n_files entries — driver
-    # metadata) ship in a pandas_udf closure, each shard binary-searches
-    # them (prefix-max-hi early exit), and the matching route keys
-    # explode into rows. O(shards · log files), unlike the broadcast
-    # range join it replaced, whose nested-loop predicate was
-    # O(shards · files). Equal route keys co-locate under ANY hash, so
-    # correctness (every allow row reaches its blocks' task) never
-    # depends on the engineered-key balance. A dir-boundary shard
-    # straddling several files (tiny appends can slice one shard across
-    # many dirs) routes to ALL their tasks (np.unique in the kernel
-    # absorbs duplicates).
-    rkeys = _route_keys(len(bins))
-    intervals = sorted(
-        (*_file_shard_range(p), rkeys[i])
-        for i, b in enumerate(bins) for p in b
-    )
-    _los = np.array([t[0] for t in intervals], dtype=np.int64)
-    _his = np.array([t[1] for t in intervals], dtype=np.int64)
-    _rks = np.array([t[2] for t in intervals], dtype=np.int64)
-    _pmax = np.maximum.accumulate(_his)
-
-    @F.pandas_udf("array<long>")
-    def _routes_of(shard: pd.Series) -> pd.Series:
-        s = shard.to_numpy(dtype=np.int64)
-        start = np.searchsorted(_los, s, side="right") - 1
-        out = []
-        for v, j in zip(s, start):
-            acc = set()
-            k = int(j)
-            # every interval at index <= j has lo <= v; stop once
-            # even the largest hi to the left cannot reach v
-            while k >= 0 and _pmax[k] >= v:
-                if _his[k] >= v:
-                    acc.add(int(_rks[k]))
-                k -= 1
-            out.append(sorted(acc))
-        return pd.Series(out)
-
-    seg = _local_df(
-        spark,
-        [(rkeys[i], b, None, None, None, None) for i, b in enumerate(bins)],
-        "route_key long, paths array<string>, term string, shard long, "
-        "n int, docids_bin binary",
-        ["route_key", "paths", "term", "shard", "n", "docids_bin"],
-    ).unionByName(
-        _sideband_rows(docid_filter, shard_range).select(
-            F.explode(_routes_of(F.col("shard"))).alias("route_key"),
-            F.lit(None).cast("array<string>").alias("paths"),
-            "term", "shard", "n", "docids_bin",
-        ))
-
-    def score_routed(batches: Iterator[pa.RecordBatch]
-                     ) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-
-        got = list(batches)
-        if not got:
-            return
-        tbl = pa.Table.from_batches(got)
-        is_bin = pc.is_valid(tbl["paths"])
-        paths = pc.list_flatten(tbl["paths"].filter(is_bin)).to_pylist()
-        if paths:
-            yield from score_files(paths, tbl.filter(pc.invert(is_bin)))
-
-    partials = seg.repartition(len(bins), "route_key").mapInArrow(
-        score_routed, PARTIAL_DDL)
-    return partials, qplans
+        docmap=store.docmap_path if collapse else None, allow=allow,
+        cursors=cursors), PARTIAL_DDL)
+    if allow is None:
+        return partials, qplans
+    try:
+        docid_filter.select(F.col("docid").cast("long")) \
+            .sortWithinPartitions("docid").write.parquet(allow)
+        rows = partials.collect()
+    finally:
+        shutil.rmtree(allow, ignore_errors=True)
+    return _local_df(spark, rows, PARTIAL_DDL,
+                     ["query_id", "docid", "score"]), qplans
 
 
 # "no cut": larger than any docid count a partition can hold
@@ -863,9 +731,12 @@ def batch_topk(
     search (predicate ∧ top-k): only these docids are ranked, with
     UNCHANGED global stats (df/N/avgdl), i.e. filter-the-results
     semantics, the reference's S2 prefix-filter composed with search.
-    The set is delivered per docid-range shard as sideband rows routed
-    to the task reading those shards' files (no unbounded broadcast), and masks
-    candidates BEFORE the per-partition k-cut, so the cut stays exact.
+    The set is written once, docid-sorted, to a scratch dir under the
+    store root; each scan task reads the part inside its files' docid
+    span (no shuffle, no broadcast) and masks candidates BEFORE the
+    per-partition k-cut, so the cut stays exact. The filter and the scan
+    are evaluated when batch_topk is called, not when the returned frame
+    is: it holds the collected per-task candidates.
 
     collapse: rank PARENT documents (unit fan-out stores, units.py):
     per-unit scores collapse to the max per conv_id BEFORE the k-cut
