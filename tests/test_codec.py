@@ -20,9 +20,10 @@ from visionsearch_spark.index.codec import (
     encode_positions,
     encode_varint,
     fixed_values,
+    PostingRuns,
     payload,
-    term_runs,
 )
+from visionsearch_spark.index.store import DL_TERM
 
 
 def test_empty():
@@ -152,7 +153,7 @@ def test_decode_blocks_chunked(blocks, cuts):
     chunked = pa.chunked_array(
         [arr[a:b] for a, b in zip(edges[:-1], edges[1:])], type=pa.binary())
     assert decode_blocks(chunked, ns).tolist() == _per_block(enc, ns)
-    # the large_binary widening term_runs applies decodes the same
+    # a large_binary column decodes the same
     wide = chunked.cast(pa.large_binary())
     assert decode_blocks(wide, ns).tolist() == _per_block(enc, ns)
 
@@ -223,17 +224,101 @@ def test_payload_null_slots_raise():
     assert decode_positions(payload(kept), ktfs).tolist() == [0, 3, 5, 4]
 
 
-def test_term_runs_groups_stably():
-    tbl = pa.table({
-        "term": ["b", "a", "b", "c", "a"],
-        "n": pa.array([1, 2, 3, 4, 5], type=pa.int32()),
-        "docids_bin": pa.array([b"1", b"2", b"3", b"4", b"5"]),
-    })
-    out, runs = term_runs(tbl)
-    assert runs == {"a": (0, 2), "b": (2, 4), "c": (4, 5)}
-    assert out["n"].to_pylist() == [2, 5, 1, 3, 4]
-    assert out.schema.field("docids_bin").type == pa.large_binary()
-    assert term_runs(tbl.slice(0, 0))[1] == {}
+def _segment_batch(rows, extra_terms=(), plain=False):
+    """A record batch of segment rows (term, shard, docids, tfs, positions),
+    `term` dictionary-encoded over its terms plus `extra_terms` no row
+    references (or a plain string column)."""
+    terms = sorted({r[0] for r in rows} | set(extra_terms))
+    at = {t: i for i, t in enumerate(terms)}
+    return pa.RecordBatch.from_arrays([
+        pa.array([r[0] for r in rows], pa.string()) if plain else
+        pa.DictionaryArray.from_arrays(
+            pa.array([at[r[0]] for r in rows], pa.int32()),
+            pa.array(terms, pa.string())),
+        pa.array([len(r[2]) for r in rows], pa.int32()),
+        pa.array([encode_docids(np.asarray(r[2])) for r in rows],
+                 pa.binary()),
+        pa.array([encode_varint(np.asarray(r[3], dtype=np.uint64))
+                  for r in rows], pa.binary()),
+        pa.array([encode_positions(np.asarray(r[4]), np.asarray(r[3]))
+                  for r in rows], pa.binary()),
+        pa.array([max(r[3]) for r in rows], pa.int32()),
+        pa.array([r[1] for r in rows], pa.int64()),
+    ], names=["term", "n", "docids_bin", "tfs_bin", "pos_bin", "max_tf",
+              "shard"])
+
+
+def _random_rows(rng, n):
+    out = []
+    for _ in range(n):
+        d = np.sort(rng.choice(500, size=int(rng.integers(1, 6)),
+                               replace=False))
+        tf = rng.integers(1, 4, size=d.size)
+        pos = np.concatenate([np.sort(rng.choice(40, size=t, replace=False))
+                              for t in tf])
+        out.append((str(rng.choice(["a", "b", "c", "dd", DL_TERM])),
+                    int(rng.integers(0, 4)), d.tolist(), tf.tolist(),
+                    pos.tolist()))
+    return out
+
+
+@pytest.mark.parametrize("seed", range(6))
+@pytest.mark.parametrize("shards", [None, [1, 3]])
+def test_posting_runs_match_sorted_reference(seed, shards):
+    """Unsorted batches, several per file, dictionaries with entries no
+    row references (or plain term columns), with and without a shard
+    subset: every term's df and decoded postings equal a stable sort of
+    the kept rows by term, and each file's DocLengths its DL_TERM rows."""
+    rng = np.random.default_rng(seed)
+    files = [[_random_rows(rng, int(rng.integers(0, 12)))
+              for _ in range(int(rng.integers(1, 4)))] for _ in range(3)]
+    runs = PostingRuns(
+        [[_segment_batch(rows, ["zz", "unused"], plain=seed % 2)
+          for rows in f] for f in files], shards)
+    kept = [(f, r) for f, batches in enumerate(files)
+            for rows in batches for r in rows
+            if shards is None or r[1] in shards]
+    ref = sorted(kept, key=lambda fr: fr[1][0])  # stable: (file, row) kept
+    terms = sorted({r[0] for _f, r in ref})
+    assert sorted(t for t in runs.terms if runs.df[runs.ids[t]]) == terms
+    assert "zz" not in runs.ids and "unused" not in runs.ids
+    post = runs.decode(terms + ["zz"])
+    for i, t in enumerate(terms):
+        rows = [r for _f, r in ref if r[0] == t]
+        span = post.span(i)
+        assert post.docids[span].tolist() == sum((r[2] for r in rows), [])
+        assert post.tf[span].tolist() == sum((r[3] for r in rows), [])
+        assert post.max_tf[post.boff[i]:post.boff[i + 1]].tolist() == \
+            [max(r[3]) for r in rows]
+        assert runs.df[runs.ids[t]] == sum(len(r[2]) for r in rows)
+    assert post.pos.tolist() == sum((r[4] for _f, r in sorted(
+        ref, key=lambda fr: terms.index(fr[1][0]))), [])
+    assert post.span(len(terms)) == slice(post.poff[-1], post.poff[-1])
+    for f, lengths in enumerate(runs.doc_lengths()):
+        dl = {d: x for g, r in kept if g == f and r[0] == DL_TERM
+              for d, x in zip(r[2], r[3])}
+        assert lengths.docids.tolist() == sorted(dl)
+        assert lengths.dls.tolist() == [dl[d] for d in sorted(dl)]
+
+
+def test_posting_runs_empty_input_and_sorted_file():
+    """No file, a file of empty batches: no term, nothing decodes. A
+    term-sorted batch gives one run per term."""
+    for files in ([], [[]], [[_segment_batch([])]]):
+        runs = PostingRuns(files)
+        assert runs.terms == [] and runs.df.size == 0
+        post = runs.decode(["a"])
+        assert post.docids.size == 0 and post.span(0) == slice(0, 0)
+        assert [x.docids.size for x in runs.doc_lengths()] == \
+            [0] * len(files)
+    rows = sorted(_random_rows(np.random.default_rng(7), 30))
+    runs = PostingRuns([[_segment_batch(rows)]])
+    assert runs.ptr.tolist() == list(range(len(runs.terms) + 1))
+    # a NULL pos_bin (a store built without positions) is refused
+    batch = _segment_batch(rows)
+    no_pos = batch.set_column(4, "pos_bin", pa.nulls(len(rows), pa.binary()))
+    with pytest.raises(ValueError, match="has no pos_bin"):
+        PostingRuns([[no_pos]]).decode([rows[0][0]])
 
 
 _widths = st.sampled_from([(pa.int32(), np.int32), (pa.int64(), np.int64)])

@@ -2,10 +2,10 @@
 /search, /suggest and /healthz handlers import neither pyspark/py4j nor
 pandas/pyarrow.dataset/pyarrow.compute and start no thread of their own
 before serving (query/serving.py's import rule); their load reads each
-segment file's term runs in place yet decodes exactly what the sorted
-copy of codec.term_runs + split_dl over read_columns gives; and their
-spell correction and completion answer from the searcher's in-memory
-block dictionary exactly as query/multiterm answers from term_stats."""
+segment file's term runs in place yet decodes exactly what a sorted
+copy of the rows of read_columns gives; and their spell correction and
+completion answer from the searcher's in-memory block dictionary exactly
+as query/multiterm answers from term_stats."""
 
 from __future__ import annotations
 
@@ -27,11 +27,9 @@ from visionsearch_spark.index.codec import (
     fixed_values,
     gather_dl,
     payload,
-    split_dl,
-    term_runs,
 )
 from visionsearch_spark.index.spimi import build_index, compact_store
-from visionsearch_spark.index.store import parquet_files, read_columns
+from visionsearch_spark.index.store import DL_TERM, parquet_files, read_columns
 from visionsearch_spark.query import multiterm
 from visionsearch_spark.query.serving import LocalSearcher, ShardedSearcher
 
@@ -192,9 +190,11 @@ def test_dictionary_parity_appended_deleted_then_compacted(lsm_store,
 
 
 def _sorted_copy_load(store, shards=None):
-    """The load the searcher's in-place runs replace: codec.term_runs +
-    split_dl over read_columns (rows outside `shards` filtered first).
-    Returns (terms in order, {term: (docids, tf_weight, df)}, DocLengths)."""
+    """The load the searcher's in-place runs replace: the segment rows of
+    read_columns (rows outside `shards` filtered first) stably sorted by
+    term and cut into one row range per term, the DL_TERM range (which
+    sorts first) split off before any decode. Returns (terms in order,
+    {term: (docids, tf_weight, df)}, DocLengths)."""
     import pyarrow.compute as pc
 
     cols = ["term", "n", "docids_bin", "tfs_bin"]
@@ -202,8 +202,19 @@ def _sorted_copy_load(store, shards=None):
     if shards is not None:
         seg = seg.filter(pc.is_in(seg["shard"], value_set=pa.array(
             shards, type=seg.schema.field("shard").type)))
-    dl_rows, seg, runs = split_dl(*term_runs(seg.select(cols)))
-    lengths = doc_lengths(dl_rows)
+    # large_binary: the sort gathers every chunk into one
+    seg = seg.select(cols)
+    seg = seg.cast(pa.schema([
+        f.with_type(pa.large_binary()) if pa.types.is_binary(f.type) else f
+        for f in seg.schema])).sort_by("term")
+    ree = pc.run_end_encode(seg["term"].combine_chunks())
+    ends = fixed_values(ree.run_ends).astype(np.int64)
+    runs = dict(zip(ree.values.to_pylist(),
+                    zip(np.concatenate(([0], ends[:-1])).tolist(),
+                        ends.tolist())))
+    dl_lo, dl_hi = runs.pop(DL_TERM)
+    assert dl_lo == 0
+    lengths = doc_lengths(seg.slice(0, dl_hi))
     avgdl = float(store.read_meta()["avgdl"])
     ns = fixed_values(seg["n"]).astype(np.int64)
     post = {}
@@ -255,7 +266,7 @@ def test_load_is_transparent(spark, transcripts, plain_store, lsm_store,
     router = ShardedSearcher(multi, n_groups=3)
     for s in router.searchers:
         _assert_transparent(s, multi, s.shards)
-    assert any(np.diff(s._ptr).max() > len(s._batches)
+    assert any(np.diff(s._runs.ptr).max() > len(s._runs.batches)
                for s in router.searchers)
 
 
@@ -274,7 +285,7 @@ def test_load_is_transparent_over_unsorted_files(plain_store, tmp_path):
             pq.write_table(tbl.take(rng.permutation(tbl.num_rows)), f,
                            row_group_size=max(1, tbl.num_rows // 3))
     searcher = LocalSearcher(shuffled)
-    assert max(np.diff(searcher._ptr)) > 1
+    assert max(np.diff(searcher._runs.ptr)) > 1
     _assert_transparent(searcher, plain_store)
     for q in ("join filter", "window", "customer stream"):
         assert searcher.search(q, k=10) == \

@@ -14,6 +14,7 @@ from visionsearch_spark.index.spimi import BLOCK_SIZE, build_index
 from visionsearch_spark.index.store import DL_TERM, IndexStore
 from visionsearch_spark.oracle import oracle_search
 from visionsearch_spark.query import wand
+from visionsearch_spark.query.serving import LocalSearcher
 from visionsearch_spark.query.wand import batch_topk, topk
 
 REL_TOL = 1e-9
@@ -157,6 +158,11 @@ def test_resume_after_partition_failure(spark, transcripts, tmp_path_factory,
     done_before = store.done_partitions()
     assert done_before, "no partitions committed before failure"
     assert 2 not in done_before and 5 not in done_before
+    # the half-built store answers no query: every reader names the fix
+    with pytest.raises(ValueError, match="build_index"):
+        batch_topk(spark, store, [(0, "join filter", 10)])
+    with pytest.raises(ValueError, match="build_index"):
+        LocalSearcher(store)
     store2 = build_index(transcripts, root, n_partitions=8, n_shards=16)
     assert store2.done_partitions() >= done_before | {2, 5}
     # resumed index must be fully correct
@@ -316,6 +322,17 @@ def test_allow_scratch_removed_when_filter_fails(spark, built_store):
                    docid_filter=bad).count()
     assert not [n for n in os.listdir(built_store.root)
                 if n.startswith("_allow-")]
+    # a driver killed before that cleanup leaves its dir behind: the next
+    # gc removes it once a day old, never a live query's
+    for name in ("_allow-old", "_allow-new"):
+        os.makedirs(os.path.join(built_store.root, name, "part"))
+    old = os.path.join(built_store.root, "_allow-old")
+    os.utime(old, (os.path.getatime(old), os.path.getmtime(old) - 2 * 86400))
+    built_store.gc_dirs()
+    assert sorted(n for n in os.listdir(built_store.root)
+                  if n.startswith("_allow-")) == ["_allow-new"]
+    os.rmdir(os.path.join(built_store.root, "_allow-new", "part"))
+    os.rmdir(os.path.join(built_store.root, "_allow-new"))
 
 
 def test_segment_files_never_split_under_session_conf(

@@ -12,27 +12,21 @@ compact, scan-friendly physical layout for the index payload.
 
 Decode API. Every reader of more than one block goes through the column
 decoders, never a per-block or per-row loop:
+  PostingRuns(files)     -> per-file record batches grouped in place into
+                            term runs: the term dictionary, each term's
+                            df, ONE decode pass over the runs of a list
+                            of terms and each file's DL_TERM DocLengths —
+                            the one posting reader of the query side;
   decode_blocks(col, ns) -> int64 docids of every block of a binary
                             column, in row order (block i holds ns[i]);
   block_docids(raw, ns)  -> the same over the blocks' docids_bin bytes
                             already concatenated — the one block decoder
-                            decode_blocks and LocalSearcher's first-touch
-                            decode (query/serving.py) share;
+                            decode_blocks and PostingRuns share;
   payload(col)           -> the column's value bytes as one uint8 array,
                             fed to decode_varint (tfs_bin) or
                             decode_positions (pos_bin);
   binary_parts(arr)      -> one binary array's (offsets, data) views, so
                             a row range's bytes are one numpy slice;
-  term_runs(tbl)         -> a posting table sorted by term plus each
-                            term's row range, so a term's blocks are one
-                            zero-copy slice: the grouping of the Spark-side
-                            readers (wand, boolean, fsck). It imports
-                            pyarrow.compute where it runs; the serving tier
-                            never calls it (it groups each file's rows in
-                            place, numpy only);
-  split_dl(tbl, runs)    -> term_runs' output split into the DL_TERM rows
-                            and the term rows (with their shifted runs),
-                            before any tf or positions decode;
   doc_lengths(rows)      -> DocLengths of DL_TERM rows: (docids
                             ascending, dl) and a dense docid -> dl table
                             (dl_lookup builds one from arrays);
@@ -41,6 +35,8 @@ decoders, never a per-block or per-row loop:
                             of every reader and merge kernel.
   fixed_values(col)      -> a fixed-width (integer/float) column as one
                             numpy array (n, docid, shard, turn_idx, ...).
+The compaction and mask writers (index/spimi.py) decode whole tables
+through decode_blocks/payload, to re-encode them in (term, shard) order.
 These cross the Arrow boundary through buffers, never through pyarrow's
 converters (to_numpy, np.asarray of an Arrow array, pa.array), which
 import pandas, and never through pyarrow.compute: the serving tier reads
@@ -59,7 +55,9 @@ so a large column stays chunked.
 Null rule: payload/decode_blocks/fixed_values raise on a column with
 NULL slots. A NULL slot's offsets may still span real bytes of an
 in-memory array built over a shared stream (only a parquet round trip
-empties them), so callers filter NULL slots out first.
+empties them), so callers filter NULL slots out first. PostingRuns
+reads a payload column with NULL slots (pos_bin) only over runs whose
+rows are all valid, and raises otherwise.
 
 Round-trip property-tested in tests/test_codec.py (hypothesis).
 """
@@ -200,17 +198,17 @@ def decode_docids(buf: bytes, n: int) -> np.ndarray:
 
 
 def binary_parts(chunk: pa.Array) -> tuple[np.ndarray, np.ndarray]:
-    """Zero-copy (offsets, data) views of one null-free binary array:
+    """Zero-copy (offsets, data) views of one binary (or string) array:
     value i is data[offsets[i]:offsets[i + 1]] (the array's slice offset
-    honoured), so any row range's bytes are one numpy slice."""
-    if chunk.null_count:
-        raise ValueError("posting column has NULL slots; filter them out "
-                         "before decoding (codec null rule)")
+    honoured), so any row range's bytes are one numpy slice. A NULL
+    slot's range may span real bytes (the null rule): read valid rows."""
     data = chunk.buffers()[2]
     if len(chunk) == 0 or data is None:
         return (np.zeros(len(chunk) + 1, dtype=np.int64),
                 np.zeros(0, dtype=np.uint8))
-    odt = np.int64 if pa.types.is_large_binary(chunk.type) else np.int32
+    wide = pa.types.is_large_binary(chunk.type) \
+        or pa.types.is_large_string(chunk.type)
+    odt = np.int64 if wide else np.int32
     off = np.frombuffer(chunk.buffers()[1], dtype=odt, count=len(chunk) + 1,
                         offset=chunk.offset * np.dtype(odt).itemsize)
     return off, np.frombuffer(data, dtype=np.uint8)
@@ -218,6 +216,9 @@ def binary_parts(chunk: pa.Array) -> tuple[np.ndarray, np.ndarray]:
 
 def _value_bytes(chunk: pa.Array) -> np.ndarray:
     """Zero-copy uint8 view of one binary chunk's values, concatenated."""
+    if chunk.null_count:
+        raise ValueError("posting column has NULL slots; filter them out "
+                         "before decoding (codec null rule)")
     off, data = binary_parts(chunk)
     return data[int(off[0]):int(off[-1])]
 
@@ -293,40 +294,6 @@ def block_docids(raw: np.ndarray, ns: np.ndarray) -> np.ndarray:
     return c - np.repeat(c[starts] - deltas[starts], ns)
 
 
-def term_runs(tbl: pa.Table) -> tuple[pa.Table, dict[str, tuple[int, int]]]:
-    """`tbl` stably sorted by its `term` column, and each term's
-    [start, stop) row range in the sorted table — a term's blocks are
-    then one zero-copy slice. Binary columns are widened to large_binary
-    first: the sort gathers every chunk into one, and large_binary's
-    int64 offsets lift the 2 GiB per-chunk cap. The Spark-side grouping
-    (wand, boolean, fsck): the cast, the sort and the run-end encoding
-    import pyarrow.compute, which the serving tier never loads."""
-    import pyarrow.compute as pc
-
-    tbl = tbl.cast(pa.schema([
-        f.with_type(pa.large_binary()) if pa.types.is_binary(f.type) else f
-        for f in tbl.schema
-    ])).sort_by("term")
-    # the sort's gather leaves `term` in one chunk: combining is a no-op
-    ree = pc.run_end_encode(tbl["term"].combine_chunks())
-    ends = fixed_values(ree.run_ends).astype(np.int64)
-    starts = np.concatenate(([0], ends[:-1]))
-    return tbl, dict(zip(ree.values.to_pylist(),
-                         zip(starts.tolist(), ends.tolist())))
-
-
-def split_dl(tbl: pa.Table, runs: dict[str, tuple[int, int]]
-             ) -> tuple[pa.Table, pa.Table, dict[str, tuple[int, int]]]:
-    """term_runs' (tbl, runs) -> (the DL_TERM rows, the term rows, the
-    term rows' runs). DL_TERM sorts before every analyzer term, so both
-    parts are zero-copy slices of the sorted table."""
-    lo, hi = runs.get(DL_TERM, (0, 0))
-    if lo:
-        raise ValueError(f"a term sorts before {DL_TERM!r}")
-    return tbl.slice(0, hi), tbl.slice(hi), {
-        t: (a - hi, b - hi) for t, (a, b) in runs.items() if t != DL_TERM}
-
-
 class DocLengths(NamedTuple):
     """A set of docs' lengths: (docids ascending, dl) plus the dense
     lookup table gather_dl indexes (table[d - lo] = dl of docid d, -1
@@ -373,3 +340,166 @@ def gather_dl(lengths: DocLengths, docids: np.ndarray) -> np.ndarray:
             return out
     raise ValueError("posting docid without a doc length in its file's "
                      "DL_TERM rows — run fsck (index/fsck.py)")
+
+
+class Postings(NamedTuple):
+    """PostingRuns.decode's output. Term i's blocks are rows
+    boff[i]:boff[i + 1], in (file, row) order; block j's postings are
+    docids[poff[j]:poff[j + 1]]. tf, pos (aligned with np.repeat(docids,
+    tf)) and the block bounds max_tf/min_dl are None unless read."""
+    boff: np.ndarray | None
+    poff: np.ndarray
+    docids: np.ndarray
+    tf: np.ndarray | None
+    pos: np.ndarray | None
+    max_tf: np.ndarray | None
+    min_dl: np.ndarray | None
+
+    def span(self, i: int) -> slice:
+        """Term i's postings."""
+        return slice(int(self.poff[self.boff[i]]),
+                     int(self.poff[self.boff[i + 1]]))
+
+
+# the columns decode reads when a batch holds them: per block, or a
+# payload per block (pos_bin is NULL on DL_TERM rows and positionless
+# stores, so each payload view carries its valid rows, None if all are)
+_FIXED = ("n", "max_tf", "min_dl")
+_COLUMNS = _FIXED + ("docids_bin", "tfs_bin", "pos_bin")
+_NONE = np.zeros(0, dtype=np.int64)
+
+
+def _view(col: pa.Array):
+    if pa.types.is_binary(col.type) or pa.types.is_large_binary(col.type):
+        valid = None if not col.null_count else np.unpackbits(
+            np.frombuffer(col.buffers()[0], dtype=np.uint8),
+            bitorder="little")[col.offset:col.offset + len(col)] > 0
+        return (*binary_parts(col), valid)
+    return fixed_values(col)
+
+
+class PostingRuns:
+    """Segment record batches grouped in place into term runs, numpy
+    only: the one posting reader of the wand and membership kernels,
+    fsck and LocalSearcher. files[i] holds input file i's batches as
+    read (`term` plain or dictionary-encoded); rows outside `shards`
+    join no run. A run is a stretch of rows of one batch, all of one
+    term: a term-sorted file gives one per term and batch, an unsorted
+    file or a shard subset more, with the same postings.
+      terms, ids  term id -> term (first-seen order), and back;
+      ptr, runs   term id g owns the (batch, lo, hi) columns
+                  runs[:, ptr[g]:ptr[g + 1]], in (file, row) order;
+      df[g]       the postings of term id g."""
+
+    def __init__(self, files, shards: list[int] | None = None):
+        files = [list(f) for f in files]
+        self.ids: dict[str, int] = {}
+        self.batches: list[dict] = []  # per batch: column -> _view
+        self.files: list[int] = []  # per batch: its input file
+        self.n_files = len(files)
+        found = []
+        for f, b in ((f, b) for f, bs in enumerate(files) for b in bs
+                     if b.num_rows):
+            key = self._keys(b.column("term"))
+            if shards is not None:
+                key[~np.isin(fixed_values(b.column("shard")), shards)] = -1
+            brk = np.flatnonzero(key[1:] != key[:-1]) + 1
+            lo = np.concatenate(([0], brk))
+            hi = np.concatenate((brk, [key.size]))
+            lo, hi = lo[key[lo] >= 0], hi[key[lo] >= 0]
+            view = {c: _view(b.column(c)) for c in _COLUMNS
+                    if c in b.schema.names}
+            cum = np.zeros(key.size + 1, dtype=np.int64)
+            np.cumsum(view["n"], out=cum[1:])
+            found.append((key[lo], np.full(lo.size, len(self.batches)),
+                          lo, hi, cum[hi] - cum[lo]))
+            self.batches.append(view)
+            self.files.append(f)
+        key, batch, lo, hi, n = (
+            (np.concatenate(c) for c in zip(*found)) if found
+            else (np.zeros(0, dtype=np.int64) for _ in range(5)))
+        order = np.argsort(key, kind="stable")
+        self.terms = list(self.ids)
+        count = np.bincount(key, minlength=len(self.terms))
+        self.ptr = np.concatenate(([0], np.cumsum(count))).astype(np.int64)
+        self.runs = np.stack([batch, lo, hi])[:, order]
+        self.df = np.bincount(key, weights=n, minlength=len(self.terms)
+                              ).astype(np.int64)
+
+    def _keys(self, term: pa.Array) -> np.ndarray:
+        """Each row's term id. Only dictionary entries some row
+        references become strs; a plain column is its own dictionary."""
+        if pa.types.is_dictionary(term.type):
+            idx, values = fixed_values(term.indices), term.dictionary
+            used = np.flatnonzero(np.bincount(idx, minlength=len(values)))
+        else:
+            idx = used = np.arange(len(term))
+            values = term
+        off, data = binary_parts(values)
+        raw, at = data[int(off[0]):int(off[-1])].tobytes(), off - off[0]
+        ids = np.full(len(values), -1, dtype=np.int64)
+        ids[used] = [self.ids.setdefault(raw[a:b].decode(), len(self.ids))
+                     for a, b in zip(at[used].tolist(), at[used + 1].tolist())]
+        return ids[idx]
+
+    def decode(self, terms: list[str]) -> Postings:
+        """The postings of `terms` (result term i is terms[i]; an unknown
+        term has none) in ONE decode pass per column: docids, and tf,
+        pos (which needs tf) and the bounds when their columns were read
+        (with no batch at all, each decodes empty)."""
+        sel = [self._runs_of(self.ids.get(t)) for t in terms]
+        read = self.batches[0] if self.batches else _COLUMNS
+        post = self._decode(np.concatenate([_NONE] + sel),
+                            [c for c in _COLUMNS if c in read])
+        # term i's blocks: the rows of its runs
+        rows = [int((self.runs[2, r] - self.runs[1, r]).sum()) for r in sel]
+        return post._replace(boff=np.concatenate(([0], np.cumsum(rows))))
+
+    def _runs_of(self, g: int | None) -> np.ndarray:
+        """The run columns of term id g (none for None)."""
+        return _NONE if g is None else np.arange(self.ptr[g], self.ptr[g + 1])
+
+    def doc_lengths(self) -> list[DocLengths]:
+        """Per input file, the DocLengths of its DL_TERM runs (empty for
+        a file whose batches hold none)."""
+        sel = self._runs_of(self.ids.get(DL_TERM))
+        of = np.asarray(self.files, dtype=np.int64)[self.runs[0, sel]]
+        out = []
+        for f in range(self.n_files):
+            post = self._decode(sel[of == f], ["n", "docids_bin", "tfs_bin"])
+            out.append(dl_lookup(post.docids, post.tf))
+        return out
+
+    def _decode(self, sel: np.ndarray, cols: list[str]) -> Postings:
+        """Postings of the runs `sel` (columns of `runs`, in output
+        order) over `cols`, boff unset. Each batch is sliced once per
+        stretch of runs adjacent in it (a term-sorted file read for its
+        terms alone is one stretch)."""
+        b, lo, hi = self.runs[:, sel]
+        first = np.flatnonzero(np.append(True, (b[1:] != b[:-1])
+                                         | (lo[1:] != hi[:-1])))[:sel.size]
+        last = np.append(first[1:], sel.size)[:first.size] - 1
+        parts: dict[str, list] = {c: [] for c in cols}
+        for i, s, e in zip(b[first].tolist(), lo[first].tolist(),
+                           hi[last].tolist()):
+            for c in cols:
+                v = self.batches[i][c]
+                if c in _FIXED:
+                    parts[c].append(v[s:e])
+                elif v[2] is not None and not v[2][s:e].all():
+                    raise ValueError(f"a decoded run has no {c} (positions "
+                                     "of a store built without them?)")
+                else:
+                    parts[c].append(v[1][int(v[0][s]):int(v[0][e])])
+        got = {c: np.concatenate([np.zeros(0, dtype=np.int64 if c in _FIXED
+                                           else np.uint8)] + parts[c])
+               for c in cols}
+        ns = got["n"].astype(np.int64)
+        poff = np.concatenate(([0], np.cumsum(ns)))
+        tf = pos = None
+        if "tfs_bin" in got:
+            tf = decode_varint(got["tfs_bin"], int(poff[-1])).astype(np.int64)
+        if "pos_bin" in got:
+            pos = decode_positions(got["pos_bin"], tf)
+        return Postings(None, poff, block_docids(got["docids_bin"], ns), tf,
+                        pos, got.get("max_tf"), got.get("min_dl"))

@@ -1,7 +1,7 @@
 """Store integrity checker (fsck): verify every on-disk invariant the
 query paths rely on, with no Spark session. Every check reads parquet
 metadata or small columns, except `dl`, which decodes each segment
-file's docids once (one varint pass per file).
+file's postings once (one varint pass per column and file).
 
 Checked invariants (each one is load-bearing for a specific path):
 
@@ -29,13 +29,14 @@ Checked invariants (each one is load-bearing for a specific path):
               file's DL_TERM row count (those rows are NULL in every
               store), so a store mixing positional and positionless term
               blocks is caught.
-  dl          per segment file: every docid of its term rows has a
-              DL_TERM entry in the SAME file (a task reads whole files and
-              looks dl up there — codec.gather_dl), each entry equals the
-              staged `dl`, and on a positional store the first term
-              block's positions decode and stay below their docs' dl. No
-              term_stats dir lists DL_TERM (it is no term: df, /suggest
-              and idf never see it).
+  dl          per segment file: its rows decode (codec.PostingRuns) and
+              hold no reserved "\x00" row but DL_TERM, every docid of its
+              term rows has a DL_TERM entry in the SAME file (a task reads
+              whole files and looks dl up there — codec.gather_dl), each
+              entry equals the staged `dl`, and on a positional store
+              every position stays below its doc's dl. No term_stats dir
+              lists DL_TERM (it is no term: df, /suggest and idf never
+              see it).
   epochs      segments and term_stats live lists are the same length
               (each epoch writes the pair together), and no dir is both
               live and retired.
@@ -301,19 +302,9 @@ def fsck(root: str, strict: bool = False) -> dict:
 
 def _check_dl(store: IndexStore, positional: bool, err) -> None:
     """The `dl` check (module docstring), one segment file at a time."""
-    import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from visionsearch_spark.index.codec import (
-        decode_blocks,
-        decode_docids,
-        decode_positions,
-        decode_varint,
-        doc_lengths,
-        gather_dl,
-        split_dl,
-        term_runs,
-    )
+    from visionsearch_spark.index.codec import PostingRuns, gather_dl
 
     for d in store.term_stats_paths():
         for p in parquet_files(d):
@@ -324,20 +315,26 @@ def _check_dl(store: IndexStore, positional: bool, err) -> None:
     dm = read_columns([store.docmap_path], ["docid", "dl"])
     staged_dl = np.zeros(dm.num_rows, dtype=np.int64)
     staged_dl[fixed_values(dm["docid"])] = fixed_values(dm["dl"])
+    cols = ["term", "n", "docids_bin", "tfs_bin"] + ["pos_bin"] * positional
     for d in store.segment_paths():
         for p in parquet_files(d):
             name = f"{os.path.basename(d)}/{os.path.basename(p)}"
             try:
-                dl_rows, rows, _runs = split_dl(*term_runs(pq.read_table(
-                    p, columns=["term", "n", "docids_bin", "tfs_bin"])))
-                lengths = doc_lengths(dl_rows)
-                docids = decode_blocks(rows["docids_bin"],
-                                       fixed_values(rows["n"]))
-            except Exception as e:  # torn payload or a stray leading row
-                err(f"{name}: docids/tfs do not decode ({e})")
+                with pq.ParquetFile(p, read_dictionary=["term"]) as pf:
+                    runs = PostingRuns([pf.read(columns=cols).to_batches()])
+                terms = [t for t in runs.terms if t != DL_TERM]
+                stray = [t for t in terms if t.startswith("\x00")]
+                if stray:
+                    raise ValueError(f"reserved row {stray[0]!r} is not "
+                                     f"{DL_TERM!r}")
+                lengths = runs.doc_lengths()[0]
+                post = runs.decode(terms)
+            except Exception as e:  # torn payload or a stray reserved row
+                err(f"{name}: docids/tfs{'/pos' * positional} do not "
+                    f"decode ({e})")
                 continue
             known, dls = lengths.docids, lengths.dls
-            missing = np.setdiff1d(docids, known)
+            missing = np.setdiff1d(post.docids, known)
             if missing.size:
                 err(f"{name}: {missing.size} docid(s) of its term rows "
                     f"have no {DL_TERM!r} entry in the file (first: "
@@ -350,26 +347,10 @@ def _check_dl(store: IndexStore, positional: bool, err) -> None:
                 err(f"{name}: {int(bad.sum())} {DL_TERM!r} entries "
                     f"differ from the staged dl (first docid: "
                     f"{int(known[bad][0])})")
-                continue
-            if not positional:
-                continue
-            # one decoded term block per file (the first one after the
-            # leading DL_TERM rows): positions align with tfs (occurrence
-            # counts) and stay below the doc length
-            rg = pq.ParquetFile(p).read_row_group(
-                0, columns=["term", "n", "docids_bin", "tfs_bin", "pos_bin"])
-            for r in rg.filter(pc.not_equal(rg["term"], DL_TERM)) \
-                    .slice(0, 1).to_pylist():
-                tf = decode_varint(r["tfs_bin"], r["n"]).astype(np.int64)
-                try:
-                    pos = decode_positions(r["pos_bin"], tf)
-                except Exception as e:  # torn payload
-                    err(f"{name}: pos_bin does not decode ({e})")
-                    continue
-                dl = gather_dl(lengths,
-                               decode_docids(r["docids_bin"], r["n"]))
-                if pos.size and (pos >= np.repeat(dl, tf)).any():
-                    err(f"{name}: position >= doc length in first block")
+            # positions stay below their doc's length
+            elif positional and (post.pos >= np.repeat(
+                    gather_dl(lengths, post.docids), post.tf)).any():
+                err(f"{name}: a position >= its doc length")
 
 
 def _finish(report: dict, strict: bool) -> None:

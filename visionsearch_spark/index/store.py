@@ -85,6 +85,10 @@ SEGMENT_SCHEMA_DDL = (
     "max_tf int, min_dl int, pos_bin binary"
 )
 
+# A filtered query's `_allow-<uuid>` scratch dir (query/wand.py) lives
+# as long as the query; one this old was left by a killed driver.
+ALLOW_SCRATCH_AGE_S = 24 * 3600
+
 MANIFEST_SCHEMA_DDL = (
     "partition_id int, status string, postings_written long, "
     "terms_merged long, bytes_compressed long, lineage string, ts string"
@@ -250,17 +254,27 @@ class IndexStore:
         of every pid the COMMITTED meta lists in `compacted_pids` (a live
         dir holds its postings; no merge reads it again). Reads meta from
         disk, so it can only ever delete what a committed flip covers; a
-        crash part-way leaves files the next flip deletes."""
+        crash part-way leaves files the next flip deletes. Also deletes
+        a filtered query's `_allow-*` scratch dir older than
+        ALLOW_SCRATCH_AGE_S: its driver died before its own cleanup."""
         import shutil
+        import time
 
         meta = self.read_meta()
         keep = set(meta["segment_dirs"]) | set(meta["term_stats_dirs"]) \
             | set(meta.get("retired_dirs") or [])
         pat = re.compile(r"^(segments|term_stats)-\d{6}$")
         for name in os.listdir(self.root):
+            path = os.path.join(self.root, name)
             if pat.match(name) and name not in keep:
-                shutil.rmtree(os.path.join(self.root, name),
-                              ignore_errors=True)
+                shutil.rmtree(path, ignore_errors=True)
+            elif name.startswith("_allow-"):
+                try:
+                    age = time.time() - os.path.getmtime(path)
+                except OSError:  # its query removed it meanwhile
+                    continue
+                if age > ALLOW_SCRATCH_AGE_S:
+                    shutil.rmtree(path, ignore_errors=True)
         covered = set(meta["compacted_pids"])
         for pid, path in self.fragment_files():
             if pid in covered:
@@ -286,6 +300,19 @@ class IndexStore:
                 f"{self.root}: store layout {meta.get('layout')!r}, this "
                 f"version reads layout {LAYOUT} only; run reindex "
                 "(index/reindex.py) to rebuild it")
+        return meta
+
+    def built_meta(self) -> dict:
+        """read_meta of a store a query can read. A build that stopped
+        after staging leaves phase "staged" and no live dir; its readers
+        raise this ValueError instead of an opaque Arrow error or an
+        empty answer. Reads meta.json only (serving-safe)."""
+        meta = self.read_meta()
+        if not meta["term_stats_dirs"] and meta.get("phase") != "built":
+            raise ValueError(
+                f"{self.root}: the store is not built (phase "
+                f"{meta.get('phase')!r}): its build stopped before the "
+                "first merge; rerun build_index")
         return meta
 
     def has_positions(self) -> bool:

@@ -7,8 +7,9 @@
   terms — lives in exactly ONE segment file (files are shard-complete
   per the `spimi._write_epoch` invariant, LSM dirs own disjoint
   docid ranges), so per-file set algebra is globally exact and tasks
-  emit only the (small) matching docid sets. Only `docids_bin` is
-  decoded — tf/dl bytes are never read.
+  emit only the (small) matching docid sets. Only `docids_bin` is read
+  and decoded (codec.PostingRuns, as every kernel here) — tf/dl bytes
+  never are.
 * :func:`boolean_topk` — Lucene-style boolean search: `must` terms are
   conjunctive, `should` terms contribute score only (unless there are
   no musts, in which case any `should` match qualifies), `must_not`
@@ -36,19 +37,11 @@ from __future__ import annotations
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from visionsearch_spark.analyzer import tokenize, tokens_col
-from visionsearch_spark.index.codec import (
-    decode_blocks,
-    decode_positions,
-    decode_varint,
-    payload,
-    term_runs,
-)
 from visionsearch_spark.index.store import IndexStore
 from visionsearch_spark.query import wand
 
@@ -75,23 +68,11 @@ def _make_match_fn(all_of: list[str], any_of: list[str],
     read_terms = sorted(set(all_of) | set(any_of) | set(none_of))
 
     def match(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
-            columns=["term", "n", "docids_bin"],
-            filter=pc.field("term").isin(read_terms),
-            use_threads=False,
-        ).to_table())
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        poff = np.concatenate(([0], np.cumsum(ns)))
-        all_docids = decode_blocks(tbl["docids_bin"], ns)
+        post = wand._scan_runs(paths, ["term", "n", "docids_bin"],
+                               read_terms).decode(read_terms)
 
         def docs(t: str) -> np.ndarray:
-            run = runs.get(t)
-            if run is None:
-                return np.empty(0, dtype=np.int64)
-            return np.unique(all_docids[poff[run[0]]:poff[run[1]]])
+            return np.unique(post.docids[post.span(read_terms.index(t))])
 
         if all_of:
             base = docs(all_of[0])
@@ -110,10 +91,8 @@ def _make_match_fn(all_of: list[str], any_of: list[str],
             if ex:
                 base = np.setdiff1d(base, np.concatenate(ex))
         if base.size:
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame({"docid": base.astype(np.int64)}),
-                preserve_index=False,
-            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(base.astype(np.int64))], names=["docid"])
 
     return match
 
@@ -212,36 +191,17 @@ def _make_positional_fn(toks: list[str], window: int | None,
     read_terms = sorted(set(toks))
 
     def match(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
-        tbl, runs = term_runs(pads.dataset(paths, format="parquet").scanner(
-            columns=["term", "n", "docids_bin", "tfs_bin", "pos_bin"],
-            filter=pc.field("term").isin(read_terms),
-            use_threads=False,
-        ).to_table())
-        if tbl["pos_bin"].null_count:
-            missing = tbl["term"].filter(pc.is_null(tbl["pos_bin"]))[0]
-            raise ValueError(
-                f"segment block for {missing.as_py()!r} has no pos_bin — "
-                "positional query on a store built without positions=True"
-            )
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        poff = np.concatenate(([0], np.cumsum(ns)))
-        all_d = decode_blocks(tbl["docids_bin"], ns)
-        all_tf = decode_varint(payload(tbl["tfs_bin"]),
-                               int(poff[-1])).astype(np.int64)
-        all_p = decode_positions(payload(tbl["pos_bin"]), all_tf)
-        all_keys = (np.repeat(all_d, all_tf) << np.int64(32)) | all_p
+        post = wand._scan_runs(
+            paths, ["term", "n", "docids_bin", "tfs_bin", "pos_bin"],
+            read_terms).decode(read_terms)
+        all_keys = (np.repeat(post.docids, post.tf) << np.int64(32)) \
+            | post.pos
         # occurrence offset of each posting: a term's keys are one run
-        ooff = np.concatenate(([0], np.cumsum(all_tf)))
+        ooff = np.concatenate(([0], np.cumsum(post.tf)))
 
         def keys(t: str) -> np.ndarray:
-            run = runs.get(t)
-            if run is None:
-                return np.empty(0, dtype=np.int64)
-            return np.sort(
-                all_keys[ooff[poff[run[0]]]:ooff[poff[run[1]]]])
+            span = post.span(read_terms.index(t))
+            return np.sort(all_keys[ooff[span.start]:ooff[span.stop]])
 
         if slop is not None:
             m = len(toks)
@@ -293,10 +253,8 @@ def _make_positional_fn(toks: list[str], window: int | None,
                     ok &= (pref[j] - pref[i0]) > 0
                 docs = np.unique(ks[ok] >> np.int64(32))
         if docs.size:
-            yield pa.RecordBatch.from_pandas(
-                pd.DataFrame({"docid": docs.astype(np.int64)}),
-                preserve_index=False,
-            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(docs.astype(np.int64))], names=["docid"])
 
     return match
 

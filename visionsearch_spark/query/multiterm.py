@@ -91,6 +91,8 @@ def _driver_vocab(store: IndexStore, lo: str | None,
     import pyarrow.compute as pc
     import pyarrow.dataset as pads
 
+    store = store.snapshot()
+    store.built_meta()
     ds = pads.dataset([pads.dataset(p) for p in store.term_stats_paths()])
     flt = None
     if lo is not None:

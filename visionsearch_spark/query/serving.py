@@ -22,7 +22,9 @@ Arrow pool thread: those would cost about 55 MB of resident memory per
 serving process, paid once per shard group (it serves the 1500-conv
 query store in about 82 MB). Tables come in through index/store's
 single-threaded file_tables/read_columns and cross into numpy through
-the codec's buffer views; tests/test_serving_lean.py guards the rule.
+the codec's buffer views: the postings through codec.PostingRuns, the
+same numpy-only reader the Spark kernels use.
+tests/test_serving_lean.py guards the rule.
 """
 
 from __future__ import annotations
@@ -35,9 +37,7 @@ from visionsearch_spark.analyzer import tokenize
 from visionsearch_spark.bm25 import idf as idf_fn
 from visionsearch_spark.bm25 import tf_weight
 from visionsearch_spark.index.codec import (
-    binary_parts,
-    block_docids,
-    decode_varint,
+    PostingRuns,
     dl_lookup,
     fixed_values,
     gather_dl,
@@ -57,93 +57,40 @@ def _cat(parts: list[np.ndarray]) -> np.ndarray:
     return parts[0] if len(parts) == 1 else np.concatenate(parts)
 
 
-def _term_index(tables: list, shards: list[int] | None):
-    """The per-file term runs of the segment tables, grouped in place with
-    numpy only. Returns (batches, terms, runs, ptr, df):
-      batches[i]  (n, docids_bin offsets, bytes, tfs_bin offsets, bytes)
-                  of one record batch of a file as read
-                  (codec.binary_parts views);
-      runs        3 x R int64 (batch, lo, hi): rows [lo, hi) of a batch,
-                  all of one term; term id g owns columns ptr[g]:ptr[g+1],
-                  in (file, row) order;
-      df[g]       the postings of term id g (terms[g]).
-    A term-sorted file (Spark writes them so) gives one run per term; an
-    unsorted one gives more and loads the same, only slower. Rows outside
-    `shards` join no run; within a file a term's rows are ordered by
-    shard, so a shard subset splits a term into one run per stretch of
-    kept shards, and a term with no kept row has no run."""
-    ids: dict[str, int] = {}
-    batches, runs = [], []
-    for b in (b for t in tables for b in t.to_batches()):
-        if not b.num_rows:
-            continue
-        # the term column is read dictionary-encoded: one str per
-        # distinct term, rows are dictionary indices
-        term = b.column("term")
-        key = np.asarray([ids.setdefault(t, len(ids))
-                          for t in term.dictionary.to_pylist()],
-                         dtype=np.int64)[fixed_values(term.indices)]
-        if shards is not None:
-            key[~np.isin(fixed_values(b.column("shard")), shards)] = -1
-        brk = np.flatnonzero(key[1:] != key[:-1]) + 1
-        lo = np.concatenate(([0], brk))
-        hi = np.concatenate((brk, [key.size]))
-        ns = fixed_values(b.column("n"))
-        cum = np.zeros(key.size + 1, dtype=np.int64)
-        np.cumsum(ns, dtype=np.int64, out=cum[1:])
-        keep = key[lo] >= 0
-        lo, hi = lo[keep], hi[keep]
-        runs.append((key[lo], np.full(lo.size, len(batches)), lo, hi,
-                     cum[hi] - cum[lo]))
-        batches.append((ns, *binary_parts(b.column("docids_bin")),
-                        *binary_parts(b.column("tfs_bin"))))
-    key, batch, lo, hi, n = (
-        (np.concatenate(c) for c in zip(*runs)) if runs
-        else (np.zeros(0, dtype=np.int64) for _ in range(5)))
-    order = np.argsort(key, kind="stable")
-    ptr = np.zeros(len(ids) + 1, dtype=np.int64)
-    np.cumsum(np.bincount(key, minlength=len(ids)), out=ptr[1:])
-    cum = np.zeros(n.size + 1, dtype=np.int64)
-    np.cumsum(n[order], out=cum[1:])
-    return (batches, list(ids), np.stack([batch, lo, hi])[:, order], ptr,
-            cum[ptr[1:]] - cum[ptr[:-1]])
-
-
 class LocalSearcher:
     def __init__(self, store: IndexStore, shards: list[int] | None = None):
         self.store = store
         # one meta snapshot: stats, segments and tombstones of one flip
         snap = store.snapshot()
-        meta = snap.read_meta()
+        meta = snap.built_meta()
         self.n_docs = int(meta["n_docs"])
         self.avgdl = float(meta["avgdl"])
         self.shards = shards
         # load keeps each file's posting columns as read and maps every
-        # term to its row runs per file — no sort, cast or copy of the
-        # postings. Posting bytes stay Arrow buffers and decode LAZILY on
-        # a term's first query, cached decoded: cold start is column-scan
-        # cheap, the warm working set is as fast as eager. The DL_TERM
-        # runs are decoded at once into the docid -> dl lookup every
-        # term's first decode gathers from.
+        # term to its row runs per file (codec.PostingRuns) — no sort,
+        # cast or copy of the postings. Posting bytes stay Arrow buffers
+        # and decode LAZILY on a term's first query, cached decoded: cold
+        # start is column-scan cheap, the warm working set is as fast as
+        # eager. The DL_TERM runs are decoded at once into the docid ->
+        # dl lookup every term's first decode gathers from.
         cols = ["term", "n", "docids_bin", "tfs_bin"]
-        self._batches, names, self._runs, self._ptr, self._gdf = \
-            _term_index(file_tables(
+        self._runs = PostingRuns(
+            [t.to_batches() for t in file_tables(
                 snap.segment_paths(),
                 cols + ([] if shards is None else ["shard"]),
-                read_dictionary=["term"]), shards)
-        has_run = self._ptr[1:] > self._ptr[:-1]
-        g_dl = names.index(DL_TERM) if DL_TERM in names else -1
-        self._lengths = dl_lookup(*(
-            self._decode(g_dl) if g_dl >= 0 and has_run[g_dl]
-            else (np.zeros(0, dtype=np.int64),) * 2))
+                read_dictionary=["term"])], shards)
+        dl = self._runs.decode([DL_TERM])
+        self._lengths = dl_lookup(dl.docids, dl.tf)
         self._decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
         # the term dictionary /suggest and did_you_mean read: terms in
         # sorted order, each with its df
-        live = [g for g in np.flatnonzero(has_run).tolist() if g != g_dl]
+        names, ptr = self._runs.terms, self._runs.ptr
+        live = [g for g in np.flatnonzero(ptr[1:] > ptr[:-1]).tolist()
+                if names[g] != DL_TERM]
         live.sort(key=names.__getitem__)
         self._terms = [names[g] for g in live]
         self._blocks = dict(zip(self._terms, live))
-        self._dfs = self._gdf[live]
+        self._dfs = self._runs.df[live]
         # docmap: docid is dense 0..n-1, so position == docid. conv_id is
         # read dictionary-encoded, so the docs of one conversation share
         # one str
@@ -170,31 +117,17 @@ class LocalSearcher:
                                 np.asarray(shards, dtype=np.int64))]
         self._dead: np.ndarray | None = dead if dead.size else None
 
-    def _decode(self, g: int) -> tuple[np.ndarray, np.ndarray]:
-        """(docids, tf as int64) of term id g in (file, row) order: its
-        runs' payload bytes concatenated, then ONE block decode."""
-        ns, dbytes, tbytes = [], [], []
-        runs = self._runs[:, self._ptr[g]:self._ptr[g + 1]]
-        for b, lo, hi in runs.T.tolist():
-            bns, doff, dbin, toff, tbin = self._batches[b]
-            ns.append(bns[lo:hi])
-            dbytes.append(dbin[doff[lo]:doff[hi]])
-            tbytes.append(tbin[toff[lo]:toff[hi]])
-        ns = _cat(ns).astype(np.int64)
-        return (block_docids(_cat(dbytes), ns),
-                decode_varint(_cat(tbytes), int(ns.sum())).astype(np.int64))
-
     def _get_postings(self, term: str) -> tuple[np.ndarray, np.ndarray] | None:
         """(docids, tf_weight) for a term — decoded on first use, cached."""
         p = self._decoded.get(term)
         if p is not None:
             return p
-        g = self._blocks.get(term)
-        if g is None:
+        if term not in self._blocks:
             return None
-        d, tf = self._decode(g)
+        post = self._runs.decode([term])
+        d = post.docids
         order = np.argsort(d, kind="stable")
-        tfw = tf_weight(tf.astype(np.float64),
+        tfw = tf_weight(post.tf.astype(np.float64),
                         gather_dl(self._lengths, d).astype(np.float64),
                         self.avgdl)
         p = (d[order], tfw[order])
@@ -203,7 +136,7 @@ class LocalSearcher:
 
     def df(self, term: str) -> int:
         g = self._blocks.get(term)
-        return 0 if g is None else int(self._gdf[g])
+        return 0 if g is None else int(self._runs.df[g])
 
     def _vocab(self, lo: str | None, hi: str | None):
         """(term, df) over the dictionary's terms in [lo, hi), or over

@@ -10,7 +10,7 @@ Design (SURVEY.md §3.1 "our lifecycle"):
             disjoint docid ranges, so every block touching a docid lives
             in exactly one task and per-partition score sums are FINAL
             scores — postings never shuffle (`_partial_scores`).
-  mapInArrow: decode each payload column once (codec.decode_blocks),
+  mapInArrow: decode each column once per task (codec.PostingRuns),
             score vectorized in float64 through query/score_core: per
             doc a left-to-right sum in query-term rank order, the
             oracle's summation order (SURVEY.md §7 R2), then masks,
@@ -93,13 +93,11 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
                    docmap: str | None = None, allow: str | None = None,
                    cursors: dict[int, float] | None = None):
     """File-aligned kernel `score(paths)`: reads the task's
-    segment FILES directly (pyarrow dataset; term-IN filter prunes row
-    groups off the footer min/max stats; use_threads=False because
-    parallelism belongs to the task scheduler, not a nested Arrow pool
-    fighting 32 sibling tasks), decodes each payload column ONCE for the
-    whole task (codec.decode_blocks), looks each posting's dl up by docid
-    in the files' DL_TERM rows (codec.gather_dl over `_doc_lengths`,
-    decoded once per file and worker), and scores.
+    segment FILES directly into one codec.PostingRuns (`_scan_runs`: one
+    pushed-down, single-threaded pyarrow dataset scan), decodes every
+    block of its terms in ONE pass (PostingRuns.decode), looks each
+    posting's dl up by docid in the files' DL_TERM rows (codec.gather_dl
+    over `_doc_lengths`, decoded once per file and worker), and scores.
 
     qplans: [(query_id, [(term, idf)], k)], each query's terms in sorted
     unique-term order (the summation order).
@@ -128,14 +126,7 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     per-partition cut keeps boundary ties (score_core.cut): on an
     appended store docid order diverges from conv order, so only the
     merge, which has the conv key, may split a tie run."""
-    from visionsearch_spark.index.codec import (
-        decode_blocks,
-        decode_varint,
-        gather_dl,
-        payload,
-        split_dl,
-        term_runs,
-    )
+    from visionsearch_spark.index.codec import gather_dl
 
     threshold = score_core.check_threshold(threshold)
     cursors = cursors or {}
@@ -148,44 +139,34 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
     cols = ["term", "n", "docids_bin", "tfs_bin", "max_tf", "min_dl"]
 
     def score(paths: list[str]) -> Iterator[pa.RecordBatch]:
-        import pyarrow.compute as pc
-        import pyarrow.dataset as pads
-
         # a file whose doc lengths this worker has not cached yet adds
-        # the DL_TERM rows, tagged by file, to the same scan
+        # its DL_TERM rows to the same scan
         keys = [_dl_key(p) for p in paths]
         cold = any(k not in _DL_CACHE for k in keys)
-        dl_rows, tbl, runs = split_dl(*term_runs(
-            pads.dataset(paths, format="parquet").scanner(
-                columns=cols + ["__filename"] * cold,
-                filter=pc.field("term").isin(hit_terms + [DL_TERM] * cold),
-                use_threads=False,
-            ).to_table()))
-        if not runs:
+        runs = _scan_runs(paths, cols, hit_terms + [DL_TERM] * cold)
+        present = [t for t in hit_terms if t in runs.ids]
+        if not present:
             return
-        lengths = _doc_lengths(keys, dl_rows)
+        lengths = _doc_lengths(keys, runs)
         deny = _task_deny(tombstones or [], lengths)
         allowed = None if allow is None else np.unique(_docid_span(
             allow, lengths.lo, lengths.lo + lengths.table.size - 1,
             ["docid"])["docid"].to_numpy().astype(np.int64))
         conv = None  # the docmap span, read on the first collapse
-        # every block of the task in one pass per payload column; a
-        # term's blocks are the contiguous row run term_runs reports,
-        # its postings the matching run of poff
-        ns = tbl["n"].to_numpy().astype(np.int64)
-        poff = np.concatenate(([0], np.cumsum(ns)))
-        total = int(poff[-1])
-        docids = decode_blocks(tbl["docids_bin"], ns)
-        tfw = tf_weight(
-            decode_varint(payload(tbl["tfs_bin"]), total).astype(np.float64),
-            gather_dl(lengths, docids).astype(np.float64),
-            avgdl)
+        # every block of the task's terms in one decode pass; term i's
+        # blocks are rows boff[i]:boff[i + 1], block j's postings
+        # poff[j]:poff[j + 1]
+        post = runs.decode(present)
+        poff, docids = post.poff, post.docids
+        tfw = tf_weight(post.tf.astype(np.float64),
+                        gather_dl(lengths, docids).astype(np.float64), avgdl)
         # tf_weight(max_tf, min_dl) under the CURRENT avgdl >= tf_weight
         # of every posting in the block (monotonicity) — safe and never
         # stale across appends
-        bmax = tf_weight(tbl["max_tf"].to_numpy(), tbl["min_dl"].to_numpy(),
-                         avgdl)
-        spans = {t: slice(poff[b0], poff[b1]) for t, (b0, b1) in runs.items()}
+        bmax = tf_weight(post.max_tf, post.min_dl, avgdl)
+        blocks = {t: (post.boff[i], post.boff[i + 1])
+                  for i, t in enumerate(present)}
+        spans = {t: post.span(i) for i, t in enumerate(present)}
 
         def single_term_topk(b0: int, b1: int, w: float, k: int):
             """Exact top-k with block-max pruning: descending block-bound
@@ -220,23 +201,23 @@ def _make_score_fn(qplans: list[tuple[int, list[tuple[str, float]], int]],
         out_docid: list[np.ndarray] = []
         out_score: list[np.ndarray] = []
         for qid, terms, k in qplans:
-            present = [(t, w) for t, w in terms if t in runs]
-            if not present:
+            hit = [(t, w) for t, w in terms if t in blocks]
+            if not hit:
                 continue
-            ub = sum(w * bmax[slice(*runs[t])].max() for t, w in present)
+            ub = sum(w * bmax[slice(*blocks[t])].max() for t, w in hit)
             if ub <= threshold:
                 continue  # safe partition skip: no doc here can pass
             if qid in single_term_q and allowed is None and docmap is None:
                 # block-max pruning counts every admitted doc as a
                 # candidate; under an allow-filter or a unit collapse
                 # the exact path below applies them before the cut
-                t, w = present[0]
-                uniq, sums = single_term_topk(*runs[t], w, k)
+                t, w = hit[0]
+                uniq, sums = single_term_topk(*blocks[t], w, k)
             else:
                 # exact path, in the oracle's summation order
                 uniq, sums = score_core.accumulate(
                     [(docids[spans[t]], w * tfw[spans[t]])
-                     for t, w in present], threshold)
+                     for t, w in hit], threshold)
                 uniq, sums = score_core.admit(uniq, sums, deny, allowed)
                 if docmap is not None:  # unit -> its conv, max per conv
                     if conv is None:
@@ -281,7 +262,7 @@ def _lookup_term_dfs(spark: SparkSession, store: IndexStore,
     # writes a new meta, so stale df values age out automatically, and
     # the dirs read below are the ones that snapshot names
     store = store.snapshot()
-    key = f"{store.root}:{json.dumps(store.read_meta(), sort_keys=True)}"
+    key = f"{store.root}:{json.dumps(store.built_meta(), sort_keys=True)}"
     memo = _TERM_DF_MEMO.setdefault(key, {})
     missing = [t for t in terms if t not in memo]
     if missing:
@@ -388,23 +369,21 @@ def _dl_key(path: str) -> tuple[str, float]:
     return path, os.path.getmtime(path)
 
 
-def _doc_lengths(keys: list[tuple[str, float]],
-                 dl_rows: pa.Table) -> DocLengths:
+def _doc_lengths(keys: list[tuple[str, float]], runs) -> DocLengths:
     """The docid -> dl lookup of a task's segment files (`_dl_key`s):
     each file's DL_TERM rows (its shards' docs, spimi._dl_batches)
-    decoded once per worker process and cached. `dl_rows` holds every
-    file's DL_TERM rows with their `__filename` whenever one of the
-    files is not cached."""
-    import pyarrow.compute as pc
+    decoded once per worker process and cached. `runs` (the task's
+    codec.PostingRuns, one input file per key) holds every file's
+    DL_TERM rows whenever one of the files is not cached."""
+    from visionsearch_spark.index.codec import dl_lookup
 
-    from visionsearch_spark.index.codec import dl_lookup, doc_lengths
-
+    fresh = None
     parts = []
-    for key in keys:
+    for i, key in enumerate(keys):
         got = _DL_CACHE.get(key)
         if got is None:
-            got = doc_lengths(dl_rows.filter(
-                pc.equal(dl_rows["__filename"], key[0])))
+            fresh = fresh or runs.doc_lengths()
+            got = fresh[i]
             while _DL_CACHE and got.docids.size + sum(
                     v.docids.size for v in _DL_CACHE.values()
             ) > _DL_CACHE_MAX_DOCS:
@@ -415,6 +394,28 @@ def _doc_lengths(keys: list[tuple[str, float]],
         return parts[0]
     return dl_lookup(np.concatenate([p.docids for p in parts]),
                      np.concatenate([p.dls for p in parts]))
+
+
+def _scan_runs(paths: list[str], columns: list[str], terms: list[str]):
+    """The rows of `terms` in the segment files `paths`, as one
+    codec.PostingRuns with an input file per path. One pyarrow dataset
+    scan: the term filter prunes row groups off the footer min/max
+    stats, `term` is read plain (it keeps few rows; dictionary-encoded
+    reading costs more than the strs it saves), and use_threads=False,
+    because parallelism belongs to the task scheduler, not a nested
+    Arrow pool fighting its sibling tasks. Each batch's file is the
+    fragment the scan tags it with."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    from visionsearch_spark.index.codec import PostingRuns
+
+    files: dict[str, list[pa.RecordBatch]] = {p: [] for p in paths}
+    for tagged in pads.dataset(paths, format="parquet").scanner(
+            columns=columns, filter=pc.field("term").isin(terms),
+            use_threads=False).scan_batches():
+        files[tagged.fragment.path].append(tagged.record_batch)
+    return PostingRuns(files.values())
 
 
 # per-dir tombstone cache: a tombstone dir is written once (deletes.py)
